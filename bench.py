@@ -137,8 +137,8 @@ def main() -> None:
         return time.perf_counter() - t0
 
     # min-of-3 + median (r5 verdict #8): min-of-2 at ±25% machine variance
-    # cannot attribute <25% drifts; three samples plus the median let
-    # perf_regress.py classify improved/noise/regressed per query
+    # cannot attribute <25% drifts; three samples plus the median give
+    # each query a noise band a regression verdict must clear
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     # soft wall budget: min-of-3 across 44 headliners is ~3× the r5 wall;
     # rather than risk an external timeout losing the whole round's bench,
@@ -180,18 +180,6 @@ def main() -> None:
         runs_used[name] = eff_runs
     total = round(sum(timings.values()), 3)
 
-    # per-query ledger (PerfCatalog = the reference's perfdb): every run
-    # appends (query, sf, cpus, warm seconds) so later rounds can
-    # regression-check query-by-query instead of total-only
-    try:
-        from jasminegraph_spark.perf import PerfCatalog
-
-        ledger = PerfCatalog(spark, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perf_ledger"))
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        for name, sec in timings.items():
-            ledger.record(f"sf{sf}", name, int(cpus), sec)
-    except Exception as exc:  # ledger failures must never fail the bench
-        print(f"# perf ledger skipped: {exc}", file=sys.stderr)
     # Full sample detail (cold, median, spread, run counts) goes to a file:
     # the driver captures only the LAST 2000 chars of stdout, and the r3-r7
     # detail-laden line overflowed that window, so BENCH_r{N}.json carried

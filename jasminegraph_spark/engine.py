@@ -27,6 +27,7 @@ run every command they run today against Spark:
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,7 +70,7 @@ class JasmineEngine:
         if self.catalog is None:
             self.catalog = GraphCatalog(self.spark)
         if self.perf is None and self.storage_path:
-            self.perf = PerfCatalog(self.spark, f"{self.storage_path}/_perfdb")
+            self.perf = PerfCatalog(f"{self.storage_path}/_perfdb.sqlite")
 
     # ---- ingest (adgr / adgr-cust / adrdf / adhdfs) -----------------------
     def add_graph(self, name: str, path: str, is_directed: bool = False) -> PropertyGraph:
@@ -171,6 +172,11 @@ class JasmineEngine:
                 f"SLA {sla_seconds:.2f}s (ledger median of recorded runs)"
             )
 
+    def _timed(self, name: str, command: str):
+        """The one timing path of a request: its latency goes to the perf
+        ledger as one record, or nowhere when the engine has no ledger."""
+        return self.perf.timed(name, command) if self.perf else nullcontext()
+
     @staticmethod
     def _cypher_perf_key(query: str) -> str:
         """Perf-ledger command key for a Cypher query (r8, ADVICE r7):
@@ -191,12 +197,8 @@ class JasmineEngine:
         perf_key = self._cypher_perf_key(query)
         self._sla_check(graph_name, perf_key, sla_seconds)
         g = self.catalog.get(graph_name)
-        if self.perf:
-            with self.perf.timed(graph_name, perf_key):
-                out = cypher_query(g, query)
-        else:
-            out = cypher_query(g, query)
-        return out
+        with self._timed(graph_name, perf_key):
+            return cypher_query(g, query)
 
     def cypher_rows(self, graph_name: str, query: str, k_partitions: int = 2):
         """Rows in the reference's client JSON protocol."""
@@ -228,10 +230,8 @@ class JasmineEngine:
     def triangle_count(self, graph_name: str, sla_seconds: float | None = None) -> int:
         self._sla_check(graph_name, "trian", sla_seconds)
         edges = self.catalog.get(graph_name).edges
-        if self.perf:
-            with self.perf.timed(graph_name, "trian"):
-                return an.triangle_count(edges)
-        return an.triangle_count(edges)
+        with self._timed(graph_name, "trian"):
+            return an.triangle_count(edges)
 
     def pagerank(
         self,
@@ -242,14 +242,10 @@ class JasmineEngine:
     ) -> DataFrame:
         self._sla_check(graph_name, "pgrnk", sla_seconds)
         g = self.catalog.get(graph_name)
-        if self.perf:
-            # pagerank's iterations checkpoint eagerly, so the timed span
-            # covers the dominant cost even though the return is lazy
-            with self.perf.timed(graph_name, "pgrnk"):
-                return an.pagerank(
-                    g.edges, alpha, iterations, undirected=not g.is_directed
-                )
-        return an.pagerank(g.edges, alpha, iterations, undirected=not g.is_directed)
+        # pagerank's iterations checkpoint eagerly, so the timed span
+        # covers the dominant cost even though the return is lazy
+        with self._timed(graph_name, "pgrnk"):
+            return an.pagerank(g.edges, alpha, iterations, undirected=not g.is_directed)
 
     def top_k_pagerank(self, graph_name: str, k: int = 10, **kw) -> DataFrame:
         g = self.catalog.get(graph_name)
@@ -463,7 +459,7 @@ class JasmineEngine:
         marker (GraphCatalog.save writes it next to nodes/ + edges/) —
         NOT by merely containing a nodes/ subdir, so a storage_path
         pointed at a directory with unrelated data is never rmtree'd.
-        Engine internals like the `_perfdb` ledger are kept. Returns the
+        Engine internals like the `_perfdb.sqlite` ledger are kept. Returns the
         sorted names removed."""
         import os
         import shutil
@@ -531,7 +527,7 @@ class JasmineEngine:
                 raise ValueError("query text has no embeddable tokens")
             query_vec = list(row[0])
 
-        def run() -> DataFrame:
+        with self._timed(graph_name, "semantic-beam-search"):
             return _beam(
                 g.edges,
                 embeddings,
@@ -541,11 +537,6 @@ class JasmineEngine:
                 id_col="doc_id",
                 undirected=not g.is_directed,
             )
-
-        if self.perf:
-            with self.perf.timed(graph_name, "semantic-beam-search"):
-                return run()
-        return run()
 
     def export_graph(self, graph_name: str, path: str, fmt: str = "wire") -> None:
         g = self.catalog.get(graph_name)

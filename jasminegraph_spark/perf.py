@@ -4,108 +4,64 @@ The reference records per-(graph, command, partition_count) latencies in a
 SQLite perfdb and uses them for SLA-aware admission (ddl/perfdb.sql;
 CypherQueryExecutor.cpp:164-189,366-376; JobScheduler.cpp:79-105 can
 reject high-priority jobs whose SLA cannot be met). Here the same records
-live in a parquet table and the admission check is a simple estimate
-lookup — scheduling itself belongs to Spark/YARN/K8s.
+live in one stdlib ``sqlite3`` file and the admission check is a simple
+estimate lookup — scheduling itself belongs to Spark/YARN/K8s.
 
-Ledger paths are LOCAL-FILESYSTEM by design (the part-file counting in
-`record` and the atomic rename in `compact` use os.* APIs): a ledger on
-HDFS/S3 would need the Hadoop FileSystem API instead — a documented seam,
-not a silent fallback. Compaction is crash-safe: the compacted ledger is
-written to a sibling temp directory and swapped in by rename, with the
-previous directory recoverable until the swap completes.
+Each ``record`` is one committed sqlite transaction (insert plus the
+per-key history trim), so sqlite's rollback journal is the crash-safe
+write: a crash leaves either the old or the new ledger, never a torn one.
 """
 
 from __future__ import annotations
 
 import os
+import sqlite3
+import statistics
 import time
-from contextlib import contextmanager
+from contextlib import closing, contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+_SCHEMA = """
+CREATE TABLE IF NOT EXISTS perf (
+    name TEXT NOT NULL, command TEXT NOT NULL, partitions INTEGER NOT NULL,
+    seconds REAL NOT NULL, ts REAL NOT NULL);
+CREATE INDEX IF NOT EXISTS perf_key ON perf (name, command);
+"""
 
 
 @dataclass
 class PerfCatalog:
-    spark: SparkSession
     path: str
 
-    #: per-(name, command) history cap — `compact()` keeps the newest
-    #: KEEP_LAST records for each key so the ledger read in `estimate`
-    #: stays bounded no matter how many distinct per-query fingerprints
-    #: (`cypher:<md5-8>`) a long session accumulates.
-    KEEP_LAST: int = 32
-    #: auto-compact when the parquet directory holds more than this many
-    #: appended part files (each `record` call writes exactly one).
-    COMPACT_EVERY: int = 256
+    #: per-(name, command) history cap: `record` keeps the newest
+    #: KEEP_LAST records for each key, so `estimate` reads stay bounded no
+    #: matter how many distinct per-query fingerprints (`cypher:<md5-8>`)
+    #: a long session accumulates — the reference perfdb's rolling window
+    #: per sla_category.
+    KEEP_LAST = 32
+
+    @contextmanager
+    def _db(self):
+        """A connection whose block is one transaction: committed on exit,
+        rolled back on error, closed either way."""
+        os.makedirs(os.path.dirname(os.path.abspath(self.path)), exist_ok=True)
+        with closing(sqlite3.connect(self.path)) as con:
+            con.executescript(_SCHEMA)
+            with con:
+                yield con
 
     def record(self, name: str, command: str, partitions: int, seconds: float) -> None:
-        self._recover()
-        df = self.spark.createDataFrame(
-            [(name, command, partitions, float(seconds), float(time.time()))],
-            "name string, command string, partitions int, seconds double, ts double",
-        )
-        df.coalesce(1).write.mode("append").parquet(self.path)
-        try:
-            n_parts = sum(
-                1 for f in os.listdir(self.path) if f.endswith(".parquet")
+        with self._db() as con:
+            con.execute(
+                "INSERT INTO perf VALUES (?, ?, ?, ?, ?)",
+                (name, command, int(partitions), float(seconds), time.time()),
             )
-        except OSError:
-            # non-local path (or racing delete): auto-compaction is a
-            # local-FS feature — see the module docstring's seam note
-            return
-        if n_parts > self.COMPACT_EVERY:
-            self.compact()
-
-    def _recover(self) -> None:
-        """Finish an interrupted compact(): if a crash landed between the
-        two renames, the live ledger sits at <path>.compact-old — move it
-        back before any read or append touches <path>."""
-        old = self.path.rstrip("/") + ".compact-old"
-        if not os.path.exists(self.path) and os.path.exists(old):
-            os.rename(old, self.path)
-
-    def compact(self, keep_last: int | None = None) -> int:
-        """Rewrite the ledger keeping only the newest `keep_last` records
-        per (name, command) key. Bounds both the on-disk size and the
-        full-table scan `estimate` performs — mirrors the reference
-        perfdb's bounded `sla_performance` history (ddl/perfdb.sql keeps a
-        rolling window per sla_category). Returns the retained row count.
-        """
-        self._recover()
-        if not os.path.exists(self.path):
-            return 0
-        keep = keep_last if keep_last is not None else self.KEEP_LAST
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("name", "command").orderBy(F.col("ts").desc())
-        kept = (
-            self.history()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= keep)
-            .drop("_rn")
-        )
-        rows = kept.collect()  # ledger is small by construction after cap
-        out = self.spark.createDataFrame(
-            rows,
-            "name string, command string, partitions int, seconds double, ts double",
-        )
-        # crash-safe swap: never mode('overwrite') the live ledger (that
-        # deletes it before rewriting — a crash mid-write loses the whole
-        # history). Write beside it, then two renames; _recover() heals a
-        # crash landing between them.
-        import shutil
-
-        tmp = self.path.rstrip("/") + ".compact-tmp"
-        old = self.path.rstrip("/") + ".compact-old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        out.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-        return len(rows)
+            con.execute(
+                "DELETE FROM perf WHERE name = ? AND command = ? AND rowid NOT IN"
+                " (SELECT rowid FROM perf WHERE name = ? AND command = ?"
+                "  ORDER BY rowid DESC LIMIT ?)",
+                (name, command, name, command, self.KEEP_LAST),
+            )
 
     @contextmanager
     def timed(self, name: str, command: str, partitions: int = 0):
@@ -113,23 +69,23 @@ class PerfCatalog:
         yield
         self.record(name, command, partitions, time.perf_counter() - t0)
 
-    def history(self) -> DataFrame:
-        self._recover()
-        return self.spark.read.parquet(self.path)
+    def history(self) -> list:
+        """Every record as a ``(name, command, partitions, seconds, ts)``
+        tuple, oldest first."""
+        with self._db() as con:
+            return con.execute("SELECT * FROM perf ORDER BY rowid").fetchall()
+
+    def _by_command(self, name: str) -> list:
+        with self._db() as con:
+            return con.execute(
+                "SELECT command, seconds FROM perf WHERE name = ?", (name,)
+            ).fetchall()
 
     def estimate(self, name: str, command: str) -> float | None:
         """Median observed latency for (name, command) — the calibration
-        value the reference's SLA admission compares against."""
-        self._recover()
-        if not os.path.exists(self.path):
-            return None
-        rows = (
-            self.history()
-            .filter((F.col("name") == name) & (F.col("command") == command))
-            .agg(F.expr("percentile_approx(seconds, 0.5)").alias("p50"))
-            .collect()
-        )
-        return rows[0]["p50"] if rows and rows[0]["p50"] is not None else None
+        value the reference's SLA admission compares against. The lower
+        median, so the estimate is always a latency that was observed."""
+        return _median_low(s for c, s in self._by_command(name) if c == command)
 
     def estimate_family(self, name: str, family: str) -> float | None:
         """Median latency across a whole command FAMILY — the rollup the
@@ -139,25 +95,18 @@ class PerfCatalog:
         this rollup answers family-level introspection ("how slow is
         cypher on this graph overall?"). Matches both the bare family
         name and any `family:<fingerprint>` key."""
-        self._recover()
-        if not os.path.exists(self.path):
-            return None
-        rows = (
-            self.history()
-            .filter(
-                (F.col("name") == name)
-                & (
-                    (F.col("command") == family)
-                    | F.col("command").startswith(family + ":")
-                )
-            )
-            .agg(F.expr("percentile_approx(seconds, 0.5)").alias("p50"))
-            .collect()
+        return _median_low(
+            s for c, s in self._by_command(name)
+            if c == family or c.startswith(family + ":")
         )
-        return rows[0]["p50"] if rows and rows[0]["p50"] is not None else None
 
     def admits(self, name: str, command: str, sla_seconds: float) -> bool:
         """SLA admission: accept when unknown or estimated within the SLA
         (JobScheduler.cpp:79-93 semantics, minus the rejection queue)."""
         est = self.estimate(name, command)
         return est is None or est <= sla_seconds
+
+
+def _median_low(seconds) -> float | None:
+    seconds = list(seconds)
+    return statistics.median_low(seconds) if seconds else None

@@ -34,7 +34,11 @@ def _as_double(col: str):
     return F.expr(f"transform({col}, x -> cast(x as double))")
 
 
-_COS6_UDF = None  # built lazily: pandas_udf needs an active session
+# built lazily (pandas_udf needs an active session), and built TWICE:
+# asNondeterministic() flips the UDF it is called on, so one shared
+# instance would turn every deterministic caller nondeterministic too
+_COS6_UDF = None
+_COS6_NONDET_UDF = None
 
 
 def _round6_half_up(c: np.ndarray) -> np.ndarray:
@@ -82,7 +86,7 @@ def _cos6(a: str, b: str, nondet: bool = False):
     the function itself is pure, so results are unchanged. Callers that
     only window/rank over the column keep the deterministic default
     (non-determinism would block their own legitimate pushdowns)."""
-    global _COS6_UDF
+    global _COS6_UDF, _COS6_NONDET_UDF
     if _COS6_UDF is None:
 
         def _cos6_batch(x_s: pd.Series, y_s: pd.Series) -> pd.Series:
@@ -125,7 +129,8 @@ def _cos6(a: str, b: str, nondet: bool = False):
             return res
 
         _COS6_UDF = F.pandas_udf(_cos6_batch, "double")
-    fn = _COS6_UDF.asNondeterministic() if nondet else _COS6_UDF
+        _COS6_NONDET_UDF = F.pandas_udf(_cos6_batch, "double").asNondeterministic()
+    fn = _COS6_NONDET_UDF if nondet else _COS6_UDF
     return fn(F.col(a), F.col(b))
 
 

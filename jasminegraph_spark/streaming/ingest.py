@@ -31,11 +31,6 @@ from pyspark.sql import functions as F
 from jasminegraph_spark.analytics.graph_algs import canonical_undirected
 from jasminegraph_spark.sources.readers import EDGE_WIRE_SCHEMA
 
-# r14 §2.6: overlap the tracker's per-batch parquet append with its delta
-# job (see StreamingTriangleCounter.process_batch). Module flag so the
-# sequential shape stays one toggle away for A/Bs and debugging.
-_OVERLAP_APPEND = True
-
 
 @dataclass
 class StreamRegistry:
@@ -144,8 +139,11 @@ class EdgeStreamIngest:
         replayed after a crash replaces its previous output instead of
         double-appending — exactly-once store contents from
         at-least-once foreachBatch delivery, on plain parquet (a Delta/
-        Iceberg transactional sink drops in unchanged). No per-batch
-        count job: totals come from the store (total_edges())."""
+        Iceberg transactional sink drops in unchanged). The overwrite
+        mode is a writer option, not session conf: foreachBatch hands
+        over frames bound to the stream's cloned session, so a conf set
+        on ``self.spark`` never reaches these writes. No per-batch count
+        job: totals come from the store (total_edges())."""
         edges = batch_df.select(
             F.concat_ws("->", F.col("source.id"), F.col("destination.id")).alias("id"),
             F.col("source.id").alias("src"),
@@ -161,17 +159,12 @@ class EdgeStreamIngest:
             .select("id", F.col("p")["label"].alias("label"), F.col("p").alias("properties"))
             .withColumn("batch_id", F.lit(batch_id))
         )
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            edges.write.mode("overwrite").partitionBy("batch_id").parquet(
-                f"{self.graph_path}/edges"
-            )
-            nodes.write.mode("overwrite").partitionBy("batch_id").parquet(
-                f"{self.graph_path}/nodes"
-            )
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        edges.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(f"{self.graph_path}/edges")
+        nodes.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(f"{self.graph_path}/nodes")
 
     def total_edges(self) -> int:
         """Running edge total, derived from the store (metadb-count
@@ -551,41 +544,18 @@ class StreamingTriangleCounter:
             merged = batch_nbrs
         prev = self._nbrs
         self._nbrs = merged.localCheckpoint(eager=False)
-        # r14 (guide §2.6): the durable parquet append and the delta are
-        # INDEPENDENT actions — both read only the pinned batch blocks
-        # (materialized above by the n_batch count), so the append runs
-        # on a driver thread while the (much heavier) delta job executes;
-        # Spark schedules both FIFO and the append's map-only tasks
-        # back-fill the delta's stragglers. Crash semantics are unchanged:
-        # _write_aggregate still happens only after BOTH complete, so a
-        # crash mid-either leaves the same edge-rows/aggregate mismatch
-        # _load_aggregate already raises on. (A/B'd: persist-chaining the
-        # state generations to save the merge's full-state exchange was
-        # measured FLAT and reverted — AQE hides cached/checkpointed
-        # output partitioning on 4.1, eager or lazy, so the exchange
-        # cannot be elided at the DataFrame layer.)
-        if _OVERLAP_APPEND:
-            import threading
-
-            append_err: list = []
-
-            def _append():
-                try:
-                    batch_edges.write.mode("append").parquet(self.state_path)
-                except BaseException as exc:  # surfaced after the delta join
-                    append_err.append(exc)
-
-            appender = threading.Thread(target=_append, name="tracker-append")
-            appender.start()
-            try:
-                delta = _delta_from_arrays(self._nbrs, new_c, bcast_new)
-            finally:
-                appender.join()
-            if append_err:
-                raise append_err[0]
-        else:  # sequential fallback (A/B + single-threaded debugging)
-            delta = _delta_from_arrays(self._nbrs, new_c, bcast_new)
-            batch_edges.write.mode("append").parquet(self.state_path)
+        # Delta first, then the durable append, in sequence: a failed
+        # delta leaves the state directory untouched, so a restart
+        # resumes cleanly. A crash after the append but before
+        # _write_aggregate leaves edge rows the aggregate does not count;
+        # _load_aggregate raises on that mismatch at the next start;
+        # deleting the state dir and replaying the stream recovers. (A/B'd:
+        # persist-chaining the state generations to save the merge's
+        # full-state exchange was measured FLAT and reverted — AQE hides
+        # cached/checkpointed output partitioning on 4.1, eager or lazy,
+        # so the exchange cannot be elided at the DataFrame layer.)
+        delta = _delta_from_arrays(self._nbrs, new_c, bcast_new)
+        batch_edges.write.mode("append").parquet(self.state_path)
         self.total += delta
         # only AFTER the delta's action has pinned the merged blocks:
         # unpersisting the previous generation before materialization

@@ -106,12 +106,15 @@ def test_streaming_triangles_command(engine, tmp_path):
                     }
                 )
             )
-    (src / "b1.jsonl").write_text("\n".join(lines[:7]) + "\n")
-    (src / "b2.jsonl").write_text("\n".join(lines[7:]) + "\n")
+    # three files at maxFilesPerTrigger=2: two micro-batches, and every
+    # batch's edges must stay in the store
+    for i, chunk in enumerate((lines[:5], lines[5:10], lines[10:])):
+        (src / f"b{i}.jsonl").write_text("\n".join(chunk) + "\n")
     ingest, counter, q = engine.add_stream_with_triangles(
         "stream_g", str(src), str(tmp_path / "ck")
     )
     q.awaitTermination(120)
+    assert ingest.edges().count() == len(lines)
     assert counter.total == 5
     assert counter.total == triangle_count(ingest.edges())
     assert engine.stop_stream("stream_g") is False  # already finished
@@ -331,7 +334,7 @@ def test_engine_beam_and_truncate_verbs(spark, tmp_path):
     import os
 
     assert not os.path.isdir(tmp_path / "s" / "bg")
-    assert os.path.isdir(tmp_path / "s" / "_perfdb")  # ledger survives
+    assert os.path.isfile(tmp_path / "s" / "_perfdb.sqlite")  # ledger survives
     assert (bystander / "nodes" / "data.txt").exists()  # bystander kept
     assert eng.catalog.names() == []  # the public accessor
 

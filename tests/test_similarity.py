@@ -535,6 +535,18 @@ def test_cos6_degenerate_rows_yield_null(spark):
     assert {r["id"] for r in kept.collect()} == {1, 5}
 
 
+def test_cos6_nondet_call_leaves_deterministic_udf_alone(spark):
+    """asNondeterministic() flips the UDF it is called on: a nondet=True
+    caller must not turn the window/rank callers' deterministic UDF
+    nondeterministic as well."""
+    from jasminegraph_spark.pipeline import similarity as sim
+
+    sim._cos6("qv", "cv", nondet=True)
+    sim._cos6("qv", "cv")
+    assert sim._COS6_UDF._unwrapped.deterministic
+    assert not sim._COS6_NONDET_UDF._unwrapped.deterministic
+
+
 def test_semantic_dedup_zero_norm_kept_and_inert(spark):
     """Deliberate zero-norm semantics (ADVICE r11): a zero vector is
     directionless — never a near-duplicate of anything, never drops a

@@ -95,31 +95,29 @@ def test_catalog_roundtrip(spark, fixture_dir, tmp_path):
     assert all(e["name"] != "pg" for e in cat.list_graphs())
 
 
-def test_perf_catalog(spark, tmp_path):
+def test_perf_catalog(tmp_path):
     from jasminegraph_spark.perf import PerfCatalog
 
-    pc = PerfCatalog(spark, str(tmp_path / "perfdb"))
+    pc = PerfCatalog(str(tmp_path / "perfdb.sqlite"))
     assert pc.estimate("g1", "cypher") is None
     assert pc.admits("g1", "cypher", 0.001)  # unknown → admit
     for s in (0.2, 0.4, 0.6):
         pc.record("g1", "cypher", 2, s)
     with pc.timed("g1", "trian", 2):
         pass
-    assert pc.history().count() == 4
-    est = pc.estimate("g1", "cypher")
-    assert 0.2 <= est <= 0.6
+    assert len(pc.history()) == 4
+    assert pc.estimate("g1", "cypher") == 0.4
     assert pc.admits("g1", "cypher", 1.0)
     assert not pc.admits("g1", "cypher", 0.1)
 
 
-@pytest.mark.sweep  # r14: multi-minute quality/property row -> sweep tier (see pyproject)
-def test_perf_catalog_family_rollup_and_compaction(spark, tmp_path):
+def test_perf_catalog_family_rollup_and_bounded_history(tmp_path):
     """r9: per-query fingerprint keys roll up to a family estimate, and
-    compact() bounds the per-key history so the full-table estimate read
-    cannot grow without bound across long sessions."""
+    each key's history is capped at KEEP_LAST records so the estimate
+    read cannot grow without bound across long sessions."""
     from jasminegraph_spark.perf import PerfCatalog
 
-    pc = PerfCatalog(spark, str(tmp_path / "perfdb"))
+    pc = PerfCatalog(str(tmp_path / "perfdb.sqlite"))
     # two distinct fingerprinted cypher queries + one unrelated command
     for s in (0.1, 0.3):
         pc.record("g1", "cypher:aaaa1111", 2, s)
@@ -129,43 +127,37 @@ def test_perf_catalog_family_rollup_and_compaction(spark, tmp_path):
     assert fam is not None and 0.1 <= fam <= 0.5  # trian excluded
     # per-key estimate still works for admission
     assert pc.estimate("g1", "cypher:bbbb2222") == 0.5
-    # compaction: 40 records for one key → keep newest KEEP_LAST
+    # bounded history: 40 records for one key → the newest KEEP_LAST stay
     for i in range(40):
         pc.record("g2", "cypher:cccc3333", 2, float(i))
-    kept = pc.compact(keep_last=8)
     hist = pc.history()
-    g2 = hist.filter("name = 'g2'").select("seconds").collect()
-    assert len(g2) == 8
-    # newest records survive (seconds 32..39 have the latest ts)
-    assert sorted(r["seconds"] for r in g2) == [float(i) for i in range(32, 40)]
+    g2 = [row[3] for row in hist if row[0] == "g2"]
+    assert g2 == [float(i) for i in range(40 - PerfCatalog.KEEP_LAST, 40)]
     # other keys retain their (short) histories
-    assert hist.filter("name = 'g1'").count() == 4
-    assert kept == hist.count()
+    assert sum(row[0] == "g1" for row in hist) == 4
 
 
-def test_perf_catalog_compaction_crash_recovery(spark, tmp_path):
-    """ADVICE r9: compact() must never mode('overwrite') the live ledger
-    (a crash mid-write would lose the whole history). It swaps via
-    sibling temp + rename; a simulated crash between the two renames
-    (ledger parked at <path>.compact-old) heals on the next access."""
-    import os
+def test_perf_ledger_survives_engine_restart(spark, tmp_path):
+    """The ledger is durable across engine restarts: a fresh engine on the
+    same storage_path sees the calibration an earlier engine recorded, and
+    every recorded request wrote exactly one row under its key."""
+    from jasminegraph_spark.engine import JasmineEngine, SlaRejectedError
 
-    from jasminegraph_spark.perf import PerfCatalog
+    (tmp_path / "g.dl").write_text("1 2\n2 3\n1 3\n")
+    store = str(tmp_path / "store")
+    eng = JasmineEngine(spark, storage_path=store)
+    eng.add_graph("rg", str(tmp_path / "g.dl"))
+    assert eng.triangle_count("rg") == 1  # calibrates (rg, trian)
+    query = "MATCH (n) RETURN count(n) AS n"
+    for _ in range(3):
+        eng.cypher("rg", query)
 
-    path = str(tmp_path / "perfdb")
-    pc = PerfCatalog(spark, path)
-    for s in (0.1, 0.2, 0.3):
-        pc.record("g1", "trian", 2, s)
-    pc.compact(keep_last=2)
-    assert pc.history().count() == 2  # compaction itself works
-    # simulate the crash window: path renamed away, tmp never landed
-    os.rename(path, path + ".compact-old")
-    assert not os.path.exists(path)
-    est = pc.estimate("g1", "trian")  # heals via _recover()
-    assert est is not None and 0.1 <= est <= 0.3
-    assert os.path.exists(path) and not os.path.exists(path + ".compact-old")
-    pc.record("g1", "trian", 2, 0.4)  # appends to the healed ledger
-    assert pc.history().count() == 3
+    fresh = JasmineEngine(spark, storage_path=store)
+    fresh.add_graph("rg", str(tmp_path / "g.dl"))
+    with pytest.raises(SlaRejectedError):
+        fresh.triangle_count("rg", sla_seconds=0.000001)
+    key = fresh._cypher_perf_key(query)
+    assert sum(row[:2] == ("rg", key) for row in fresh.perf.history()) == 3
 
 
 def test_as_of_join_semantics(spark):

@@ -39,8 +39,10 @@ def test_edge_stream_ingest(spark, tmp_path):
     for k in range(6):
         a, b, c = 3 * k, 3 * k + 1, 3 * k + 2
         lines += [_wire_edge(a, b), _wire_edge(b, c), _wire_edge(c, a)]
-    (src_dir / "part1.jsonl").write_text("\n".join(lines[:9]) + "\n")
-    (src_dir / "part2.jsonl").write_text("\n".join(lines[9:]) + "\n")
+    # six files at maxFilesPerTrigger=4: two micro-batches, and every
+    # batch's edges must stay in the store
+    for k in range(6):
+        (src_dir / f"part{k}.jsonl").write_text("\n".join(lines[3 * k:3 * k + 3]) + "\n")
 
     ingest = EdgeStreamIngest(spark, str(tmp_path / "graph"))
     reg = StreamRegistry()
