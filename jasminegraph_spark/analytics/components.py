@@ -21,59 +21,50 @@ from pyspark.sql import functions as F
 
 from jasminegraph_spark.analytics.graph_algs import canonical_undirected
 from jasminegraph_spark.cache import checkpoint, checkpoint_fresh_stats, finalize
+from jasminegraph_spark.topology import topology_of
 
 
 def connected_components(
-    edges: DataFrame,
+    edges,
     max_iterations: int = 20,
     broadcast_threshold: int = 10_000_000,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Weakly connected components via hash-min propagation.
     Returns (node, component) with component = min node id reachable.
+    Self-loops are ignored: a vertex with no other edge has no row.
 
-    ``assume_canonical=True`` (r13) asserts the caller's edge set is
-    already an a<b distinct self-loop-free projection (true for
-    co_order_edges and any canonical_undirected output) and skips the
-    redundant |E|-row least/greatest + distinct shuffle and its persist —
-    the labels are invariant under edge direction and duplication anyway;
-    the skip only avoids re-deriving what the caller already guarantees.
+    Runs on a :class:`~jasminegraph_spark.topology.Topology`: ``edges`` is
+    the catalog's resident one, or an edge DataFrame that gets a
+    temporary one released with the result. ``assume_canonical=True``
+    (r13) asserts the edge DataFrame is already an a<b distinct
+    self-loop-free projection (true for co_order_edges and any
+    canonical_undirected output), so the temporary topology skips its
+    dedup — the labels are invariant under edge direction and
+    duplication anyway.
     """
-    if assume_canonical:
-        und = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        caches = []
-    else:
-        und = canonical_undirected(edges).persist()
-        caches = [und]
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    # pre-partition the persisted adjacency by the key every round re-uses
-    # (r13, guide §2.4): under the broadcast-label regime each round's only
-    # |E|-sized exchange was the groupBy(u) neighbor-min aggregation —
-    # partitioning adj by u once makes it exchange-free every round (the
-    # alias u → node carries through the select). Past the broadcast
-    # threshold the per-round join on v shuffles adj instead, so partition
-    # by the join key v. The key choice probes 2|E| (nodes ≤ adjacency
-    # rows, so 2|E| under the threshold proves the broadcast regime); a
-    # graph with >threshold/2 edges but <threshold nodes merely keeps its
-    # per-round aggregation exchange — a narrow, perf-only window.
-    n_adj_rows = und.count() * 2
-    adj = adj.repartition(
-        "u" if n_adj_rows <= broadcast_threshold else "v"
-    ).persist()
-    caches.append(adj)
+    topo, owned = topology_of(edges, distinct=not assume_canonical)
+    caches = list(owned)
+    adj = topo.adj.select("u", "v").filter(F.col("u") != F.col("v"))
+    # the label table is |V| rows vs |E| adjacency rows: broadcast it while
+    # it fits so the adjacency is never re-shuffled per round (same guard
+    # as pagerank). In that regime each round's only |E|-sized exchange
+    # would be the groupBy(u) neighbor-min aggregation, and the topology
+    # is already partitioned by u (the alias u → node carries through the
+    # select), so every round is exchange-free. Past the threshold the
+    # per-round join on v shuffles the adjacency instead, so partition it
+    # by the join key v once, and materialize it before the rounds: an
+    # un-materialized cache hides its partitioning behind an unresolved
+    # AdaptiveSparkPlan, and every round planned against it would
+    # re-insert the exchange the repartition removes.
+    n_nodes = topo.n_vertices
+    if n_nodes > broadcast_threshold:
+        adj = adj.repartition("v").persist()
+        caches.append(adj)
+        adj.count()
     labels = adj.select(F.col("u").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
-    # the label table is |V| rows vs |E| adjacency rows: broadcast it while
-    # it fits so the persisted adjacency is never re-shuffled per round
-    # (same guard as pagerank; past the threshold fall back to a
-    # co-partitioned shuffle join). This count also materializes the
-    # adjacency cache NOW: an un-materialized cache hides its partitioning
-    # behind an unresolved AdaptiveSparkPlan, and every round planned
-    # against it would re-insert the exchange the repartition removes.
-    n_nodes = labels.count()
     brd = (lambda df: F.broadcast(df)) if n_nodes <= broadcast_threshold else (lambda df: df)
     for i in range(max_iterations):
         # candidate = min(own, min over neighbors' labels); carrying the

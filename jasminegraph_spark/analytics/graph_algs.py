@@ -4,7 +4,10 @@ Reference surface (frontend dispatch src/frontend/JasmineGraphFrontEnd.cpp:
 230-346): trian, pgrnk, idegree/odegree, egonet, vcnt/ecnt, top_k_page_rank.
 
 All functions take a bare edge DataFrame with ``src``/``dst`` columns (any
-orderable type). The reference's local/central/duplicate store dance —
+orderable type); ``trian``, ``pgrnk`` and ``egonet`` also take a resident
+:class:`~jasminegraph_spark.topology.Topology` (the engine passes the
+catalog's), which saves them their dedup, degree and repartition jobs.
+The reference's local/central/duplicate store dance —
 per-partition counts plus master-side aggregation over partition
 combinations (TriangleCountExecutor.cpp:1113-1260) — disappears: one
 shuffle co-locates everything.
@@ -25,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jasminegraph_spark.cache import checkpoint, finalize
+from jasminegraph_spark.topology import Topology, topology_of
 
 
 def canonical_undirected(edges: DataFrame, assume_canonical: bool = False) -> DataFrame:
@@ -83,7 +87,7 @@ def triangle_list(edges: DataFrame) -> DataFrame:
     return finalize(tri, und)
 
 
-def triangle_count_df(edges: DataFrame, assume_canonical: bool = False) -> DataFrame:
+def triangle_count_df(edges, assume_canonical: bool = False) -> DataFrame:
     """`trian` as a one-row DataFrame (n_triangles): degree-ordered DAG +
     per-edge sorted-neighbor intersection.
 
@@ -102,26 +106,24 @@ def triangle_count_df(edges: DataFrame, assume_canonical: bool = False) -> DataF
     even when they fit (driver collect dominates; same result as the
     streaming tracker's A/B, ingest.py).
 
-    The canonical edge set is persisted and reused across the degree calc
-    and both array joins — without it the upstream lineage (e.g. a
-    co-occurrence self-join producing the edges) re-executes many times
-    (observed 22 parquet scans in the un-persisted plan).
-
-    ``assume_canonical=True`` (r13, same contract as connected_components):
-    the caller's edge set is already a<b distinct, self-loop-free AND
-    caller-cached, so the redundant least/greatest + distinct exchange and
-    the duplicate persist of the same rows are both skipped."""
-    if assume_canonical:
-        und = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        caches = []
-    else:
-        und = canonical_undirected(edges).persist()
-        caches = [und]
-    ordered = _degree_ordered(und).persist()
-    # persisted: both array joins read nbr, and exchange reuse covers
-    # only the shuffle — the collect_list aggregation above it would
-    # still run twice (r12 review; measured ~15% on the warm row)
-    nbr = ordered.groupBy("lo").agg(F.collect_list("hi").alias("ns")).persist()
+    Runs on a :class:`~jasminegraph_spark.topology.Topology`: the
+    orientation is a filter on its stored degrees (a self-loop passes
+    neither side of it), and the out-neighbor arrays aggregate on the
+    key the topology is already partitioned by. ``edges`` is either the
+    catalog's resident topology or an edge DataFrame, which gets a
+    temporary one released with the result. ``assume_canonical=True``
+    (r13) asserts the edge DataFrame is already a<b distinct and
+    self-loop-free, so the temporary topology skips its dedup."""
+    topo, owned = topology_of(edges, distinct=not assume_canonical)
+    lower_first = (F.col("deg_u") < F.col("deg_v")) | (
+        (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
+    )
+    ordered = topo.adj.filter(lower_first).select(F.col("u").alias("lo"), F.col("v").alias("hi"))
+    # not persisted: both array joins read nbr, but it aggregates the
+    # resident topology in place (no exchange), so running it twice is
+    # one cheap pass each, while a persist costs its own build job
+    # (measured 7 → 5 jobs per call, same latency, on a 1k-vertex R-MAT)
+    nbr = ordered.groupBy("lo").agg(F.collect_list("hi").alias("ns"))
     j = ordered.join(
         nbr.select(F.col("lo").alias("u"), F.col("ns").alias("ns_u")),
         ordered["lo"] == F.col("u"),
@@ -141,78 +143,38 @@ def triangle_count_df(edges: DataFrame, assume_canonical: bool = False) -> DataF
             F.array_intersect("ns_u", F.coalesce("ns_v", F.array()))
         ).alias("c")
     ).agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
-    return finalize(n, *caches, ordered, nbr)
+    return finalize(n, *owned)
 
 
-def triangle_count(edges: DataFrame) -> int:
-    """`trian` — exact global triangle count (scalar)."""
+def triangle_count(edges) -> int:
+    """`trian` — exact global triangle count (scalar); ``edges`` as in
+    :func:`triangle_count_df`."""
     return triangle_count_df(edges).first()["n_triangles"]
 
 
-def pagerank(
+def _raw_contributions(
     edges: DataFrame,
-    alpha: float = 0.85,
-    iterations: int = 10,
-    undirected: bool = False,
-    broadcast_threshold: int = 10_000_000,
-    sources: list | None = None,
-    weight_col: str | None = None,
-    dedup_edges: bool = True,
-) -> DataFrame:
-    """`pgrnk` (JasmineGraphInstanceService.cpp:1650-1816; defaults α=0.85,
-    10 iterations — FrontEndProtocol.h:112-113).
-
-    Returns (node, rank). Vertex set = nodes incident to an edge (the
-    reference iterates its adjacency stores the same way). No dangling-mass
-    redistribution: on a symmetrized graph every vertex has out-degree ≥ 1,
-    matching the reference's exchange of world-to-local contributions.
-
-    r_{k+1}(v) = (1-α)·p(v) + α · Σ_{u→v} r_k(u)/out(u)
-
-    ``sources`` switches the restart vector p from uniform 1/N (classic
-    PageRank) to 1/|S| over the seed set (personalized PageRank / random
-    walk with restart) — proximity-to-the-seeds scores, the query behind
-    "related nodes" recommendation. Same loop, same broadcast-vs-shuffle
-    size guard; the restart vector is a literal IN expression (seeds are
-    a short list, never a table), so the per-iteration plan is unchanged.
-
-    ``weight_col`` switches the mass split from uniform 1/out_deg to
-    edge-weight-proportional (weighted PageRank): contribution =
-    r_k(u)·w(u,v)/Σ_out w(u) — same loop, out-degree becomes out-weight.
-    Parallel (u, v) edges combine by weight SUM (a multigraph carries
-    their total mass); in the unweighted path distinct collapses them to
-    binary adjacency.
-
-    ``dedup_edges=False`` (r12) asserts the caller's edge set already
-    carries no duplicate (src, dst) rows — true for every canonical
-    a<b distinct projection (co_order_edges), whose symmetrized union
-    cannot collide either — and skips the |E|-row dedup shuffle. Two
-    more derived facts shrink the undirected plan for every caller:
-    after symmetrization each node has an out-edge, so the vertex set
-    IS out_deg's key set (no union+distinct over 2|E| endpoint rows),
-    and each node has an in-edge, so the contribution aggregate covers
-    the whole vertex set and the per-iteration dangling-mass left join
-    folds into the aggregate itself. Together ~0.6× the r11 runtime at
-    sf0.1; identical ranks (oracle parity re-run both SFs).
-    """
+    undirected: bool,
+    weight_col: str | None,
+    dedup_edges: bool,
+    broadcast_threshold: int,
+    iterations: int,
+):
+    """pgrnk's setup straight from an edge DataFrame, for the directed and
+    weighted variants a Topology cannot carry. Returns (contrib_base,
+    nodes, n_total, caches): the (src, dst, out_deg[, __w]) contribution
+    edges, persisted and partitioned for the iterations, the vertex set,
+    its size and every frame the caller must release."""
     weighted = weight_col is not None
     caches = []
     if not weighted:
-        # unweighted: 2-column binary adjacency and a plain count
-        # out-degree — no weight column rides the per-iteration plan
+        # directed unweighted: 2-column binary adjacency and a plain
+        # count out-degree — no weight column rides the per-iteration plan
         e = edges.select("src", "dst")
-        if undirected:
-            e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        if dedup_edges:
-            e = e.distinct().persist()
-        else:
-            # persisted for the same reason as the weighted branch: e
-            # materializes at least twice below (out_deg + contrib_base).
-            # Today's callers ride the memoized co_order_edges cache so
-            # this is nearly free, but any other caller of the public
-            # kwarg would re-execute the full upstream edge pipeline
-            # per reference without it (ADVICE r12)
-            e = e.persist()
+        # persisted even without the dedup: e materializes at least twice
+        # below (out_deg + contrib_base), and without it the full
+        # upstream edge pipeline re-executes per reference (ADVICE r12)
+        e = e.distinct().persist() if dedup_edges else e.persist()
         caches.append(e)
     else:
         # weighted pgrnk: mass splits ∝ edge weight instead of 1/out_deg.
@@ -226,7 +188,6 @@ def pagerank(
             )
         if dedup_edges:
             e = e.groupBy("src", "dst").agg(F.sum("__w").alias("__w")).persist()
-            caches.append(e)
         else:
             # still persisted: weighted projections (co_order_weighted)
             # are NOT session-memoized like the unweighted co-order
@@ -234,7 +195,7 @@ def pagerank(
             # contrib_base build) — without this the whole upstream
             # pipeline runs twice (r12 review)
             e = e.persist()
-            caches.append(e)
+        caches.append(e)
     out_deg = (
         e.groupBy("src").agg(F.sum("__w").alias("out_deg"))
         if weighted
@@ -279,6 +240,84 @@ def pagerank(
     # action materializes the cache itself).
     if iterations > 1:
         contrib_base.count()
+    return contrib_base, nodes, n_total, caches
+
+
+def pagerank(
+    edges,
+    alpha: float = 0.85,
+    iterations: int = 10,
+    undirected: bool = False,
+    broadcast_threshold: int = 10_000_000,
+    sources: list | None = None,
+    weight_col: str | None = None,
+    dedup_edges: bool = True,
+) -> DataFrame:
+    """`pgrnk` (JasmineGraphInstanceService.cpp:1650-1816; defaults α=0.85,
+    10 iterations — FrontEndProtocol.h:112-113).
+
+    Returns (node, rank). Vertex set = nodes incident to an edge (the
+    reference iterates its adjacency stores the same way). No dangling-mass
+    redistribution: on a symmetrized graph every vertex has out-degree ≥ 1,
+    matching the reference's exchange of world-to-local contributions.
+
+    r_{k+1}(v) = (1-α)·p(v) + α · Σ_{u→v} r_k(u)/out(u)
+
+    ``sources`` switches the restart vector p from uniform 1/N (classic
+    PageRank) to 1/|S| over the seed set (personalized PageRank / random
+    walk with restart) — proximity-to-the-seeds scores, the query behind
+    "related nodes" recommendation. Same loop, same broadcast-vs-shuffle
+    size guard; the restart vector is a literal IN expression (seeds are
+    a short list, never a table), so the per-iteration plan is unchanged.
+
+    ``weight_col`` switches the mass split from uniform 1/out_deg to
+    edge-weight-proportional (weighted PageRank): contribution =
+    r_k(u)·w(u,v)/Σ_out w(u) — same loop, out-degree becomes out-weight.
+    Parallel (u, v) edges combine by weight SUM (a multigraph carries
+    their total mass); in the unweighted path distinct collapses them to
+    binary adjacency.
+
+    Undirected unweighted pgrnk runs on a
+    :class:`~jasminegraph_spark.topology.Topology` — ``edges`` is the
+    catalog's resident one, or an edge DataFrame that gets a temporary
+    one released with the result. Each symmetric row (u, v, deg_u, deg_v)
+    is the contribution edge v → u with out-degree deg_v, already
+    partitioned by u, the key every iteration aggregates on, so there is
+    no setup job at all. Symmetrization gives every node an out-edge and
+    an in-edge, so the contribution aggregate covers the whole vertex
+    set and the per-iteration dangling-mass left join folds into the
+    aggregate itself (r12). Directed and weighted pgrnk build their
+    contribution edges from the edge DataFrame (:func:`_raw_contributions`).
+
+    ``dedup_edges=False`` (r12) asserts the caller's edge set already
+    carries no duplicate (src, dst) rows — true for every canonical
+    a<b distinct projection (co_order_edges), whose symmetrized union
+    cannot collide either — and skips the dedup.
+    """
+    weighted = weight_col is not None
+    if isinstance(edges, Topology) or (undirected and not weighted):
+        if weighted:
+            raise ValueError("a Topology carries no edge weights")
+        undirected = True
+        topo, owned = topology_of(edges, distinct=dedup_edges)
+        caches = list(owned)
+        n_total = topo.n_vertices
+        nodes = topo.adj.select(F.col("u").alias("node")).distinct()
+        contrib_base = topo.adj.select(
+            F.col("v").alias("src"),
+            F.col("u").alias("dst"),
+            F.col("deg_v").cast("double").alias("out_deg"),
+        )
+        if n_total > broadcast_threshold:
+            # shuffled rank joins: partition by the join key instead, as
+            # the raw-edge setup does, and materialize before the loop
+            contrib_base = contrib_base.repartition("src").persist()
+            caches.append(contrib_base)
+            contrib_base.count()
+    else:
+        contrib_base, nodes, n_total, caches = _raw_contributions(
+            edges, undirected, weight_col, dedup_edges, broadcast_threshold, iterations
+        )
     if sources is not None:
         # restart mass concentrated on the seeds (each gets 1/|S|); a
         # seed absent from the vertex set simply contributes no mass
@@ -337,7 +376,7 @@ def pagerank(
     return finalize(ranks, *caches)
 
 
-def personalized_pagerank(edges: DataFrame, sources: list, **kw) -> DataFrame:
+def personalized_pagerank(edges, sources: list, **kw) -> DataFrame:
     """Random walk with restart from ``sources`` (the `pgrnk` loop with a
     seed-concentrated restart vector). Scores are proximity to the seed
     set; nodes unreachable from the seeds converge to exactly 0 rather
@@ -347,7 +386,7 @@ def personalized_pagerank(edges: DataFrame, sources: list, **kw) -> DataFrame:
     return pagerank(edges, sources=sources, **kw)
 
 
-def top_k_pagerank(edges: DataFrame, k: int = 10, **kw) -> DataFrame:
+def top_k_pagerank(edges, k: int = 10, **kw) -> DataFrame:
     """`top_k_page_rank` (JasmineGraphInstanceService.cpp:2593-2653) —
     TopK is a per-partition limit + single merge, not a full sort."""
     return pagerank(edges, **kw).orderBy(F.desc("rank"), F.asc("node")).limit(k)
@@ -363,29 +402,41 @@ def degree_distribution(edges: DataFrame, direction: str = "in") -> DataFrame:
     return per_node.groupBy("degree").agg(F.count("*").alias("n_nodes"))
 
 
-def egonet(edges: DataFrame, vertex, undirected: bool = True) -> DataFrame:
+def egonet(edges, vertex, undirected: bool = True) -> DataFrame:
     """`egonet` (JasmineGraphInstanceService.cpp:1404-1500): the induced
     subgraph on {v} ∪ N(v), returned as its edge list (a, b).
 
     Neighbor set is a broadcast-able point-filtered frame, so the induced-
     edge join is two broadcast semi-joins — no full shuffle of the edge
-    table at scale."""
-    e = canonical_undirected(edges) if undirected else edges.select(
-        F.col("src").alias("a"), F.col("dst").alias("b")
-    )
-    nbrs = (
-        e.filter((F.col("a") == vertex) | (F.col("b") == vertex))
-        .select(
+    table at scale. The undirected egonet reads a
+    :class:`~jasminegraph_spark.topology.Topology` (``edges`` is the
+    catalog's resident one, or an edge DataFrame that gets a temporary
+    one): its u<v rows are the canonical edges, its rows with u = vertex
+    give the neighbor set, and neither needs a distinct shuffle."""
+    if not undirected:
+        e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        ego = e.filter((F.col("a") == vertex) | (F.col("b") == vertex)).select(
             F.explode(F.array(F.col("a"), F.col("b"))).alias("node")
         )
-        .distinct()
-    )
-    ego = nbrs  # includes vertex itself (it appears in its own edges)
-    return (
+        owned = ()
+    else:
+        topo, owned = topology_of(edges)
+        e = topo.adj.filter(F.col("u") < F.col("v")).select(
+            F.col("u").alias("a"), F.col("v").alias("b")
+        )
+        # the vertex itself is in the set whenever it has any edge
+        ego = topo.adj.filter(F.col("u") == vertex).select(
+            F.explode(F.array(F.col("u"), F.col("v"))).alias("node")
+        )
+    # a semi-join ignores duplicates on its build side: no distinct
+    out = (
         e.join(F.broadcast(ego.withColumnRenamed("node", "a")), "a", "left_semi")
         .join(F.broadcast(ego.withColumnRenamed("node", "b")), "b", "left_semi")
         .select("a", "b")
     )
+    # a temporary topology is released once the result is materialized;
+    # over the resident one the result stays lazy
+    return finalize(out, *owned) if owned else out
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jasminegraph_spark.topology import Topology
+
 NODE_SCHEMA = T.StructType(
     [
         T.StructField("id", T.StringType(), False),
@@ -113,14 +115,35 @@ class PropertyGraph:
 class GraphCatalog:
     """Engine-level catalog replacing the reference's metadb SQLite
     (ddl/metadb.sql: graph/partition/worker tables). Graphs register by
-    name; persistence is parquet directories, not block files."""
+    name; persistence is parquet directories, not block files.
+
+    Each registered snapshot may also hold a resident
+    :class:`~jasminegraph_spark.topology.Topology`, built by the first
+    analytics call that asks for it and released when the snapshot leaves
+    the catalog (replaced by a new registration under its name, removed,
+    or truncated)."""
 
     spark: SparkSession
     _graphs: dict = field(default_factory=dict)
+    _topologies: dict = field(default_factory=dict)
 
     def register(self, graph: PropertyGraph) -> PropertyGraph:
+        self._release_topology(graph.name)
         self._graphs[graph.name] = graph
         return graph
+
+    def topology(self, name: str) -> Topology:
+        """The snapshot's resident adjacency, built on first use and
+        rebuilt if its cache entry was dropped (``spark.catalog.clearCache``)."""
+        topo = self._topologies.get(name)
+        if topo is None or not topo.live:
+            topo = self._topologies[name] = Topology.build(self.get(name).edges)
+        return topo
+
+    def _release_topology(self, name: str) -> None:
+        topo = self._topologies.pop(name, None)
+        if topo is not None:
+            topo.release()
 
     def get(self, name: str) -> PropertyGraph:
         return self._graphs[name]
@@ -144,6 +167,7 @@ class GraphCatalog:
 
     def remove(self, name: str) -> None:
         """`rmgr` equivalent."""
+        self._release_topology(name)
         self._graphs.pop(name, None)
 
     def save(self, graph: PropertyGraph, base_path: str) -> None:

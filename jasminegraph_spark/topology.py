@@ -1,0 +1,82 @@
+"""Resident adjacency of one graph snapshot.
+
+The reference's batch analytics read one in-memory adjacency map per
+partition, and triangles, PageRank, degree and egonet all walk that same
+map (the HashMap local store, src/localstore/JasmineGraphHashMapLocalStore.h).
+:class:`Topology` is that map on Spark: the symmetrized, distinct
+adjacency ``(u, v, deg_u, deg_v)``, hash-partitioned by ``u``, persisted
+and materialised once, plus the vertex count. Every undirected algorithm
+that reads it (``trian``, ``wcc``, ``egonet``, undirected ``pgrnk``)
+starts from rows already deduplicated, degree-annotated and partitioned
+by the key its per-round aggregation groups on, so none of them pays a
+distinct, degree or repartition job of its own.
+
+``GraphCatalog`` keeps one per registered graph snapshot, built on the
+first analytics call and released when the snapshot leaves the catalog.
+Its memory cost is ~2|E| rows (each undirected edge in both
+orientations; a self-loop once).
+"""
+
+from __future__ import annotations
+
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
+
+@dataclass(frozen=True)
+class Topology:
+    adj: DataFrame  # (u, v, deg_u, deg_v): persisted, hash-partitioned by u
+    n_vertices: int
+
+    @classmethod
+    def build(cls, edges: DataFrame, distinct: bool = True) -> "Topology":
+        """Symmetrize ``edges`` (``src``/``dst``) and annotate each row with
+        both endpoint degrees: two keyed exchanges, no join.
+
+        The symmetric set holds (v, u) for every (u, v), so after one
+        exchange by ``u`` a window count gives ``deg_u``; flipping every
+        row to (v, u, deg_u) and exchanging by the new ``u`` yields the
+        same row set with the old ``deg_u`` now the ``deg_v`` column, and a
+        second window count fills ``deg_u``. ``distinct=False`` asserts the
+        symmetrized rows carry no duplicates (true for a canonical a<b
+        distinct edge set) and skips the in-partition dedup."""
+        by_u = Window.partitionBy("u")
+        e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).repartition("u")
+        if distinct:
+            # (u, v) rows are clustered by u already: a dedup with no exchange
+            sym = sym.distinct()
+        half = sym.select("u", "v", F.count("*").over(by_u).alias("deg_u"))
+        adj = (
+            half.select(F.col("v").alias("u"), F.col("u").alias("v"), F.col("deg_u").alias("deg_v"))
+            .repartition("u")
+            .select("u", "v", F.count("*").over(by_u).alias("deg_u"), "deg_v")
+            .persist()
+        )
+        # the one action: builds every cached partition (a cache always
+        # stores all of its columns) and counts the vertices
+        return cls(adj, adj.select("u").distinct().count())
+
+    @property
+    def live(self) -> bool:
+        """False once the cache entry is gone, e.g. after
+        ``spark.catalog.clearCache()``. Reads the CacheManager's state
+        through ``storageLevel``: ``is_cached`` stays True on Spark 4.1."""
+        lvl = self.adj.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    def release(self) -> None:
+        self.adj.unpersist()
+
+
+def topology_of(edges, distinct: bool = True) -> tuple[Topology, tuple]:
+    """The topology an algorithm runs on, and the caches it must release.
+    A :class:`Topology` passes through and stays resident; an edge
+    DataFrame gets a temporary one, which the algorithm hands to
+    ``finalize`` so it is released with the rest of its intermediates."""
+    if isinstance(edges, Topology):
+        return edges, ()
+    topo = Topology.build(edges, distinct=distinct)
+    return topo, (topo.adj,)
