@@ -6711,58 +6711,6 @@ def _png_decode_prepin(spark, sf_dir):
 
 
 @_q(
-    "pl_jpeg_decode",
-    """
-    WITH m AS (
-        SELECT doc_id AS media_id, 1 + doc_id % 3 AS wb, 1 + doc_id % 2 AS hb,
-               doc_id % 251 AS seed
-        FROM documents
-    ),
-    s AS (
-        SELECT media_id, wb, hb,
-               list_sum(flatten(list_transform(generate_series(0, wb - 1), bx ->
-                   list_transform(generate_series(0, hb - 1), by ->
-                       (seed + 17 * bx + 37 * by) % 251)))) AS block_sum
-        FROM m
-    )
-    SELECT media_id, CAST(8 * wb AS INT) AS width, CAST(8 * hb AS INT) AS height,
-           CAST(64 * wb * hb AS INT) AS n_bytes,
-           CAST(64 * block_sum AS BIGINT) AS body_sum
-    FROM s ORDER BY media_id
-    """,
-)
-def pl_jpeg_decode(spark, sf_dir):
-    """REAL baseline JPEG decode under the driver's hash check (closes
-    the r6 verdict's top remaining codec ask, #3): executors build
-    genuine baseline sequential grayscale JPEGs from each doc id
-    (pipeline/multimodal.encode_jpeg_gray — float forward DCT, all-ones
-    quant, Huffman-coded scan with byte stuffing), then the Arrow
-    mapInPandas decode stage runs the full ITU T.81 entropy decode
-    library-free (_decode_jpeg: canonical Huffman from DHT, DC
-    prediction + EXTEND, AC run-length with EOB/ZRL, dequantize, inverse
-    zigzag, IDCT). Each doc's image is a (1+d%3)×(1+d%2) grid of
-    CONSTANT 8×8 blocks — DC-only coefficients round-trip the lossy
-    transform bit-exactly — so DuckDB recomputes every image's pixel
-    checksum as 64·Σ(seed + 17bx + 37by mod 251): a wrong Huffman
-    assignment, predictor reset, dequant, or IDCT scaling fails the
-    per-image hash. The codec seam narrows to color/progressive JPEG +
-    FLAC/MP3."""
-    from jasminegraph_spark.pipeline.multimodal import decode_media, synthesize_jpeg
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_jpeg(docs))
-    return decoded.select(
-        "media_id", "width", "height", "n_bytes", "body_sum"
-        # r13 pin (see _pin) of the decoded rows before the
-        # sort — orderBy's range-partitioner sampling otherwise
-        # re-executes the whole synth+decode pipeline a second time just
-        # to pick bounds (the sort's child is map-only above the id
-        # spread, so sampling can reuse no shuffle output); measured ~2x
-        # on every media-decode row
-    ).transform(_pin).orderBy("media_id")
-
-
-@_q(
     "pl_flac_decode",
     """
     WITH m AS (
@@ -6794,309 +6742,6 @@ def pl_flac_decode(spark, sf_dir):
 
     docs = _read(spark, sf_dir, "documents").select("doc_id")
     decoded = decode_media(synthesize_flac(docs))
-    return decoded.select(
-        "media_id", "width", "height", "n_bytes", "body_sum"
-        # r13 pin (see _pin) of the decoded rows before the
-        # sort — orderBy's range-partitioner sampling otherwise
-        # re-executes the whole synth+decode pipeline a second time just
-        # to pick bounds (the sort's child is map-only above the id
-        # spread, so sampling can reuse no shuffle output); measured ~2x
-        # on every media-decode row
-    ).transform(_pin).orderBy("media_id")
-
-
-@_q(
-    "pl_mp3_decode",
-    """
-    SELECT doc_id AS media_id,
-           CAST(1152 * (1 + doc_id % 3) AS INT) AS width,
-           CAST(1 AS INT) AS height,
-           CAST(1152 * (1 + doc_id % 3) AS INT) AS n_bytes,
-           CAST(128 * 1152 * (1 + doc_id % 3) AS BIGINT) AS body_sum
-    FROM documents ORDER BY media_id
-    """,
-)
-def pl_mp3_decode(spark, sf_dir):
-    """MPEG-1 Layer III decode under the driver's hash check (r8 — the
-    last common audio format behind the codec seam, VERDICT r7 ask #5):
-    executors build genuine mono MP3 frames from each doc id
-    (pipeline/multimodal.encode_mp3 — real frame headers across all
-    three sample rates and 14 bitrates, padding, optional CRC bytes,
-    all 16 scalefac_compress slen combinations with nonzero
-    scalefactors, all 16 scfsi masks, and a REAL bit reservoir on every
-    7th doc), then the Arrow mapInPandas decode stage walks the full
-    structural pipeline library-free (_decode_mp3: sync + header, side
-    info, reservoir back-pointers, scfsi scalefactor sharing,
-    requantize → alias → IMDCT → overlap-add → frequency inversion →
-    polyphase synthesis). The spectra are digital silence, which every
-    linear DSP stage maps to EXACT zeros — so DuckDB's closed form is
-    n = 1152·frames samples folding to 128 each. The spec's numeric
-    tables (Huffman B.7, sfb B.8, synthesis window B.3) remain the
-    documented injectable seam; the nonzero path is proven by the
-    injected-table contract test (tests/test_beam_multimodal.py)."""
-    from jasminegraph_spark.pipeline.multimodal import decode_media, synthesize_mp3
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_mp3(docs))
-    return decoded.select(
-        "media_id", "width", "height", "n_bytes", "body_sum"
-        # r13 pin (see _pin) of the decoded rows before the
-        # sort — orderBy's range-partitioner sampling otherwise
-        # re-executes the whole synth+decode pipeline a second time just
-        # to pick bounds (the sort's child is map-only above the id
-        # spread, so sampling can reuse no shuffle output); measured ~2x
-        # on every media-decode row
-    ).transform(_pin).orderBy("media_id")
-
-
-@_q(
-    "pl_mp3_stereo_decode",
-    """
-    SELECT doc_id AS media_id,
-           CAST(1152 * (1 + doc_id % 3) AS INT) AS width,
-           CAST(2 AS INT) AS height,
-           CAST(2 * 1152 * (1 + doc_id % 3) AS INT) AS n_bytes,
-           CAST(128 * 2 * 1152 * (1 + doc_id % 3) AS BIGINT) AS body_sum
-    FROM documents ORDER BY media_id
-    """,
-)
-def pl_mp3_stereo_decode(spark, sf_dir):
-    """STEREO MPEG-1 Layer III decode under the driver's hash check
-    (r10 — closes the r9 verdict's top ask: the stereo decoder's
-    evidence was pytest-only): executors build genuine TWO-CHANNEL MP3
-    frames from each doc id (pipeline/multimodal.synthesize_mp3_stereo
-    — channel mode cycling stereo/joint/dual by doc, joint docs cycling
-    mode_ext MS / intensity / MS+intensity, 32-byte side info with
-    gr-major ch-minor granule blocks and per-channel scfsi, every 11th
-    doc window-switching start/short/stop granules with subblock gains,
-    plus the mono fixture's samplerate/bitrate/slen/CRC/padding/
-    reservoir variety), then the Arrow mapInPandas decode stage walks
-    the full stereo pipeline library-free (_decode_mp3: per-channel
-    side info + scalefactors + Huffman, joint-stereo processing on the
-    requantized spectra, per-channel DSP with independent overlap +
-    polyphase state, channel interleave). The spectra are digital
-    silence, which every linear DSP stage maps to EXACT zeros — so
-    DuckDB's closed form is width = 1152·frames samples per channel,
-    height = 2 channels, n_bytes = 2·width interleaved bytes folding to
-    128 each. The nonzero joint-stereo math (MS, long-block intensity,
-    r10 short-block per-window intensity) is proven by the
-    injected-table contract tests (tests/test_beam_multimodal.py)."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        synthesize_mp3_stereo,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_mp3_stereo(docs))
-    return decoded.select(
-        "media_id", "width", "height", "n_bytes", "body_sum"
-        # r13 pin (see _pin) of the decoded rows before the
-        # sort — orderBy's range-partitioner sampling otherwise
-        # re-executes the whole synth+decode pipeline a second time just
-        # to pick bounds (the sort's child is map-only above the id
-        # spread, so sampling can reuse no shuffle output); measured ~2x
-        # on every media-decode row
-    ).transform(_pin).orderBy("media_id")
-
-
-@_q(
-    "pl_mp3_lsf_decode",
-    """
-    WITH m AS (
-        SELECT doc_id AS media_id,
-               576 * (1 + doc_id % 3) AS n,
-               CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 2 END AS nch
-        FROM documents
-    )
-    SELECT media_id, CAST(n AS INT) AS width, CAST(nch AS INT) AS height,
-           CAST(nch * n AS INT) AS n_bytes,
-           CAST(128 * nch * n AS BIGINT) AS body_sum
-    FROM m ORDER BY media_id
-    """,
-)
-def pl_mp3_lsf_decode(spark, sf_dir):
-    """MPEG-2/2.5 LOW-SAMPLING-FREQUENCY Layer III decode under the
-    driver's hash check (r10 — the first item on the r9 codec-seam
-    list): executors build genuine LSF frames from each doc id
-    (pipeline/multimodal.synthesize_mp3_lsf — version alternating
-    MPEG-2 at 22.05/24/16 kHz and MPEG-2.5 at 11.025/12/8 kHz, the LSF
-    bitrate table, channel mode cycling mono/stereo/joint-MS/dual,
-    9-bit scalefac_compress walking all three 13818-3 §2.4.3.2
-    blocknumber ranges with nonzero scalefactors, window-switching and
-    CRC and 8-bit-main_data_begin reservoir docs), then the Arrow
-    mapInPandas decode stage walks the LSF pipeline library-free
-    (_decode_mp3: version bits, LSF frame length 72000·kbps/fs, ONE
-    576-sample granule per frame, 9/17-byte side info without scfsi or
-    a preflag bit, the derived slen/group scalefactor scheme with
-    per-range preflag). Silence spectra map to exact zeros through the
-    shared DSP, so DuckDB's closed form is n = 576·frames per channel
-    folding to 128. LSF intensity stereo (intensity_scale is_pos
-    coding) and LSF mixed-block scalefactors raise named
-    NotImplementedErrors — the remaining LSF seam."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        synthesize_mp3_lsf,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_mp3_lsf(docs))
-    return decoded.select(
-        "media_id", "width", "height", "n_bytes", "body_sum"
-        # r13 pin (see _pin) of the decoded rows before the
-        # sort — orderBy's range-partitioner sampling otherwise
-        # re-executes the whole synth+decode pipeline a second time just
-        # to pick bounds (the sort's child is map-only above the id
-        # spread, so sampling can reuse no shuffle output); measured ~2x
-        # on every media-decode row
-    ).transform(_pin).orderBy("media_id")
-
-
-@_q(
-    "pl_layer1_decode",
-    """
-    WITH m AS (
-        SELECT doc_id AS media_id,
-               384 * (1 + doc_id % 3) AS n,
-               CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS nch
-        FROM documents
-    )
-    SELECT media_id, CAST(n AS INT) AS width, CAST(nch AS INT) AS height,
-           CAST(nch * n AS INT) AS n_bytes,
-           CAST(128 * nch * n AS BIGINT) AS body_sum
-    FROM m ORDER BY media_id
-    """,
-)
-def pl_layer1_decode(spark, sf_dir):
-    """MPEG-1 LAYER I decode under the driver's hash check (r10 — the
-    subband-codec half of the Layer I/II seam; Layer II stays behind
-    it because its bit-allocation tables are numeric data): executors
-    build genuine Layer I frames from each doc id
-    (pipeline/multimodal.synthesize_layer1 — 4-byte slots, the Layer I
-    bitrate table, mono/stereo/dual cycling, CRC and padding docs),
-    then the Arrow mapInPandas decode stage walks the full structural
-    parse library-free (_decode_layer1: 4-bit subband allocations with
-    the forbidden-15 guard, 6-bit scalefactor indices against the
-    CLOSED-FORM Table B.1 value 2·2^(−idx/3), §2.4.3.1 requantization
-    s''=(2^nb/(2^nb−1))·(c·2^(1−nb)−1+2^(1−nb)), 12 grains × 32
-    subbands → the shared polyphase synthesis). All-zero allocations
-    synthesize to exact zeros with no table data, so DuckDB's closed
-    form is n = 384·frames per channel folding to 128. The nonzero
-    requant path is proven by the injected-window contract test
-    (tests/test_beam_multimodal.py)."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        synthesize_layer1,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_layer1(docs))
-    return decoded.select(
-        "media_id", "width", "height", "n_bytes", "body_sum"
-        # r13 pin (see _pin) of the decoded rows before the
-        # sort — orderBy's range-partitioner sampling otherwise
-        # re-executes the whole synth+decode pipeline a second time just
-        # to pick bounds (the sort's child is map-only above the id
-        # spread, so sampling can reuse no shuffle output); measured ~2x
-        # on every media-decode row
-    ).transform(_pin).orderBy("media_id")
-
-
-@_q(
-    "pl_jpeg_progressive",
-    """
-    WITH m AS (
-        SELECT doc_id AS media_id, 1 + doc_id % 3 AS wb, 1 + doc_id % 2 AS hb,
-               doc_id % 251 AS seed
-        FROM documents
-    ),
-    s AS (
-        SELECT media_id, wb, hb,
-               list_sum(flatten(list_transform(generate_series(0, wb - 1), bx ->
-                   list_transform(generate_series(0, hb - 1), by ->
-                       (seed + 17 * bx + 37 * by) % 251)))) AS block_sum
-        FROM m
-    )
-    SELECT media_id, CAST(8 * wb AS INT) AS width, CAST(8 * hb AS INT) AS height,
-           CAST(64 * wb * hb AS INT) AS n_bytes,
-           CAST(64 * block_sum AS BIGINT) AS body_sum
-    FROM s ORDER BY media_id
-    """,
-)
-def pl_jpeg_progressive(spark, sf_dir):
-    """PROGRESSIVE JPEG decode under the driver's hash check (r7 — the
-    last JPEG mode behind the seam): executors build genuine SOF2
-    progressive streams (pipeline/multimodal.encode_jpeg_progressive —
-    DC first at Al=1, DC refinement, AC band scans with EOBRUN, AC
-    refinement with buffered correction bits), then the Arrow
-    mapInPandas decode stage runs the full T.81 Annex-G multi-scan
-    state machine (_decode_jpeg_progressive) and renders once at EOI.
-    The images are the SAME block-constant closed form as
-    pl_jpeg_decode, so the identical SQL oracle replays the pixels —
-    proving the sequential and progressive pipelines converge on the
-    same bytes."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        synthesize_jpeg_progressive,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_jpeg_progressive(docs))
-    return decoded.select(
-        "media_id", "width", "height", "n_bytes", "body_sum"
-        # r13 pin (see _pin) of the decoded rows before the
-        # sort — orderBy's range-partitioner sampling otherwise
-        # re-executes the whole synth+decode pipeline a second time just
-        # to pick bounds (the sort's child is map-only above the id
-        # spread, so sampling can reuse no shuffle output); measured ~2x
-        # on every media-decode row
-    ).transform(_pin).orderBy("media_id")
-
-
-@_q(
-    "pl_jpeg_progressive_color",
-    """
-    WITH m AS (
-        SELECT doc_id AS media_id, 1 + doc_id % 3 AS wb, 1 + doc_id % 2 AS hb,
-               doc_id % 251 AS seed
-        FROM documents
-    ),
-    s AS (
-        SELECT media_id, wb, hb,
-               list_sum(flatten(list_transform(generate_series(0, wb - 1), bx ->
-                   list_transform(generate_series(0, hb - 1), by ->
-                       (seed + 17 * bx + 37 * by) % 251)))) AS block_sum
-        FROM m
-    )
-    SELECT media_id, CAST(8 * wb AS INT) AS width, CAST(8 * hb AS INT) AS height,
-           CAST(64 * wb * hb AS INT) AS n_bytes,
-           CAST(64 * block_sum AS BIGINT) AS body_sum
-    FROM s ORDER BY media_id
-    """,
-)
-def pl_jpeg_progressive_color(spark, sf_dir):
-    """PROGRESSIVE COLOR JPEG decode under the driver's hash check (r10
-    — closes the progressive-color item on the r9 codec-seam list):
-    executors build genuine THREE-component SOF2 streams
-    (pipeline/multimodal.encode_jpeg_progressive_color — one
-    INTERLEAVED DC first scan in MCU order with per-component
-    predictors, interleaved DC refinements, then per-component AC band
-    first + refinement scans, chroma sampling cycling 4:4:4/4:2:2/4:2:0
-    by doc with nonzero chroma DC+AC energy), then the Arrow
-    mapInPandas decode stage runs the multi-component Annex-G state
-    machine (_decode_jpeg_progressive: per-component MCU-padded
-    coefficient grids, interleaved DC scan geometry, non-interleaved AC
-    scans over each component's own raster with the padded stride) and
-    renders the full-resolution Y once at EOI — the same luma
-    convention as the baseline color path, so the SAME closed-form SQL
-    oracle as pl_jpeg_decode / pl_jpeg_progressive replays the pixels.
-    Remaining JPEG seam: arithmetic coding, hierarchical, 12-bit."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        synthesize_jpeg_progressive_color,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_jpeg_progressive_color(docs))
     return decoded.select(
         "media_id", "width", "height", "n_bytes", "body_sum"
         # r13 pin (see _pin) of the decoded rows before the
@@ -8022,65 +7667,6 @@ def pl_kmv_merge_rollup(spark, sf_dir):
     ).orderBy("region")
 
 
-def _bpe_oracle(n_merges: int = 8) -> str:
-    """Sennrich BPE unrolled merge-for-merge: the double-space boundary
-    encoding makes plain left-to-right replace() reproduce greedy merge
-    application identically in both engines (see pipeline/bpe.py)."""
-    sql = """
-    WITH w0 AS MATERIALIZED (
-        SELECT '  ' || trim(regexp_replace(w, '(.)', '\\1  ', 'g')) || '  ' AS ws,
-               COUNT(*) AS cnt
-        FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-              FROM documents) t
-        GROUP BY w
-    )
-    """
-    for i in range(n_merges):
-        sql += f"""
-    , m{i} AS MATERIALIZED (
-        SELECT l, r, freq FROM (
-            SELECT sp[j] AS l, sp[j + 1] AS r, CAST(SUM(cnt) AS BIGINT) AS freq
-            FROM (SELECT string_split(trim(ws), '  ') AS sp, cnt FROM w{i}),
-                 UNNEST(range(1, len(sp))) AS u(j)
-            GROUP BY 1, 2
-        ) ORDER BY freq DESC, l, r LIMIT 1
-    ),
-    w{i + 1} AS MATERIALIZED (
-        SELECT replace(ws,
-                   ' ' || (SELECT l FROM m{i}) || '  ' || (SELECT r FROM m{i}) || ' ',
-                   ' ' || (SELECT l || r FROM m{i}) || ' ') AS ws, cnt
-        FROM w{i}
-    )"""
-    union = " UNION ALL ".join(
-        f"SELECT {i + 1} AS merge_rank, l AS lhs, r AS rhs, freq FROM m{i}"
-        for i in range(n_merges)
-    )
-    sql += f"\n    SELECT * FROM ({union}) ORDER BY merge_rank"
-    return sql
-
-
-@_q("pl_bpe_merges", _bpe_oracle(8))
-def pl_bpe_merges(spark, sf_dir):
-    """Distributed BPE vocabulary induction (pipeline/bpe.bpe_train —
-    Sennrich ACL'16 re-expressed Spark-first: corpus → (distinct word,
-    freq) table, pair counts = one explode + partial-agg groupBy per
-    round, merge application = one string replace over the double-space
-    symbol encoding whose boundary invariant makes left-to-right
-    replacement EXACTLY greedy BPE). Deterministic tie-break
-    (freq desc, pair asc) ⇒ the merge table hash-matches the
-    merge-for-merge unrolled SQL twin; parity with a literal Python
-    Sennrich loop is pytest-asserted."""
-    from jasminegraph_spark.pipeline.bpe import bpe_train
-
-    m = bpe_train(_read(spark, sf_dir, "documents"), n_merges=8)
-    return m.select(
-        F.col("rank").cast("int").alias("merge_rank"),
-        F.col("left").alias("lhs"),
-        F.col("right").alias("rhs"),
-        "freq",
-    ).orderBy("merge_rank")
-
-
 @_q(
     "pl_kmeans_refine",
     """
@@ -8132,53 +7718,6 @@ def pl_kmeans_refine(spark, sf_dir):
             "|",
         ).alias("centroid"),
     ).orderBy("cell")
-
-
-@_q(
-    "pl_bpe_encode",
-    r"""
-    WITH ws0 AS (
-        SELECT doc_id,
-               '  ' || trim(regexp_replace(
-                   array_to_string(
-                       regexp_extract_all(lower(text), '[a-z0-9]+'),
-                       '      '),
-                   '([^ ])', '\1  ', 'g')) || '  ' AS ws
-        FROM documents
-    ),
-    applied AS (
-        SELECT doc_id,
-               replace(replace(replace(replace(ws,
-                   ' t  h ', ' th '),
-                   ' th  e ', ' the '),
-                   ' b  a ', ' ba '),
-                   ' ba  t ', ' bat ') AS ws
-        FROM ws0
-    )
-    SELECT doc_id,
-           CAST(len(regexp_split_to_array(trim(ws), ' +')) AS INT) AS n_bpe_tokens
-    FROM applied ORDER BY doc_id
-    """,
-)
-def pl_bpe_encode(spark, sf_dir):
-    """BPE APPLICATION at corpus scale (pipeline/bpe.bpe_encode — the
-    other half of the tokenizer lifecycle, closing the train→encode
-    loop): a fixed rank-ordered merge list (t+h, th+e, b+a, ba+t)
-    applied as chained string replaces over the double-space symbol
-    encoding (the boundary invariant makes left-to-right replacement
-    exactly greedy BPE — see pipeline/bpe.py module docstring), emitting
-    per-document BPE token counts. Pure Catalyst expressions, zero
-    shuffles; the oracle replays the identical replace chain."""
-    from jasminegraph_spark.pipeline.bpe import bpe_encode
-
-    docs = _read(spark, sf_dir, "documents")
-    out = bpe_encode(docs, [("t", "h"), ("th", "e"), ("b", "a"), ("ba", "t")])
-    return out.select("doc_id", F.col("n_bpe_tokens").cast("int").alias("n_bpe_tokens")).orderBy(
-        "doc_id"
-    )
-
-
-
 
 
 def _inc_wcc_oracle(iterations: int = 20) -> str:
@@ -8582,62 +8121,6 @@ def pl_normalize_text(spark, sf_dir):
 
 
 @_q(
-    "pl_bpe_fertility",
-    r"""
-    WITH ws0 AS (
-        SELECT doc_id, lang, len(text) AS n_chars,
-               '  ' || trim(regexp_replace(
-                   array_to_string(
-                       regexp_extract_all(lower(text), '[a-z0-9]+'),
-                       '      '),
-                   '([^ ])', '\1  ', 'g')) || '  ' AS ws
-        FROM documents
-    ),
-    applied AS (
-        SELECT doc_id, lang, n_chars,
-               len(regexp_split_to_array(trim(
-                   replace(replace(replace(replace(ws,
-                       ' t  h ', ' th '),
-                       ' th  e ', ' the '),
-                       ' b  a ', ' ba '),
-                       ' ba  t ', ' bat ')), ' +')) AS n_tok
-        FROM ws0
-    )
-    SELECT lang, COUNT(*) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS sum_tokens,
-           printf('%.6f', CAST(SUM(n_chars) AS DOUBLE) / SUM(n_tok))
-               AS chars_per_token
-    FROM applied GROUP BY lang ORDER BY lang
-    """,
-)
-def pl_bpe_fertility(spark, sf_dir):
-    """Tokenizer FERTILITY by language (chars per BPE token — the
-    standard metric for how well a merge list fits each language's
-    corpus; multilingual pipelines tune vocab allocations on exactly
-    this table): documents encode under the fixed rank-ordered merge
-    list (same chain as pl_bpe_encode), then chars/tokens aggregate per
-    language. One expression-only encode pass + one partial-agg
-    groupBy; the oracle replays the identical chain."""
-    from jasminegraph_spark.pipeline.bpe import bpe_encode
-
-    docs = _read(spark, sf_dir, "documents")
-    enc = bpe_encode(docs, [("t", "h"), ("th", "e"), ("b", "a"), ("ba", "t")])
-    return (
-        enc.join(docs.select("doc_id", "lang", F.length("text").alias("n_chars")), "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_bpe_tokens").cast("long").alias("sum_tokens"),
-            F.format_string(
-                "%.6f",
-                F.sum("n_chars").cast("double") / F.sum("n_bpe_tokens"),
-            ).alias("chars_per_token"),
-        )
-        .orderBy("lang")
-    )
-
-
-@_q(
     "pl_temperature_mixture",
     f"""
     WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
@@ -9011,105 +8494,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return cy_expand_two_hop(spark, "/root/testdata/sf0.001")
 
 
-# The driver sweep processes queries in registration order and records the
-# first N it reaches; round 1 covered the first 50 registered, leaving the
-# rest without a CORRECTNESS row. Pin an explicit order so queries without
-# a green driver row yet run FIRST this round (round 1 + round 2 rows
-# together then cover the whole registry).
-_PRIORITY = [
-    # r14 sweep order (VERDICT r12 ask #1 convention, recomputed from all
-    # thirteen CORRECTNESS_r*.json latest-green rounds): pure rotation —
-    # the 13 rows whose latest green driver row is r09 (their r09 sweep
-    # order), then the 37 oldest r10 rows in their r10 sweep order.
-    # 13 + 37 = 50 fills the driver window; the remaining 13 r10 rows
-    # (an_triangle_count ... pl_token_counts) queue directly behind it as
-    # the r15 window head. After this sweep the registry evidence floor
-    # lifts to r10. Audit: recompute latest-green per query from
-    # CORRECTNESS_r*.json each round.
-    # --- latest green driver row r09 (13) ---
-    "rel_cohort_retention",
-    "rel_q11_important_parts",
-    "rel_q12_late_by_priority",
-    "rel_q13_customer_distribution",
-    "rel_q14_promo_revenue_share",
-    "rel_q15_top_supplier",
-    "rel_q16_supplier_part_counts",
-    "rel_q17_small_quantity_revenue",
-    "rel_q18_large_volume_customer",
-    "rel_q19_disjunctive_predicates",
-    "rel_q20_dominant_suppliers",
-    "rel_q21_waiting_supplier",
-    "rel_q22_dormant_customers",
-    # --- latest green driver row r10, in r10 sweep order (first 37) ---
-    "pl_mp3_stereo_decode",
-    "pl_mp3_lsf_decode",
-    "pl_jpeg_progressive_color",
-    "pl_layer1_decode",
-    "an_scc",
-    "pl_substring_spans",
-    "rel_q10_returned_items",
-    "rel_q4_order_priority",
-    "rel_q8_market_share",
-    "rel_q9_product_profit",
-    "rel_value_percentiles",
-    "src_graphml_roundtrip",
-    "src_jsonl_roundtrip",
-    "st_incremental_triangles",
-    "st_session_window_counts",
-    "st_windowed_event_counts",
-    "an_mis",
-    "an_node2vec_walks",
-    "cypher_pattern_comprehension",
-    "pl_kmv_merge_rollup",
-    "pl_triplet_mining",
-    "src_bucketed_expand",
-    "src_unbucketed_expand",
-    "pl_pca_project2d",
-    "cy_write_roundtrip",
-    "pl_png_decode",
-    "an_node2vec_corpus",
-    "pl_semantic_dedup",
-    "pl_c4_rules",
-    "pl_bpe_encode",
-    "pl_kmeans_refine",
-    "pl_normalize_text",
-    "pl_bigram_logprob",
-    "st_incremental_wcc",
-    "pl_bpe_fertility",
-    "an_pagerank",
-    "pl_minhash_lsh",
-    # --- remaining 13 r10 rows: past the ~50-row window this round; they
-    # run first in r15 ---
-    "an_triangle_count",
-    "an_top_k_pagerank",
-    "rel_q1_pricing_summary",
-    "pl_exact_dedup",
-    "cy_vcnt_ecnt",
-    "an_degree_dist_in",
-    "an_egonet",
-    "pl_minhash_signatures",
-    "pl_simhash",
-    "pl_cosine_topk",
-    "pl_lsh_ann",
-    "pl_ivf_ann",
-    "pl_token_counts",
-]
-
-
-def _ordered(mapping: dict) -> dict:
-    out = {}
-    for name in _PRIORITY:
-        if name in mapping:
-            out[name] = mapping[name]
-    for name, v in mapping.items():
-        if name not in out:
-            out[name] = v
-    return out
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _ordered(_QUERIES)
+    return _QUERIES
 
 
 def oracle_sql() -> dict[str, str]:
-    return _ordered(_ORACLES)
+    return _ORACLES

@@ -15,7 +15,7 @@ re-expresses the same capabilities Spark-first:
 - streaming ingest (reference src/util/kafka/StreamHandler.cpp) is
   Structured Streaming — see ``streaming``
 - plus large-scale training-data pipeline operators (dedup, similarity
-  search, text analysis, multimodal) — see ``pipeline``
+  search, text analysis) — see ``pipeline``
 """
 
 __version__ = "0.1.0"

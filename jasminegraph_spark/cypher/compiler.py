@@ -857,13 +857,22 @@ def cypher_create(spark, text: str):
     ops.create_elements (reference Create operator, Operators.h:286-295 +
     Helpers.cpp:347-784 — partition routing via streaming partitioner there,
     writer hash-partitioning here).
+    """
+    from jasminegraph_spark.graph import EDGE_SCHEMA, NODE_SCHEMA
+
+    node_rows, edge_rows = create_rows(parse(text))
+    nodes_df = spark.createDataFrame(node_rows, NODE_SCHEMA)
+    edges_df = spark.createDataFrame(edge_rows, EDGE_SCHEMA)
+    return nodes_df, edges_df
+
+
+def create_rows(q: "ast.Query") -> tuple[list, list]:
+    """The node and edge rows of a parsed CREATE query, as plain tuples in
+    NODE_SCHEMA / EDGE_SCHEMA order.
 
     Node identity: the ``id`` property when given, else a deterministic
     hash of (labels, properties) — CREATE without ids stays reproducible.
     """
-    from jasminegraph_spark.graph import EDGE_SCHEMA, NODE_SCHEMA
-
-    q = parse(text)
     if not q.is_create:
         raise CypherCompileError("cypher_create expects a CREATE clause")
     node_rows, edge_rows = [], []
@@ -888,9 +897,7 @@ def cypher_create(spark, text: str):
             props = {k: str(v) for k, v in rel.props.items()}
             rid = props.get("id", f"{src}->{dst}:{rel.types[0] if rel.types else i}")
             edge_rows.append((rid, src, dst, rel.types[0] if rel.types else None, props))
-    nodes_df = spark.createDataFrame(node_rows, NODE_SCHEMA)
-    edges_df = spark.createDataFrame(edge_rows or [], EDGE_SCHEMA)
-    return nodes_df, edges_df
+    return node_rows, edge_rows
 
 
 def cypher_query(graph: PropertyGraph, text: str) -> DataFrame:

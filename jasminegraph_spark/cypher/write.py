@@ -25,8 +25,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jasminegraph_spark import operators as ops
 from jasminegraph_spark.cypher import ast
-from jasminegraph_spark.cypher.compiler import CypherCompileError, _Compiler, cypher_create
+from jasminegraph_spark.cypher.compiler import CypherCompileError, _Compiler, create_rows
 from jasminegraph_spark.cypher.parser import parse
 from jasminegraph_spark.graph import PropertyGraph
 
@@ -62,11 +63,16 @@ def cypher_write(
     nodes_created / edges_created)."""
     q = parse(text)
     if q.is_create:
-        nodes, edges = cypher_create(spark, text)
-        nodes.write.mode("append").parquet(f"{graph_path}/nodes")
-        if edges.take(1):
-            edges.write.mode("append").parquet(f"{graph_path}/edges")
-        return {"nodes_created": nodes.count(), "edges_created": edges.count()}
+        # the rows are Python lists, so counting them needs no Spark job
+        from jasminegraph_spark.graph import EDGE_SCHEMA, NODE_SCHEMA
+
+        node_rows, edge_rows = create_rows(q)
+        ops.create_elements(
+            graph_path,
+            nodes=spark.createDataFrame(node_rows, NODE_SCHEMA),
+            edges=spark.createDataFrame(edge_rows, EDGE_SCHEMA) if edge_rows else None,
+        )
+        return {"nodes_created": len(node_rows), "edges_created": len(edge_rows)}
     if q.write_clause is None:
         raise CypherCompileError("not a write query (no SET/DELETE/MERGE/CREATE)")
     g = _load(spark, graph_path, is_directed)

@@ -3,26 +3,19 @@
 The engine treats media as ``binary`` payloads + typed metadata and runs
 decode / feature-extract / resize / frame-sample as Arrow-batched Pandas
 UDFs over mapInPandas — the Spark-side contract (schema, partitioning, UDF
-signature, batch shape) is real and tested. Decode handles SIX
+signature, batch shape) is real and tested. Decode handles the lossless
 containers for real, no codec library required: the JGMM deterministic
 fake (tests/fixtures), uncompressed BMP (8-bit gray / 24-bit BGR → luma),
 PCM WAV (8/16-bit, chunk-walked), PNG (8-bit all five color types, all
-five scanline filters, stdlib-zlib inflate — r6), and — new r7 —
-baseline sequential grayscale JPEG (full ITU T.81 entropy decode:
-canonical Huffman from DHT, DC prediction, AC run-length with EOB/ZRL,
-byte unstuffing, restart markers, dequantize + inverse zigzag + IDCT)
-plus FLAC (metadata walk, frame sync, CRC-8/16 verify, CONSTANT/
-VERBATIM/FIXED/LPC subframes, Rice residuals with partitions and
-escapes, independent multichannel and all three stereo decorrelation
-modes) — and, new r8, MPEG-1 Layer III MONO (frame walk, side info,
-bit reservoir, scfsi, scalefactors, requantize → alias → IMDCT →
-overlap-add → frequency inversion → polyphase synthesis; all-zero
-spectra decode exactly, nonzero spectra need the spec's numeric tables
-via register_mp3_tables — the table-data seam, contract-tested with an
-injected table set against independent spec math). The remaining seam:
-progressive-color/arithmetic/hierarchical JPEG, stereo/MPEG-2 MP3, and
-the MP3 table data itself — each raises NotImplementedError naming the
-exact missing piece (see _try_real_decode / per-decoder guards).
+five scanline filters, stdlib-zlib inflate) and FLAC (metadata walk,
+frame sync, CRC-8/16 verify, CONSTANT/VERBATIM/FIXED/LPC subframes, Rice
+residuals with partitions and escapes, independent multichannel and all
+three stereo decorrelation modes). Lossy containers (JPEG, MP3) have no
+pure-Python decoder: they decode only through PIL / soundfile when one is
+importable, and otherwise raise the unknown-container ValueError.
+
+No engine verb imports this module; it is kept for its tests and the
+driver's media rows until they are retired (ROADMAP item 5).
 
 Scale notes: payloads stay in executors end-to-end (no driver collect);
 mapInPandas streams Arrow batches, so peak memory is one batch of decoded
@@ -304,1066 +297,13 @@ def encode_png(
     )
 
 
-def _jpeg_zigzag() -> list[tuple[int, int]]:
-    """The 64 (row, col) pairs of the JPEG zigzag scan (ITU T.81 Figure 5),
-    generated rather than typed: diagonal d runs bottom-left→top-right
-    when even, top-right→bottom-left when odd."""
-    order: list[tuple[int, int]] = []
-    for d in range(15):
-        cells = [(r, d - r) for r in range(8) if 0 <= d - r <= 7]
-        order.extend(cells if d % 2 else reversed(cells))
-    return order
-
-
-_ZIGZAG = _jpeg_zigzag()
-_ZZ_ROWS = tuple(r for r, _ in _ZIGZAG)
-_ZZ_COLS = tuple(c for _, c in _ZIGZAG)
-
-
-def _dct_matrix():
-    """Orthonormal 8-point DCT-II matrix A: forward S = A f Aᵀ, inverse
-    f = Aᵀ S A — the exact pair from T.81 Annex A.3.3."""
-    import numpy as np
-
-    n = np.arange(8)
-    a = np.cos((2 * n[None, :] + 1) * n[:, None] * np.pi / 16) / 2.0
-    a[0] /= np.sqrt(2.0)
-    return a
-
-
-class _JpegHuffman:
-    """Canonical JPEG Huffman table (T.81 Annex C code assignment):
-    ``counts[L-1]`` codes of bit-length L, symbols in table order. Decode
-    looks up (length, code) as bits stream in — tables are ≤ 162 entries,
-    so a dict beats building the spec's MINCODE/MAXCODE arrays here."""
-
-    def __init__(self, counts: list[int], symbols: list[int]):
-        self.decode_map: dict[tuple[int, int], int] = {}
-        self.encode_map: dict[int, tuple[int, int]] = {}
-        code, k = 0, 0
-        for length in range(1, 17):
-            for _ in range(counts[length - 1]):
-                sym = symbols[k]
-                self.decode_map[(length, code)] = sym
-                self.encode_map[sym] = (code, length)
-                code += 1
-                k += 1
-            code <<= 1
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00 byte
-    unstuffing and RSTn resync (T.81 §B.1.1.5, §E.2.4). Word-buffered:
-    bytes accumulate into an int so multi-bit reads are one shift+mask
-    (r7 perf — the per-bit loop dominated the decode bench)."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def _refill(self) -> None:
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos]
-            if nxt != 0x00:
-                raise ValueError(
-                    f"marker 0xff{nxt:02x} inside entropy-coded segment"
-                )
-            self.pos += 1
-        self.acc = ((self.acc << 8) | b) & 0xFFFFFFFF
-        self.nbits += 8
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            self._refill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def read_bits(self, n: int) -> int:
-        while self.nbits < n:
-            self._refill()
-        self.nbits -= n
-        return (self.acc >> self.nbits) & ((1 << n) - 1)
-
-    def decode(self, table: _JpegHuffman) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.decode_map.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in JPEG stream")
-
-    def receive_extend(self, t: int) -> int:
-        """Read a t-bit magnitude and sign-extend it (T.81 F.2.2.1
-        EXTEND): values with a 0 MSB are the negative half of category t."""
-        if t == 0:
-            return 0
-        v = self.read_bits(t)
-        return v - (1 << t) + 1 if v < (1 << (t - 1)) else v
-
-    def restart(self) -> None:
-        self.nbits = 0  # discard pad bits
-        if self.data[self.pos] != 0xFF or not (
-            0xD0 <= self.data[self.pos + 1] <= 0xD7
-        ):
-            raise ValueError("expected RSTn restart marker")
-        self.pos += 2
-
-
-def _decode_jpeg(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL library-free baseline JPEG decoder — grayscale (single
-    component), the round-6 verdict's top remaining codec ask. Full
-    pipeline per ITU T.81: marker walk → DQT (8-bit) / DHT (canonical
-    Huffman) / SOF0 / DRI → SOS entropy decode (DC prediction + AC
-    run-length, byte unstuffing, restart resync) → dequantize → inverse
-    zigzag → float IDCT → level shift + clamp → crop. Progressive,
-    multi-component (color), 12-bit, arithmetic-coded, and hierarchical
-    variants raise NotImplementedError naming the exact field, same
-    contract as the BMP/WAV/PNG decoders. Reference media role:
-    src_python ingest side (it shells to codec libraries; here the
-    entropy decoder itself is reimplemented)."""
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG stream (missing SOI)")
-    pos = 2
-    qt: dict[int, "np.ndarray"] = {}
-    huff_dc: dict[int, _JpegHuffman] = {}
-    huff_ac: dict[int, _JpegHuffman] = {}
-    dri = 0
-    frame = None
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at offset {pos}")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / stray RSTn
-            continue
-        size = struct.unpack_from(">H", payload, pos)[0]
-        body = payload[pos + 2 : pos + size]
-        pos += size
-        if marker == 0xDB:  # DQT — one or more tables per segment
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 15
-                if pq != 0:
-                    raise NotImplementedError(
-                        "16-bit JPEG quantization table (Pq=1) not supported"
-                    )
-                qt[tq] = np.frombuffer(body, np.uint8, 64, i + 1).astype(np.int32)
-                i += 65
-        elif marker == 0xC4:  # DHT — one or more tables per segment
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 15
-                counts = list(body[i + 1 : i + 17])
-                n = sum(counts)
-                table = _JpegHuffman(counts, list(body[i + 17 : i + 17 + n]))
-                (huff_dc if tc == 0 else huff_ac)[th] = table
-                i += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline sequential
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8 or ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "only 8-bit 1- or 3-component baseline JPEG decodes "
-                    f"library-free (precision={prec}, components={ncomp})"
-                )
-            comps = {}
-            for c in range(ncomp):
-                cid, sampling, tq = body[6 + 3 * c : 9 + 3 * c]
-                hs, vs = sampling >> 4, sampling & 15
-                if not (1 <= hs <= 4 and 1 <= vs <= 4):
-                    raise ValueError(
-                        f"invalid JPEG sampling factor 0x{sampling:02x}"
-                    )
-                comps[cid] = (hs, vs, tq)
-            hmax = max(hs for hs, _, _ in comps.values())
-            vmax = max(vs for _, vs, _ in comps.values())
-            first = next(iter(comps.values()))
-            if (first[0], first[1]) != (hmax, vmax):
-                # rendering needs the luma component at full resolution —
-                # true for every standard YCbCr layout (4:4:4/4:2:2/4:2:0)
-                raise NotImplementedError(
-                    "JPEG where the first component is subsampled below "
-                    f"hmax×vmax ({first[0]}x{first[1]} vs {hmax}x{vmax}) "
-                    "not supported"
-                )
-            frame = (w, h, comps)
-        elif marker == 0xC2:  # SOF2 → hand the stream to the progressive path
-            return _decode_jpeg_progressive(payload)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"non-baseline JPEG (SOF marker 0x{marker:02x}: extended/"
-                "arithmetic/hierarchical) not supported library-free"
-            )
-        elif marker == 0xDD:  # DRI
-            dri = struct.unpack_from(">H", body, 0)[0]
-        elif marker == 0xDA:  # SOS → entropy-coded data follows
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF0")
-            w, h, comps = frame
-            ns = body[0]
-            if ns != len(comps):
-                raise NotImplementedError(
-                    f"JPEG scan covers {ns} of {len(comps)} components "
-                    "(multi-scan streams are progressive territory)"
-                )
-            plan = []  # per scan component: (quant, dc, ac, h, v)
-            for c in range(ns):
-                cid = body[1 + 2 * c]
-                td, ta = body[2 + 2 * c] >> 4, body[2 + 2 * c] & 15
-                hs, vs, tq = comps[cid]
-                plan.append((qt[tq], huff_dc[td], huff_ac[ta], hs, vs))
-            return _jpeg_scan(payload, pos, w, h, plan, dri)
-        # APPn / COM / DNL: skipped
-    raise ValueError("JPEG missing SOS scan")
-
-
-def _jpeg_scan(payload, pos, w, h, plan, dri) -> tuple[int, int, bytes]:
-    """Baseline sequential scan decode (T.81 F.2.2, A.2.3 MCU
-    interleave): ``plan`` = [(quant, dc_table, ac_table, h, v), ...] in
-    scan order. Each MCU carries h_c × v_c blocks per component in
-    raster order — 4:4:4 is 1+1+1, 4:2:2 is 2+1+1, 4:2:0 is 4+1+1 —
-    with Huffman DC category + EXTEND onto that component's running
-    predictor, AC (run, size) pairs with EOB/ZRL, dequantize, inverse
-    zigzag, IDCT. Grayscale keeps its one component; color collapses to
-    the Y (luma) channel, which is the full-resolution component in
-    every standard layout — chroma blocks are still fully
-    entropy-decoded to advance the bit stream, only their IDCT is
-    skipped."""
-    import numpy as np
-
-    a = _dct_matrix()
-    hmax = max(p[3] for p in plan)
-    vmax = max(p[4] for p in plan)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    out = np.zeros((mcus_y * vmax * 8, mcus_x * hmax * 8), np.uint8)
-    rd = _JpegBitReader(payload, pos)
-    zz_r, zz_c = np.array(_ZZ_ROWS), np.array(_ZZ_COLS)
-    preds = [0] * len(plan)
-    for m in range(mcus_x * mcus_y):
-        if dri and m and m % dri == 0:
-            rd.restart()
-            preds = [0] * len(plan)
-        my, mx = divmod(m, mcus_x)
-        for ci, (quant, hdc, hac, hs, vs) in enumerate(plan):
-            for bv in range(vs):
-                for bh in range(hs):
-                    coeffs = np.zeros(64, np.int64)
-                    preds[ci] += rd.receive_extend(rd.decode(hdc))
-                    coeffs[0] = preds[ci]
-                    k = 1
-                    while k < 64:
-                        rs = rd.decode(hac)
-                        run, size = rs >> 4, rs & 15
-                        if size == 0:
-                            if run == 15:  # ZRL: 16 zeros
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += run
-                        if k > 63:
-                            raise ValueError("JPEG AC coefficient index overflow")
-                        coeffs[k] = rd.receive_extend(size)
-                        k += 1
-                    if ci != 0:  # chroma: stream position only, no render
-                        continue
-                    block = np.zeros((8, 8))
-                    block[zz_r, zz_c] = coeffs * quant
-                    pixels = np.clip(
-                        np.round(a.T @ block @ a + 128.0), 0, 255
-                    ).astype(np.uint8)
-                    py = (my * vmax + bv) * 8
-                    px = (mx * hmax + bh) * 8
-                    out[py : py + 8, px : px + 8] = pixels
-    return w, h, np.ascontiguousarray(out[:h, :w]).tobytes()
-
-
-def _jpeg_read_bits(rd: _JpegBitReader, n: int) -> int:
-    return rd.read_bits(n)
-
-
-def _decode_jpeg_progressive(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL library-free PROGRESSIVE JPEG decoder — grayscale (r7) and
-    COLOR (r10). Full T.81 Annex G semantics: SOF2, multi-scan SOS with
-    spectral selection (Ss/Se) and successive approximation (Ah/Al); DC
-    first + DC refinement scans (interleaved across components or
-    single-component), AC first scans with EOBRUN, and AC REFINEMENT
-    scans (newly-significant ±1·2^Al insertions interleaved with
-    correction bits for already-nonzero coefficients, ZRL folding,
-    EOBRUN covering the current block — the jdphuff-equivalent control
-    flow). AC scans are single-component by spec (G.1.1.1.1).
-    Coefficients accumulate per component in MCU-padded grids (an
-    interleaved DC scan addresses the padded grid; a non-interleaved
-    scan walks the component's own ceil(compw/8) raster with the padded
-    row stride). Dequantize + IDCT render once at EOI — like the
-    baseline color path, only the full-resolution Y component renders
-    (chroma is fully entropy-decoded to advance the stream)."""
-    import numpy as np
-
-    pos = 2
-    qt: dict[int, "np.ndarray"] = {}
-    huff_dc: dict[int, _JpegHuffman] = {}
-    huff_ac: dict[int, _JpegHuffman] = {}
-    dri = 0
-    frame = None
-    comps: list = []  # per comp: dict(cid, hs, vs, tq, wbi, hbi, wb, hb, coef)
-    by_cid: dict = {}
-    preds: list = []
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at offset {pos}")
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            continue
-        size = struct.unpack_from(">H", payload, pos)[0]
-        body = payload[pos + 2 : pos + size]
-        pos += size
-        if marker == 0xDB:
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 15
-                if pq:
-                    raise NotImplementedError(
-                        "16-bit JPEG quantization table (Pq=1) not supported"
-                    )
-                qt[tq] = np.frombuffer(body, np.uint8, 64, i + 1).astype(np.int32)
-                i += 65
-        elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 15
-                counts = list(body[i + 1 : i + 17])
-                n = sum(counts)
-                table = _JpegHuffman(counts, list(body[i + 17 : i + 17 + n]))
-                (huff_dc if tc == 0 else huff_ac)[th] = table
-                i += 17 + n
-        elif marker == 0xC2:
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8 or ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "progressive JPEG decodes library-free only for 8-bit "
-                    f"1- or 3-component frames (precision={prec}, "
-                    f"components={ncomp})"
-                )
-            raw = []
-            for c in range(ncomp):
-                cid, sampling, tq = body[6 + 3 * c: 9 + 3 * c]
-                hs, vs = sampling >> 4, sampling & 15
-                if not (1 <= hs <= 4 and 1 <= vs <= 4):
-                    raise ValueError(
-                        f"invalid JPEG sampling factor 0x{sampling:02x}"
-                    )
-                raw.append((cid, hs, vs, tq))
-            hmax = max(r[1] for r in raw)
-            vmax = max(r[2] for r in raw)
-            if (raw[0][1], raw[0][2]) != (hmax, vmax):
-                raise NotImplementedError(
-                    "JPEG where the first component is subsampled below "
-                    "hmax×vmax not supported"
-                )
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            comps = []
-            for cid, hs, vs, tq in raw:
-                compw = (w * hs + hmax - 1) // hmax
-                comph = (h * vs + vmax - 1) // vmax
-                wbi, hbi = mcus_x * hs, mcus_y * vs  # MCU-padded grid
-                comps.append({
-                    "cid": cid, "hs": hs, "vs": vs, "tq": tq,
-                    "wbi": wbi, "hbi": hbi,
-                    "wb": (compw + 7) // 8, "hb": (comph + 7) // 8,
-                    "coef": np.zeros((wbi * hbi, 64), np.int64),
-                })
-            by_cid = {c["cid"]: c for c in comps}
-            preds = [0] * ncomp
-            frame = (w, h, mcus_x, mcus_y)
-        elif marker == 0xDD:
-            dri = struct.unpack_from(">H", body, 0)[0]
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("progressive SOS before SOF2")
-            ns = body[0]
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            a = body[3 + 2 * ns]
-            ah, al = a >> 4, a & 15
-            rd = _JpegBitReader(payload, pos)
-            if ns == 1:
-                comp = by_cid[body[1]]
-                td, ta = body[2] >> 4, body[2] & 15
-                # the component's own raster, padded row stride
-                idx = np.arange(comp["hb"] * comp["wb"])
-                indices = (idx // comp["wb"]) * comp["wbi"] + idx % comp["wb"]
-                ci = comps.index(comp)
-                preds[ci] = _jpeg_progressive_scan(
-                    rd, comp["coef"], ss, se, ah, al,
-                    huff_dc.get(td), huff_ac.get(ta), dri, preds[ci],
-                    indices,
-                )
-            else:
-                if ss != 0 or se != 0:
-                    raise ValueError(
-                        "progressive AC scans must be single-component "
-                        "(T.81 G.1.1.1.1)"
-                    )
-                plan = []
-                for c in range(ns):
-                    comp = by_cid[body[1 + 2 * c]]
-                    td = body[2 + 2 * c] >> 4
-                    plan.append((comps.index(comp), comp, huff_dc.get(td)))
-                _jpeg_progressive_dc_interleaved(
-                    rd, plan, frame[2], frame[3], ah, al, dri, preds,
-                )
-            pos = rd.pos
-    if frame is None:
-        raise ValueError("progressive JPEG missing SOF2")
-    w, h, _, _ = frame
-    a = _dct_matrix()
-    zz_r, zz_c = np.array(_ZZ_ROWS), np.array(_ZZ_COLS)
-    y = comps[0]
-    quant = qt[y["tq"]]
-    out = np.zeros((y["hb"] * 8, y["wb"] * 8), np.uint8)
-    for by in range(y["hb"]):
-        for bx in range(y["wb"]):
-            block = np.zeros((8, 8))
-            block[zz_r, zz_c] = y["coef"][by * y["wbi"] + bx] * quant
-            px = np.clip(np.round(a.T @ block @ a + 128.0), 0, 255).astype(np.uint8)
-            out[by * 8: by * 8 + 8, bx * 8: bx * 8 + 8] = px
-    return w, h, np.ascontiguousarray(out[:h, :w]).tobytes()
-
-
-def _jpeg_progressive_dc_interleaved(rd, plan, mcus_x, mcus_y, ah, al,
-                                     dri, preds):
-    """Interleaved progressive DC scan (the shape libjpeg emits first):
-    MCU raster order, each MCU carrying hs×vs blocks per component in
-    scan order; DC first (diff << Al onto the per-component predictor)
-    or DC refinement (one bit per block). Restart intervals count MCUs
-    and reset every predictor. ``plan`` rows are (component index,
-    component dict, DC table)."""
-    for m in range(mcus_x * mcus_y):
-        if dri and m and m % dri == 0:
-            rd.restart()
-            for ci, _, _ in plan:
-                preds[ci] = 0
-        my, mx = divmod(m, mcus_x)
-        for ci, comp, hdc in plan:
-            for bv in range(comp["vs"]):
-                for bh in range(comp["hs"]):
-                    row = my * comp["vs"] + bv
-                    col = mx * comp["hs"] + bh
-                    blk = comp["coef"][row * comp["wbi"] + col]
-                    if ah == 0:
-                        preds[ci] += rd.receive_extend(rd.decode(hdc))
-                        blk[0] = preds[ci] << al
-                    elif rd.read_bit():
-                        blk[0] |= 1 << al
-
-
-def _jpeg_progressive_scan(rd, coef, ss, se, ah, al, hdc, hac, dri, pred,
-                           indices=None):
-    """One single-component progressive SOS: DC first (diff << Al) / DC
-    refine (one bit per block), AC first (coefficients << Al with
-    EOBRUN), AC refine (see _jpeg_ac_refine_block). ``indices`` maps the
-    scan's block order onto rows of ``coef`` (a multi-component frame
-    walks the component's own raster inside its MCU-padded grid);
-    None = the whole array in order."""
-    eobrun = 0
-    n_blocks = coef.shape[0] if indices is None else len(indices)
-    for m in range(n_blocks):
-        if dri and m and m % dri == 0:
-            rd.restart()
-            pred = 0
-            eobrun = 0
-        blk = coef[m if indices is None else indices[m]]
-        if ss == 0:  # DC scan
-            if ah == 0:
-                pred += rd.receive_extend(rd.decode(hdc))
-                blk[0] = pred << al
-            elif rd.read_bit():
-                blk[0] |= 1 << al
-            continue
-        if ah == 0:  # AC first scan for this band
-            if eobrun:
-                eobrun -= 1
-                continue
-            k = ss
-            while k <= se:
-                rs = rd.decode(hac)
-                r, s = rs >> 4, rs & 15
-                if s == 0:
-                    if r == 15:
-                        k += 16
-                        continue
-                    eobrun = (1 << r) - 1
-                    if r:
-                        eobrun += _jpeg_read_bits(rd, r)
-                    break
-                k += r
-                if k > se:
-                    raise ValueError("AC index overflow in progressive scan")
-                blk[k] = rd.receive_extend(s) << al
-                k += 1
-        else:
-            eobrun = _jpeg_ac_refine_block(rd, blk, ss, se, al, hac, eobrun)
-    return pred
-
-
-def _jpeg_ac_refine_block(rd, blk, ss, se, al, hac, eobrun):
-    """AC successive-approximation refinement for one block (T.81 G.2 /
-    the jdphuff control flow): decode (run, 1) insertions of ±2^Al at
-    zero-history positions, reading a correction bit for every
-    already-nonzero coefficient passed; EOBn counts the CURRENT block
-    and is decremented after the post-loop remainder refinement."""
-    p1 = 1 << al
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = rd.decode(hac)
-            r, s = rs >> 4, rs & 15
-            val = 0
-            if s == 0:
-                if r != 15:
-                    eobrun = 1 << r
-                    if r:
-                        eobrun += _jpeg_read_bits(rd, r)
-                    break
-                # r == 15: ZRL — advance over 16 zero-history coefficients
-            else:
-                if s != 1:
-                    raise ValueError("invalid AC refinement magnitude")
-                val = p1 if rd.read_bit() else -p1
-            while k <= se:
-                if blk[k] != 0:
-                    if rd.read_bit() and (abs(blk[k]) & p1) == 0:
-                        blk[k] += p1 if blk[k] > 0 else -p1
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if val and k <= se:
-                blk[k] = val
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            if blk[k] != 0 and rd.read_bit() and (abs(blk[k]) & p1) == 0:
-                blk[k] += p1 if blk[k] > 0 else -p1
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-class _JpegBitWriter:
-    """MSB-first bit writer with 0xFF00 stuffing; flush pads with 1s
-    (T.81 §B.1.1.5, §F.1.2.3). Word-buffered like _JpegBitReader."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.cur = (self.cur << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            b = (self.cur >> self.nbits) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)
-        self.cur &= (1 << self.nbits) - 1
-
-    def flush(self) -> None:
-        if self.nbits:
-            self.write((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
-
-
-# fixed encoder Huffman tables: every symbol at bit-length 8 (Kraft-valid:
-# 12·2⁻⁸ and 176·2⁻⁸ ≤ 1, and no all-ones code since 176 < 255). The
-# DECODER never assumes these — it builds whatever tables the DHT
-# declares. (r<<4)|0 for r 1-14 are the progressive EOBn run symbols.
-_ENC_DC_SYMBOLS = list(range(12))
-# s=0 row covers EOB (0x00), EOBn runs (0x10..0xE0) and ZRL (0xF0)
-_ENC_AC_SYMBOLS = [(r << 4) | s for r in range(16) for s in range(0, 11)]
-
-
-def _enc_tables() -> tuple[_JpegHuffman, _JpegHuffman]:
-    counts = [0] * 16
-    counts[7] = len(_ENC_DC_SYMBOLS)
-    dc = _JpegHuffman(counts, _ENC_DC_SYMBOLS)
-    counts = [0] * 16
-    counts[7] = len(_ENC_AC_SYMBOLS)
-    ac = _JpegHuffman(counts, sorted(_ENC_AC_SYMBOLS))
-    return dc, ac
-
-
-def _jpeg_category(v: int) -> int:
-    return abs(v).bit_length()
-
-
-def encode_jpeg_blocks(
-    width: int,
-    height: int,
-    blocks: list,
-    quant=None,
-    restart_interval: int = 0,
-    ncomp: int = 1,
-    samplings: list | None = None,
-) -> bytes:
-    """Assemble a baseline JPEG from QUANTIZED coefficient blocks (each
-    a length-64 int sequence in zigzag order) — the low-level half of
-    :func:`encode_jpeg_gray`, exposed so tests can inject arbitrary AC
-    runs/ZRL/EOB patterns and verify the decoder against an independent
-    IDCT. ``quant`` is a length-64 zigzag table (default all-ones).
-    ``ncomp=3`` writes a YCbCr frame: blocks are interleaved per MCU in
-    T.81 A.2.3 order (per component, its h×v blocks raster-wise), every
-    component sharing quant/Huffman table 0 with its own DC predictor.
-    ``samplings`` = [(h, v), ...] per component (default all (1, 1));
-    [(2, 2), (1, 1), (1, 1)] writes 4:2:0 — the shape the r7
-    subsampled-decode path consumes."""
-    import numpy as np
-
-    q = [1] * 64 if quant is None else list(quant)
-    samplings = samplings or [(1, 1)] * ncomp
-    layout = [ci for ci in range(ncomp) for _ in range(samplings[ci][0] * samplings[ci][1])]
-    bpm = len(layout)  # blocks per MCU
-    dc_t, ac_t = _enc_tables()
-    wr = _JpegBitWriter()
-    preds = [0] * ncomp
-    scan = bytearray()
-    if len(blocks) % bpm:
-        raise ValueError("interleaved block count must divide by blocks-per-MCU")
-    for m, blk in enumerate(blocks):
-        mcu, within = divmod(m, bpm)
-        ci = layout[within]
-        if restart_interval and mcu and within == 0 and mcu % restart_interval == 0:
-            wr.flush()
-            scan += bytes(wr.out)
-            scan += bytes([0xFF, 0xD0 + ((mcu // restart_interval - 1) % 8)])
-            wr = _JpegBitWriter()
-            preds = [0] * ncomp
-        blk = [int(x) for x in blk]
-        diff = blk[0] - preds[ci]
-        preds[ci] = blk[0]
-        t = _jpeg_category(diff)
-        if t > 11:
-            raise ValueError(f"DC difference {diff} exceeds category 11")
-        code, ln = dc_t.encode_map[t]
-        wr.write(code, ln)
-        if t:
-            wr.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        run = 0
-        for k in range(1, 64):
-            v = blk[k]
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_t.encode_map[0xF0]  # ZRL
-                wr.write(code, ln)
-                run -= 16
-            s = _jpeg_category(v)
-            if s > 10:
-                raise ValueError(f"AC coefficient {v} exceeds category 10")
-            code, ln = ac_t.encode_map[(run << 4) | s]
-            wr.write(code, ln)
-            wr.write(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if run:
-            code, ln = ac_t.encode_map[0x00]  # EOB
-            wr.write(code, ln)
-    wr.flush()
-    scan += bytes(wr.out)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    counts_dc = bytes(
-        [0] * 7 + [len(_ENC_DC_SYMBOLS)] + [0] * 8
-    )
-    counts_ac = bytes([0] * 7 + [len(_ENC_AC_SYMBOLS)] + [0] * 8)
-    dht = (
-        bytes([0x00]) + counts_dc + bytes(_ENC_DC_SYMBOLS)
-        + bytes([0x10]) + counts_ac + bytes(sorted(_ENC_AC_SYMBOLS))
-    )
-    out = b"\xff\xd8"
-    out += seg(0xDB, bytes([0x00]) + bytes(np.asarray(q, np.uint8)))
-    sof = struct.pack(">BHHB", 8, height, width, ncomp)
-    sos = bytes([ncomp])
-    for c in range(ncomp):
-        hs, vs = samplings[c]
-        sof += bytes([c + 1, (hs << 4) | vs, 0])
-        sos += bytes([c + 1, 0x00])
-    out += seg(0xC0, sof)
-    out += seg(0xC4, dht)
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    out += seg(0xDA, sos + bytes([0, 63, 0]))
-    return out + scan + b"\xff\xd9"
-
-
-def _enc_prog_ac_first(blocks, ss, se, a0, ac_t) -> bytes:
-    """One AC first scan (Ss..Se at Al=a0) over ``blocks`` with
-    jcphuff-style lazy EOBRUN emission. Shared by the grayscale and
-    color progressive encoders (one component per scan, per T.81
-    G.1.1.1.1)."""
-
-    def pt_ac(v: int, shift: int) -> int:
-        return (abs(v) >> shift) * (1 if v >= 0 else -1)
-
-    wr = _JpegBitWriter()
-    eob_pending = 0
-
-    def flush_eob():
-        nonlocal eob_pending
-        while eob_pending > 0:
-            n = min(eob_pending, 32767)
-            r = n.bit_length() - 1
-            code, ln = ac_t.encode_map[(r << 4) | 0]
-            wr.write(code, ln)
-            if r:
-                wr.write(n - (1 << r), r)
-            eob_pending -= n
-
-    for blk in blocks:
-        vals = [pt_ac(int(blk[k]), a0) for k in range(ss, se + 1)]
-        if not any(vals):
-            eob_pending += 1
-            if eob_pending == 32767:
-                flush_eob()
-            continue
-        flush_eob()
-        run = 0
-        last_nz = max(i for i, v in enumerate(vals) if v)
-        for v in vals[: last_nz + 1]:
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_t.encode_map[0xF0]
-                wr.write(code, ln)
-                run -= 16
-            s = _jpeg_category(v)
-            code, ln = ac_t.encode_map[(run << 4) | s]
-            wr.write(code, ln)
-            wr.write(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if last_nz < len(vals) - 1:
-            eob_pending += 1
-    flush_eob()
-    wr.flush()
-    return bytes(wr.out)
-
-
-def _enc_prog_ac_refine(blocks, ss, se, ah, al, ac_t) -> bytes:
-    """One AC refinement scan (Ah=ah → Al=al) over ``blocks`` with
-    buffered correction bits and ZRL folding up to the last
-    newly-significant index (T.81 G.1.2 / jcphuff). Shared by the
-    grayscale and color progressive encoders."""
-    wr = _JpegBitWriter()
-    eob_pending = 0
-    be_bits: list[int] = []
-
-    def flush_eob():
-        nonlocal eob_pending, be_bits
-        while eob_pending > 0:
-            n = min(eob_pending, 32767)
-            r = n.bit_length() - 1
-            code, ln = ac_t.encode_map[(r << 4) | 0]
-            wr.write(code, ln)
-            if r:
-                wr.write(n - (1 << r), r)
-            eob_pending -= n
-        for b in be_bits:
-            wr.write(b, 1)
-        be_bits = []
-
-    for blk in blocks:
-        run = 0
-        br: list[int] = []
-        newly = [
-            k for k in range(ss, se + 1)
-            if (abs(int(blk[k])) >> ah) == 0
-            and (abs(int(blk[k])) >> al) != 0
-        ]
-        eob_k = newly[-1] if newly else ss - 1
-        for k in range(ss, se + 1):
-            hist = abs(int(blk[k])) >> ah
-            now = abs(int(blk[k])) >> al
-            if hist == 0 and now == 0:
-                run += 1
-                continue
-            while run > 15 and k <= eob_k:
-                flush_eob()
-                code, ln = ac_t.encode_map[0xF0]
-                wr.write(code, ln)
-                for b in br:
-                    wr.write(b, 1)
-                br = []
-                run -= 16
-            if hist != 0:
-                br.append(now & 1)
-                continue
-            flush_eob()
-            code, ln = ac_t.encode_map[(run << 4) | 1]
-            wr.write(code, ln)
-            wr.write(1 if int(blk[k]) > 0 else 0, 1)
-            for b in br:
-                wr.write(b, 1)
-            br = []
-            run = 0
-        if run > 0 or br:
-            eob_pending += 1
-            be_bits.extend(br)
-            if eob_pending == 32767:
-                flush_eob()
-    flush_eob()
-    wr.flush()
-    return bytes(wr.out)
-
-
-def encode_jpeg_progressive(
-    width: int,
-    height: int,
-    blocks: list,
-    quant=None,
-    first_al: int = 1,
-) -> bytes:
-    """Progressive grayscale JPEG from quantized zigzag blocks (tests +
-    fixtures): scan script = DC first at Al=first_al → DC refinements to
-    0 → AC bands (1-5) and (6-63) first at Al=first_al → AC refinement
-    scans down to 0, with jcphuff-style lazy EOBRUN emission and
-    buffered correction bits (ZRLs fold only up to the last
-    newly-significant index). AC point transforms are sign-magnitude
-    shifts, DC arithmetic shifts, per T.81 G.1.2."""
-    import numpy as np
-
-    q = [1] * 64 if quant is None else list(quant)
-    blocks = [np.asarray(b, np.int64) for b in blocks]
-    dc_t, ac_t = _enc_tables()
-    a0 = first_al
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = b"\xff\xd8"
-    out += seg(0xDB, bytes([0x00]) + bytes(np.asarray(q, np.uint8)))
-    out += seg(0xC2, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    counts_dc = bytes([0] * 7 + [len(_ENC_DC_SYMBOLS)] + [0] * 8)
-    counts_ac = bytes([0] * 7 + [len(_ENC_AC_SYMBOLS)] + [0] * 8)
-    out += seg(
-        0xC4,
-        bytes([0x00]) + counts_dc + bytes(_ENC_DC_SYMBOLS)
-        + bytes([0x10]) + counts_ac + bytes(sorted(_ENC_AC_SYMBOLS)),
-    )
-
-    def sos(ss, se, ah, al, scan_bits):
-        return seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al])) + scan_bits
-
-    # DC first scan (point transform = arithmetic shift)
-    wr = _JpegBitWriter()
-    pred = 0
-    for blk in blocks:
-        t = int(blk[0]) >> a0
-        diff, pred = t - pred, t
-        cat = _jpeg_category(diff)
-        code, ln = dc_t.encode_map[cat]
-        wr.write(code, ln)
-        if cat:
-            wr.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-    wr.flush()
-    out += sos(0, 0, 0, a0, bytes(wr.out))
-    # DC refinement scans
-    for al in range(a0 - 1, -1, -1):
-        wr = _JpegBitWriter()
-        for blk in blocks:
-            wr.write((int(blk[0]) >> al) & 1, 1)
-        wr.flush()
-        out += sos(0, 0, al + 1, al, bytes(wr.out))
-
-    bands = [(1, 5), (6, 63)]
-    for ss, se in bands:  # AC first scans
-        out += sos(ss, se, 0, a0, _enc_prog_ac_first(blocks, ss, se, a0, ac_t))
-
-    for al in range(a0 - 1, -1, -1):  # AC refinement scans
-        ah = al + 1
-        for ss, se in bands:
-            out += sos(ss, se, ah, al,
-                       _enc_prog_ac_refine(blocks, ss, se, ah, al, ac_t))
-    return out + b"\xff\xd9"
-
-
-def encode_jpeg_progressive_color(
-    width: int,
-    height: int,
-    comp_blocks: list,
-    sampling=((2, 2), (1, 1), (1, 1)),
-    quant=None,
-    first_al: int = 1,
-) -> bytes:
-    """Progressive COLOR JPEG from per-component quantized zigzag blocks
-    (r10 fixtures + tests). ``comp_blocks[c]`` lists component c's
-    blocks in its MCU-PADDED raster order (mcus_y·vs rows of mcus_x·hs
-    blocks); ``sampling`` is ((h0,v0),(h1,v1),(h2,v2)) — (2,2),(1,1),
-    (1,1) is 4:2:0. Scan script mirrors libjpeg's: one INTERLEAVED DC
-    first scan (ns=3, MCU order) at Al=first_al, interleaved DC
-    refinements to 0, then per component the AC band first scans and
-    refinements (AC scans are single-component per T.81 G.1.1.1.1),
-    reusing the shared jcphuff-style scan writers."""
-    import numpy as np
-
-    q = [1] * 64 if quant is None else list(quant)
-    dc_t, ac_t = _enc_tables()
-    a0 = first_al
-    hmax = max(s[0] for s in sampling)
-    vmax = max(s[1] for s in sampling)
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    comps = []
-    for c, (hs, vs) in enumerate(sampling):
-        wbi, hbi = mcus_x * hs, mcus_y * vs
-        blocks = [np.asarray(b, np.int64) for b in comp_blocks[c]]
-        if len(blocks) != wbi * hbi:
-            raise ValueError(
-                f"component {c} needs {wbi * hbi} MCU-padded blocks, "
-                f"got {len(blocks)}"
-            )
-        compw = (width * hs + hmax - 1) // hmax
-        comph = (height * vs + vmax - 1) // vmax
-        comps.append({
-            "hs": hs, "vs": vs, "wbi": wbi,
-            "wb": (compw + 7) // 8, "hb": (comph + 7) // 8,
-            "blocks": blocks,
-        })
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = b"\xff\xd8"
-    out += seg(0xDB, bytes([0x00]) + bytes(np.asarray(q, np.uint8)))
-    sof = struct.pack(">BHHB", 8, height, width, 3)
-    for c, (hs, vs) in enumerate(sampling):
-        sof += bytes([c + 1, (hs << 4) | vs, 0])
-    out += seg(0xC2, sof)
-    counts_dc = bytes([0] * 7 + [len(_ENC_DC_SYMBOLS)] + [0] * 8)
-    counts_ac = bytes([0] * 7 + [len(_ENC_AC_SYMBOLS)] + [0] * 8)
-    out += seg(
-        0xC4,
-        bytes([0x00]) + counts_dc + bytes(_ENC_DC_SYMBOLS)
-        + bytes([0x10]) + counts_ac + bytes(sorted(_ENC_AC_SYMBOLS)),
-    )
-
-    def sos_multi(ah, al, scan_bits):
-        body = bytes([3])
-        for c in range(3):
-            body += bytes([c + 1, 0x00])
-        body += bytes([0, 0, (ah << 4) | al])
-        return seg(0xDA, body) + scan_bits
-
-    def sos_one(cid, ss, se, ah, al, scan_bits):
-        return seg(0xDA, bytes([1, cid, 0x00, ss, se, (ah << 4) | al])) + scan_bits
-
-    def mcu_blocks():
-        """Every block in interleaved MCU scan order, tagged by comp."""
-        for m in range(mcus_x * mcus_y):
-            my, mx = divmod(m, mcus_x)
-            for ci, comp in enumerate(comps):
-                for bv in range(comp["vs"]):
-                    for bh in range(comp["hs"]):
-                        row = my * comp["vs"] + bv
-                        col = mx * comp["hs"] + bh
-                        yield ci, comp["blocks"][row * comp["wbi"] + col]
-
-    # interleaved DC first scan
-    wr = _JpegBitWriter()
-    preds = [0, 0, 0]
-    for ci, blk in mcu_blocks():
-        t = int(blk[0]) >> a0
-        diff, preds[ci] = t - preds[ci], t
-        cat = _jpeg_category(diff)
-        code, ln = dc_t.encode_map[cat]
-        wr.write(code, ln)
-        if cat:
-            wr.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-    wr.flush()
-    out += sos_multi(0, a0, bytes(wr.out))
-    # interleaved DC refinement scans
-    for al in range(a0 - 1, -1, -1):
-        wr = _JpegBitWriter()
-        for _, blk in mcu_blocks():
-            wr.write((int(blk[0]) >> al) & 1, 1)
-        wr.flush()
-        out += sos_multi(al + 1, al, bytes(wr.out))
-
-    bands = [(1, 5), (6, 63)]
-    for ci, comp in enumerate(comps):
-        # the component's own raster (unpadded) with the padded stride —
-        # exactly the block sequence a non-interleaved scan covers
-        seq = [comp["blocks"][(m // comp["wb"]) * comp["wbi"] + m % comp["wb"]]
-               for m in range(comp["wb"] * comp["hb"])]
-        for ss, se in bands:
-            out += sos_one(ci + 1, ss, se, 0, a0,
-                           _enc_prog_ac_first(seq, ss, se, a0, ac_t))
-        for al in range(a0 - 1, -1, -1):
-            for ss, se in bands:
-                out += sos_one(ci + 1, ss, se, al + 1, al,
-                               _enc_prog_ac_refine(seq, ss, se, al + 1, al, ac_t))
-    return out + b"\xff\xd9"
-
-
-def encode_jpeg_gray(
-    width: int, height: int, pixels: bytes, quant=None, restart_interval: int = 0
-) -> bytes:
-    """Minimal baseline JPEG encoder (8-bit grayscale): edge-replicated
-    padding to 8×8 blocks, level shift, float forward DCT, quantize
-    (all-ones table by default), fixed length-8 Huffman tables written
-    into DHT. Lossy in general — but an image that is CONSTANT within
-    every 8×8 block compresses to DC-only coefficients whose
-    dequantize+IDCT round-trip is bit-exact, which is what gives the
-    synthesize_jpeg → _decode_jpeg driver row a closed-form SQL oracle."""
-    import numpy as np
-
-    arr = (
-        np.frombuffer(pixels, np.uint8, width * height)
-        .reshape(height, width)
-        .astype(np.float64)
-    )
-    wb, hb = (width + 7) // 8, (height + 7) // 8
-    padded = np.pad(arr, ((0, hb * 8 - height), (0, wb * 8 - width)), mode="edge")
-    a = _dct_matrix()
-    q = np.ones(64) if quant is None else np.asarray(quant, np.float64)
-    zz_r, zz_c = np.array(_ZZ_ROWS), np.array(_ZZ_COLS)
-    blocks = []
-    for by in range(hb):
-        for bx in range(wb):
-            f = padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] - 128.0
-            s = a @ f @ a.T
-            blocks.append(np.round(s[zz_r, zz_c] / q).astype(np.int64))
-    return encode_jpeg_blocks(
-        width, height, blocks,
-        quant=None if quant is None else list(quant),
-        restart_interval=restart_interval,
-    )
-
-
 def _spread_ids(docs: DataFrame, id_col: str) -> DataFrame:
     """Id-only input for the fixture synthesizers, spread across the
     session's full parallelism. The documents table at small SFs is a
     single parquet file, so without this every synth + decode
     mapInPandas chain ran SERIALLY on one core (r11 — measured 12.3 s
-    for pl_jpeg_progressive_color at sf0.1 against ~0.3 s of actual
-    codec work at 32 threads). The repartition shuffles only the 8-byte
+    for a media-decode row at sf0.1 against ~0.3 s of actual codec work
+    at 32 threads). The repartition shuffles only the 8-byte
     ids; at cluster scale inputs already arrive in many splits and the
     guard keeps this a no-op."""
     ids = docs.select(id_col)
@@ -1373,42 +313,11 @@ def _spread_ids(docs: DataFrame, id_col: str) -> DataFrame:
     return ids
 
 
-def synthesize_jpeg(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL-JPEG media fixture: genuine baseline JPEG byte streams built
-    ON EXECUTORS in a mapInPandas stage. Doc d gets a (1 + d%3) × (1 + d%2)
-    grid of 8×8 blocks (width 8·(1+d%3), height 8·(1+d%2)); block (bx, by)
-    is CONSTANT at value (d%251 + 17·bx + 37·by) % 251, so every block is
-    DC-only and the lossy DCT round-trip is bit-exact — a SQL oracle
-    recomputes each image's pixel checksum as 64·Σ block values."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                wb, hb, seed = 1 + i % 3, 1 + i % 2, i % 251
-                px = np.zeros((hb * 8, wb * 8), np.uint8)
-                for by in range(hb):
-                    for bx in range(wb):
-                        px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            seed + 17 * bx + 37 * by
-                        ) % 251
-                payloads.append(encode_jpeg_gray(wb * 8, hb * 8, px.tobytes()))
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": "image", "payload": payloads}
-            )
-
-    return _spread_ids(docs, id_col).mapInPandas(
-        fn, "media_id long, kind string, payload binary"
-    )
-
-
 class _EndOfData(IndexError):
     """Raised by _FlacBitReader when a read crosses the physical end of
     its data. Subclasses IndexError so pre-r11 catch sites keep working,
-    but lets callers (e.g. the MP3 count1 loop) distinguish genuine
-    end-of-main-data from an unrelated IndexError in their own logic."""
+    but lets callers distinguish genuine end-of-data from an unrelated
+    IndexError in their own logic."""
 
 
 class _FlacBitReader:
@@ -1719,8 +628,7 @@ def _flac_subframe(br: _FlacBitReader, bs: int, fbps: int) -> list:
 
 
 def _decode_flac(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL library-free FLAC decoder (r7, narrowing the codec seam to
-    MP3 + progressive/subsampled JPEG): metadata walk → STREAMINFO →
+    """REAL library-free FLAC decoder (r7): metadata walk → STREAMINFO →
     per frame: sync + header parse (all block-size and sample-rate
     codes, UTF-8 frame numbers) with CRC-8 VERIFY, per-channel
     CONSTANT / VERBATIM / FIXED(0-4) / LPC(1-32) subframes, Rice
@@ -1832,1893 +740,6 @@ def _decode_flac(payload: bytes) -> tuple[int, int, bytes]:
     return int(total), channels, folded.tobytes()
 
 
-# ---------------------------------------------------------------------------
-# MP3 (MPEG-1 Audio Layer III, mono) — r8, VERDICT r7 ask #5.
-#
-# Everything STRUCTURAL and CLOSED-FORM in ISO/IEC 11172-3 is implemented
-# for real: frame-header walk (bitrate/sample-rate tables, padding, frame
-# length), mono side-info layout, scfsi scalefactor sharing, the bit
-# reservoir (main_data_begin back-pointers into previous frames' main
-# data), scalefactor parsing for long/short/mixed blocks, Huffman region
-# structure (big_values pairs with linbits escapes + count1 quads + rzero),
-# requantization (|is|^(4/3), global_gain, scalefac_scale, preflag,
-# subblock_gain), alias reduction (published ci butterflies), 36/12-point
-# IMDCT with the four closed-form block windows, overlap-add, frequency
-# inversion, and the polyphase synthesis structure (32→64 matrixing, the
-# 1024-sample V FIFO, the 512-tap windowed MAC).
-#
-# The remaining seam is pure TABLE DATA, not algorithms: the spec's
-# Huffman code tables (Table B.7), scalefactor-band boundaries (Table
-# B.8) and the synthesis window (Table B.3) are copyrighted numeric
-# tables this container has no source for. They are injectable via
-# :func:`register_mp3_tables`; without them, any stream whose spectral
-# data is NONZERO raises NotImplementedError naming the exact missing
-# table. All-zero spectra (digital silence — what synthesize_mp3 emits)
-# decode EXACTLY without them: every stage past requantization is linear,
-# so 0 in → 0 out holds bit-for-bit, which is what gives the pl_mp3_decode
-# driver row a closed-form oracle. The full nonzero DSP path is proven by
-# tests/test_beam_multimodal.py's contract test, which registers a
-# synthetic table set and checks the decoder against independent
-# spec-formula math.
-# ---------------------------------------------------------------------------
-
-MP3_BITRATES = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-MP3_SAMPLERATES = (44100, 48000, 32000)
-# MPEG-2/2.5 LSF Layer III (ISO 13818-3): halved sample rates, its own
-# bitrate table, ONE granule per frame (576 samples)
-MP3_LSF_BITRATES = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
-MP3_LSF_SAMPLERATES = {2: (22050, 24000, 16000), 0: (11025, 12000, 8000)}
-# LSF scalefactor groups (13818-3 §2.4.3.2): nr_of_sfb per
-# (blocknumber from the scalefac_compress ranges) × (long/short/mixed).
-# Rows 0-2: normal channels; rows 3-5: the INTENSITY channel's scheme
-# (selected by scalefac_compress >> 1; bit 0 is intensity_scale).
-_MP3_LSF_NSFB = (
-    ((6, 5, 5, 5), (9, 9, 9, 9), (6, 9, 9, 9)),
-    ((6, 5, 7, 3), (9, 9, 12, 6), (6, 9, 12, 6)),
-    ((11, 10, 0, 0), (18, 18, 0, 0), (15, 18, 0, 0)),
-    ((7, 7, 7, 0), (12, 12, 12, 0), (6, 15, 12, 0)),
-    ((6, 6, 6, 3), (12, 9, 9, 6), (6, 12, 9, 6)),
-    ((8, 8, 5, 0), (15, 12, 9, 0), (6, 18, 9, 0)),
-)
-# scalefac_compress → (slen1, slen2) (11172-3 §2.4.2.7)
-_MP3_SLEN = (
-    (0, 0), (0, 1), (0, 2), (0, 3), (3, 0), (1, 1), (1, 2), (1, 3),
-    (2, 1), (2, 2), (2, 3), (3, 1), (3, 2), (3, 3), (4, 2), (4, 3),
-)
-# preflag pretab (11172-3 Table B.6) — only consulted when preflag=1
-_MP3_PRETAB = (0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 3, 3, 3, 2, 0)
-# alias-reduction coefficients ci (11172-3 Table B.9); cs=1/sqrt(1+ci²),
-# ca=ci/sqrt(1+ci²)
-_MP3_CI = (-0.6, -0.535, -0.33, -0.185, -0.095, -0.041, -0.0142, -0.0037)
-# scfsi band groups: scalefactor bands shared between granules when the
-# group's scfsi bit is set (§2.4.2.7)
-_MP3_SCFSI_BANDS = ((0, 6), (6, 11), (11, 16), (16, 21))
-
-# Injectable table-data seam — see the section comment above.
-MP3_TABLES: dict | None = None
-
-
-def register_mp3_tables(tables: dict) -> None:
-    """Install the spec's numeric tables (or a test double):
-    ``{'huffman': {id: {'codes': {(x,y): '0…1'}, 'linbits': int}},
-    'count1': {sel: {(v,w,x,y): '0…1'}},
-    'sfb_long': {fs: [23 ascending line boundaries, 0…576]},
-    'sfb_short': {fs: [14 ascending boundaries, 0…192]},
-    'synth_window': [512 floats]}``. Pass ``None``-like {} to clear."""
-    global MP3_TABLES
-    MP3_TABLES = tables or None
-
-
-def _plan_arity(fn) -> int:
-    """Positional-parameter count of a block_plan callable (2-arg
-    (frame, gr) vs 3-arg (frame, gr, ch) per-channel plans)."""
-    import inspect
-
-    try:
-        return len(inspect.signature(fn).parameters)
-    except (TypeError, ValueError):
-        return 2
-
-
-def _mp3_frame_len(bitrate_kbps: int, fs: int, padding: int) -> int:
-    return (144000 * bitrate_kbps) // fs + padding
-
-
-class _Mp3SideInfo:
-    __slots__ = (
-        "main_data_begin", "scfsi", "part2_3_length", "big_values",
-        "global_gain", "scalefac_compress", "window_switching", "block_type",
-        "mixed_block", "table_select", "subblock_gain", "region0", "region1",
-        "preflag", "scalefac_scale", "count1table",
-    )
-
-
-def _mp3_read_side_info(raw: bytes, nch: int = 1) -> list:
-    """MPEG-1 side info → one _Mp3SideInfo PER CHANNEL (each gr-indexed,
-    so every downstream helper keeps its mono (si, gr) signature). Mono:
-    17 bytes = 9+5+4 bits then 2 granules × 59 bits; stereo: 32 bytes =
-    9+3 bits, 4 scfsi bits per channel, then 2 granules × 2 channels ×
-    59 bits in gr-major order (§2.4.1.7)."""
-    br = _FlacBitReader(raw)
-    mdb = br.read(9)
-    br.read(5 if nch == 1 else 3)  # private_bits
-    sides = []
-    for _ in range(nch):
-        si = _Mp3SideInfo()
-        si.main_data_begin = mdb
-        si.scfsi = [br.read(1) for _ in range(4)]
-        (si.part2_3_length, si.big_values, si.global_gain,
-         si.scalefac_compress, si.window_switching, si.block_type,
-         si.mixed_block, si.table_select, si.subblock_gain, si.region0,
-         si.region1, si.preflag, si.scalefac_scale, si.count1table) = (
-            [], [], [], [], [], [], [], [], [], [], [], [], [], [])
-        sides.append(si)
-    for _ in range(2):
-        for si in sides:
-            si.part2_3_length.append(br.read(12))
-            si.big_values.append(br.read(9))
-            if si.big_values[-1] * 2 > 576:
-                # 9-bit field admits up to 511 pairs but the spec caps the
-                # region at 288 pairs (576 lines); beyond that is corruption
-                raise ValueError(
-                    f"MP3 big_values {si.big_values[-1]} exceeds spec cap 288 pairs"
-                )
-            si.global_gain.append(br.read(8))
-            si.scalefac_compress.append(br.read(4))
-            wsf = br.read(1)
-            si.window_switching.append(wsf)
-            if wsf:
-                bt = br.read(2)
-                if bt == 0:
-                    raise ValueError("MP3 forbidden block_type 0 with window switching")
-                si.block_type.append(bt)
-                si.mixed_block.append(br.read(1))
-                si.table_select.append([br.read(5), br.read(5)])
-                si.subblock_gain.append([br.read(3) for _ in range(3)])
-                # spec-fixed region counts under window switching
-                si.region0.append(7 if bt != 2 else 8)
-                si.region1.append(20)
-            else:
-                si.block_type.append(0)
-                si.mixed_block.append(0)
-                si.table_select.append([br.read(5), br.read(5), br.read(5)])
-                si.subblock_gain.append([0, 0, 0])
-                si.region0.append(br.read(4))
-                si.region1.append(br.read(3))
-            si.preflag.append(br.read(1))
-            si.scalefac_scale.append(br.read(1))
-            si.count1table.append(br.read(1))
-    return sides
-
-
-def _mp3_lsf_slen(sc: int) -> tuple:
-    """LSF (13818-3 §2.4.3.2) non-intensity scalefactor scheme: the
-    9-bit scalefac_compress decodes arithmetically into four group
-    lengths slen[0..3], a derived preflag, and the blocknumber that
-    picks the _MP3_LSF_NSFB row. Returns (slen4, preflag, blocknumber)."""
-    if sc < 400:
-        return ((sc >> 4) // 5, (sc >> 4) % 5, (sc % 16) >> 2, sc % 4), 0, 0
-    if sc < 500:
-        t = sc - 400
-        return ((t >> 2) // 5, (t >> 2) % 5, t % 4, 0), 0, 1
-    t = sc - 500
-    return (t // 3, t % 3, 0, 0), 1, 2
-
-
-def _mp3_lsf_slen_intensity(sc: int) -> tuple:
-    """LSF INTENSITY-channel scalefactor scheme (13818-3 §2.4.3.2): the
-    right channel's scalefac_compress >> 1 (bit 0 is intensity_scale)
-    selects one of three slen partitions, picking _MP3_LSF_NSFB rows
-    3-5. Returns (slen4, blocknumber). The decoded values are is_pos
-    positions; each band's all-ones value (2^slen − 1) is the illegal
-    marker."""
-    if sc < 180:
-        return (sc // 36, (sc % 36) // 6, sc % 6, 0), 3
-    if sc < 244:
-        t = sc - 180
-        return ((t % 64) >> 4, (t % 16) >> 2, t % 4, 0), 4
-    if sc < 255:
-        t = sc - 244
-        return (t // 3, t % 3, 0, 0), 5
-    raise ValueError("LSF intensity scalefac_compress >> 1 out of range")
-
-
-def _mp3_read_side_info_lsf(raw: bytes, nch: int = 1) -> list:
-    """MPEG-2/2.5 LSF side info → one _Mp3SideInfo per channel, each
-    with ONE granule (list length 1 so the (si, gr=0) helpers apply).
-    Mono: 9 bytes = 8 (main_data_begin) + 1 (private) + 63 bits;
-    stereo: 17 bytes = 8 + 2 + 2×63 bits. The 63-bit granule is the
-    MPEG-1 layout with a 9-bit scalefac_compress, no scfsi, and no
-    preflag bit (preflag derives from the scalefac_compress range)."""
-    br = _FlacBitReader(raw)
-    mdb = br.read(8)
-    br.read(1 if nch == 1 else 2)  # private_bits
-    sides = []
-    for _ in range(nch):
-        si = _Mp3SideInfo()
-        si.main_data_begin = mdb
-        si.scfsi = [0, 0, 0, 0]  # no scfsi in LSF
-        (si.part2_3_length, si.big_values, si.global_gain,
-         si.scalefac_compress, si.window_switching, si.block_type,
-         si.mixed_block, si.table_select, si.subblock_gain, si.region0,
-         si.region1, si.preflag, si.scalefac_scale, si.count1table) = (
-            [], [], [], [], [], [], [], [], [], [], [], [], [], [])
-        sides.append(si)
-    for si in sides:
-        si.part2_3_length.append(br.read(12))
-        si.big_values.append(br.read(9))
-        if si.big_values[-1] * 2 > 576:
-            raise ValueError(
-                f"MP3 big_values {si.big_values[-1]} exceeds spec cap 288 pairs"
-            )
-        si.global_gain.append(br.read(8))
-        si.scalefac_compress.append(br.read(9))
-        wsf = br.read(1)
-        si.window_switching.append(wsf)
-        if wsf:
-            bt = br.read(2)
-            if bt == 0:
-                raise ValueError("MP3 forbidden block_type 0 with window switching")
-            si.block_type.append(bt)
-            si.mixed_block.append(br.read(1))
-            si.table_select.append([br.read(5), br.read(5)])
-            si.subblock_gain.append([br.read(3) for _ in range(3)])
-            si.region0.append(7 if bt != 2 else 8)
-            si.region1.append(20)
-        else:
-            si.block_type.append(0)
-            si.mixed_block.append(0)
-            si.table_select.append([br.read(5), br.read(5), br.read(5)])
-            si.subblock_gain.append([0, 0, 0])
-            si.region0.append(br.read(4))
-            si.region1.append(br.read(3))
-        # preflag derives from scalefac_compress in LSF; the reader
-        # fills it when decoding the scalefactors
-        si.preflag.append(0)
-        si.scalefac_scale.append(br.read(1))
-        si.count1table.append(br.read(1))
-    return sides
-
-
-def _mp3_read_scalefactors_lsf(br, si: _Mp3SideInfo, gr: int,
-                               intensity: bool = False):
-    """LSF scalefactors for the single granule: four groups of
-    nr_of_sfb[g] values at slen[g] bits each, partitioned over the flat
-    scalefactor sequence (long: 21 values; pure short: 36 values in
-    sfb-major window order → [12][3]). Sets si.preflag[gr] from the
-    derived scheme. With ``intensity`` (the right channel of an
-    intensity-stereo LSF frame) the values are is_pos positions read
-    with the scalefac_compress>>1 scheme; returns
-    (values, per-band illegal markers, intensity_scale) instead.
-    MIXED blocks (r10): 33 values — 6 long bands then 27 short in
-    sfb-major window order for sfb 3-11 — returned as the
-    (long_sf, short_sf) pair the mixed requantizer consumes; mixed
-    UNDER INTENSITY remains a named seam (the per-window is_pos split
-    across the long/short boundary)."""
-    bt, mixed = si.block_type[gr], si.mixed_block[gr]
-    if bt == 2 and mixed and intensity:
-        raise NotImplementedError(
-            "LSF intensity stereo with MIXED blocks not implemented"
-        )
-    if intensity:
-        slen, bn = _mp3_lsf_slen_intensity(si.scalefac_compress[gr] >> 1)
-        si.preflag[gr] = 0
-    else:
-        slen, preflag, bn = _mp3_lsf_slen(si.scalefac_compress[gr])
-        si.preflag[gr] = preflag
-    bti = 2 if (bt == 2 and mixed) else (1 if bt == 2 else 0)
-    nsfb = _MP3_LSF_NSFB[bn][bti]
-    flat, slens = [], []
-    for g in range(4):
-        for _ in range(nsfb[g]):
-            flat.append(br.read(slen[g]) if slen[g] else 0)
-            slens.append(slen[g])
-    if bt == 2 and mixed:  # 6 long + 27 short (sfb 3-11, sfb-major)
-        return (flat[:6],
-                [flat[6 + 3 * i: 9 + 3 * i] for i in range(9)])
-    if bt == 2:  # 36 values, sfb-major window order
-        vals = [flat[3 * sfb: 3 * sfb + 3] for sfb in range(12)]
-        if not intensity:
-            return vals
-        ill = [[(1 << slens[3 * sfb + w]) - 1 if slens[3 * sfb + w] else 0
-                for w in range(3)] for sfb in range(12)]
-        return vals, ill, si.scalefac_compress[gr] & 1
-    if not intensity:
-        return flat  # 21 long values
-    ill = [(1 << s) - 1 if s else 0 for s in slens]
-    return flat, ill, si.scalefac_compress[gr] & 1
-
-
-def _mp3_scalefactor_bits(compress: int, block_type: int, mixed: int,
-                          scfsi: list | None = None) -> int:
-    """part2 length in bits for one granule (scfsi only applies to
-    granule 1 of long blocks; a set bit drops that group's bits)."""
-    s1, s2 = _MP3_SLEN[compress]
-    if block_type == 2 and not mixed:
-        return 6 * 3 * s1 + 6 * 3 * s2
-    if block_type == 2 and mixed:
-        return 8 * s1 + 3 * 3 * s1 + 6 * 3 * s2
-    bits = 0
-    groups = ((0, 6, s1), (6, 11, s1), (11, 16, s2), (16, 21, s2))
-    for gi, (lo, hi, slen) in enumerate(groups):
-        if scfsi is None or not scfsi[gi]:
-            bits += (hi - lo) * slen
-    return bits
-
-
-def _mp3_read_scalefactors(br, si: _Mp3SideInfo, gr: int, prev: list | None):
-    """Scalefactors for one granule. Long: 21 bands (slen1 for 0-10,
-    slen2 for 11-20), scfsi groups of granule 1 copied from granule 0.
-    Short: 12 bands × 3 windows, sfb-major. Mixed: long 0-7 then short
-    3-11."""
-    s1, s2 = _MP3_SLEN[si.scalefac_compress[gr]]
-    bt, mixed = si.block_type[gr], si.mixed_block[gr]
-    if bt == 2 and not mixed:
-        return [[br.read(s1 if sfb < 6 else s2) if (s1 if sfb < 6 else s2) else 0
-                 for _ in range(3)] for sfb in range(12)]
-    if bt == 2 and mixed:
-        long_part = [br.read(s1) if s1 else 0 for _ in range(8)]
-        short_part = [[br.read(s1 if sfb < 6 else s2) if (s1 if sfb < 6 else s2) else 0
-                       for _ in range(3)] for sfb in range(3, 12)]
-        return (long_part, short_part)
-    out = []
-    for gi, (lo, hi) in enumerate(_MP3_SCFSI_BANDS):
-        slen = s1 if hi <= 11 else s2
-        if gr == 1 and si.scfsi[gi]:
-            if prev is None:
-                # scfsi sharing is a long-block feature; granule 0 was a
-                # short block so there are no long scalefactors to copy
-                raise ValueError("MP3 scfsi set but granule 0 used short blocks")
-            out.extend(prev[lo:hi])
-        else:
-            out.extend(br.read(slen) if slen else 0 for _ in range(hi - lo))
-    return out
-
-
-def _mp3_huffman_decode(br, bits_left: int, si: _Mp3SideInfo, gr: int, fs: int):
-    """Huffman region → 576 integer spectral values. big_values pairs in
-    three regions (table_select per region, boundaries from the sfb
-    table), count1 quads until part2_3_length is exhausted, rzero. The
-    code/linbit/boundary DATA comes from the registry — the documented
-    seam. Returns (spectrum, coded_end): coded_end is the first rzero
-    line (end of big_values + count1 regions) — the intensity-stereo
-    zero_bound when this is the right channel (§2.4.3.4.9.3)."""
-    spectrum = [0] * 576
-    bv = si.big_values[gr] * 2
-    if bv == 0 and bits_left <= 0:
-        return spectrum, 0
-    if MP3_TABLES is None:
-        raise NotImplementedError(
-            "MP3 nonzero spectral data needs ISO/IEC 11172-3 Table B.7 "
-            "(Huffman codes) and Table B.8 (scalefactor bands) — table "
-            "data not shipped here; see register_mp3_tables"
-        )
-    sfb = MP3_TABLES["sfb_long"][fs]
-    if si.window_switching[gr]:
-        pure_short = si.block_type[gr] == 2 and not si.mixed_block[gr]
-        region1_start = 36 if pure_short else sfb[8]
-        region2_start = 576
-    else:
-        region1_start = sfb[si.region0[gr] + 1]
-        region2_start = sfb[min(si.region0[gr] + si.region1[gr] + 2, len(sfb) - 1)]
-
-    def decode_sym(by_code: dict):
-        nonlocal bits_left
-        word = ""
-        while True:
-            word += str(br.read(1))
-            bits_left -= 1
-            if word in by_code:
-                return by_code[word]
-            if len(word) > 24:
-                raise ValueError("MP3 Huffman codeword overrun")
-
-    def inverted(codes: dict) -> dict:
-        # tables register symbol→codeword (what the encoder needs);
-        # decoding walks codeword→symbol
-        return {code: sym for sym, code in codes.items()}
-
-    def read_lin_sign(v: int, linbits: int):
-        nonlocal bits_left
-        if v == 15 and linbits:
-            v += br.read(linbits)
-            bits_left -= linbits
-        if v:
-            if br.read(1):
-                v = -v
-            bits_left -= 1
-        return v
-
-    inv_cache: dict = {}  # one inversion per table id per granule, not per pair
-
-    def inv_table(tid: int) -> dict:
-        if tid not in inv_cache:
-            inv_cache[tid] = inverted(MP3_TABLES["huffman"][tid]["codes"])
-        return inv_cache[tid]
-
-    idx = 0
-    while idx < bv:
-        region = (0 if idx < region1_start
-                  else 1 if idx < region2_start else 2)
-        tid = si.table_select[gr][region] if region < len(si.table_select[gr]) else 0
-        if tid == 0:
-            spectrum[idx], spectrum[idx + 1] = 0, 0
-            idx += 2
-            continue
-        if bits_left <= 0:
-            # big_values pairs may never cross part2_3_length — only the
-            # final count1 quad has discard-and-rewind semantics
-            raise ValueError("MP3 big_values region exhausted part2_3_length")
-        tbl = MP3_TABLES["huffman"][tid]
-        x, y = decode_sym(inv_table(tid))
-        spectrum[idx] = read_lin_sign(x, tbl["linbits"])
-        spectrum[idx + 1] = read_lin_sign(y, tbl["linbits"])
-        idx += 2
-    c1 = inverted(MP3_TABLES["count1"][si.count1table[gr]])
-    while bits_left > 0 and idx <= 572:
-        qstart = idx
-        try:
-            quad = decode_sym(c1)
-            for v in quad:
-                if v:
-                    if br.read(1):
-                        v = -v
-                    bits_left -= 1
-                spectrum[idx] = v
-                idx += 1
-        except _EndOfData:
-            # the overrunning quad's bits extend past the PHYSICAL end
-            # of the main data (exact-fit last granule, no ancillary
-            # bytes): same semantics as the budget overrun below —
-            # discard the quad; the caller rebuilds the reader at the
-            # granule boundary so the inconsistent reader state after
-            # the exception never leaks. Scoped to the reader's own
-            # end-of-data signal (r11 ADVICE): a genuine IndexError in
-            # table/loop logic still surfaces instead of decoding
-            # garbage as trailing silence.
-            for j in range(qstart, idx):
-                spectrum[j] = 0
-            idx = qstart
-            break
-        if bits_left < 0:
-            # the final quad crossed the granule's bit budget: the spec
-            # allows this; decoders discard the overrunning quad and the
-            # caller repositions the reader to the granule boundary
-            for j in range(qstart, idx):
-                spectrum[j] = 0
-            idx = qstart  # the discarded quad is not part of the coded region
-            break
-    return spectrum, idx
-
-
-def _mp3_requantize(spectrum, si: _Mp3SideInfo, gr: int, scalefacs, fs: int):
-    """§2.4.3.4: xr[i] = sign·|is|^(4/3) · 2^(gain/4) scaled per
-    scalefactor band. Long: gain = global_gain−210, band scale =
-    2^(−mult·(sf+preflag·pretab)); short adds −8·subblock_gain[w] per
-    window. mult = (scalefac_scale+1)/2. Exact on zeros (0^(4/3)=0)."""
-    import numpy as np
-
-    xs = np.asarray(spectrum, dtype=np.float64)
-    out = np.sign(xs) * np.abs(xs) ** (4.0 / 3.0)
-    mult = 0.5 * (si.scalefac_scale[gr] + 1)
-    g = 0.25 * (si.global_gain[gr] - 210)
-    bt, mixed = si.block_type[gr], si.mixed_block[gr]
-    if not np.any(out):
-        return out  # silence needs no band tables — the exact zero path
-    sfb_l = MP3_TABLES["sfb_long"][fs]
-    if bt == 2 and not mixed:
-        sfb_s = MP3_TABLES["sfb_short"][fs]
-        for sfb in range(len(sfb_s) - 1):
-            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-            for w in range(3):
-                s = 3 * lo + (hi - lo) * w
-                e = s + (hi - lo)
-                # the last short band (12) has no scalefactor — lines
-                # above sfb 11 scale by gain + subblock gain only, the
-                # short analogue of the long path's sfb_l[21] tail
-                sf_v = scalefacs[sfb][w] if sfb < 12 else 0
-                expo = (g - 2.0 * si.subblock_gain[gr][w] - mult * sf_v)
-                out[s:e] *= 2.0 ** expo
-        return out
-    if bt == 2 and mixed:
-        # the mixed long region covers bands up to line 36 — 8 bands in
-        # the MPEG-1 tables, 6 in the LSF tables; take the count from
-        # the scalefactor reader's long part rather than hardcoding
-        long_sf, short_sf = scalefacs
-        for sfb in range(len(long_sf)):
-            lo, hi = sfb_l[sfb], sfb_l[sfb + 1]
-            pre = _MP3_PRETAB[sfb] if si.preflag[gr] else 0
-            out[lo:hi] *= 2.0 ** (g - mult * (long_sf[sfb] + pre))
-        sfb_s = MP3_TABLES["sfb_short"][fs]
-        split = 3 * sfb_s[3]  # the mixed long/short split line (36)
-        if sfb_l[len(long_sf)] < split:
-            # long-region lines past the last long scalefactor band:
-            # gain only (the real Table B.8 geometries have none — the
-            # long bands end exactly at the split; synthetic test
-            # tables may leave a tail)
-            out[sfb_l[len(long_sf)]:split] *= 2.0 ** g
-        for sfb in range(3, len(sfb_s) - 1):
-            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-            for w in range(3):
-                s = 3 * lo + (hi - lo) * w
-                e = s + (hi - lo)
-                sf_v = short_sf[sfb - 3][w] if sfb < 12 else 0
-                out[s:e] *= 2.0 ** (g - 2.0 * si.subblock_gain[gr][w]
-                                    - mult * sf_v)
-        return out
-    for sfb in range(21):
-        lo, hi = sfb_l[sfb], sfb_l[sfb + 1]
-        pre = _MP3_PRETAB[sfb] if si.preflag[gr] else 0
-        out[lo:hi] *= 2.0 ** (g - mult * (scalefacs[sfb] + pre))
-    out[sfb_l[21]:] *= 2.0 ** g  # lines past the last scalefactor band
-    return out
-
-
-_MP3_SQRT2 = 2.0 ** 0.5
-
-
-def _mp3_joint_stereo(xr_l, xr_r, sf_r, zero_bound, fs, ms_on, int_on):
-    """MPEG-1 joint stereo on REQUANTIZED spectra (§2.4.3.4.9), in place.
-
-    MS stereo: L=(M+S)/√2, R=(M−S)/√2 over the non-intensity region.
-    Intensity stereo (long blocks): the bound is the right channel's
-    first rzero line rounded up to a scalefactor-band edge; bands at or
-    above it take L=v·kl, R=v·kr from the LEFT channel's values, with
-    kl=t/(1+t), kr=1/(1+t), t=tan(is_pos·π/12); is_pos is the right
-    channel's scalefactor for the band (is_pos=6 → all-left exactly,
-    avoiding tan(π/2); is_pos≥7 is treated as the spec's "illegal"
-    marker → the band is MS-processed when MS is on, else passed
-    through L/R). The
-    last partition above scalefactor band 20 reuses band 20's is_pos
-    (no scalefactor exists for it). Pure-short intensity goes through
-    _mp3_intensity_short; mixed-block and mismatched-block-type
-    intensity raise in the caller — the remaining codec seam."""
-    if not int_on:
-        if ms_on:
-            m = xr_l.copy()
-            s = xr_r.copy()
-            xr_l[:] = (m + s) / _MP3_SQRT2
-            xr_r[:] = (m - s) / _MP3_SQRT2
-        return
-    import math
-
-    sfb = MP3_TABLES["sfb_long"][fs]
-    bands = [(sfb[b], sfb[b + 1]) for b in range(len(sfb) - 1)]
-    bound_line = next((lo for lo, _ in bands if lo >= zero_bound), 576)
-    if ms_on and bound_line:
-        m = xr_l[:bound_line].copy()
-        s = xr_r[:bound_line].copy()
-        xr_l[:bound_line] = (m + s) / _MP3_SQRT2
-        xr_r[:bound_line] = (m - s) / _MP3_SQRT2
-    for band, (lo, hi) in enumerate(bands):
-        if lo < bound_line:
-            continue
-        is_pos = sf_r[band] if band < 21 else sf_r[20]
-        if is_pos >= 7:  # 7 is the spec's illegal marker; larger values
-            # can appear in the field but have no defined is_ratio
-            if ms_on:
-                m = xr_l[lo:hi].copy()
-                s = xr_r[lo:hi].copy()
-                xr_l[lo:hi] = (m + s) / _MP3_SQRT2
-                xr_r[lo:hi] = (m - s) / _MP3_SQRT2
-            continue
-        if is_pos == 6:
-            kl, kr = 1.0, 0.0
-        else:
-            t = math.tan(is_pos * math.pi / 12.0)
-            kl, kr = t / (1.0 + t), 1.0 / (1.0 + t)
-        v = xr_l[lo:hi].copy()
-        xr_l[lo:hi] = v * kl
-        xr_r[lo:hi] = v * kr
-
-
-def _mp3_intensity_short(xr_l, xr_r, sf_r, fs, ms_on, mixed=False):
-    """Short/mixed-block intensity stereo on REQUANTIZED pre-reorder
-    spectra (§2.4.3.4.9.3), in place. The spectra are still sfb-major
-    ([sfb][window][line]); window w of band sfb occupies
-    [3·lo + (hi−lo)·w, 3·lo + (hi−lo)·(w+1)).
-
-    The intensity bound is PER WINDOW: for each of the three windows,
-    the first scalefactor band at/above which the right channel is all
-    zero in that window; bands above the bound pan the LEFT channel's
-    values with is_pos = the right channel's short scalefactor
-    sf_r[sfb][w] (same k_l/k_r rules as long blocks: =6 → all-left,
-    ≥7 → illegal marker, MS when MS is on else pass-through). The last
-    short band (12) has no scalefactor and reuses band 11's is_pos for
-    its window — the short analogue of the long path's band-20 reuse.
-    When MS is also on it applies below each window's bound, in that
-    window only (the per-window reading of "the zero part of the right
-    channel").
-
-    MIXED blocks (r10): the short region (bands 3+ per window) follows
-    the per-window procedure with is_pos from the short scalefactor
-    table; the LONG region (lines 0..sfb_long[8], bands 0-7) joins the
-    intensity region only when the right channel's ENTIRE short region
-    is zero (the zero tail must be contiguous to the top of the
-    spectrum), bounded at a long-band edge with is_pos from the long
-    scalefactors — otherwise it is MS/pass-through. Mismatched channel
-    block types still raise in the caller — the remaining seam."""
-    import math
-
-    sfb_s = MP3_TABLES["sfb_short"][fs]
-    n_bands = len(sfb_s) - 1  # 13: 12 scalefactored + the tail band
-    start_sfb = 3 if mixed else 0
-    long_sf, short_sf = sf_r if mixed else (None, None)
-
-    def sf_short(sfb, w):
-        if mixed:
-            return short_sf[sfb - 3][w] if sfb < 12 else short_sf[11 - 3][w]
-        return sf_r[sfb][w] if sfb < 12 else sf_r[11][w]
-
-    def ms(lo, hi):
-        m = xr_l[lo:hi].copy()
-        sv = xr_r[lo:hi].copy()
-        xr_l[lo:hi] = (m + sv) / _MP3_SQRT2
-        xr_r[lo:hi] = (m - sv) / _MP3_SQRT2
-
-    def pan(lo, hi, is_pos):
-        if is_pos >= 7:  # illegal marker → MS when on, else pass
-            if ms_on:
-                ms(lo, hi)
-            return
-        if is_pos == 6:
-            kl, kr = 1.0, 0.0
-        else:
-            t = math.tan(is_pos * math.pi / 12.0)
-            kl, kr = t / (1.0 + t), 1.0 / (1.0 + t)
-        v = xr_l[lo:hi].copy()
-        xr_l[lo:hi] = v * kl
-        xr_r[lo:hi] = v * kr
-
-    def wslice(sfb, w):
-        lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-        s = 3 * lo + (hi - lo) * w
-        return s, s + (hi - lo)
-
-    short_all_zero = True
-    for w in range(3):
-        bound = start_sfb  # first all-zero-from-here band in window w
-        for sfb in range(start_sfb, n_bands):
-            s, e = wslice(sfb, w)
-            if any(xr_r[s:e]):
-                bound = sfb + 1
-        if bound > start_sfb:
-            short_all_zero = False
-        for sfb in range(start_sfb, n_bands):
-            s, e = wslice(sfb, w)
-            if sfb < bound:
-                if ms_on:
-                    ms(s, e)
-            else:
-                pan(s, e, sf_short(sfb, w))
-    if mixed:
-        sfb_l = MP3_TABLES["sfb_long"][fs]
-        long_end = sfb_l[8]  # mixed long region: 2 subbands, bands 0-7
-        if short_all_zero:
-            # zero tail reaches down into the long region: long-band
-            # bound + long is_pos, as in the pure-long path
-            zb = 0
-            for i in range(long_end):
-                if xr_r[i]:
-                    zb = i + 1
-            for band in range(8):
-                lo, hi = sfb_l[band], min(sfb_l[band + 1], long_end)
-                if lo >= zb:
-                    pan(lo, hi, long_sf[band])
-                elif ms_on:
-                    ms(lo, hi)
-        elif ms_on:
-            ms(0, long_end)
-
-
-def _mp3_joint_stereo_lsf(xr_l, xr_r, sfinfo, zero_bound, fs, ms_on, bt):
-    """MPEG-2/2.5 LSF joint stereo on REQUANTIZED pre-reorder spectra,
-    in place. ``sfinfo`` = (is_pos values, per-band illegal markers,
-    intensity_scale) from the intensity-channel scalefactor scheme.
-
-    LSF intensity panning (13818-3 §2.4.3.2; the libmad is_lsf_table
-    closed form): is_pos = 0 → L = R = v; is_pos = the band's all-ones
-    illegal marker → the band is MS-processed when MS is on, else
-    passed through; otherwise t = 2^(−(intensity_scale+1)·⌈is_pos/2⌉/2)
-    and an ODD is_pos scales the LEFT channel (L = v·t, R = v) while an
-    EVEN one scales the right (L = v, R = v·t) — v is the left
-    channel's value. Long blocks bound at the first band edge ≥ the
-    right channel's zero bound (bands past 20 reuse band 20); pure
-    short blocks bound PER WINDOW with band 12 reusing band 11's
-    is_pos, exactly like the MPEG-1 short path. MS applies below the
-    bound."""
-    vals, ill, iscale = sfinfo
-
-    def pan(lo, hi, is_pos, illegal):
-        if is_pos == illegal:
-            if ms_on:
-                m = xr_l[lo:hi].copy()
-                s = xr_r[lo:hi].copy()
-                xr_l[lo:hi] = (m + s) / _MP3_SQRT2
-                xr_r[lo:hi] = (m - s) / _MP3_SQRT2
-            return
-        v = xr_l[lo:hi].copy()
-        if is_pos == 0:
-            kl = kr = 1.0
-        else:
-            t = 2.0 ** (-(iscale + 1) * ((is_pos + 1) >> 1) / 2.0)
-            kl, kr = (t, 1.0) if is_pos & 1 else (1.0, t)
-        xr_l[lo:hi] = v * kl
-        xr_r[lo:hi] = v * kr
-
-    if bt == 2:  # pure short: per-window bounds, sfb-major layout
-        sfb_s = MP3_TABLES["sfb_short"][fs]
-        n_bands = len(sfb_s) - 1
-
-        def wslice(sfb, w):
-            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-            s = 3 * lo + (hi - lo) * w
-            return s, s + (hi - lo)
-
-        for w in range(3):
-            bound = 0
-            for sfb in range(n_bands):
-                s, e = wslice(sfb, w)
-                if any(xr_r[s:e]):
-                    bound = sfb + 1
-            for sfb in range(n_bands):
-                s, e = wslice(sfb, w)
-                if sfb < bound:
-                    if ms_on:
-                        m = xr_l[s:e].copy()
-                        sv = xr_r[s:e].copy()
-                        xr_l[s:e] = (m + sv) / _MP3_SQRT2
-                        xr_r[s:e] = (m - sv) / _MP3_SQRT2
-                else:
-                    j = sfb if sfb < 12 else 11
-                    pan(s, e, vals[j][w], ill[j][w])
-        return
-
-    sfb = MP3_TABLES["sfb_long"][fs]
-    bands = [(sfb[b], sfb[b + 1]) for b in range(len(sfb) - 1)]
-    bound_line = next((lo for lo, _ in bands if lo >= zero_bound), 576)
-    if ms_on and bound_line:
-        m = xr_l[:bound_line].copy()
-        s = xr_r[:bound_line].copy()
-        xr_l[:bound_line] = (m + s) / _MP3_SQRT2
-        xr_r[:bound_line] = (m - s) / _MP3_SQRT2
-    for band, (lo, hi) in enumerate(bands):
-        if lo < bound_line:
-            continue
-        j = band if band < 21 else 20
-        pan(lo, hi, vals[j], ill[j])
-
-
-def _mp3_reorder_short(xr, fs: int, mixed: bool):
-    """Short-block lines arrive sfb-major ([sfb][window][line]) and are
-    reordered to window-interleaved natural order out[lo·3 + 3·line + w]
-    (§2.4.3.4 reordering). Mixed blocks keep the first 2 subbands (36
-    lines) in long order."""
-    import numpy as np
-
-    out = np.array(xr, dtype=np.float64)
-    sfb_s = MP3_TABLES["sfb_short"][fs]
-    start_sfb = 3 if mixed else 0
-    for sfb in range(start_sfb, len(sfb_s) - 1):
-        lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-        width = hi - lo
-        src = xr[3 * lo: 3 * hi]
-        for w in range(3):
-            for i in range(width):
-                out[3 * lo + 3 * i + w] = src[w * width + i]
-    return out
-
-
-def _mp3_alias(x, n_boundaries: int = 31):
-    """Alias-reduction butterflies across subband boundaries (§2.4.3.4,
-    Table B.9 ci constants — published in the spec text, closed-form
-    derived cs/ca)."""
-    import math
-
-    for b in range(1, n_boundaries + 1):
-        for i, ci in enumerate(_MP3_CI):
-            cs = 1.0 / math.sqrt(1.0 + ci * ci)
-            ca = ci / math.sqrt(1.0 + ci * ci)
-            lo, hi = 18 * b - 1 - i, 18 * b + i
-            xl, xu = x[lo], x[hi]
-            x[lo] = xl * cs - xu * ca
-            x[hi] = xu * cs + xl * ca
-    return x
-
-
-def _mp3_imdct_window(block_type: int):
-    """The four closed-form block windows (§2.4.3.4.10.3)."""
-    import math
-
-    if block_type == 0:
-        return [math.sin(math.pi / 36 * (n + 0.5)) for n in range(36)]
-    if block_type == 1:  # start
-        return ([math.sin(math.pi / 36 * (n + 0.5)) for n in range(18)]
-                + [1.0] * 6
-                + [math.sin(math.pi / 12 * (n - 24 + 0.5)) for n in range(24, 30)]
-                + [0.0] * 6)
-    if block_type == 3:  # stop
-        return ([0.0] * 6
-                + [math.sin(math.pi / 12 * (n - 6 + 0.5)) for n in range(6, 12)]
-                + [1.0] * 6
-                + [math.sin(math.pi / 36 * (n + 0.5)) for n in range(18, 36)])
-    raise ValueError(f"no long window for block_type {block_type}")
-
-
-def _mp3_imdct18(X, block_type: int):
-    """36-point IMDCT + window: x[n] = Σ X[k]·cos(π/72·(2n+1+18)·(2k+1))."""
-    import math
-
-    win = _mp3_imdct_window(block_type)
-    return [win[n] * sum(X[k] * math.cos(math.pi / 72 * (2 * n + 1 + 18) * (2 * k + 1))
-                         for k in range(18))
-            for n in range(36)]
-
-
-def _mp3_imdct_short(X):
-    """Three 12-point IMDCTs, sin windows, overlapped at +6 offsets into
-    the 36-sample slot (§2.4.3.4.10.2); input lines window-interleaved."""
-    import math
-
-    out = [0.0] * 36
-    for w in range(3):
-        lines = [X[3 * k + w] for k in range(6)]
-        for n in range(12):
-            v = sum(lines[k] * math.cos(math.pi / 24 * (2 * n + 1 + 6) * (2 * k + 1))
-                    for k in range(6))
-            out[6 + 6 * w + n] += v * math.sin(math.pi / 12 * (n + 0.5))
-    return out
-
-
-class _Mp3Synth:
-    """Polyphase synthesis filterbank state (§2.4.3.4.12): 32→64
-    matrixing, 1024-sample V FIFO, 512-tap windowed MAC. The window D
-    (Table B.3) is table data from the registry; all-zero slots short-
-    circuit EXACTLY (the filter is linear), so silence never needs D."""
-
-    def __init__(self):
-        self.v = [0.0] * 1024
-        self.dirty = False
-        self._nmat = None
-
-    def run(self, S):
-        import math
-
-        if not self.dirty and all(s == 0.0 for s in S):
-            return [0.0] * 32
-        if MP3_TABLES is None or "synth_window" not in MP3_TABLES:
-            raise NotImplementedError(
-                "MP3 synthesis window (ISO/IEC 11172-3 Table B.3) not "
-                "registered — table data seam; see register_mp3_tables"
-            )
-        self.dirty = True
-        if self._nmat is None:
-            self._nmat = [[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                           for j in range(32)] for i in range(64)]
-        self.v = [sum(self._nmat[i][j] * S[j] for j in range(32))
-                  for i in range(64)] + self.v[:960]
-        d = MP3_TABLES["synth_window"]
-        u = [0.0] * 512
-        for i in range(8):
-            for j in range(32):
-                u[64 * i + j] = self.v[128 * i + j]
-                u[64 * i + 32 + j] = self.v[128 * i + 96 + j]
-        w = [u[i] * d[i] for i in range(512)]
-        return [sum(w[32 * i + j] for i in range(16)) for j in range(32)]
-
-
-MP1_BITRATES = (0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352,
-                384, 416, 448)
-
-
-def _mp3_free_format_len(payload: bytes, pos: int, padding: int,
-                         pad_slot: int) -> int:
-    """FREE-FORMAT frame-size detection (§2.4.2.3 bitrate_index 0): the
-    frame size is constant across the stream (± one padding slot), so
-    scan forward for the next syncword whose version/layer/protection
-    byte and sampling-frequency bits match the current header and take
-    the distance, minus the current frame's padding slot. Because a
-    spurious 0xFF-sync byte pattern CAN occur inside main data (silence
-    frames still carry nonzero side-info/scalefactor bits), a candidate
-    is only accepted after the cross-check real decoders use: up to
-    three subsequent frame boundaries must land on matching syncwords
-    at the derived stride (each frame's own padding bit honoured); a
-    failed candidate resumes the scan. A single-frame stream extends to
-    the payload end."""
-    h1, h2 = payload[pos + 1], payload[pos + 2]
-
-    def _is_sync(j: int) -> bool:
-        return (payload[j] == 0xFF and payload[j + 1] == h1
-                and (payload[j + 2] & 0x0C) == (h2 & 0x0C))
-
-    def _stride_ok(base: int) -> bool:
-        p = pos
-        for _ in range(3):
-            pad = (payload[p + 2] >> 1) & 1
-            nxt = p + base + pad * pad_slot
-            if nxt + 3 > len(payload):
-                return nxt <= len(payload)  # stream end: accept
-            if not _is_sync(nxt):
-                return False
-            p = nxt
-        return True
-
-    i = pos + 6  # smallest conceivable frame: header + minimal side info
-    limit = min(len(payload) - 3, pos + 8192)  # scan reads payload[i+2]
-    while i <= limit:
-        if _is_sync(i):
-            base = (i - pos) - padding * pad_slot
-            if base > 0 and _stride_ok(base):
-                return base
-        i += 1
-    return (len(payload) - pos) - padding * pad_slot
-
-
-def _decode_layer1(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL library-free MPEG-1 LAYER I decoder (r10 — the subband-codec
-    half of the audio seam; Layer II stays behind it, its bit-allocation
-    tables are data). Layer I is fully structural: per frame (384
-    samples, 4-byte slots, flen = 4·⌊12·kbps·1000/fs⌋ + 4·pad) each of
-    the 32 subbands carries a 4-bit allocation (0 = silent, a → a+1
-    bits, 15 forbidden), a 6-bit scalefactor index per allocated
-    subband, then 12 grains of per-subband sample codes. Requantize per
-    §2.4.3.1: s'' = (2^nb/(2^nb−1)) · (c·2^(1−nb) − 1 + 2^(1−nb)),
-    scaled by the CLOSED-FORM Table B.1 scalefactor 2·2^(−idx/3) —
-    no numeric-table seam — then the same polyphase synthesis as
-    Layer III (needs the registered B.3 window only when any subband is
-    audible; all-zero allocations decode to exact zeros without it).
-    Stereo/dual carry independent per-channel fields; Layer I intensity
-    (joint stereo bound sharing) raises NotImplementedError. MPEG-2
-    Layer I raises (LSF applies to Layer III here)."""
-    import numpy as np
-
-    pos = 0
-    nch = None
-    free_base = None
-    pcm_ch: list = []
-    synth: list = []
-    while pos + 4 <= len(payload):
-        h = payload[pos: pos + 4]
-        if h[0] != 0xFF or (h[1] & 0xE0) != 0xE0:
-            raise ValueError("lost MPEG frame sync")
-        if (h[1] >> 3) & 3 != 3:
-            raise NotImplementedError("MPEG-2/2.5 Layer I not implemented")
-        if (h[1] >> 1) & 3 != 3:
-            raise ValueError("not a Layer I frame (layer bits)")
-        protection = h[1] & 1
-        br_idx = h[2] >> 4
-        if br_idx == 15:
-            raise ValueError("invalid Layer I bitrate index 15")
-        fs_idx = (h[2] >> 2) & 3
-        if fs_idx == 3:
-            raise ValueError("reserved sampling frequency")
-        padding = (h[2] >> 1) & 1
-        mode = h[3] >> 6
-        if mode == 1:
-            raise NotImplementedError(
-                "Layer I intensity (joint) stereo bound sharing not implemented"
-            )
-        frame_nch = 1 if mode == 3 else 2
-        if nch is None:
-            nch = frame_nch
-            pcm_ch = [[] for _ in range(nch)]
-            synth = [_Mp3Synth() for _ in range(nch)]
-        elif frame_nch != nch:
-            raise ValueError("channel mode changed mid-stream")
-        fs = MP3_SAMPLERATES[fs_idx]
-        if br_idx == 0:  # free format: constant size, 4-byte pad slot
-            if free_base is None:
-                free_base = _mp3_free_format_len(payload, pos, padding, 4)
-            flen = free_base + 4 * padding
-        else:
-            flen = 4 * ((12 * MP1_BITRATES[br_idx] * 1000) // fs) + 4 * padding
-        body = pos + 4
-        if not protection:
-            body += 2  # CRC skipped, not verified
-        br = _FlacBitReader(payload[body: pos + flen])
-        # ISO 11172-3 audio_data() is subband-major channel-minor for
-        # allocation AND scalefactors (bound == 32 here: intensity raises).
-        alloc = [[0] * 32 for _ in range(nch)]
-        for sb in range(32):
-            for ch in range(nch):
-                a = br.read(4)
-                if a == 15:
-                    raise ValueError("forbidden Layer I allocation 15")
-                alloc[ch][sb] = a
-        sf = [[0.0] * 32 for _ in range(nch)]
-        for sb in range(32):
-            for ch in range(nch):
-                if alloc[ch][sb]:
-                    idx = br.read(6)
-                    if idx == 63:
-                        raise ValueError("invalid Layer I scalefactor index 63")
-                    sf[ch][sb] = 2.0 * 2.0 ** (-idx / 3.0)
-        for s in range(12):
-            vec = [[0.0] * 32 for _ in range(nch)]
-            for sb in range(32):
-                for ch in range(nch):
-                    a = alloc[ch][sb]
-                    if not a:
-                        continue
-                    nb = a + 1
-                    c = br.read(nb)
-                    s3 = c * 2.0 ** (1 - nb) - 1.0  # s''' from the code
-                    s2 = (2.0 ** nb / (2.0 ** nb - 1.0)) * (s3 + 2.0 ** (1 - nb))
-                    vec[ch][sb] = sf[ch][sb] * s2
-            for ch in range(nch):
-                pcm_ch[ch].extend(synth[ch].run(vec[ch]))
-        pos += flen
-    if nch is None:
-        return 0, 1, b""
-    n = len(pcm_ch[0])
-    inter = np.empty(n * nch, dtype=np.float64)
-    for ch in range(nch):
-        inter[ch::nch] = np.asarray(pcm_ch[ch], dtype=np.float64)
-    ints = np.clip(np.rint(inter * 32768.0), -32768, 32767).astype(np.int32)
-    return n, nch, ((ints >> 8) + 128).astype(np.uint8).tobytes()
-
-
-def encode_layer1(
-    n_frames: int,
-    fs_index: int = 1,
-    bitrate_index: int = 9,
-    seed: int = 0,
-    protection: bool = False,
-    padding: int = 0,
-    mode: int = 3,
-    samples=None,
-    free_format_kbps: int | None = None,
-) -> bytes:
-    """Minimal MPEG-1 Layer I encoder (fixtures + tests). With
-    ``samples=None`` every subband's allocation is 0 — digital silence
-    decoding to exactly 384·frames zeros per channel, with genuinely
-    varied bitrate/samplerate/padding/CRC and per-channel allocation
-    fields. With ``samples`` (a callable (frame, ch) → list of
-    (subband, alloc, sf_idx, [12 codes])) writes real allocations,
-    scalefactor indices, and sample codes."""
-    if mode == 1:
-        raise ValueError("Layer I intensity stereo not supported here")
-    if (bitrate_index == 0) != (free_format_kbps is not None):
-        raise ValueError(
-            "free format needs bitrate_index=0 AND free_format_kbps"
-        )
-    nch = 1 if mode == 3 else 2
-    kbps = free_format_kbps or MP1_BITRATES[bitrate_index]
-    fs = MP3_SAMPLERATES[fs_index]
-    out = bytearray()
-    for f in range(n_frames):
-        pad = padding if fs != 48000 else 0
-        flen = 4 * ((12 * kbps * 1000) // fs) + 4 * pad
-        h2 = 0xE0 | (3 << 3) | (3 << 1) | (0 if protection else 1)
-        h3 = (bitrate_index << 4) | (fs_index << 2) | (pad << 1)
-        h4 = (mode << 6) | (1 << 2)
-        out += bytes([0xFF, h2, h3, h4])
-        if protection:
-            out += b"\x00\x00"
-        w = _FlacBitWriter()
-        plan = [[None] * 32 for _ in range(nch)]
-        if samples is not None:
-            for ch in range(nch):
-                for sb, a, sf_idx, codes in samples(f, ch):
-                    plan[ch][sb] = (a, sf_idx, codes)
-        # Spec field order: subband-major channel-minor (mirrors decode).
-        for sb in range(32):
-            for ch in range(nch):
-                w.write(plan[ch][sb][0] if plan[ch][sb] else 0, 4)
-        for sb in range(32):
-            for ch in range(nch):
-                if plan[ch][sb]:
-                    w.write(plan[ch][sb][1], 6)
-        for s in range(12):
-            for sb in range(32):
-                for ch in range(nch):
-                    if plan[ch][sb]:
-                        a, _, codes = plan[ch][sb]
-                        w.write(codes[s], a + 1)
-        w.align()
-        if len(w.out) > flen - 4 - (2 if protection else 0):
-            raise ValueError("Layer I frame capacity exceeded")
-        out += bytes(w.out).ljust(flen - 4 - (2 if protection else 0), b"\x00")
-    return bytes(out)
-
-
-def _decode_mp3(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL library-free MPEG-1 + MPEG-2/2.5-LSF Layer III decoder —
-    MONO and STEREO (stereo / joint stereo with MS + long- AND
-    short-block intensity / dual channel) — for everything
-    structural/closed-form in ISO/IEC 11172-3 + 13818-3; the spec's
-    numeric tables (Huffman B.7, sfb B.8, synthesis window B.3) are the
-    injectable seam — see the MP3 section comment.
-    Walks frames (sync, version bits, bitrate/fs/padding, frame
-    length — LSF: 72000·kbps/fs, one 576-sample granule, 9/17-byte
-    side info with no scfsi and the derived 9-bit-scalefac_compress
-    slen scheme of 13818-3 §2.4.3.2), skips the 16-bit CRC when
-    protection=0 (parsed, not verified), parses 17-byte mono / 32-byte
-    two-channel side info, maintains the BIT RESERVOIR
-    (main_data_begin back-pointers, bounded 511-byte store), reads
-    per-channel scalefactors with scfsi sharing, Huffman-decodes each
-    channel's spectrum in gr-major ch-minor order, applies joint-stereo
-    processing on the requantized spectra (_mp3_joint_stereo: MS below
-    the intensity bound, is_pos panning above it; _mp3_intensity_short:
-    per-window bounds + short-scalefactor is_pos for pure-short AND
-    mixed granules, r10), then per channel: reorders short blocks,
-    alias-reduces, IMDCTs (long/short/mixed with the closed-form
-    windows), overlap-adds, frequency-inverts, and runs the polyphase
-    synthesis with PER-CHANNEL filter state. All-zero spectra decode to
-    exact zeros through every stage (linear pipeline), which is what
-    the pl_mp3_decode / pl_mp3_stereo_decode / pl_mp3_lsf_decode driver
-    rows check arithmetically. Layer I dispatches to _decode_layer1;
-    LSF intensity, LSF mixed blocks, and free-format frame sizing all
-    decode (r10). What still raises a named NotImplementedError: Layer
-    II (bit-allocation tables are data), intensity with mismatched
-    channel block types, and LSF intensity combined with mixed blocks.
-    Returns (samples_per_channel,
-    n_channels, channel-interleaved upper-byte+128 uint8 fold) like
-    _decode_wav/_decode_flac."""
-    import numpy as np
-
-    pos = 0
-    store = bytearray()  # bit-reservoir: previous frames' main data
-    nch = None
-    version = None  # 3 = MPEG-1, 2 = MPEG-2 LSF, 0 = MPEG-2.5 LSF
-    free_base = None  # free-format frame size (sans padding), once found
-    pcm_ch: list = []  # per-channel float sample lists
-    overlap: list = []  # per-channel [32][18] overlap state
-    synth: list = []  # per-channel polyphase state
-    dsp_dirty = False
-    while pos + 4 <= len(payload):
-        h = payload[pos: pos + 4]
-        if h[0] != 0xFF or (h[1] & 0xE0) != 0xE0:
-            raise ValueError("lost MP3 frame sync")
-        ver = (h[1] >> 3) & 3
-        if ver == 1:
-            raise ValueError("reserved MPEG version bits 01")
-        lsf = ver != 3  # MPEG-2 (10) / MPEG-2.5 (00): low sampling frequency
-        layer = (h[1] >> 1) & 3  # 01 = III, 10 = II, 11 = I
-        if layer == 3:
-            if pos:
-                raise ValueError("MPEG layer changed mid-stream")
-            return _decode_layer1(payload)
-        if layer == 0:
-            raise ValueError("reserved MPEG layer bits 00")
-        if layer != 1:
-            raise NotImplementedError(
-                "MPEG Layer II (bit-allocation tables are data — seam)"
-            )
-        protection = h[1] & 1  # 1 = no CRC
-        br_idx = h[2] >> 4
-        if br_idx == 15:
-            raise ValueError("invalid MP3 bitrate index 15")
-        fs_idx = (h[2] >> 2) & 3
-        if fs_idx == 3:
-            raise ValueError("reserved MP3 sampling frequency")
-        padding = (h[2] >> 1) & 1
-        mode = h[3] >> 6
-        mode_ext = (h[3] >> 4) & 3
-        frame_nch = 1 if mode == 3 else 2
-        ms_on = mode == 1 and bool(mode_ext & 2)
-        int_on = mode == 1 and bool(mode_ext & 1)
-        if nch is None:
-            nch = frame_nch
-            version = ver
-            pcm_ch = [[] for _ in range(nch)]
-            overlap = [[[0.0] * 18 for _ in range(32)] for _ in range(nch)]
-            synth = [_Mp3Synth() for _ in range(nch)]
-        elif frame_nch != nch:
-            raise ValueError("MP3 channel mode changed mid-stream")
-        elif ver != version:
-            raise ValueError("MPEG version changed mid-stream")
-        fs = MP3_LSF_SAMPLERATES[ver][fs_idx] if lsf else MP3_SAMPLERATES[fs_idx]
-        pad_slot = 1  # Layer III slot = 1 byte (Layer I uses 4)
-        if br_idx == 0:
-            # FREE FORMAT (§2.4.2.3 bitrate_index 0): the frame size is
-            # constant for the whole stream (± the padding slot) and the
-            # decoder determines it ONCE by scanning for the next
-            # syncword with identical version/layer/fs bits
-            if free_base is None:
-                free_base = _mp3_free_format_len(payload, pos, padding,
-                                                 pad_slot)
-            flen = free_base + padding * pad_slot
-        elif lsf:
-            flen = (72000 * MP3_LSF_BITRATES[br_idx]) // fs + padding
-        else:
-            flen = _mp3_frame_len(MP3_BITRATES[br_idx], fs, padding)
-        body = pos + 4
-        if not protection:
-            body += 2  # CRC present: skipped, not verified
-        if lsf:
-            side_len = 9 if nch == 1 else 17
-            sides = _mp3_read_side_info_lsf(payload[body: body + side_len], nch)
-        else:
-            side_len = 17 if nch == 1 else 32
-            sides = _mp3_read_side_info(payload[body: body + side_len], nch)
-        main_raw = payload[body + side_len: pos + flen]
-        mdb = sides[0].main_data_begin
-        if mdb > len(store):
-            raise ValueError(
-                f"MP3 bit reservoir underrun: main_data_begin="
-                f"{mdb} but only {len(store)} bytes stored"
-            )
-        data = (bytes(store[len(store) - mdb:]) + main_raw
-                if mdb else bytes(main_raw))
-        br = _FlacBitReader(data)
-        base = 0  # absolute bit offset of br's buffer start within `data`
-        prev_sf = [None] * nch
-        for gr in range(1 if lsf else 2):
-            chans = []  # per channel: (spectrum, sf, coded_end)
-            lsf_sfinfo = None  # (is_pos, illegal, intensity_scale)
-            for ch in range(nch):
-                side = sides[ch]
-                start_bits = base + _mp3_bits_consumed(br)
-                if lsf and int_on and ch == 1:
-                    lsf_sfinfo = _mp3_read_scalefactors_lsf(
-                        br, side, gr, intensity=True
-                    )
-                    sf = lsf_sfinfo[0]
-                elif lsf:
-                    sf = _mp3_read_scalefactors_lsf(br, side, gr)
-                else:
-                    sf = _mp3_read_scalefactors(br, side, gr, prev_sf[ch])
-                    if gr == 0 and side.block_type[0] != 2:
-                        prev_sf[ch] = sf
-                part2 = base + _mp3_bits_consumed(br) - start_bits
-                bits_left = side.part2_3_length[gr] - part2
-                if bits_left < 0:
-                    raise ValueError("MP3 part2_3_length shorter than scalefactors")
-                spectrum, coded_end = _mp3_huffman_decode(br, bits_left, side, gr, fs)
-                # reposition the reader to the exact granule boundary:
-                # forward over ancillary slack, or BACK when the final
-                # count1 quad crossed part2_3_length (its values were
-                # discarded in _mp3_huffman_decode; without the rewind
-                # every later granule in the reservoir would desync).
-                # Always rebuild the reader — after a physical-end
-                # IndexError discard its internal state is undefined.
-                target = start_bits + side.part2_3_length[gr]
-                if target > len(data) * 8:
-                    raise ValueError(
-                        "MP3 part2_3_length extends past the frame's "
-                        "main data"
-                    )
-                br = _FlacBitReader(data[target // 8:])
-                base = (target // 8) * 8
-                for _ in range(target % 8):
-                    br.read(1)
-                chans.append((spectrum, sf, coded_end))
-            if not dsp_dirty and not any(any(c[0]) for c in chans):
-                for ch in range(nch):
-                    pcm_ch[ch].extend([0.0] * 576)  # exact: linear pipeline
-                continue
-            dsp_dirty = True
-            xrs = [_mp3_requantize(chans[ch][0], sides[ch], gr, chans[ch][1], fs)
-                   for ch in range(nch)]
-            if nch == 2 and (ms_on or int_on):
-                blk = [(sides[ch].block_type[gr], sides[ch].mixed_block[gr])
-                       for ch in range(2)]
-                if int_on and blk[0] != blk[1]:
-                    raise NotImplementedError(
-                        "intensity stereo with mismatched channel block "
-                        "types (left/right disagree) not implemented"
-                    )
-                sf_r = chans[1][1]
-                if int_on and lsf:
-                    _mp3_joint_stereo_lsf(xrs[0], xrs[1], lsf_sfinfo,
-                                          chans[1][2], fs, ms_on, blk[1][0])
-                elif int_on and blk[1][0] == 2:
-                    _mp3_intensity_short(xrs[0], xrs[1], sf_r, fs, ms_on,
-                                         mixed=bool(blk[1][1]))
-                else:
-                    _mp3_joint_stereo(xrs[0], xrs[1], sf_r, chans[1][2], fs,
-                                      ms_on, int_on)
-            for ch in range(nch):
-                xr = xrs[ch]
-                side = sides[ch]
-                bt, mixed = side.block_type[gr], side.mixed_block[gr]
-                if bt == 2:
-                    xr = _mp3_reorder_short(xr, fs, bool(mixed))
-                    _mp3_alias(xr, 1 if mixed else 0)
-                else:
-                    _mp3_alias(xr, 31)
-                slot = [[0.0] * 18 for _ in range(32)]
-                ovl = overlap[ch]
-                for sb in range(32):
-                    lines = list(xr[18 * sb: 18 * sb + 18])
-                    if not any(lines) and not any(ovl[sb]):
-                        continue
-                    if bt == 2 and not (mixed and sb < 2):
-                        x36 = _mp3_imdct_short(lines)
-                    else:
-                        x36 = _mp3_imdct18(lines, 0 if (mixed and sb < 2) else bt)
-                    for t in range(18):
-                        slot[sb][t] = x36[t] + ovl[sb][t]
-                    ovl[sb] = x36[18:]
-                for sb in range(1, 32, 2):  # frequency inversion
-                    for t in range(1, 18, 2):
-                        slot[sb][t] = -slot[sb][t]
-                for t in range(18):
-                    pcm_ch[ch].extend(synth[ch].run([slot[sb][t] for sb in range(32)]))
-        store.extend(main_raw)
-        if len(store) > 511:  # spec caps main_data_begin at 9 bits
-            del store[: len(store) - 511]
-        pos += flen
-    if nch is None:
-        return 0, 1, b""
-    n = len(pcm_ch[0])
-    inter = np.empty(n * nch, dtype=np.float64)
-    for ch in range(nch):
-        inter[ch::nch] = np.asarray(pcm_ch[ch], dtype=np.float64)
-    ints = np.clip(np.rint(inter * 32768.0), -32768, 32767).astype(np.int32)
-    folded = ((ints >> 8) + 128).astype(np.uint8)
-    return n, nch, folded.tobytes()
-
-
-def _mp3_bits_consumed(br) -> int:
-    """Total bits consumed so far by a _FlacBitReader (bytepos counts
-    refilled bytes; the buffered remainder is not yet consumed)."""
-    return br.bytepos * 8 - br.nbuf
-
-
-def encode_mp3(
-    n_frames: int,
-    fs_index: int = 1,
-    bitrate_index: int = 9,
-    seed: int = 0,
-    scfsi: int = 0,
-    protection: bool = False,
-    padding: int = 0,
-    spectra=None,
-    table_id: int = 0,
-    reservoir_slack: int = 0,
-    block_plan=None,
-    mode: int = 3,
-    mode_ext: int = 0,
-    version: int = 1,
-    free_format_kbps: int | None = None,
-) -> bytes:
-    """Minimal MPEG-1 Layer III mono/stereo encoder (fixtures + tests). With
-    ``spectra=None`` emits digital silence with REAL varied structure:
-    big_values=0 and an empty count1 region (rzero fills the granule),
-    but genuinely varied bitrate/samplerate/padding, nonzero
-    scalefactors cycling every slen combination, scfsi sharing, optional
-    CRC bytes, and — via ``reservoir_slack`` — a real bit reservoir
-    (later frames' main data begins inside earlier frames' slack,
-    main_data_begin > 0). With ``spectra`` (a callable (frame, gr) →
-    list[576] ints) Huffman-encodes the values using the REGISTERED
-    tables (register_mp3_tables): big_values pairs from ``table_id``
-    with linbits escapes, then count1 quads for the ±1 tail. Two-pass
-    logical main-data stream, physically packed per the reservoir rules
-    (§2.4.1.7): main_data_begin_i = flushed_i − logical_start_i.
-    ``block_plan`` (r8, window-switching coverage): a callable
-    (frame, gr) → (block_type, mixed, [3 subblock gains]) emitting
-    start (1) / short (2) / stop (3) granules with the matching
-    side-info layout and short/mixed scalefactor order; requires
-    scfsi=0 (sharing is a long-block feature). A 3-arg plan
-    (frame, gr, ch) sets PER-CHANNEL block types (r10 — mismatched-type
-    stereo fixtures for the decoder's intensity gate).
-    ``mode``/``mode_ext`` (r9, stereo): mode 3 = mono (default, 17-byte
-    side info); 0 = stereo, 1 = joint stereo (mode_ext bit 2 = MS,
-    bit 1 = intensity), 2 = dual channel — all 32-byte side info with
-    per-channel scfsi and gr-major ch-minor granule blocks. With two
-    channels ``spectra`` is called as (frame, gr, ch). The channel
-    variation key vkey = gr (mono) / gr·2+ch (stereo) feeds the same
-    scalefactor/gain formulas, so mono output is byte-identical to
-    r8.
-    ``version`` (r10, LSF): 1 = MPEG-1 (default); 2 = MPEG-2 LSF
-    (22.05/24/16 kHz); 25 = MPEG-2.5 LSF (11.025/12/8 kHz). LSF frames
-    carry ONE granule (576 samples), 9/17-byte side info with an 8-bit
-    main_data_begin, no scfsi, a 9-bit scalefac_compress feeding the
-    13818-3 §2.4.3.2 slen/group scheme, and no preflag bit. LSF
-    intensity stereo is not supported (the decoder's named seam)."""
-    if spectra is not None and MP3_TABLES is None:
-        raise NotImplementedError(
-            "encoding nonzero MP3 spectra needs registered Huffman tables"
-        )
-    if mode not in (0, 1, 2, 3):
-        raise ValueError(f"invalid MP3 mode {mode}")
-    if version not in (1, 2, 25):
-        raise ValueError(f"invalid MPEG version {version} (1, 2 or 25)")
-    lsf = version != 1
-    if lsf and scfsi:
-        raise ValueError("scfsi does not exist in LSF side info")
-    if (bitrate_index == 0) != (free_format_kbps is not None):
-        raise ValueError(
-            "free format needs bitrate_index=0 AND free_format_kbps"
-        )
-    ngr = 1 if lsf else 2
-    nch = 1 if mode == 3 else 2
-    if lsf:
-        side_len = 9 if nch == 1 else 17
-        kbps = free_format_kbps or MP3_LSF_BITRATES[bitrate_index]
-        fs = MP3_LSF_SAMPLERATES[2 if version == 2 else 0][fs_index]
-    else:
-        side_len = 17 if nch == 1 else 32
-        kbps = free_format_kbps or MP3_BITRATES[bitrate_index]
-        fs = MP3_SAMPLERATES[fs_index]
-    headers = []
-    granule_bits: list = []  # per frame: _FlacBitWriter over all granules
-    sides: list = []
-    caps: list = []
-    for f in range(n_frames):
-        pad = padding if fs != 48000 else 0
-        flen = ((72000 * kbps) // fs + pad) if lsf else _mp3_frame_len(kbps, fs, pad)
-        caps.append(flen - 4 - (2 if protection else 0) - side_len)
-        headers.append((pad, flen))
-        w = _FlacBitWriter()
-        si_fields = []
-        for gr in range(ngr):
-            for ch_ in range(nch):
-                vkey = gr if nch == 1 else gr * 2 + ch_
-                compress = (seed + f * 2 + vkey) % 16
-                s1, s2 = _MP3_SLEN[compress]
-                bt, mixed, sbg = (0, 0, [0, 0, 0])
-                if block_plan is not None:
-                    # r10: a 3-arg plan (frame, gr, ch) emits PER-CHANNEL
-                    # block types (mismatched-type stereo fixtures); the
-                    # 2-arg form applies one plan to both channels
-                    if _plan_arity(block_plan) >= 3:
-                        bt, mixed, sbg = block_plan(f, gr, ch_)
-                    else:
-                        bt, mixed, sbg = block_plan(f, gr)
-                    if scfsi:
-                        raise ValueError("scfsi sharing requires long blocks")
-                gg = (seed * 7 + f * 13 + vkey * 29) % 256
-                if lsf:
-                    if mode == 1 and (mode_ext & 1) and ch_ == 1:
-                        if bt == 2 and mixed:
-                            raise ValueError(
-                                "LSF intensity with mixed blocks is the "
-                                "decoder's named seam"
-                            )
-                        # intensity channel: is_pos values under the
-                        # scalefac_compress>>1 scheme (bit 0 = scale)
-                        sc_i = (seed * 3 + f * 7 + vkey * 11) % 255
-                        compress = (sc_i << 1) | ((seed + f) % 2)
-                        slen4, bn = _mp3_lsf_slen_intensity(sc_i)
-                    else:
-                        compress = (seed * 3 + f * 7 + vkey * 11) % 512
-                        slen4, _pre, bn = _mp3_lsf_slen(compress)
-                    bti = 2 if (bt == 2 and mixed) else (1 if bt == 2 else 0)
-                    nsfb = _MP3_LSF_NSFB[bn][bti]
-                    part2 = sum(nsfb[g_] * slen4[g_] for g_ in range(4))
-                    j = 0
-                    for g_ in range(4):
-                        for _ in range(nsfb[g_]):
-                            if slen4[g_]:
-                                w.write((j * 5 + seed + vkey) % (1 << slen4[g_]),
-                                        slen4[g_])
-                            j += 1
-                    huff_bits = 0
-                    big_values = 0
-                    region0, region1 = 0, 0
-                    if spectra is not None:
-                        vals = spectra(f, gr) if nch == 1 else spectra(f, gr, ch_)
-                        huff_bits, big_values, region0, region1 = (
-                            _mp3_write_spectrum(w, vals, table_id, fs)
-                        )
-                    si_fields.append(
-                        (part2 + huff_bits, big_values, gg, compress,
-                         [table_id, table_id, table_id], region0, region1,
-                         (seed + vkey) % 2, 0, bt, mixed, sbg)
-                    )
-                    continue
-                scfsi_bits = [(scfsi >> (3 - i)) & 1 for i in range(4)]
-                use_scfsi = scfsi_bits if gr == 1 else None
-                part2 = _mp3_scalefactor_bits(compress, bt, mixed, use_scfsi)
-                if bt == 2 and not mixed:
-                    for sfb in range(12):
-                        slen = s1 if sfb < 6 else s2
-                        for win in range(3):
-                            if slen:
-                                w.write((sfb * 5 + win * 3 + seed + vkey) % (1 << slen), slen)
-                elif bt == 2 and mixed:
-                    for j in range(8):
-                        if s1:
-                            w.write((j * 5 + seed + vkey) % (1 << s1), s1)
-                    for sfb in range(3, 12):
-                        slen = s1 if sfb < 6 else s2
-                        for win in range(3):
-                            if slen:
-                                w.write((sfb * 5 + win * 3 + seed + vkey) % (1 << slen), slen)
-                else:
-                    sf_vals = [(j * 5 + seed + vkey) % (1 << (s1 if j < 11 else s2))
-                               if (s1 if j < 11 else s2) else 0 for j in range(21)]
-                    for gi, (lo, hi) in enumerate(_MP3_SCFSI_BANDS):
-                        slen = s1 if hi <= 11 else s2
-                        if gr == 1 and scfsi_bits[gi]:
-                            continue
-                        for j in range(lo, hi):
-                            if slen:
-                                w.write(sf_vals[j], slen)
-                huff_bits = 0
-                big_values = 0
-                c1_select = 0
-                region0, region1 = 0, 0
-                if spectra is not None:
-                    vals = spectra(f, gr) if nch == 1 else spectra(f, gr, ch_)
-                    huff_bits, big_values, region0, region1 = _mp3_write_spectrum(
-                        w, vals, table_id, fs
-                    )
-                si_fields.append(
-                    (part2 + huff_bits, big_values, gg, compress,
-                     [table_id, table_id, table_id], region0, region1,
-                     (seed + vkey) % 2, c1_select, bt, mixed, sbg)
-                )
-        granule_bits.append(w)
-        sides.append(si_fields)
-    # two-pass reservoir packing: logical stream L = concat(granule bits),
-    # physical frame regions sized caps[i]
-    logical = bytearray()
-    begins = []
-    flushed = 0
-    for f in range(n_frames):
-        gb = granule_bits[f]
-        gb.align()
-        begin = flushed - len(logical)
-        mdb_cap = 255 if lsf else 511  # 8-bit LSF / 9-bit MPEG-1 field
-        if begin < 0 or begin > mdb_cap:
-            raise ValueError(f"MP3 reservoir bookkeeping out of range: {begin}")
-        begins.append(begin)
-        logical += bytes(gb.out)
-        if len(logical) > flushed + caps[f]:
-            raise ValueError("MP3 frame capacity exceeded (raise the bitrate)")
-        target_backlog = min(reservoir_slack, 511) if f + 1 < n_frames else 0
-        pad_to = flushed + caps[f] - target_backlog
-        if len(logical) < pad_to:
-            logical += b"\x00" * (pad_to - len(logical))
-        flushed += caps[f]
-    logical += b"\x00" * (flushed - len(logical))
-    out = bytearray()
-    flushed = 0
-    for f in range(n_frames):
-        pad, flen = headers[f]
-        h1 = 0xFF
-        vv = 3 if version == 1 else (2 if version == 2 else 0)
-        h2 = 0xE0 | (vv << 3) | (1 << 1) | (0 if protection else 1)
-        h3 = (bitrate_index << 4) | (fs_index << 2) | (pad << 1)
-        h4 = (mode << 6) | ((mode_ext & 3) << 4) | (1 << 2)  # mode, original
-        out += bytes([h1, h2, h3, h4])
-        if protection:
-            out += b"\x00\x00"  # CRC bytes present but unverified (seam)
-        sw = _FlacBitWriter()
-        sw.write(begins[f], 8 if lsf else 9)
-        if lsf:
-            sw.write(0, 1 if nch == 1 else 2)
-        else:
-            sw.write(0, 5 if nch == 1 else 3)
-            for _ in range(nch):
-                sw.write(scfsi & 0xF, 4)
-        for gi in range(ngr * nch):
-            (p23, bv, gg, compress, tsel, r0, r1,
-             sfscale, c1sel, bt, mixed, sbg) = sides[f][gi]
-            sw.write(p23, 12)
-            sw.write(bv, 9)
-            sw.write(gg, 8)
-            sw.write(compress, 9 if lsf else 4)
-            if bt:  # window switching: start/short/stop layout
-                sw.write(1, 1)
-                sw.write(bt, 2)
-                sw.write(mixed, 1)
-                for t in tsel[:2]:
-                    sw.write(t, 5)
-                for g_ in sbg:
-                    sw.write(g_, 3)
-            else:
-                sw.write(0, 1)
-                for t in tsel:
-                    sw.write(t, 5)
-                sw.write(r0, 4)
-                sw.write(r1, 3)
-            if not lsf:
-                sw.write(0, 1)  # preflag (LSF derives it — no bit)
-            sw.write(sfscale, 1)
-            sw.write(c1sel, 1)
-        sw.align()
-        assert len(sw.out) == side_len
-        out += bytes(sw.out)
-        out += bytes(logical[flushed: flushed + caps[f]])
-        flushed += caps[f]
-    return bytes(out)
-
-
-def _mp3_write_spectrum(w, vals, table_id: int, fs: int):
-    """Huffman-encode one granule's 576 values with the registered
-    tables: big_values pairs from ``table_id`` (linbits escape + sign
-    bits), count1 quads (table 0) for the ±1 tail, regions sized so all
-    big_values land in region 0. Returns (bits, big_values, r0, r1)."""
-    tbl = MP3_TABLES["huffman"][table_id]
-    codes, linbits = tbl["codes"], tbl["linbits"]
-    maxv = 15 + (1 << linbits) - 1 if linbits else 15
-    last_nz = max((i for i, v in enumerate(vals) if v), default=-1)
-    # big_values covers values > 1; the |v|<=1 tail goes to count1
-    last_big = max((i for i, v in enumerate(vals) if abs(v) > 1), default=-1)
-    bv_lines = last_big + 1
-    if bv_lines % 2:
-        bv_lines += 1
-    c1_end = last_nz + 1
-    while (c1_end - bv_lines) % 4:
-        c1_end += 1
-    if c1_end > 576:
-        raise ValueError("count1 region overruns the granule")
-    bits = 0
-
-    def put_code(word: str):
-        nonlocal bits
-        for ch in word:
-            w.write(int(ch), 1)
-        bits += len(word)
-
-    def put_val(v: int):
-        nonlocal bits
-        a = abs(v)
-        if a > maxv:
-            raise ValueError(f"value {v} exceeds table {table_id} range")
-        lin = 0
-        if a >= 15 and linbits:
-            lin, a = a - 15, 15
-        if a == 15 and linbits:
-            w.write(lin, linbits)
-            bits += linbits
-        if abs(v):
-            w.write(1 if v < 0 else 0, 1)
-            bits += 1
-        return a
-
-    i = 0
-    while i < bv_lines:
-        x, y = abs(vals[i]), abs(vals[i + 1])
-        cx = min(x, 15) if linbits else x
-        cy = min(y, 15) if linbits else y
-        put_code(codes[(cx, cy)])
-        put_val(vals[i])
-        put_val(vals[i + 1])
-        i += 2
-    c1 = MP3_TABLES["count1"][0]
-    while i < c1_end:
-        quad = tuple(abs(vals[i + j]) for j in range(4))
-        if any(q > 1 for q in quad):
-            raise ValueError("count1 region values must be in {-1,0,1}")
-        put_code(c1[quad])
-        for j in range(4):
-            if vals[i + j]:
-                w.write(1 if vals[i + j] < 0 else 0, 1)
-                bits += 1
-        i += 4
-    sfb = MP3_TABLES["sfb_long"][fs]
-    r0 = 0
-    while r0 < 15 and sfb[r0 + 1] < bv_lines:
-        r0 += 1
-    r1 = 7
-    while r0 + r1 + 2 < len(sfb) - 1 and sfb[r0 + r1 + 2] < bv_lines:
-        r1 += 1  # pragma: no cover — region0 already covers big_values
-    return bits, bv_lines // 2, r0, min(r1, 7)
-
-
-def synthesize_mp3(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL-MP3 media fixture (r8): genuine MPEG-1 Layer III mono frames
-    built ON EXECUTORS in a mapInPandas stage. Doc d gets 1 + d%3 frames
-    of digital silence with real structural variety — sample rate cycles
-    44100/48000/32000 (exercising the frame-length formula and padding
-    bit), bitrate index cycles 1..14, scalefac_compress walks all 16
-    slen combinations with NONZERO scalefactor values, scfsi cycles all
-    16 sharing masks, every 5th doc carries CRC bytes, every 7th doc
-    uses a real 4-byte bit reservoir (frame 2+ main data begins inside
-    the previous frame's region). Silence decodes to exact zeros
-    through the full parse + linear DSP pipeline, so the SQL oracle is
-    closed-form: n = 1152·frames, body_sum = 128·n."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                # every 13th doc is FREE FORMAT (bitrate_index 0, frame
-                # size recovered by the decoder's next-sync scan) — the
-                # silence oracle depends only on the frame count
-                free = i % 13 == 0
-                payloads.append(
-                    encode_mp3(
-                        1 + i % 3,
-                        fs_index=int(i % 3),
-                        bitrate_index=0 if free else int(1 + i % 14),
-                        free_format_kbps=int(72 + 8 * (i % 4)) if free
-                        else None,
-                        seed=int(i % 251),
-                        scfsi=int(i % 16),
-                        protection=bool(i % 5 == 0),
-                        padding=int(i % 2),
-                        reservoir_slack=4 if i % 7 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": "audio", "payload": payloads}
-            )
-
-    return _spread_ids(docs, id_col).mapInPandas(
-        fn, "media_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_stereo(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL-MP3 STEREO media fixture (r10): genuine two-channel MPEG-1
-    Layer III frames built ON EXECUTORS in a mapInPandas stage. Doc d
-    gets 1 + d%3 frames of digital silence with the mono fixture's
-    structural variety (sample rate / bitrate / slen / CRC / padding /
-    reservoir cycling) PLUS the stereo surface: channel mode cycles
-    stereo (mode 0) / joint stereo (mode 1) / dual channel (mode 2) by
-    d%3, joint docs cycle mode_ext 1/2/3 (intensity / MS / MS+intensity)
-    by d%9, every 11th doc swaps the long-block granules for a
-    window-switching plan (start/short/stop with subblock gains —
-    scfsi 0, the long-block-only feature). Every frame carries 32-byte
-    side info with 4 granule-channel blocks in gr-major ch-minor order
-    and per-channel scfsi. Silence decodes to exact zeros through the
-    full stereo parse + joint-stereo + DSP pipeline, so the SQL oracle
-    is closed-form: n = 2·1152·frames interleaved bytes, body_sum =
-    128·n (width = samples per channel, height = 2 channels). The
-    nonzero joint-stereo DSP (MS math, long- and short-block intensity
-    panning) is proven by the injected-table contract tests in
-    tests/test_beam_multimodal.py."""
-
-    def _plan(f, gr):
-        # frame 0: start/short, frame 1+: short/stop — legal window
-        # switching sequences with nonzero subblock gains
-        if gr == 0:
-            return (1 if f == 0 else 2, 0, [0, 1, 2])
-        return (2 if f == 0 else 3, 0, [2, 0, 1])
-
-    def _plan_mixed(f, gr):
-        # every granule mixed: 2 long subbands + short sfb 3+ (the r10
-        # mixed-intensity side-info/scalefactor layout)
-        return (2, 1, [1, 0, 2])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                mode = int(i % 3)  # 0 stereo, 1 joint, 2 dual
-                mode_ext = int(1 + (i // 3) % 3) if mode == 1 else 0
-                windowed = i % 11 == 0
-                plan = (_plan_mixed if i % 22 == 0 else _plan) if windowed \
-                    else None
-                payloads.append(
-                    encode_mp3(
-                        1 + i % 3,
-                        fs_index=int(i % 3),
-                        # short-block scalefactors for 4 granule-channels
-                        # need more main-data room than the lowest
-                        # bitrates leave after 32-byte side info
-                        bitrate_index=int(8 + i % 7) if windowed
-                        else int(1 + i % 14),
-                        seed=int(i % 251),
-                        scfsi=0 if windowed else int(i % 16),
-                        protection=bool(i % 5 == 0),
-                        padding=int(i % 2),
-                        reservoir_slack=4 if i % 7 == 0 else 0,
-                        block_plan=plan,
-                        mode=mode,
-                        mode_ext=mode_ext,
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": "audio", "payload": payloads}
-            )
-
-    return _spread_ids(docs, id_col).mapInPandas(
-        fn, "media_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_lsf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """MPEG-2/2.5 LSF media fixture (r10): genuine low-sampling-frequency
-    Layer III frames built ON EXECUTORS in a mapInPandas stage. Doc d
-    gets 1 + d%3 frames of digital silence; the version alternates
-    MPEG-2 (22.05/24/16 kHz) and MPEG-2.5 (11.025/12/8 kHz) by doc, the
-    channel mode cycles mono / stereo / joint / dual with joint docs
-    cycling intensity / MS / MS+intensity (LSF intensity panning landed
-    r10 — the intensity channel's scalefac_compress>>1 is_pos scheme),
-    the 9-bit scalefac_compress walks all three §2.4.3.2 blocknumber
-    ranges with NONZERO scalefactors, every 11th doc window-switches
-    (start/short/stop), every 5th carries CRC bytes, every 7th uses a
-    real bit reservoir (8-bit main_data_begin). One granule per frame:
-    the SQL oracle's closed form is n = 576·frames per channel, bytes
-    fold to 128 each."""
-
-    def _plan(f, gr):
-        if f % 3 == 0:
-            return (1, 0, [0, 1, 2])
-        return (2, 0, [2, 0, 1]) if f % 3 == 1 else (3, 0, [1, 1, 0])
-
-    def _plan_mixed(f, gr):
-        # LSF mixed blocks (r10): 6 long + 27 short scalefactor groups
-        return (2, 1, [1, 0, 2])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                mode = (3, 0, 1, 2)[i % 4]
-                windowed = i % 11 == 0
-                if windowed and i % 22 == 0 and not (
-                    mode == 1 and (1 + (i // 4) % 3) & 1
-                ):
-                    # mixed docs, except under intensity (the named seam)
-                    plan_fn = _plan_mixed
-                else:
-                    plan_fn = _plan
-                stereo = mode != 3
-                # scalefactor bits for 2 channels (or 36 short values)
-                # outgrow the lowest LSF bitrates' frame capacity
-                if windowed:
-                    br_idx = int(8 + i % 7)
-                elif stereo:
-                    br_idx = int(4 + i % 11)
-                else:
-                    br_idx = int(1 + i % 14)
-                payloads.append(
-                    encode_mp3(
-                        1 + i % 3,
-                        fs_index=int(i % 3),
-                        bitrate_index=br_idx,
-                        seed=int(i % 251),
-                        protection=bool(i % 5 == 0),
-                        padding=int(i % 2),
-                        reservoir_slack=4 if i % 7 == 0 else 0,
-                        block_plan=plan_fn if windowed else None,
-                        mode=mode,
-                        # joint docs cycle intensity / MS / MS+intensity
-                        # (LSF intensity landed r10)
-                        mode_ext=1 + (i // 4) % 3 if mode == 1 else 0,
-                        version=2 if i % 2 == 0 else 25,
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": "audio", "payload": payloads}
-            )
-
-    return _spread_ids(docs, id_col).mapInPandas(
-        fn, "media_id long, kind string, payload binary"
-    )
-
-
-def synthesize_layer1(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """MPEG-1 LAYER I media fixture (r10): genuine Layer I frames built
-    ON EXECUTORS in a mapInPandas stage. Doc d gets 1 + d%3 frames of
-    digital silence (all 32 subband allocations 0 — the all-zero
-    subband vector synthesizes to exact zeros with no table data),
-    channel mode cycling mono / stereo / dual by d%3, sample rate and
-    Layer-I bitrate table cycling, CRC and padding docs. 384 samples
-    per frame per channel: the SQL oracle's closed form is
-    n = 384·frames, bytes fold to 128 each."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                mode = (3, 0, 2)[i % 3]
-                # stereo allocation fields (256 bits) outgrow the lowest
-                # Layer I bitrate's 32-byte frame
-                br_idx = int(1 + i % 14) if mode == 3 else int(2 + i % 13)
-                payloads.append(
-                    encode_layer1(
-                        1 + i % 3,
-                        fs_index=int(i % 3),
-                        bitrate_index=br_idx,
-                        seed=int(i % 251),
-                        protection=bool(i % 5 == 0),
-                        padding=int(i % 2),
-                        mode=mode,
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": "audio", "payload": payloads}
-            )
-
-    return _spread_ids(docs, id_col).mapInPandas(
-        fn, "media_id long, kind string, payload binary"
-    )
-
-
 def synthesize_flac(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """REAL-FLAC media fixture: genuine mono 16-bit FLAC streams built ON
     EXECUTORS in a mapInPandas stage. Doc d gets n = 64 + d%64 samples,
@@ -3746,48 +767,13 @@ def synthesize_flac(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def synthesize_jpeg_progressive(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """PROGRESSIVE-JPEG media fixture (r7): same closed-form image grid
-    as synthesize_jpeg — doc d is a (1+d%3) × (1+d%2) grid of constant
-    8×8 blocks at value (d%251 + 17bx + 37by) mod 251 — but encoded
-    through the PROGRESSIVE scan script (SOF2: DC first at Al=1 + DC
-    refine + AC band scans + AC refinement). Constant blocks are
-    DC-only, so the full Annex-G accumulate-and-render path reproduces
-    the pixels bit-exactly and the same SQL oracle replays it."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                wb, hb, seed = 1 + i % 3, 1 + i % 2, i % 251
-                blocks = []
-                for by in range(hb):
-                    for bx in range(wb):
-                        blk = np.zeros(64, np.int64)
-                        # constant block v → quantized DC = 8·(v − 128)
-                        blk[0] = 8 * (int((seed + 17 * bx + 37 * by) % 251) - 128)
-                        blocks.append(blk)
-                payloads.append(
-                    encode_jpeg_progressive(wb * 8, hb * 8, blocks)
-                )
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": "image", "payload": payloads}
-            )
-
-    return _spread_ids(docs, id_col).mapInPandas(
-        fn, "media_id long, kind string, payload binary"
-    )
-
-
 _NATIVE_LIBS: dict | None = None  # import-try resolved once per executor
 
 
 def _native_libs() -> dict:
     """Resolve the optional native codec libraries once per process.
     Returns whichever of ``{"Image": PIL.Image, "soundfile": soundfile}``
-    import — empty dict in this sandbox (neither ships here). Executors
+    import — empty dict when neither is installed. Executors
     each resolve independently, so a heterogeneous cluster degrades
     per-node to the pure-Python fallback rather than failing the job."""
     global _NATIVE_LIBS
@@ -3863,52 +849,10 @@ def _sf_samples(payload: bytes) -> tuple[int, int, bytes] | None:
         return None
 
 
-def _jpeg_native_ok(payload: bytes) -> bool:
-    """Header-only screen for the JPEG dispatch (same role as the PNG
-    IHDR / FLAC bps guards): True only when the frame is one the pure
-    decoders accept — SOF0/SOF2, 8-bit precision, 1 or 3 components,
-    8-bit quantization tables. Everything else (extended/lossless/
-    arithmetic SOFn, CMYK 4-component, 12-bit, Pq=1 DQT) stays on the
-    pure path so the authoritative NotImplementedError fires instead of
-    PIL silently decoding with its own non-contract conversions. Scans
-    marker segments only; stops at SOS."""
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            return False
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            continue
-        size = struct.unpack_from(">H", payload, pos)[0]
-        if size < 2:  # malformed length would never advance pos
-            return False
-        body = payload[pos + 2 : pos + size]
-        pos += size
-        if marker == 0xDB:
-            i = 0
-            while i < len(body):
-                if body[i] >> 4 != 0:  # Pq=1: 16-bit table
-                    return False
-                i += 65
-        elif marker in (0xC0, 0xC2):  # baseline / progressive
-            # body = precision(1) height(2) width(2) ncomp(1) ...
-            if len(body) < 6 or body[0] != 8 or body[5] not in (1, 3):
-                return False
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            return False  # SOFn the pure path rejects by name
-        elif marker == 0xDA:
-            break
-    return True
-
-
 def _decode_native(payload: bytes) -> tuple[int, int, bytes] | None:
     """PRODUCTION fast path (VERDICT r11 ask #2): when a native codec
     library is importable, the known compressed containers dispatch to
-    it BEFORE the pure-Python decoders — PNG/JPEG → PIL, FLAC →
+    it BEFORE the pure-Python decoders — PNG → PIL, FLAC →
     soundfile — under identical output contracts (see _pil_luma /
     _sf_samples). The pure decoders below remain the always-available
     fallback and the in-sandbox correctness oracle
@@ -3941,10 +885,6 @@ def _decode_native(payload: bytes) -> tuple[int, int, bytes] | None:
         ):
             return None
         return _pil_luma(payload)
-    if payload[:2] == b"\xff\xd8":
-        if not _jpeg_native_ok(payload):
-            return None
-        return _pil_luma(payload)
     if payload[:4] == b"fLaC":
         # byte-parity with the pure fold holds only for 8/16-bit sources
         # (soundfile's int16 read right-shifts 24-bit samples BEFORE our
@@ -3965,7 +905,7 @@ def _try_real_decode(kind: str, payload: bytes):
     does not cover at all (GIF/TIFF/WebP images, Vorbis/Opus audio, …):
     PIL / soundfile will decode many of them for real when present —
     same output contracts as _decode_native. Returns None when no
-    library ships (this sandbox) or the container is genuinely
+    library imports or the container is genuinely
     unreadable; the caller raises the descriptive ValueError."""
     if kind == "image":
         return _pil_luma(payload)
@@ -3978,8 +918,7 @@ def _decode_one(payload: bytes, kind: str = "image") -> tuple[int, int, bytes]:
     if payload is not None and payload[:4] == MAGIC:
         width, height = struct.unpack("<II", payload[5:13])
         return width, height, payload[16:]
-    # native fast path first (no-op in this sandbox: _native_libs() is
-    # empty); a native failure falls through to the pure decoders, which
+    # native fast path first (no-op when _native_libs() is empty); a native failure falls through to the pure decoders, which
     # own the precise spec-level error messages
     native = _decode_native(payload)
     if native is not None:
@@ -3990,24 +929,16 @@ def _decode_one(payload: bytes, kind: str = "image") -> tuple[int, int, bytes]:
         return _decode_wav(payload)
     if payload is not None and payload[:8] == PNG_SIG:
         return _decode_png(payload)
-    if payload is not None and payload[:2] == b"\xff\xd8":
-        return _decode_jpeg(payload)
     if payload is not None and payload[:4] == b"fLaC":
         return _decode_flac(payload)
-    if (
-        payload is not None
-        and len(payload) >= 2
-        and payload[0] == 0xFF
-        and (payload[1] & 0xE0) == 0xE0
-    ):
-        return _decode_mp3(payload)
-    # other containers → the generic native path (None in this env)
+    # other containers (JPEG, MP3, GIF, …) → the generic native path
+    # (None when neither PIL nor soundfile imports)
     out = _try_real_decode(kind, payload)
     if out is not None:
         return out
     raise ValueError(
-        "unknown media container (JGMM fake, uncompressed BMP, PCM WAV, PNG, "
-        "baseline JPEG, FLAC, and MPEG-1 Layer III mono/stereo decode here)"
+        "unknown media container (JGMM fake, uncompressed BMP, PCM WAV, PNG "
+        "and FLAC decode here)"
     )
 
 
@@ -4059,69 +990,6 @@ def synthesize_png(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 w, h, seed = 8 + i % 16, 8 + i % 8, i % 251
                 body = bytes(((j * 31 + seed) % 251) for j in range(w * h))
                 payloads.append(encode_png(w, h, body, channels=1))
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": "image", "payload": payloads}
-            )
-
-    return _spread_ids(docs, id_col).mapInPandas(
-        fn, "media_id long, kind string, payload binary"
-    )
-
-
-def synthesize_jpeg_progressive_color(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """PROGRESSIVE COLOR JPEG media fixture (r10): the same closed-form
-    luma grid as synthesize_jpeg / synthesize_jpeg_progressive — doc d
-    is a (1+d%3) × (1+d%2) grid of constant 8×8 Y blocks at
-    (d%251 + 17bx + 37by) mod 251 — encoded as a THREE-component SOF2
-    stream with the chroma sampling cycling 4:4:4 / 4:2:2 / 4:2:0 by
-    doc. Chroma carries deterministic nonzero DC+AC energy (its entropy
-    scans must advance the stream correctly) but, like the baseline
-    color path, only the full-resolution Y renders — so the SAME SQL
-    oracle as pl_jpeg_decode replays the pixels, proving the sequential
-    gray, progressive gray, and progressive color pipelines converge on
-    identical bytes."""
-    import numpy as np
-
-    samplings = (
-        ((1, 1), (1, 1), (1, 1)),
-        ((2, 1), (1, 1), (1, 1)),
-        ((2, 2), (1, 1), (1, 1)),
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                wb, hb, seed = 1 + i % 3, 1 + i % 2, i % 251
-                sampling = samplings[i % 3]
-                hmax = max(s[0] for s in sampling)
-                vmax = max(s[1] for s in sampling)
-                w, h = wb * 8, hb * 8
-                mcx = (w + 8 * hmax - 1) // (8 * hmax)
-                mcy = (h + 8 * vmax - 1) // (8 * vmax)
-                comp_blocks = []
-                for c, (hs, vs) in enumerate(sampling):
-                    wbi, hbi = mcx * hs, mcy * vs
-                    blocks = []
-                    for row in range(hbi):
-                        for col in range(wbi):
-                            blk = np.zeros(64, np.int64)
-                            if c == 0 and col < wb and row < hb:
-                                blk[0] = 8 * (
-                                    int((seed + 17 * col + 37 * row) % 251) - 128
-                                )
-                            elif c > 0:
-                                blk[0] = 8 * ((seed * 7 + c * 31 + col + row)
-                                              % 200 - 100)
-                                blk[5] = (seed + 3 * c + col) % 17 - 8
-                            blocks.append(blk)
-                    comp_blocks.append(blocks)
-                payloads.append(
-                    encode_jpeg_progressive_color(w, h, comp_blocks, sampling)
-                )
             yield pd.DataFrame(
                 {"media_id": ids, "kind": "image", "payload": payloads}
             )

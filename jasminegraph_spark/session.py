@@ -90,8 +90,8 @@ def spread_scan(df, key=None, by=None):
     return df.repartition(par, by) if by is not None else df.repartition(par)
 
 
-# Tables whose downstream work is row-wise heavy (text pipelines, codec
-# fixtures, vector math) — the scan spread pays for itself there. Cheap
+# Tables whose downstream work is row-wise heavy (text pipelines, vector
+# math) — the scan spread pays for itself there. Cheap
 # relational scans skip it: the exchange costs more than the single-core
 # map work it parallelizes (measured r11: rel_events_hourly 0.25→0.55 s
 # under a blanket spread vs pl_bigram_logprob 5.9→1.7 s with it).

@@ -544,6 +544,21 @@ class StreamingTriangleCounter:
             merged = batch_nbrs
         prev = self._nbrs
         self._nbrs = merged.localCheckpoint(eager=False)
+        if prev is not None:
+            # a pair already in state (replayed, or reversed: b→a after
+            # a→b) is not a new edge; its triangles were counted when it
+            # first arrived. Anti-join against the previous arrays, first
+            # restricted to the batch's `a` endpoints like the delta's
+            # own lookups, so under the broadcast hint the state enters no
+            # exchange; pinned like new_c, so the delta's two references
+            # compute it once.
+            keys = new_c.select(F.col("a").alias("u"))
+            seen = prev.join(F.broadcast(keys) if bcast_new else keys, "u", "semi")
+            new_c = new_c.join(
+                seen,
+                (F.col("a") == F.col("u")) & F.array_contains("zs", F.col("b")),
+                "left_anti",
+            ).localCheckpoint(eager=False)
         # Delta first, then the durable append, in sequence: a failed
         # delta leaves the state directory untouched, so a restart
         # resumes cleanly. A crash after the append but before

@@ -48,7 +48,6 @@ SHOWCASE = [
     # round-7 scale paths
     ("pl_bigram_logprob", "per-doc pre-aggregation below the zipfian count joins"),
     ("an_sage_sampled", "per-layer fan-out cap: v-partitioned window, no global sort"),
-    ("pl_jpeg_decode", "one Arrow mapInPandas stage: encode+entropy-decode+IDCT"),
 ]
 
 

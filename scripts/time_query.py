@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Time individual declared queries with the bench's exact methodology
-(noop sink, clearCache between runs, warmup run, min + median of N).
+"""Time individual declared queries: noop sink, clearCache between runs,
+warmup run, min + median of N.
 
 Usage: python scripts/time_query.py [-n RUNS] query [query ...]
-Honors SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like bench.py.
+Honors SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations

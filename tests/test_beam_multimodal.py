@@ -1,9 +1,8 @@
-"""Semantic beam search + multimodal Pandas-UDF plumbing."""
+"""Multimodal Pandas-UDF plumbing and the lossless media decoders."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from jasminegraph_spark.analytics.beam_search import semantic_beam_search
 from jasminegraph_spark.pipeline.multimodal import (
     MEDIA_SCHEMA,
     decode_media,
@@ -138,35 +137,6 @@ def test_decode_compressed_bmp_still_gated(spark):
     media = spark.createDataFrame([(4, "image", payload, {})], MEDIA_SCHEMA)
     with pytest.raises(Exception, match="not supported|NotImplemented"):
         decode_media(media).collect()
-
-
-@pytest.mark.sweep  # r14: multi-minute quality/property row -> sweep tier (see pyproject)
-def test_beam_search_on_grid(spark):
-    # path graph 0-1-2-...-9; embeddings = 2D points on a line so that
-    # cosine to the query [1, 0.1] ranks nodes deterministically
-    edges = spark.createDataFrame([(i, i + 1) for i in range(9)], ["src", "dst"])
-    emb = spark.createDataFrame(
-        [(i, [1.0, float(i)]) for i in range(10)],
-        "vec_id long, embedding array<float>",
-    )
-    beam = semantic_beam_search(
-        edges, emb, query_vec=[1.0, 0.1], beam_width=2, hops=3, undirected=True
-    )
-    rows = beam.collect()
-    # seeds: node 0 ([1,0]) most aligned with [1,0.1]; runner-up node 1
-    seeds = sorted(r["node"] for r in rows if r["hop"] == 0)
-    assert seeds == [0, 1]
-    # every hop-h node's path has h+1 entries and walks real edges
-    for r in rows:
-        assert len(r["path"]) == r["hop"] + 1
-        for a, b in zip(r["path"], r["path"][1:]):
-            assert abs(a - b) == 1
-    # frontier never revisits: all nodes distinct across the beam
-    nodes = [r["node"] for r in rows]
-    assert len(nodes) == len(set(nodes))
-
-
-# --- PNG (library-free zlib + scanline filters) ---
 
 
 def test_png_roundtrip_all_filters(spark):
@@ -310,174 +280,6 @@ def test_png_palette_and_alpha_color_types():
 
     with _pt.raises(ValueError, match="PLTE"):
         _decode_png(png(2, 1, 3, bytes([0, 0, 0])))
-
-
-def test_jpeg_block_constant_roundtrip_exact():
-    """r7: a block-constant image is DC-only in the DCT domain, so the
-    lossy baseline-JPEG round-trip is bit-exact with an all-ones quant
-    table — the property the pl_jpeg_decode oracle relies on."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import _decode_jpeg, encode_jpeg_gray
-
-    px = np.zeros((16, 24), np.uint8)
-    for by in range(2):
-        for bx in range(3):
-            px[by * 8 : (by + 1) * 8, bx * 8 : (bx + 1) * 8] = (7 + 17 * bx + 37 * by) % 251
-    w, h, body = _decode_jpeg(encode_jpeg_gray(24, 16, px.tobytes()))
-    assert (w, h) == (24, 16)
-    assert np.array_equal(np.frombuffer(body, np.uint8).reshape(h, w), px)
-
-
-def test_jpeg_arbitrary_coeffs_vs_reference_idct():
-    """The AC entropy path (runs, ZRL, EOB), a non-trivial quant table,
-    and restart-marker resync, verified against an IDCT computed
-    independently in the test (not via the decoder's own matrix path)."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _ZZ_COLS,
-        _ZZ_ROWS,
-        _decode_jpeg,
-        encode_jpeg_blocks,
-    )
-
-    rng = np.random.RandomState(42)
-    blocks = []
-    for _ in range(6):
-        blk = np.zeros(64, np.int64)
-        idx = rng.choice(64, 12, replace=False)
-        blk[idx] = rng.randint(-1000, 1000, 12)
-        blocks.append(blk)
-    quant = [int(q) for q in rng.randint(1, 30, 64)]
-    w, h, body = _decode_jpeg(
-        encode_jpeg_blocks(24, 16, blocks, quant=quant, restart_interval=2)
-    )
-    got = np.frombuffer(body, np.uint8).reshape(h, w)
-    # reference IDCT straight from the T.81 Annex A formula
-    x = np.arange(8)
-    u = np.arange(8)
-    cu = np.where(u == 0, 1 / np.sqrt(2.0), 1.0)
-    cosm = np.cos((2 * x[:, None] + 1) * u[None, :] * np.pi / 16)
-    zr, zc = np.array(_ZZ_ROWS), np.array(_ZZ_COLS)
-    ref = np.zeros((16, 24))
-    for m, blk in enumerate(blocks):
-        s = np.zeros((8, 8))
-        s[zr, zc] = blk * np.asarray(quant)
-        f = np.zeros((8, 8))
-        for yy in range(8):
-            for xx in range(8):
-                f[yy, xx] = 0.25 * np.sum(
-                    cu[:, None] * cu[None, :] * s
-                    * cosm[yy][:, None] * cosm[xx][None, :]
-                )
-        by, bx = divmod(m, 3)
-        ref[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = np.clip(
-            np.round(f + 128), 0, 255
-        )
-    assert np.array_equal(got, ref.astype(np.uint8))
-
-
-def test_jpeg_zrl_long_zero_run():
-    """A coefficient beyond a >16-zero gap forces the ZRL (0xF0) symbol
-    on encode and the skip-16 path on decode."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _ZZ_COLS,
-        _ZZ_ROWS,
-        _dct_matrix,
-        _decode_jpeg,
-        encode_jpeg_blocks,
-    )
-
-    blk = np.zeros(64, np.int64)
-    blk[0], blk[40] = 5, -3
-    w, h, body = _decode_jpeg(encode_jpeg_blocks(8, 8, [blk]))
-    a = _dct_matrix()
-    s = np.zeros((8, 8))
-    s[np.array(_ZZ_ROWS), np.array(_ZZ_COLS)] = blk
-    ref = np.clip(np.round(a.T @ s @ a + 128), 0, 255).astype(np.uint8)
-    assert np.array_equal(np.frombuffer(body, np.uint8).reshape(8, 8), ref)
-
-
-def test_jpeg_non_multiple_of_8_crops():
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import _decode_jpeg, encode_jpeg_gray
-
-    px = np.full((10, 13), 99, np.uint8)
-    w, h, body = _decode_jpeg(encode_jpeg_gray(13, 10, px.tobytes()))
-    assert (w, h) == (13, 10)
-    assert np.array_equal(np.frombuffer(body, np.uint8).reshape(10, 13), px)
-
-
-def test_jpeg_unsupported_variants_gated():
-    """Progressive SOF, color, 16-bit quant: each raises
-    NotImplementedError naming the offending field — same contract as
-    the other decoders."""
-    import numpy as np
-
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import _decode_jpeg, encode_jpeg_gray
-
-    base = encode_jpeg_gray(8, 8, bytes(64))
-    # r7: SOF2 (progressive) now decodes — arithmetic-coded SOF10 is the
-    # representative still-gated frame type
-    arith = bytearray(base)
-    arith[arith.find(b"\xff\xc0") + 1] = 0xCA
-    with _pt.raises(NotImplementedError, match="SOF marker 0xca"):
-        _decode_jpeg(bytes(arith))
-    deep = bytearray(base)
-    i = deep.find(b"\xff\xdb")
-    deep[i + 4] = 0x10  # Pq=1 → 16-bit quant table
-    with _pt.raises(NotImplementedError, match="16-bit"):
-        _decode_jpeg(bytes(deep))
-    color = bytearray(base)
-    j = color.find(b"\xff\xc0")
-    color[j + 9] = 2  # ncomp (2-component is never valid baseline JFIF)
-    with _pt.raises(NotImplementedError, match="components=2"):
-        _decode_jpeg(bytes(color))
-    # r7: subsampling itself is supported (4:2:0/4:2:2), but a frame
-    # whose FIRST component is below full resolution cannot render luma
-    from jasminegraph_spark.pipeline.multimodal import encode_jpeg_blocks
-
-    import numpy as np
-
-    blocks = [np.zeros(64, np.int64) for _ in range(6)]
-    weird = encode_jpeg_blocks(
-        16, 16, blocks, ncomp=3, samplings=[(1, 1), (2, 2), (1, 1)]
-    )
-    with _pt.raises(NotImplementedError, match="first component is subsampled"):
-        _decode_jpeg(weird)
-    assert np.frombuffer(_decode_jpeg(base)[2], np.uint8).sum() == 0
-
-
-def test_synthesize_jpeg_decodes_distributed(spark):
-    """End-to-end through the Spark plumbing: executor-side encode →
-    Arrow mapInPandas decode; spot-check one doc's closed form."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import decode_media, synthesize_jpeg
-
-    docs = spark.range(0, 12).withColumnRenamed("id", "doc_id")
-    rows = {
-        r["media_id"]: r
-        for r in decode_media(synthesize_jpeg(docs)).collect()
-    }
-    assert len(rows) == 12
-    for d in (0, 5, 11):
-        wb, hb, seed = 1 + d % 3, 1 + d % 2, d % 251
-        expect = 64 * sum(
-            (seed + 17 * bx + 37 * by) % 251
-            for bx in range(wb)
-            for by in range(hb)
-        )
-        r = rows[d]
-        assert (r["width"], r["height"]) == (8 * wb, 8 * hb)
-        assert r["body_sum"] == expect
-    del np
 
 
 def test_flac_fixed_predictor_roundtrip():
@@ -753,2332 +555,6 @@ def test_synthesize_flac_decodes_distributed(spark):
         assert rows[d]["body_sum"] == expect
 
 
-def test_jpeg_color_444_decodes_luma():
-    """r7: 3-component 4:4:4 baseline JPEG — chroma blocks are entropy-
-    decoded (stream position, per-component DC predictors) but the
-    output is the Y channel; verified against an independent IDCT, with
-    restart markers resetting ALL three predictors."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _ZZ_COLS,
-        _ZZ_ROWS,
-        _dct_matrix,
-        _decode_jpeg,
-        encode_jpeg_blocks,
-    )
-
-    rng = np.random.RandomState(7)
-    mcus = 4  # 2×2 blocks → 16×16 image
-    blocks = []
-    y_blocks = []
-    for m in range(mcus):
-        for ci in range(3):
-            blk = np.zeros(64, np.int64)
-            idx = rng.choice(64, 6, replace=False)
-            blk[idx] = rng.randint(-300, 300, 6)
-            blocks.append(blk)
-            if ci == 0:
-                y_blocks.append(blk)
-    data = encode_jpeg_blocks(16, 16, blocks, ncomp=3, restart_interval=2)
-    w, h, body = _decode_jpeg(data)
-    assert (w, h) == (16, 16)
-    got = np.frombuffer(body, np.uint8).reshape(16, 16)
-    a = _dct_matrix()
-    zr, zc = np.array(_ZZ_ROWS), np.array(_ZZ_COLS)
-    ref = np.zeros((16, 16))
-    for m, blk in enumerate(y_blocks):
-        s = np.zeros((8, 8))
-        s[zr, zc] = blk
-        by, bx = divmod(m, 2)
-        ref[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = np.clip(
-            np.round(a.T @ s @ a + 128), 0, 255
-        )
-    assert np.array_equal(got, ref.astype(np.uint8))
-
-
-def test_jpeg_420_and_422_subsampled_decode():
-    """r7: 4:2:0 and 4:2:2 MCU interleave (T.81 A.2.3) — luma blocks
-    placed on the hmax×vmax grid, subsampled chroma entropy-decoded for
-    stream position, restart markers at MCU boundaries; verified
-    against an independent IDCT of the Y blocks."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _ZZ_COLS,
-        _ZZ_ROWS,
-        _dct_matrix,
-        _decode_jpeg,
-        encode_jpeg_blocks,
-    )
-
-    a = _dct_matrix()
-    zr, zc = np.array(_ZZ_ROWS), np.array(_ZZ_COLS)
-    rng = np.random.RandomState(3)
-
-    def rand_block():
-        blk = np.zeros(64, np.int64)
-        idx = rng.choice(64, 5, replace=False)
-        blk[idx] = rng.randint(-200, 200, 5)
-        return blk
-
-    def idct(blk):
-        s = np.zeros((8, 8))
-        s[zr, zc] = blk
-        return np.clip(np.round(a.T @ s @ a + 128), 0, 255)
-
-    # 4:2:0 — 16×16 image = 1 MCU: 4 Y + 1 Cb + 1 Cr
-    y = [rand_block() for _ in range(4)]
-    blocks = y + [rand_block(), rand_block()]
-    w, h, body = _decode_jpeg(
-        encode_jpeg_blocks(16, 16, blocks, ncomp=3, samplings=[(2, 2), (1, 1), (1, 1)])
-    )
-    got = np.frombuffer(body, np.uint8).reshape(16, 16)
-    ref = np.zeros((16, 16))
-    for i, blk in enumerate(y):  # raster order within the MCU
-        by, bx = divmod(i, 2)
-        ref[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = idct(blk)
-    assert np.array_equal(got, ref.astype(np.uint8))
-
-    # 4:2:2 — 32×8 image = 2 MCUs of (2 Y + 1 Cb + 1 Cr), restart between
-    y = [rand_block() for _ in range(4)]
-    blocks = [y[0], y[1], rand_block(), rand_block(),
-              y[2], y[3], rand_block(), rand_block()]
-    w, h, body = _decode_jpeg(
-        encode_jpeg_blocks(
-            32, 8, blocks, ncomp=3, samplings=[(2, 1), (1, 1), (1, 1)],
-            restart_interval=1,
-        )
-    )
-    got = np.frombuffer(body, np.uint8).reshape(8, 32)
-    ref = np.zeros((8, 32))
-    for i, blk in enumerate(y):
-        ref[:, i * 8 : i * 8 + 8] = idct(blk)
-    assert np.array_equal(got, ref.astype(np.uint8))
-
-
-def test_jpeg_progressive_grayscale_decodes():
-    """r7: PROGRESSIVE JPEG (SOF2) — spectral selection + successive
-    approximation. Random coefficient blocks encoded through the
-    progressive scan script (DC first/refine, AC bands with EOBRUN, AC
-    refinement with ZRL folding + buffered correction bits) must decode
-    to EXACTLY the pixels the sequential decoder produces from the same
-    blocks — the two pipelines share only the IDCT, so agreement pins
-    the whole Annex-G state machine."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_jpeg,
-        encode_jpeg_blocks,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.RandomState(17)
-    for trial in range(8):
-        nb = rng.randint(1, 9)
-        blocks = []
-        for _ in range(nb):
-            blk = np.zeros(64, np.int64)
-            idx = rng.choice(64, rng.randint(0, 30), replace=False)
-            blk[idx] = rng.randint(-900, 900, len(idx))
-            blocks.append(blk)
-        w = 8 * min(nb, 4)
-        h = 8 * ((nb + 3) // 4)
-        while len(blocks) < (w // 8) * (h // 8):
-            blocks.append(np.zeros(64, np.int64))
-        quant = [int(x) for x in rng.randint(1, 25, 64)]
-        a0 = int(rng.choice([1, 2, 3]))
-        prog = encode_jpeg_progressive(w, h, blocks, quant=quant, first_al=a0)
-        got = _decode_jpeg(prog)  # dispatches through the SOF2 branch
-        ref = _decode_jpeg(encode_jpeg_blocks(w, h, blocks, quant=quant))
-        assert got == ref, (trial, a0)
-
-
-def test_jpeg_progressive_color_decodes_luma():
-    """r10 progressive COLOR (closes the last common JPEG mode): a
-    three-component SOF2 stream — interleaved DC first scan (MCU order,
-    per-component predictors), interleaved DC refinements, per-component
-    AC band scans — across 4:4:4 / 4:2:2 / 4:2:0, odd block grids, and
-    nonzero chroma DC+AC energy, decodes to the exact block-constant
-    luma (the same convention as the baseline color path). Remaining
-    JPEG seams still raise: a 2-component frame and arithmetic SOF."""
-    import numpy as np
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_jpeg,
-        encode_jpeg_progressive,
-        encode_jpeg_progressive_color,
-    )
-
-    for seed in (0, 123, 250):
-        for wb, hb in ((1, 1), (3, 2), (2, 2)):
-            for sampling in (((1, 1), (1, 1), (1, 1)),
-                             ((2, 1), (1, 1), (1, 1)),
-                             ((2, 2), (1, 1), (1, 1))):
-                hmax = max(s[0] for s in sampling)
-                vmax = max(s[1] for s in sampling)
-                w, h = wb * 8, hb * 8
-                mcx = (w + 8 * hmax - 1) // (8 * hmax)
-                mcy = (h + 8 * vmax - 1) // (8 * vmax)
-                comp_blocks = []
-                for c, (hs, vs) in enumerate(sampling):
-                    blocks = []
-                    for row in range(mcy * vs):
-                        for col in range(mcx * hs):
-                            blk = np.zeros(64, np.int64)
-                            if c == 0 and col < wb and row < hb:
-                                blk[0] = 8 * (int((seed + 17 * col + 37 * row)
-                                                  % 251) - 128)
-                            elif c > 0:
-                                blk[0] = 8 * ((seed * 7 + c * 31 + col + row)
-                                              % 200 - 100)
-                                blk[5] = (seed + 3 * c + col) % 17 - 8
-                            blocks.append(blk)
-                    comp_blocks.append(blocks)
-                p = encode_jpeg_progressive_color(w, h, comp_blocks, sampling)
-                W, H, body = _decode_jpeg(p)
-                arr = np.frombuffer(body, np.uint8).reshape(H, W)
-                want = np.zeros((h, w), np.uint8)
-                for row in range(hb):
-                    for col in range(wb):
-                        want[row * 8: row * 8 + 8, col * 8: col * 8 + 8] = (
-                            (seed + 17 * col + 37 * row) % 251
-                        )
-                assert (W, H) == (w, h), (seed, wb, hb, sampling)
-                assert np.array_equal(arr, want), (seed, wb, hb, sampling)
-
-    # remaining seams: component counts other than 1/3 still gate
-    prog = bytearray(encode_jpeg_progressive(8, 8, [[0] * 64]))
-    j = prog.find(b"\xff\xc2")
-    prog[j + 9] = 2  # claim 2 components
-    with _pt.raises(NotImplementedError, match="1- or 3-component"):
-        _decode_jpeg(bytes(prog))
-
-
-# ---------------------------------------------------------------------------
-# MP3 (r8): structural silence round-trips + the injected-table contract
-# test proving the full nonzero DSP path against independent spec math.
-# ---------------------------------------------------------------------------
-
-
-def _mp3_test_tables():
-    """Synthetic table set for the register_mp3_tables seam: equal-length
-    prefix codes over the pair/quad alphabets the test spectra use, a
-    simple valid sfb layout, and an arbitrary deterministic synthesis
-    window. NOT the spec's tables — the point is proving the decoder's
-    machinery is table-agnostic; real audio needs the real table data."""
-    import math
-
-    codes = {(x, y): format(x * 16 + y, "08b")
-             for x in range(16) for y in range(16)}
-    quads = [(v, w, x, y) for v in (0, 1) for w in (0, 1)
-             for x in (0, 1) for y in (0, 1)]
-    c1 = {q: format(i, "04b") for i, q in enumerate(quads)}
-    sfb_long = [0, 4, 8, 12, 16, 20, 24, 30, 36, 44, 54, 66, 80, 96, 114,
-                136, 162, 194, 232, 278, 332, 394, 576]
-    sfb_short = [0, 4, 8, 12, 16, 22, 30, 40, 52, 66, 84, 106, 136, 192]
-    synth = [math.cos(math.pi * (i - 256) / 512.0) / 32.0 for i in range(512)]
-    return {
-        "huffman": {1: {"codes": codes, "linbits": 2}},
-        "count1": {0: c1},
-        "sfb_long": {48000: sfb_long, 44100: sfb_long, 32000: sfb_long},
-        "sfb_short": {48000: sfb_short, 44100: sfb_short, 32000: sfb_short},
-        "synth_window": synth,
-    }
-
-
-def test_mp3_silence_roundtrip_all_structures():
-    """Silence streams with every structural variation decode to exact
-    zeros of the right length: all sample rates, bitrates, padding, CRC
-    presence, all scalefac_compress slen combos, all scfsi masks, and a
-    real bit reservoir (frame 2's main data begins inside frame 1)."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        MP3_BITRATES,
-        _decode_mp3,
-        _mp3_frame_len,
-        _mp3_read_side_info,
-        encode_mp3,
-    )
-
-    for d in range(48):
-        nf = 1 + d % 3
-        b = encode_mp3(nf, fs_index=d % 3, bitrate_index=1 + d % 14,
-                       seed=d % 251, scfsi=d % 16,
-                       protection=bool(d % 5 == 0), padding=d % 2)
-        n, ch, body = _decode_mp3(b)
-        assert (n, ch) == (1152 * nf, 1)
-        assert len(body) == n and set(body) == {128}, d
-    b = encode_mp3(3, fs_index=1, bitrate_index=9, seed=7, reservoir_slack=5)
-    flen = _mp3_frame_len(MP3_BITRATES[9], 48000, 0)
-    si2 = _mp3_read_side_info(b[flen + 4: flen + 4 + 17])[0]
-    assert si2.main_data_begin == 5  # the reservoir is real, on the wire
-    n, _, body = _decode_mp3(b)
-    assert n == 3456 and set(body) == {128}
-
-
-def test_mp3_unsupported_fields_gated():
-    """Every seam raises naming the missing piece: reserved version
-    bits, Layer II, invalid bitrate index, and — without registered
-    tables — nonzero spectral data. (Stereo/joint/dual decode landed
-    r9; LSF, Layer I, and free format landed r10 — each tested in its
-    own test.)"""
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        MP3_TABLES,
-        _decode_mp3,
-        encode_mp3,
-    )
-
-    assert MP3_TABLES is None  # this environment ships no table data
-    base = bytearray(encode_mp3(1, fs_index=1, bitrate_index=9))
-    b = bytearray(base); b[1] = (b[1] & ~0x18) | 0x08  # version bits 01
-    with _pt.raises(ValueError, match="reserved MPEG version"):
-        _decode_mp3(bytes(b))
-    b = bytearray(base); b[1] = (b[1] & ~0x06) | 0x04  # layer II
-    with _pt.raises(NotImplementedError, match="Layer II"):
-        _decode_mp3(bytes(b))
-    b = bytearray(base); b[2] |= 0xF0  # bitrate index 15 is invalid
-    with _pt.raises(ValueError, match="bitrate index 15"):
-        _decode_mp3(bytes(b))
-    # nonzero spectra: flip big_values of granule 0 in the side info
-    b = bytearray(base)
-    # side info starts at byte 4; big_values is bits 18..26 of side info
-    b[4 + 2] |= 0x08  # a bit inside big_values
-    with _pt.raises(NotImplementedError, match="Table B.7"):
-        _decode_mp3(bytes(b))
-
-
-def test_mp3_huffman_spectrum_roundtrip_injected_tables():
-    """Contract test, part 1: with a registered synthetic table set the
-    Huffman writer/reader round-trip values exactly — big_values pairs
-    with linbits escapes and signs, count1 quads, rzero tail."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        _FlacBitReader,
-        _FlacBitWriter,
-        _mp3_huffman_decode,
-        _mp3_write_spectrum,
-        register_mp3_tables,
-    )
-
-    register_mp3_tables(_mp3_test_tables())
-    try:
-        vals = [0] * 576
-        vals[0], vals[1], vals[2], vals[5] = 2, -1, 16, -17  # escapes + signs
-        vals[8], vals[9], vals[11] = -1, 1, 1               # count1 tail
-        w = _FlacBitWriter()
-        bits, bv, r0, r1 = _mp3_write_spectrum(w, vals, 1, 48000)
-        w.align()
-
-        class SI:  # minimal side-info stub for the decode call
-            big_values = [bv]; table_select = [[1, 1, 1]]
-            region0 = [r0]; region1 = [r1]
-            window_switching = [0]; block_type = [0]; count1table = [0]
-
-        br = _FlacBitReader(bytes(w.out))
-        got, coded_end = _mp3_huffman_decode(br, bits, SI(), 0, 48000)
-        assert got == vals
-        assert coded_end == 14  # 6 bv lines + two count1 quads, pre-rzero
-    finally:
-        register_mp3_tables(None)
-
-
-def test_codec_descope_gates_r11():
-    """r11 (VERDICT r10 #1 — the formal codec-seam cap): every variant
-    DESCOPED in SCALE.md §Codec descope must raise its named
-    NotImplementedError. Covered here: JPEG arithmetic sequential
-    (SOF9), the differential/hierarchical SOF family (SOF5), 12-bit
-    sample precision, and LSF intensity stereo combined with mixed
-    blocks; Layer II, Layer I intensity, MPEG-2 Layer I, SOF10, and
-    16-bit quant tables have standing gates in their own tests. The
-    production path for all of these is the documented native-decoder
-    seam (_decode_one's import-try swap), not more pure-Python LoC."""
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_jpeg,
-        _mp3_read_scalefactors_lsf,
-        encode_jpeg_gray,
-    )
-
-    base = encode_jpeg_gray(8, 8, bytes(64))
-    sof = base.find(b"\xff\xc0")
-    for marker, label in ((0xC9, "arithmetic sequential SOF9"),
-                          (0xC5, "differential/hierarchical SOF5")):
-        b = bytearray(base)
-        b[sof + 1] = marker
-        with _pt.raises(NotImplementedError,
-                        match=f"SOF marker 0x{marker:02x}.*not supported"):
-            _decode_jpeg(bytes(b))
-
-    deep = bytearray(base)
-    deep[sof + 4] = 12  # 12-bit sample precision
-    with _pt.raises(NotImplementedError, match="only 8-bit"):
-        _decode_jpeg(bytes(deep))
-
-    class SI:  # LSF granule: short blocks + mixed flag, intensity channel
-        block_type = [2]
-        mixed_block = [1]
-        scalefac_compress = [0]
-        preflag = [0]
-
-    with _pt.raises(NotImplementedError,
-                    match="LSF intensity stereo with MIXED blocks"):
-        _mp3_read_scalefactors_lsf(None, SI(), 0, intensity=True)
-
-
-def test_count1_catch_scoped_to_reader_end_of_data():
-    """r11 (ADVICE): the count1 quad loop's discard-and-rewind catch is
-    scoped to the bit reader's own _EndOfData signal. A plain IndexError
-    raised by anything else inside the loop (a table-shape bug) must
-    propagate instead of being decoded as trailing silence."""
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _EndOfData,
-        _FlacBitReader,
-        _mp3_huffman_decode,
-        register_mp3_tables,
-    )
-
-    assert issubclass(_EndOfData, IndexError)  # pre-r11 catchers keep working
-    for fn in (lambda: _FlacBitReader(b"").read(1),
-               lambda: _FlacBitReader(b"").read_unary()):
-        with _pt.raises(_EndOfData):
-            fn()
-
-    register_mp3_tables(_mp3_test_tables())
-    try:
-        class SI:  # bv=0: the first read comes from the count1 loop
-            big_values = [0]; table_select = [[1, 1, 1]]
-            region0 = [0]; region1 = [0]
-            window_switching = [0]; block_type = [0]; count1table = [0]
-
-        class BuggyReader:
-            def read(self, n):
-                raise IndexError("table-shape bug, not end of data")
-
-        with _pt.raises(IndexError, match="table-shape bug"):
-            _mp3_huffman_decode(BuggyReader(), 8, SI(), 0, 48000)
-
-        # the reader's physical end still takes the discard path
-        spec, end = _mp3_huffman_decode(_FlacBitReader(b""), 8, SI(), 0,
-                                        48000)
-        assert spec == [0] * 576 and end == 0
-    finally:
-        register_mp3_tables(None)
-
-
-def _mp3_handmade_frame(gran_bits: list[str], part23: list[int],
-                        big_values: list[int] | None = None) -> bytes:
-    """One mono 128 kbps / 48 kHz frame with hand-set per-granule
-    part2_3_length and raw main-data bit strings (scalefac_compress=0 →
-    zero scalefactor bits, so part2_3_length is pure Huffman budget)."""
-    from jasminegraph_spark.pipeline.multimodal import _FlacBitWriter
-
-    w = _FlacBitWriter()
-    w.write(0, 9)   # main_data_begin
-    w.write(0, 5)   # private
-    w.write(0, 4)   # scfsi
-    big_values = [0, 1] if big_values is None else big_values
-    for gr in range(2):
-        w.write(part23[gr], 12)
-        w.write(big_values[gr], 9)
-        w.write(210, 8)  # global_gain → exponent 0
-        w.write(0, 4)    # scalefac_compress 0 → slen (0,0)
-        w.write(0, 1)    # no window switching
-        for _ in range(3):
-            w.write(1, 5)  # table_select = 1 (the injected test table)
-        w.write(0, 4)    # region0
-        w.write(0, 3)    # region1
-        w.write(0, 3)    # preflag, scalefac_scale, count1table
-    side = bytes(w.out)
-    assert len(side) == 17
-    m = _FlacBitWriter()
-    for bits in gran_bits:
-        for ch in bits:
-            m.write(int(ch), 1)
-    m.align()
-    flen = 384  # 144000*128/48000
-    main = bytes(m.out).ljust(flen - 4 - 17, b"\x00")
-    return bytes([0xFF, 0xFB, 0x94, 0xC0]) + side + main
-
-
-def test_mp3_count1_overrun_rewinds_to_granule_boundary():
-    """ADVICE r8 (medium): a final count1 quad may cross part2_3_length;
-    the decoder must discard its values AND reposition the reservoir
-    reader to the granule boundary, or every later granule desyncs.
-    Granule 0 here has a 6-bit budget but its quad (1,1,1,1) consumes 8
-    bits (4 code + 4 signs), overlapping granule 1's first two bits;
-    granule 1 holds the pair (2,3). A clean frame with the identical
-    granule-1 payload at its natural offset must decode to the SAME pcm."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        register_mp3_tables,
-    )
-
-    register_mp3_tables(_mp3_test_tables())
-    try:
-        g1 = "00100011" + "0" + "0"  # pair (2,3), both positive: 10 bits
-        overrun = _mp3_handmade_frame(["1111" + "11", g1], [6, 10])
-        clean = _mp3_handmade_frame([g1], [0, 10])
-        n1, ch1, pcm_overrun = _decode_mp3(overrun)
-        n2, ch2, pcm_clean = _decode_mp3(clean)
-        assert (n1, ch1) == (1152, 1) and (n2, ch2) == (1152, 1)
-        assert set(pcm_clean) != {128}  # granule 1 is audibly nonzero
-        assert pcm_overrun == pcm_clean
-    finally:
-        register_mp3_tables(None)
-
-
-def test_mp3_count1_overrun_past_physical_end_discards_quad():
-    """ADVICE r9 (low): when the overrunning final quad's bits extend
-    past the PHYSICAL end of the frame's main data (exact-fit last
-    granule, zero ancillary bytes), the decoder must treat it like the
-    budget overrun — discard the quad — instead of dying on a bare
-    IndexError. Granule 1's 8-bit budget holds one full quad
-    (1,0,0,1 → 6 bits) + 2 bits of a phantom next quad whose codeword
-    would continue past the last physical byte; the stream is TRUNCATED
-    to exactly that byte. A clean padded frame with budget 6 (just the
-    full quad) must decode to the SAME pcm."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        register_mp3_tables,
-    )
-
-    register_mp3_tables(_mp3_test_tables())
-    try:
-        full_quad = "1001" + "0" + "1"  # (1,0,0,1), signs +1 / −1
-        clean = _mp3_handmade_frame([full_quad], [0, 6], big_values=[0, 0])
-        # same bits + 2 phantom-quad bits, then hard-truncate the frame
-        # so the main data is exactly ONE byte: the phantom codeword's
-        # remaining bits don't physically exist
-        padded = _mp3_handmade_frame([full_quad + "10"], [0, 8],
-                                     big_values=[0, 0])
-        exact_fit = padded[: 4 + 17 + 1]
-        n1, ch1, pcm_trunc = _decode_mp3(exact_fit)
-        n2, ch2, pcm_clean = _decode_mp3(clean)
-        assert (n1, ch1) == (1152, 1) and (n2, ch2) == (1152, 1)
-        assert set(pcm_clean) != {128}  # the kept quad is audibly nonzero
-        assert pcm_trunc == pcm_clean
-    finally:
-        register_mp3_tables(None)
-
-
-def test_mp3_malformed_guards_raise_value_errors():
-    """ADVICE r8 (low): corrupt frames fail with diagnosable ValueErrors
-    — big_values beyond the 288-pair spec cap, a big_values region that
-    exhausts part2_3_length, and scfsi pointing at a short granule 0."""
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _FlacBitReader,
-        _FlacBitWriter,
-        _mp3_read_scalefactors,
-        _mp3_read_side_info,
-        register_mp3_tables,
-    )
-
-    # big_values = 300 pairs > 288 cap
-    w = _FlacBitWriter()
-    w.write(0, 9); w.write(0, 5); w.write(0, 4)
-    w.write(0, 12); w.write(300, 9)
-    w.write(0, 136 - 9 - 5 - 4 - 12 - 9)
-    with _pt.raises(ValueError, match="big_values 300"):
-        _mp3_read_side_info(bytes(w.out))
-
-    # big_values region with a zero bit budget
-    register_mp3_tables(_mp3_test_tables())
-    try:
-        frame = _mp3_handmade_frame(["00100011" + "00"], [0, 0])
-        # granule 1 claims big_values=1 but part2_3_length=0
-        with _pt.raises(ValueError, match="big_values region exhausted"):
-            from jasminegraph_spark.pipeline.multimodal import _decode_mp3
-
-            _decode_mp3(frame)
-    finally:
-        register_mp3_tables(None)
-
-    # scfsi set while granule 0 was short: prev long scalefactors absent
-    class SI:
-        scalefac_compress = [5, 5]
-        block_type = [2, 0]
-        mixed_block = [0, 0]
-        scfsi = [1, 0, 0, 0]
-
-    br = _FlacBitReader(b"\x00" * 8)
-    with _pt.raises(ValueError, match="granule 0 used short blocks"):
-        _mp3_read_scalefactors(br, SI(), 1, None)
-
-
-def test_mp3_nonzero_dsp_matches_independent_spec_math():
-    """Contract test, part 2: encode nonzero spectra with the injected
-    tables, decode through the FULL pipeline (requantize → alias →
-    IMDCT → overlap-add → frequency inversion → polyphase synthesis),
-    and compare the folded PCM against an INDEPENDENT numpy
-    implementation of the same ISO 11172-3 formulas written here from
-    the spec (not calling the module's DSP helpers). Proves every
-    numeric stage modulo the injected table data — which is exactly the
-    documented seam."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        MP3_BITRATES,
-        _MP3_CI,
-        _MP3_SLEN,
-        _decode_mp3,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    register_mp3_tables(tables)
-    try:
-        def spectra(f, gr):
-            vals = [0] * 576
-            rng = np.random.RandomState(97 + f * 2 + gr)
-            for i in rng.choice(40, size=12, replace=False):
-                vals[int(i)] = int(rng.randint(-17, 18))
-            for i in range(40, 52):
-                vals[i] = int(rng.randint(-1, 2))
-            return vals
-
-        # seed chosen so the encoder's global_gain formula lands near 210
-        # (unity 2^((gg-210)/4)) — gg = 190/219/203/232 over the four
-        # (frame, granule) pairs, giving audible-scale PCM that actually
-        # exercises the int16 fold
-        seed, n_frames = 210, 2
-        payload = encode_mp3(n_frames, fs_index=1, bitrate_index=14,
-                             seed=seed, spectra=spectra, table_id=1)
-        n, ch, got = _decode_mp3(payload)
-        assert (n, ch) == (1152 * n_frames, 1)
-
-        # ---- independent reference (spec formulas, numpy) ----
-        sfb = tables["sfb_long"][48000]
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        imdct = np.array([[math.cos(math.pi / 72 * (2 * n_ + 1 + 18) * (2 * k + 1))
-                           for k in range(18)] for n_ in range(36)])
-        win = np.array([math.sin(math.pi / 36 * (n_ + 0.5)) for n_ in range(36)])
-        v_fifo = np.zeros(1024)
-        overlap = np.zeros((32, 18))
-        pcm = []
-        for f in range(n_frames):
-            for gr in range(2):
-                vals = np.array(spectra(f, gr), dtype=float)
-                compress = (seed + f * 2 + gr) % 16
-                s1, s2 = _MP3_SLEN[compress]
-                sf = [(j * 5 + seed + gr) % (1 << (s1 if j < 11 else s2))
-                      if (s1 if j < 11 else s2) else 0 for j in range(21)]
-                gg = (seed * 7 + f * 13 + gr * 29) % 256
-                mult = 0.5 * (((seed + gr) % 2) + 1)
-                xr = np.sign(vals) * np.abs(vals) ** (4.0 / 3.0)
-                xr *= 2.0 ** (0.25 * (gg - 210))
-                for band in range(21):
-                    xr[sfb[band]:sfb[band + 1]] *= 2.0 ** (-mult * sf[band])
-                for b in range(1, 32):
-                    for i, ci in enumerate(_MP3_CI):
-                        cs = 1 / math.sqrt(1 + ci * ci)
-                        ca = ci / math.sqrt(1 + ci * ci)
-                        lo, hi = 18 * b - 1 - i, 18 * b + i
-                        xl, xu = xr[lo], xr[hi]
-                        xr[lo] = xl * cs - xu * ca
-                        xr[hi] = xu * cs + xl * ca
-                slot = np.zeros((32, 18))
-                for sb in range(32):
-                    x36 = win * (imdct @ xr[18 * sb: 18 * sb + 18])
-                    slot[sb] = x36[:18] + overlap[sb]
-                    overlap[sb] = x36[18:]
-                for sb in range(1, 32, 2):
-                    slot[sb, 1::2] *= -1.0
-                for t in range(18):
-                    v_fifo = np.concatenate([N @ slot[:, t], v_fifo[:960]])
-                    u = np.zeros(512)
-                    for i in range(8):
-                        u[64 * i: 64 * i + 32] = v_fifo[128 * i: 128 * i + 32]
-                        u[64 * i + 32: 64 * i + 64] = v_fifo[128 * i + 96: 128 * i + 128]
-                    wnd = u * D
-                    pcm.extend(wnd.reshape(16, 32).sum(axis=0))
-        ints = np.clip(np.rint(np.asarray(pcm) * 32768.0), -32768, 32767).astype(np.int32)
-        want = ((ints >> 8) + 128).astype(np.uint8).tobytes()
-        diff = np.abs(np.frombuffer(got, np.int16 if False else np.uint8).astype(int)
-                      - np.frombuffer(want, np.uint8).astype(int))
-        assert int(diff.max()) <= 1, int(diff.max())  # float-assoc rounding only
-        assert np.count_nonzero(np.frombuffer(got, np.uint8) != 128) > 200
-    finally:
-        register_mp3_tables(None)
-
-
-def test_mp3_stereo_silence_all_modes_and_channel_separation():
-    """r9 stereo: silence round-trips with 32-byte side info across
-    stereo/joint-MS/dual/joint-MS+intensity modes (incl. reservoir and
-    CRC frames), and with nonzero LEFT + silent RIGHT (mode 0) the
-    interleaved output keeps the right channel at exact 128s — per-
-    channel overlap/polyphase state never leaks across channels."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    for mode, ext in [(0, 0), (1, 2), (2, 0), (1, 3)]:
-        for d in range(6):
-            nf = 1 + d % 3
-            b = encode_mp3(nf, fs_index=d % 3, bitrate_index=5 + d % 9,
-                           seed=d * 31 % 251, scfsi=d % 16,
-                           protection=(d % 5 == 0), padding=d % 2,
-                           mode=mode, mode_ext=ext,
-                           reservoir_slack=4 if d % 3 == 0 else 0)
-            n, ch, body = _decode_mp3(b)
-            assert (n, ch) == (1152 * nf, 2), (mode, ext, d)
-            assert len(body) == 2 * n and set(body) == {128}, (mode, ext, d)
-
-    register_mp3_tables(_mp3_test_tables())
-    try:
-        def spectra(f, gr, ch):
-            if ch == 1:
-                return [0] * 576
-            vals = [0] * 576
-            rng = np.random.RandomState(11 + f * 2 + gr)
-            for i in rng.choice(40, size=10, replace=False):
-                vals[int(i)] = int(rng.randint(-17, 18))
-            return vals
-
-        payload = encode_mp3(2, fs_index=1, bitrate_index=14, seed=210,
-                             spectra=spectra, table_id=1, mode=0)
-        n, ch, body = _decode_mp3(payload)
-        assert (n, ch) == (2304, 2)
-        arr = np.frombuffer(body, np.uint8)
-        left, right = arr[0::2], arr[1::2]
-        assert np.count_nonzero(left != 128) > 200  # audible left
-        assert set(right.tolist()) == {128}  # right stays digital silence
-    finally:
-        register_mp3_tables(None)
-
-
-def test_mp3_stereo_ms_dsp_matches_independent_spec_math():
-    """r9 stereo contract test: joint-stereo MS frames with NONZERO
-    spectra in both channels, decoded through the full pipeline, vs an
-    INDEPENDENT numpy implementation (per-channel requantize with the
-    encoder's vkey=gr·2+ch variation formulas, L=(M+S)/√2 R=(M−S)/√2,
-    per-channel alias/IMDCT/overlap/synthesis, interleave)."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _MP3_CI,
-        _MP3_SLEN,
-        _decode_mp3,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    register_mp3_tables(tables)
-    try:
-        def spectra(f, gr, ch):
-            vals = [0] * 576
-            rng = np.random.RandomState(300 + f * 4 + gr * 2 + ch)
-            for i in rng.choice(40, size=10, replace=False):
-                vals[int(i)] = int(rng.randint(-17, 18))
-            for i in range(40, 48):
-                vals[i] = int(rng.randint(-1, 2))
-            return vals
-
-        seed, n_frames = 210, 2
-        payload = encode_mp3(n_frames, fs_index=1, bitrate_index=14,
-                             seed=seed, spectra=spectra, table_id=1,
-                             mode=1, mode_ext=2)  # joint stereo, MS only
-        n, ch, got = _decode_mp3(payload)
-        assert (n, ch) == (1152 * n_frames, 2)
-
-        # ---- independent reference ----
-        sfb = tables["sfb_long"][48000]
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        imdct = np.array([[math.cos(math.pi / 72 * (2 * n_ + 1 + 18) * (2 * k + 1))
-                           for k in range(18)] for n_ in range(36)])
-        win = np.array([math.sin(math.pi / 36 * (n_ + 0.5)) for n_ in range(36)])
-
-        def requant(f, gr, c):
-            vkey = gr * 2 + c
-            vals = np.array(spectra(f, gr, c), dtype=float)
-            compress = (seed + f * 2 + vkey) % 16
-            s1, s2 = _MP3_SLEN[compress]
-            sf = [(j * 5 + seed + vkey) % (1 << (s1 if j < 11 else s2))
-                  if (s1 if j < 11 else s2) else 0 for j in range(21)]
-            gg = (seed * 7 + f * 13 + vkey * 29) % 256
-            mult = 0.5 * (((seed + vkey) % 2) + 1)
-            xr = np.sign(vals) * np.abs(vals) ** (4.0 / 3.0)
-            xr *= 2.0 ** (0.25 * (gg - 210))
-            for band in range(21):
-                xr[sfb[band]:sfb[band + 1]] *= 2.0 ** (-mult * sf[band])
-            return xr
-
-        v_fifo = [np.zeros(1024), np.zeros(1024)]
-        overlap = [np.zeros((32, 18)), np.zeros((32, 18))]
-        pcm = [[], []]
-        for f in range(n_frames):
-            for gr in range(2):
-                m, s = requant(f, gr, 0), requant(f, gr, 1)
-                xrs = [(m + s) / math.sqrt(2.0), (m - s) / math.sqrt(2.0)]
-                for c in range(2):
-                    xr = xrs[c]
-                    for b in range(1, 32):
-                        for i, ci in enumerate(_MP3_CI):
-                            cs = 1 / math.sqrt(1 + ci * ci)
-                            ca = ci / math.sqrt(1 + ci * ci)
-                            lo, hi = 18 * b - 1 - i, 18 * b + i
-                            xl, xu = xr[lo], xr[hi]
-                            xr[lo] = xl * cs - xu * ca
-                            xr[hi] = xu * cs + xl * ca
-                    slot = np.zeros((32, 18))
-                    for sb in range(32):
-                        x36 = win * (imdct @ xr[18 * sb: 18 * sb + 18])
-                        slot[sb] = x36[:18] + overlap[c][sb]
-                        overlap[c][sb] = x36[18:]
-                    for sb in range(1, 32, 2):
-                        slot[sb, 1::2] *= -1.0
-                    for t in range(18):
-                        v_fifo[c] = np.concatenate([N @ slot[:, t], v_fifo[c][:960]])
-                        u = np.zeros(512)
-                        for i in range(8):
-                            u[64 * i: 64 * i + 32] = v_fifo[c][128 * i: 128 * i + 32]
-                            u[64 * i + 32: 64 * i + 64] = v_fifo[c][128 * i + 96: 128 * i + 128]
-                        wnd = u * D
-                        pcm[c].extend(wnd.reshape(16, 32).sum(axis=0))
-        inter = np.empty(2 * len(pcm[0]))
-        inter[0::2], inter[1::2] = pcm[0], pcm[1]
-        ints = np.clip(np.rint(inter * 32768.0), -32768, 32767).astype(np.int32)
-        want = ((ints >> 8) + 128).astype(np.uint8)
-        diff = np.abs(np.frombuffer(got, np.uint8).astype(int) - want.astype(int))
-        assert int(diff.max()) <= 1, int(diff.max())
-        assert np.count_nonzero(np.frombuffer(got, np.uint8) != 128) > 400
-    finally:
-        register_mp3_tables(None)
-
-
-def test_mp3_intensity_stereo_matches_independent_spec_math():
-    """r9 intensity stereo (long blocks): right channel coded only in
-    lines 0-7 (count1 quads) → zero_bound 8; bands above take
-    L=v·t/(1+t), R=v·1/(1+t) with t=tan(is_pos·π/12) from the RIGHT
-    channel's scalefactors (is_pos≥7 → MS fallback, =6 → all-left),
-    MS below the bound — all vs independent numpy math. Also: the
-    short-block intensity seam raises naming the field."""
-    import math
-
-    import numpy as np
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _MP3_CI,
-        _MP3_SLEN,
-        _decode_mp3,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    register_mp3_tables(tables)
-    try:
-        def spectra(f, gr, ch):
-            vals = [0] * 576
-            rng = np.random.RandomState(500 + f * 4 + gr * 2 + ch)
-            if ch == 1:  # right: ±1 lines 0..7 only → zero_bound = 8
-                for i in range(8):
-                    vals[i] = int(rng.randint(-1, 2))
-                vals[0] = vals[0] or 1
-            else:
-                for i in rng.choice(60, size=14, replace=False):
-                    vals[int(i)] = int(rng.randint(-17, 18))
-            return vals
-
-        seed, n_frames = 210, 2
-        payload = encode_mp3(n_frames, fs_index=1, bitrate_index=14,
-                             seed=seed, spectra=spectra, table_id=1,
-                             mode=1, mode_ext=3)  # MS + intensity
-        n, ch, got = _decode_mp3(payload)
-        assert (n, ch) == (1152 * n_frames, 2)
-
-        sfb = tables["sfb_long"][48000]
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        imdct = np.array([[math.cos(math.pi / 72 * (2 * n_ + 1 + 18) * (2 * k + 1))
-                           for k in range(18)] for n_ in range(36)])
-        win = np.array([math.sin(math.pi / 36 * (n_ + 0.5)) for n_ in range(36)])
-
-        def sf_and_xr(f, gr, c):
-            vkey = gr * 2 + c
-            vals = np.array(spectra(f, gr, c), dtype=float)
-            compress = (seed + f * 2 + vkey) % 16
-            s1, s2 = _MP3_SLEN[compress]
-            sf = [(j * 5 + seed + vkey) % (1 << (s1 if j < 11 else s2))
-                  if (s1 if j < 11 else s2) else 0 for j in range(21)]
-            gg = (seed * 7 + f * 13 + vkey * 29) % 256
-            mult = 0.5 * (((seed + vkey) % 2) + 1)
-            xr = np.sign(vals) * np.abs(vals) ** (4.0 / 3.0)
-            xr *= 2.0 ** (0.25 * (gg - 210))
-            for band in range(21):
-                xr[sfb[band]:sfb[band + 1]] *= 2.0 ** (-mult * sf[band])
-            return sf, xr
-
-        v_fifo = [np.zeros(1024), np.zeros(1024)]
-        overlap = [np.zeros((32, 18)), np.zeros((32, 18))]
-        pcm = [[], []]
-        bound = 8  # right channel's coded region ends at line 8
-        for f in range(n_frames):
-            for gr in range(2):
-                _, xl = sf_and_xr(f, gr, 0)
-                sf_r, xr_ = sf_and_xr(f, gr, 1)
-                L, R = xl.copy(), xr_.copy()
-                # MS below the bound
-                L[:bound] = (xl[:bound] + xr_[:bound]) / math.sqrt(2.0)
-                R[:bound] = (xl[:bound] - xr_[:bound]) / math.sqrt(2.0)
-                # intensity bands above
-                for band in range(len(sfb) - 1):
-                    lo, hi = sfb[band], sfb[band + 1]
-                    if lo < bound:
-                        continue
-                    is_pos = sf_r[band] if band < 21 else sf_r[20]
-                    if is_pos >= 7:  # illegal marker → MS fallback
-                        mm, ss = xl[lo:hi].copy(), xr_[lo:hi].copy()
-                        L[lo:hi] = (mm + ss) / math.sqrt(2.0)
-                        R[lo:hi] = (mm - ss) / math.sqrt(2.0)
-                        continue
-                    if is_pos == 6:
-                        kl, kr = 1.0, 0.0
-                    else:
-                        t = math.tan(is_pos * math.pi / 12.0)
-                        kl, kr = t / (1.0 + t), 1.0 / (1.0 + t)
-                    v = xl[lo:hi].copy()
-                    L[lo:hi] = v * kl
-                    R[lo:hi] = v * kr
-                for c, xr in enumerate((L, R)):
-                    for b in range(1, 32):
-                        for i, ci in enumerate(_MP3_CI):
-                            cs = 1 / math.sqrt(1 + ci * ci)
-                            ca = ci / math.sqrt(1 + ci * ci)
-                            lo, hi = 18 * b - 1 - i, 18 * b + i
-                            a_, u_ = xr[lo], xr[hi]
-                            xr[lo] = a_ * cs - u_ * ca
-                            xr[hi] = u_ * cs + a_ * ca
-                    slot = np.zeros((32, 18))
-                    for sb in range(32):
-                        x36 = win * (imdct @ xr[18 * sb: 18 * sb + 18])
-                        slot[sb] = x36[:18] + overlap[c][sb]
-                        overlap[c][sb] = x36[18:]
-                    for sb in range(1, 32, 2):
-                        slot[sb, 1::2] *= -1.0
-                    for t in range(18):
-                        v_fifo[c] = np.concatenate([N @ slot[:, t], v_fifo[c][:960]])
-                        u = np.zeros(512)
-                        for i in range(8):
-                            u[64 * i: 64 * i + 32] = v_fifo[c][128 * i: 128 * i + 32]
-                            u[64 * i + 32: 64 * i + 64] = v_fifo[c][128 * i + 96: 128 * i + 128]
-                        wnd = u * D
-                        pcm[c].extend(wnd.reshape(16, 32).sum(axis=0))
-        inter = np.empty(2 * len(pcm[0]))
-        inter[0::2], inter[1::2] = pcm[0], pcm[1]
-        ints = np.clip(np.rint(inter * 32768.0), -32768, 32767).astype(np.int32)
-        want = ((ints >> 8) + 128).astype(np.uint8)
-        diff = np.abs(np.frombuffer(got, np.uint8).astype(int) - want.astype(int))
-        assert int(diff.max()) <= 1, int(diff.max())
-
-        # the remaining stereo seam (r10: pure-short AND mixed intensity
-        # are now implemented — see the dedicated short/mixed tests):
-        # MISMATCHED channel block types under intensity still raise,
-        # naming the field (3-arg per-channel plan: left long, right
-        # short)
-        def plan(f, gr, ch):
-            return (0, 0, [0, 0, 0]) if ch == 0 else (2, 0, [0, 1, 2])
-
-        pay2 = encode_mp3(1, fs_index=1, bitrate_index=14, seed=seed,
-                          spectra=lambda f, gr, c: spectra(f, gr, c),
-                          table_id=1, mode=1, mode_ext=3, block_plan=plan)
-        with _pt.raises(NotImplementedError, match="mismatched channel block"):
-            _decode_mp3(pay2)
-    finally:
-        register_mp3_tables(None)
-
-
-def test_mp3_intensity_short_blocks_matches_independent_spec_math():
-    """r10 short-block intensity stereo (§2.4.3.4.9.3): both channels
-    pure short, MS + intensity on. The right channel occupies DIFFERENT
-    bands per window (w0 → sfb<3, w1 → sfb<1, w2 → empty), so the three
-    per-window intensity bounds differ (3 / 1 / 0); bands above each
-    window's bound pan the LEFT channel with is_pos = the right
-    channel's short scalefactor for that (band, window), MS applies
-    below the bound in that window only. The left channel also codes
-    lines in the LAST short band (12, lines 408+ pre-reorder), which
-    has no scalefactor — covering the band-12 requantize (gain +
-    subblock gain only), reorder, and is_pos band-11 reuse paths — all
-    against an independent numpy implementation of the spec math."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _MP3_SLEN,
-        _decode_mp3,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    register_mp3_tables(tables)
-    try:
-        sfb_s = tables["sfb_short"][48000]
-        n_bands = len(sfb_s) - 1  # 13
-
-        def wslice(sfb, w):
-            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-            s = 3 * lo + (hi - lo) * w
-            return s, s + (hi - lo)
-
-        def spectra(f, gr, ch):
-            vals = [0] * 576
-            rng = np.random.RandomState(900 + f * 4 + gr * 2 + ch)
-            if ch == 1:  # right: per-window band occupancy 3 / 1 / 0
-                for w, top in ((0, 3), (1, 1)):
-                    for sfb in range(top):
-                        s, e = wslice(sfb, w)
-                        for i in range(s, e):
-                            vals[i] = int(rng.randint(-1, 2))
-                        vals[s] = vals[s] or 1  # window's bound is exact
-            else:  # left: low bands in all windows + the tail band 12
-                for w in range(3):
-                    for sfb in (0, 1, 2, 4, 6):
-                        s, e = wslice(sfb, w)
-                        for i in range(s, e):
-                            vals[i] = int(rng.randint(-9, 10))
-                    s, e = wslice(12, w)
-                    vals[s] = int(rng.randint(1, 5))
-                    vals[s + 3] = int(rng.randint(-4, -1))
-            return vals
-
-        seed, n_frames = 87, 2
-        sbg = [1, 0, 2]
-
-        def plan(f, gr):
-            return (2, 0, sbg)
-
-        payload = encode_mp3(n_frames, fs_index=1, bitrate_index=14,
-                             seed=seed, spectra=spectra, table_id=1,
-                             mode=1, mode_ext=3, block_plan=plan)
-        n, ch, got = _decode_mp3(payload)
-        assert (n, ch) == (1152 * n_frames, 2)
-
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        im12 = np.array([[math.cos(math.pi / 24 * (2 * n_ + 1 + 6) * (2 * k + 1))
-                          for k in range(6)] for n_ in range(12)])
-        w_short12 = np.array([math.sin(math.pi / 12 * (n_ + 0.5)) for n_ in range(12)])
-
-        def sf_and_xr(f, gr, c):
-            """Per-channel short scalefactors + requantized spectrum."""
-            vkey = gr * 2 + c
-            vals = np.array(spectra(f, gr, c), dtype=float)
-            compress = (seed + f * 2 + vkey) % 16
-            s1, s2 = _MP3_SLEN[compress]
-            sf = [[(sfb * 5 + w * 3 + seed + vkey)
-                   % (1 << (s1 if sfb < 6 else s2))
-                   if (s1 if sfb < 6 else s2) else 0
-                   for w in range(3)] for sfb in range(12)]
-            gg = (seed * 7 + f * 13 + vkey * 29) % 256
-            mult = 0.5 * (((seed + vkey) % 2) + 1)
-            g = 0.25 * (gg - 210)
-            xr = np.sign(vals) * np.abs(vals) ** (4.0 / 3.0)
-            for sfb in range(n_bands):
-                for w in range(3):
-                    s, e = wslice(sfb, w)
-                    sf_v = sf[sfb][w] if sfb < 12 else 0
-                    xr[s:e] *= 2.0 ** (g - 2.0 * sbg[w] - mult * sf_v)
-            return sf, xr
-
-        v_fifo = [np.zeros(1024), np.zeros(1024)]
-        overlap = [np.zeros((32, 18)), np.zeros((32, 18))]
-        pcm = [[], []]
-        for f in range(n_frames):
-            for gr in range(2):
-                _, xl = sf_and_xr(f, gr, 0)
-                sf_r, xr_ = sf_and_xr(f, gr, 1)
-                L, R = xl.copy(), xr_.copy()
-                for w in range(3):
-                    bound = 0
-                    for sfb in range(n_bands):
-                        s, e = wslice(sfb, w)
-                        if np.any(xr_[s:e]):
-                            bound = sfb + 1
-                    assert bound == (3, 1, 0)[w]  # the designed bounds
-                    for sfb in range(n_bands):
-                        s, e = wslice(sfb, w)
-                        if sfb < bound:
-                            m, sv = xl[s:e].copy(), xr_[s:e].copy()
-                            L[s:e] = (m + sv) / math.sqrt(2.0)
-                            R[s:e] = (m - sv) / math.sqrt(2.0)
-                            continue
-                        is_pos = sf_r[sfb][w] if sfb < 12 else sf_r[11][w]
-                        if is_pos >= 7:  # illegal marker → MS (MS is on)
-                            m, sv = xl[s:e].copy(), xr_[s:e].copy()
-                            L[s:e] = (m + sv) / math.sqrt(2.0)
-                            R[s:e] = (m - sv) / math.sqrt(2.0)
-                            continue
-                        if is_pos == 6:
-                            kl, kr = 1.0, 0.0
-                        else:
-                            t = math.tan(is_pos * math.pi / 12.0)
-                            kl, kr = t / (1.0 + t), 1.0 / (1.0 + t)
-                        v = xl[s:e].copy()
-                        L[s:e] = v * kl
-                        R[s:e] = v * kr
-                for c, xr in enumerate((L, R)):
-                    nat = xr.copy()  # reorder ALL 13 bands, then no alias
-                    for sfb in range(n_bands):
-                        lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-                        width = hi - lo
-                        blk = xr[3 * lo: 3 * hi]
-                        for i in range(width):
-                            for w in range(3):
-                                nat[3 * lo + 3 * i + w] = blk[w * width + i]
-                    slot = np.zeros((32, 18))
-                    for sb in range(32):
-                        lines = nat[18 * sb: 18 * sb + 18]
-                        x36 = np.zeros(36)
-                        for w in range(3):
-                            z = im12 @ np.array([lines[3 * k + w] for k in range(6)])
-                            x36[6 + 6 * w: 18 + 6 * w] += z * w_short12
-                        slot[sb] = x36[:18] + overlap[c][sb]
-                        overlap[c][sb] = x36[18:]
-                    for sb in range(1, 32, 2):
-                        slot[sb, 1::2] *= -1.0
-                    for t in range(18):
-                        v_fifo[c] = np.concatenate([N @ slot[:, t], v_fifo[c][:960]])
-                        u = np.zeros(512)
-                        for i in range(8):
-                            u[64 * i: 64 * i + 32] = v_fifo[c][128 * i: 128 * i + 32]
-                            u[64 * i + 32: 64 * i + 64] = v_fifo[c][128 * i + 96: 128 * i + 128]
-                        pcm[c].extend((u * D).reshape(16, 32).sum(axis=0))
-        inter = np.empty(2 * len(pcm[0]))
-        inter[0::2], inter[1::2] = pcm[0], pcm[1]
-        ints = np.clip(np.rint(inter * 32768.0), -32768, 32767).astype(np.int32)
-        want = ((ints >> 8) + 128).astype(np.uint8)
-        got_arr = np.frombuffer(got, np.uint8)
-        diff = np.abs(got_arr.astype(int) - want.astype(int))
-        assert int(diff.max()) <= 1, int(diff.max())
-        assert np.count_nonzero(got_arr != 128) > 200  # genuinely nonzero
-    finally:
-        register_mp3_tables(None)
-
-
-def test_synthesize_mp3_decodes_distributed(spark):
-    """End-to-end through the Spark plumbing: executor-side MP3 encode →
-    Arrow mapInPandas decode; silence closed form n=1152·frames,
-    body_sum=128·n (covers CRC docs, reservoir docs, all scfsi/slen)."""
-    from jasminegraph_spark.pipeline.multimodal import decode_media, synthesize_mp3
-
-    docs = spark.range(0, 24).withColumnRenamed("id", "doc_id")
-    rows = {r["media_id"]: r for r in decode_media(synthesize_mp3(docs)).collect()}
-    assert len(rows) == 24
-    for d in range(24):
-        n = 1152 * (1 + d % 3)
-        assert rows[d]["width"] == n and rows[d]["height"] == 1
-        assert rows[d]["n_bytes"] == n and rows[d]["body_sum"] == 128 * n
-
-
-def test_mp3_intensity_mixed_blocks_matches_independent_spec_math():
-    """r10 MIXED-block intensity stereo: both channels mixed
-    (2 long subbands + short sfb 3-12), MS + intensity on. Granule 0:
-    the right channel is nonzero in the long region AND short sfb 3 of
-    window 0 — the zero tail is NOT contiguous into the long region, so
-    the long region is MS-only while windows get per-window intensity
-    (bounds 4/3/3). Granule 1: the right channel's short region is
-    entirely zero with long lines 0-9 coded — the long region joins the
-    intensity region above the long-band edge ≥ 10 with is_pos from the
-    LONG scalefactors. All against an independent numpy implementation
-    of the documented semantics (requant with 2 long subbands + short
-    bands incl. the scalefactor-less band 12, mixed reorder, one alias
-    boundary, mixed IMDCT)."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _MP3_CI,
-        _MP3_SLEN,
-        _decode_mp3,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    register_mp3_tables(tables)
-    try:
-        sfb_l = tables["sfb_long"][48000]
-        sfb_s = tables["sfb_short"][48000]
-        long_end = sfb_l[8]  # 36
-        n_bands = len(sfb_s) - 1
-
-        def wslice(sfb, w):
-            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-            s = 3 * lo + (hi - lo) * w
-            return s, s + (hi - lo)
-
-        def spectra(f, gr, ch):
-            vals = [0] * 576
-            rng = np.random.RandomState(700 + f * 4 + gr * 2 + ch)
-            if ch == 1:
-                for i in range(10):  # long lines 0..9 in both granules
-                    vals[i] = int(rng.randint(-5, 6))
-                vals[0] = vals[0] or 1
-                if gr == 0:  # granule 0 also codes short sfb 3, window 0
-                    s, e = wslice(3, 0)
-                    for i in range(s, e):
-                        vals[i] = int(rng.randint(-1, 2))
-                    vals[s] = vals[s] or 1
-            else:
-                for i in range(12):
-                    vals[i] = int(rng.randint(-9, 10))
-                for w in range(3):
-                    for sfb in (3, 4, 5):
-                        s, e = wslice(sfb, w)
-                        vals[s] = int(rng.randint(-9, 10))
-                    s, e = wslice(12, w)
-                    vals[s + 1] = int(rng.randint(1, 5))
-            return vals
-
-        seed = 61
-        sbg = [1, 0, 2]
-        payload = encode_mp3(1, fs_index=1, bitrate_index=14, seed=seed,
-                             spectra=spectra, table_id=1, mode=1,
-                             mode_ext=3,
-                             block_plan=lambda f, gr: (2, 1, sbg))
-        n, ch, got = _decode_mp3(payload)
-        assert (n, ch) == (1152, 2)
-
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        im18 = np.array([[math.cos(math.pi / 72 * (2 * n_ + 1 + 18) * (2 * k + 1))
-                          for k in range(18)] for n_ in range(36)])
-        im12 = np.array([[math.cos(math.pi / 24 * (2 * n_ + 1 + 6) * (2 * k + 1))
-                          for k in range(6)] for n_ in range(12)])
-        w_norm = np.array([math.sin(math.pi / 36 * (n_ + 0.5)) for n_ in range(36)])
-        w_short12 = np.array([math.sin(math.pi / 12 * (n_ + 0.5)) for n_ in range(12)])
-
-        def sf_and_xr(f, gr, c):
-            vkey = gr * 2 + c
-            vals = np.array(spectra(f, gr, c), dtype=float)
-            compress = (seed + f * 2 + vkey) % 16
-            s1, s2 = _MP3_SLEN[compress]
-            long_sf = [((j * 5 + seed + vkey) % (1 << s1)) if s1 else 0
-                       for j in range(8)]
-            short_sf = [[(sfb * 5 + w * 3 + seed + vkey)
-                         % (1 << (s1 if sfb < 6 else s2))
-                         if (s1 if sfb < 6 else s2) else 0
-                         for w in range(3)] for sfb in range(3, 12)]
-            gg = (seed * 7 + f * 13 + vkey * 29) % 256
-            mult = 0.5 * (((seed + vkey) % 2) + 1)
-            g = 0.25 * (gg - 210)
-            xr = np.sign(vals) * np.abs(vals) ** (4.0 / 3.0)
-            for band in range(8):
-                lo, hi = sfb_l[band], sfb_l[band + 1]
-                xr[lo:hi] *= 2.0 ** (g - mult * long_sf[band])
-            for sfb in range(3, n_bands):
-                for w in range(3):
-                    s, e = wslice(sfb, w)
-                    sf_v = short_sf[sfb - 3][w] if sfb < 12 else 0
-                    xr[s:e] *= 2.0 ** (g - 2.0 * sbg[w] - mult * sf_v)
-            return long_sf, short_sf, xr
-
-        def pan_pair(L, R, xl, s, e, is_pos, ms_on=True):
-            if is_pos >= 7:
-                m, sv = L[s:e].copy(), R[s:e].copy()
-                L[s:e] = (m + sv) / math.sqrt(2.0)
-                R[s:e] = (m - sv) / math.sqrt(2.0)
-                return
-            if is_pos == 6:
-                kl, kr = 1.0, 0.0
-            else:
-                t = math.tan(is_pos * math.pi / 12.0)
-                kl, kr = t / (1.0 + t), 1.0 / (1.0 + t)
-            v = xl[s:e].copy()
-            L[s:e] = v * kl
-            R[s:e] = v * kr
-
-        v_fifo = [np.zeros(1024), np.zeros(1024)]
-        overlap = [np.zeros((32, 18)), np.zeros((32, 18))]
-        pcm = [[], []]
-        for gr in range(2):
-            _, _, xl = sf_and_xr(0, gr, 0)
-            long_sf_r, short_sf_r, xr_ = sf_and_xr(0, gr, 1)
-            L, R = xl.copy(), xr_.copy()
-            short_all_zero = True
-            for w in range(3):
-                bound = 3
-                for sfb in range(3, n_bands):
-                    s, e = wslice(sfb, w)
-                    if np.any(xr_[s:e]):
-                        bound = sfb + 1
-                if bound > 3:
-                    short_all_zero = False
-                assert bound == ((4, 3, 3)[w] if gr == 0 else 3)
-                for sfb in range(3, n_bands):
-                    s, e = wslice(sfb, w)
-                    if sfb < bound:
-                        m, sv = xl[s:e].copy(), xr_[s:e].copy()
-                        L[s:e] = (m + sv) / math.sqrt(2.0)
-                        R[s:e] = (m - sv) / math.sqrt(2.0)
-                    else:
-                        is_pos = (short_sf_r[sfb - 3][w] if sfb < 12
-                                  else short_sf_r[11 - 3][w])
-                        pan_pair(L, R, xl, s, e, is_pos)
-            if short_all_zero:
-                assert gr == 1
-                zb = max(i + 1 for i in range(long_end) if xr_[i]) if \
-                    np.any(xr_[:long_end]) else 0
-                assert zb == 10
-                for band in range(8):
-                    lo, hi = sfb_l[band], min(sfb_l[band + 1], long_end)
-                    if lo >= zb:
-                        pan_pair(L, R, xl, lo, hi, long_sf_r[band])
-                    else:
-                        m, sv = xl[lo:hi].copy(), xr_[lo:hi].copy()
-                        L[lo:hi] = (m + sv) / math.sqrt(2.0)
-                        R[lo:hi] = (m - sv) / math.sqrt(2.0)
-            else:
-                assert gr == 0
-                m, sv = xl[:long_end].copy(), xr_[:long_end].copy()
-                L[:long_end] = (m + sv) / math.sqrt(2.0)
-                R[:long_end] = (m - sv) / math.sqrt(2.0)
-            for c, xr in enumerate((L, R)):
-                nat = xr.copy()  # mixed reorder: sfb 3..12 only
-                for sfb in range(3, n_bands):
-                    lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-                    width = hi - lo
-                    blk = xr[3 * lo: 3 * hi]
-                    for i in range(width):
-                        for w in range(3):
-                            nat[3 * lo + 3 * i + w] = blk[w * width + i]
-                for i, ci in enumerate(_MP3_CI):  # one alias boundary
-                    cs = 1 / math.sqrt(1 + ci * ci)
-                    ca = ci / math.sqrt(1 + ci * ci)
-                    lo_, hi_ = 17 - i, 18 + i
-                    a_, u_ = nat[lo_], nat[hi_]
-                    nat[lo_] = a_ * cs - u_ * ca
-                    nat[hi_] = u_ * cs + a_ * ca
-                slot = np.zeros((32, 18))
-                for sb in range(32):
-                    lines = nat[18 * sb: 18 * sb + 18]
-                    if sb < 2:  # mixed: first 2 subbands long
-                        x36 = w_norm * (im18 @ lines)
-                    else:
-                        x36 = np.zeros(36)
-                        for w in range(3):
-                            z = im12 @ np.array([lines[3 * kk + w] for kk in range(6)])
-                            x36[6 + 6 * w: 18 + 6 * w] += z * w_short12
-                    slot[sb] = x36[:18] + overlap[c][sb]
-                    overlap[c][sb] = x36[18:]
-                for sb in range(1, 32, 2):
-                    slot[sb, 1::2] *= -1.0
-                for t in range(18):
-                    v_fifo[c] = np.concatenate([N @ slot[:, t], v_fifo[c][:960]])
-                    u = np.zeros(512)
-                    for i in range(8):
-                        u[64 * i: 64 * i + 32] = v_fifo[c][128 * i: 128 * i + 32]
-                        u[64 * i + 32: 64 * i + 64] = v_fifo[c][128 * i + 96: 128 * i + 128]
-                    pcm[c].extend((u * D).reshape(16, 32).sum(axis=0))
-        inter = np.empty(2 * len(pcm[0]))
-        inter[0::2], inter[1::2] = pcm[0], pcm[1]
-        ints = np.clip(np.rint(inter * 32768.0), -32768, 32767).astype(np.int32)
-        want = ((ints >> 8) + 128).astype(np.uint8)
-        got_arr = np.frombuffer(got, np.uint8)
-        diff = np.abs(got_arr.astype(int) - want.astype(int))
-        assert int(diff.max()) <= 1, int(diff.max())
-        assert np.count_nonzero(got_arr != 128) > 100
-    finally:
-        register_mp3_tables(None)
-
-
-def test_synthesize_mp3_stereo_decodes_distributed(spark):
-    """r10 stereo end-to-end through the Spark plumbing: executor-side
-    two-channel MP3 encode (mode cycling stereo/joint/dual, mode_ext
-    cycling MS/intensity/both, window-switching docs) → Arrow
-    mapInPandas decode; silence closed form width = 1152·frames,
-    height = 2 channels, n_bytes = 2·width, body_sum = 128·n_bytes."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        synthesize_mp3_stereo,
-    )
-
-    docs = spark.range(0, 24).withColumnRenamed("id", "doc_id")
-    rows = {r["media_id"]: r
-            for r in decode_media(synthesize_mp3_stereo(docs)).collect()}
-    assert len(rows) == 24
-    for d in range(24):
-        n = 1152 * (1 + d % 3)
-        assert rows[d]["width"] == n and rows[d]["height"] == 2
-        assert rows[d]["n_bytes"] == 2 * n
-        assert rows[d]["body_sum"] == 128 * 2 * n
-
-
-def test_mp3_lsf_silence_and_gates():
-    """r10 MPEG-2/2.5 LSF structural coverage: silence streams across
-    both versions, all LSF sample rates/bitrates, mono/stereo/MS/dual,
-    window switching, CRC, and the 8-bit-main_data_begin reservoir
-    decode to exactly 576·frames zero samples per channel. The named
-    LSF seams raise: intensity stereo, mixed-block scalefactors, and
-    the reserved version bits 01."""
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        encode_mp3,
-    )
-
-    for i in range(40):
-        mode = (3, 0, 1, 2)[i % 4]
-        nch = 1 if mode == 3 else 2
-        p = encode_mp3(1 + i % 3, fs_index=i % 3,
-                       bitrate_index=(4 + i % 11) if nch == 2 else (1 + i % 14),
-                       seed=i % 251, protection=i % 5 == 0, padding=i % 2,
-                       reservoir_slack=4 if i % 7 == 0 else 0,
-                       mode=mode, mode_ext=2 if mode == 1 else 0,
-                       version=2 if i % 2 == 0 else 25)
-        n, ch, body = _decode_mp3(p)
-        assert (n, ch) == (576 * (1 + i % 3), nch)
-        assert set(body) == {128}
-
-    # LSF intensity stereo (r10: implemented — the dedicated contract
-    # test proves the nonzero panning): silence round-trips through the
-    # intensity scalefactor scheme across both versions and scales
-    for i in range(8):
-        p = encode_mp3(1 + i % 3, fs_index=i % 3, bitrate_index=8,
-                       seed=i * 37, mode=1, mode_ext=1 + 2 * (i % 2),
-                       version=2 if i % 2 == 0 else 25)
-        n, ch, body = _decode_mp3(p)
-        assert (n, ch) == (576 * (1 + i % 3), 2) and set(body) == {128}
-
-    # LSF mixed blocks (r10: implemented — 6 long + 27 short groups)
-    # round-trip silence; mixed UNDER INTENSITY stays the named seam
-    p = encode_mp3(2, bitrate_index=10, version=2,
-                   block_plan=lambda f, gr: (2, 1, [0, 1, 2]))
-    n, ch, body = _decode_mp3(p)
-    assert (n, ch) == (576 * 2, 1) and set(body) == {128}
-    with _pt.raises(ValueError, match="named seam"):
-        encode_mp3(1, bitrate_index=10, version=2, mode=1, mode_ext=1,
-                   block_plan=lambda f, gr: (2, 1, [0, 0, 0]))
-
-    # reserved version bits 01 fail loudly
-    good = encode_mp3(1, bitrate_index=8, version=2)
-    bad = bytes([good[0], (good[1] & ~0x18) | 0x08, good[2], good[3]]) + good[4:]
-    with _pt.raises(ValueError, match="reserved MPEG version"):
-        _decode_mp3(bad)
-
-    # version change mid-stream fails loudly
-    a = encode_mp3(1, fs_index=0, bitrate_index=8, version=2)
-    b = encode_mp3(1, fs_index=0, bitrate_index=8, version=1)
-    with _pt.raises(ValueError, match="version changed mid-stream"):
-        _decode_mp3(a + b)
-
-
-def test_mp3_lsf_nonzero_dsp_matches_independent_spec_math():
-    """r10 LSF nonzero path: MPEG-2 mono long-block spectra decoded
-    through the derived-slen scalefactor scheme (13818-3 §2.4.3.2) and
-    requantize, vs independent numpy math. Three payloads pin all three
-    blocknumber ranges of the 9-bit scalefac_compress — including the
-    sc ≥ 500 range whose derived preflag applies the pretab (no preflag
-    BIT exists in LSF side info)."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _MP3_CI,
-        _MP3_LSF_NSFB,
-        _MP3_PRETAB,
-        _decode_mp3,
-        _mp3_lsf_slen,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    # the synthetic seam tables, additionally keyed by the LSF rates
-    for t in ("sfb_long", "sfb_short"):
-        base = tables[t][48000]
-        for fs in (22050, 24000, 16000, 11025, 12000, 8000):
-            tables[t][fs] = base
-    register_mp3_tables(tables)
-    try:
-        sfb = tables["sfb_long"][24000]
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        im18 = np.array([[math.cos(math.pi / 72 * (2 * n_ + 1 + 18) * (2 * k + 1))
-                          for k in range(18)] for n_ in range(36)])
-        w_norm = np.array([math.sin(math.pi / 36 * (n_ + 0.5)) for n_ in range(36)])
-
-        def spectra(f, gr):
-            vals = [0] * 576
-            rng = np.random.RandomState(40 + f)
-            for i in rng.choice(60, size=12, replace=False):
-                vals[int(i)] = int(rng.randint(-17, 18))
-            return vals
-
-        seen_bn = set()
-        for seed in (100, 140, 170):  # compress = (3·seed + 7f) % 512
-            n_frames = 2
-            payload = encode_mp3(n_frames, fs_index=1, bitrate_index=14,
-                                 seed=seed, spectra=spectra, table_id=1,
-                                 version=2)
-            n, ch, got = _decode_mp3(payload)
-            assert (n, ch) == (576 * n_frames, 1)
-
-            v_fifo = np.zeros(1024)
-            overlap = np.zeros((32, 18))
-            pcm = []
-            for f in range(n_frames):
-                sc = (seed * 3 + f * 7) % 512
-                slen, preflag, bn = _mp3_lsf_slen(sc)
-                seen_bn.add(bn)
-                nsfb = _MP3_LSF_NSFB[bn][0]
-                sf, j = [], 0
-                for g_ in range(4):
-                    for _ in range(nsfb[g_]):
-                        sf.append((j * 5 + seed) % (1 << slen[g_])
-                                  if slen[g_] else 0)
-                        j += 1
-                assert len(sf) == 21
-                gg = (seed * 7 + f * 13) % 256
-                mult = 0.5 * ((seed % 2) + 1)
-                g = 0.25 * (gg - 210)
-                xr = np.array(spectra(f, 0), dtype=float)
-                xr = np.sign(xr) * np.abs(xr) ** (4.0 / 3.0)
-                xr *= 2.0 ** g
-                for band in range(21):
-                    pre = _MP3_PRETAB[band] if preflag else 0
-                    xr[sfb[band]:sfb[band + 1]] *= 2.0 ** (-mult * (sf[band] + pre))
-                for b in range(1, 32):
-                    for i, ci in enumerate(_MP3_CI):
-                        cs = 1 / math.sqrt(1 + ci * ci)
-                        ca = ci / math.sqrt(1 + ci * ci)
-                        lo_, hi_ = 18 * b - 1 - i, 18 * b + i
-                        xl, xu = xr[lo_], xr[hi_]
-                        xr[lo_] = xl * cs - xu * ca
-                        xr[hi_] = xu * cs + xl * ca
-                slot = np.zeros((32, 18))
-                for sb in range(32):
-                    x36 = w_norm * (im18 @ xr[18 * sb: 18 * sb + 18])
-                    slot[sb] = x36[:18] + overlap[sb]
-                    overlap[sb] = x36[18:]
-                for sb in range(1, 32, 2):
-                    slot[sb, 1::2] *= -1.0
-                for t in range(18):
-                    v_fifo = np.concatenate([N @ slot[:, t], v_fifo[:960]])
-                    u = np.zeros(512)
-                    for i in range(8):
-                        u[64 * i: 64 * i + 32] = v_fifo[128 * i: 128 * i + 32]
-                        u[64 * i + 32: 64 * i + 64] = v_fifo[128 * i + 96: 128 * i + 128]
-                    pcm.extend((u * D).reshape(16, 32).sum(axis=0))
-            ints = np.clip(np.rint(np.asarray(pcm) * 32768.0), -32768, 32767).astype(np.int32)
-            want = ((ints >> 8) + 128).astype(np.uint8)
-            got_arr = np.frombuffer(got, np.uint8)
-            diff = np.abs(got_arr.astype(int) - want.astype(int))
-            assert int(diff.max()) <= 1, (seed, int(diff.max()))
-            assert np.count_nonzero(got_arr != 128) > 100, seed
-        assert seen_bn == {0, 1, 2}  # all three compress ranges exercised
-    finally:
-        register_mp3_tables(None)
-
-
-def test_mp3_lsf_mixed_blocks_match_independent_spec_math():
-    """r10 LSF MIXED blocks: the 33-value scalefactor layout (6 long
-    bands + 27 short in sfb-major window order for sfb 3-11) under the
-    derived-slen scheme, requantized with the length-derived long-band
-    count (6 at LSF vs MPEG-1's 8; synthetic-table tail lines get gain
-    only), short bands with subblock gains + the scalefactor-less band
-    12, mixed reorder, one alias boundary, mixed IMDCT — vs independent
-    numpy math, MPEG-2 mono."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _MP3_CI,
-        _MP3_LSF_NSFB,
-        _decode_mp3,
-        _mp3_lsf_slen,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    for t in ("sfb_long", "sfb_short"):
-        base = tables[t][48000]
-        for fs in (22050, 24000, 16000, 11025, 12000, 8000):
-            tables[t][fs] = base
-    register_mp3_tables(tables)
-    try:
-        sfb_l = tables["sfb_long"][24000]
-        sfb_s = tables["sfb_short"][24000]
-        n_bands = len(sfb_s) - 1
-
-        def wslice(sfb, w):
-            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-            s = 3 * lo + (hi - lo) * w
-            return s, s + (hi - lo)
-
-        def spectra(f, gr):
-            vals = [0] * 576
-            rng = np.random.RandomState(55 + f)
-            for i in range(12):  # long region lines
-                vals[i] = int(rng.randint(-9, 10))
-            for w in range(3):
-                for sfb in (3, 4):
-                    s, e = wslice(sfb, w)
-                    vals[s] = int(rng.randint(-9, 10))
-                s, e = wslice(12, w)
-                vals[s + 2] = int(rng.randint(1, 5))
-            return vals
-
-        seed, n_frames = 96, 2
-        sbg = [1, 0, 2]
-        payload = encode_mp3(n_frames, fs_index=1, bitrate_index=14,
-                             seed=seed, spectra=spectra, table_id=1,
-                             version=2,
-                             block_plan=lambda f, gr: (2, 1, sbg))
-        n, ch, got = _decode_mp3(payload)
-        assert (n, ch) == (576 * n_frames, 1)
-
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        im18 = np.array([[math.cos(math.pi / 72 * (2 * n_ + 1 + 18) * (2 * k + 1))
-                          for k in range(18)] for n_ in range(36)])
-        im12 = np.array([[math.cos(math.pi / 24 * (2 * n_ + 1 + 6) * (2 * k + 1))
-                          for k in range(6)] for n_ in range(12)])
-        w_norm = np.array([math.sin(math.pi / 36 * (n_ + 0.5)) for n_ in range(36)])
-        w_short12 = np.array([math.sin(math.pi / 12 * (n_ + 0.5)) for n_ in range(12)])
-
-        v_fifo = np.zeros(1024)
-        overlap = np.zeros((32, 18))
-        pcm = []
-        seen_bn = set()
-        for f in range(n_frames):
-            sc = (seed * 3 + f * 7) % 512
-            slen, preflag, bn = _mp3_lsf_slen(sc)
-            seen_bn.add(bn)
-            nsfb = _MP3_LSF_NSFB[bn][2]  # mixed column
-            flat, j = [], 0
-            for g_ in range(4):
-                for _ in range(nsfb[g_]):
-                    flat.append((j * 5 + seed) % (1 << slen[g_])
-                                if slen[g_] else 0)
-                    j += 1
-            assert len(flat) == 33
-            long_sf, short_sf = flat[:6], [flat[6 + 3 * i: 9 + 3 * i]
-                                           for i in range(9)]
-            gg = (seed * 7 + f * 13) % 256
-            mult = 0.5 * ((seed % 2) + 1)
-            g = 0.25 * (gg - 210)
-            xr = np.array(spectra(f, 0), dtype=float)
-            xr = np.sign(xr) * np.abs(xr) ** (4.0 / 3.0)
-            for band in range(6):
-                lo, hi = sfb_l[band], sfb_l[band + 1]
-                xr[lo:hi] *= 2.0 ** (g - mult * long_sf[band])  # preflag 0
-            split = 3 * sfb_s[3]
-            if sfb_l[6] < split:  # synthetic-table tail: gain only
-                xr[sfb_l[6]:split] *= 2.0 ** g
-            for sfb in range(3, n_bands):
-                for w in range(3):
-                    s, e = wslice(sfb, w)
-                    sf_v = short_sf[sfb - 3][w] if sfb < 12 else 0
-                    xr[s:e] *= 2.0 ** (g - 2.0 * sbg[w] - mult * sf_v)
-            nat = xr.copy()  # mixed reorder: sfb 3..12
-            for sfb in range(3, n_bands):
-                lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-                width = hi - lo
-                blk = xr[3 * lo: 3 * hi]
-                for i in range(width):
-                    for w in range(3):
-                        nat[3 * lo + 3 * i + w] = blk[w * width + i]
-            for i, ci in enumerate(_MP3_CI):  # one alias boundary
-                cs = 1 / math.sqrt(1 + ci * ci)
-                ca = ci / math.sqrt(1 + ci * ci)
-                lo_, hi_ = 17 - i, 18 + i
-                a_, u_ = nat[lo_], nat[hi_]
-                nat[lo_] = a_ * cs - u_ * ca
-                nat[hi_] = u_ * cs + a_ * ca
-            slot = np.zeros((32, 18))
-            for sb in range(32):
-                lines = nat[18 * sb: 18 * sb + 18]
-                if sb < 2:
-                    x36 = w_norm * (im18 @ lines)
-                else:
-                    x36 = np.zeros(36)
-                    for w in range(3):
-                        z = im12 @ np.array([lines[3 * kk + w] for kk in range(6)])
-                        x36[6 + 6 * w: 18 + 6 * w] += z * w_short12
-                slot[sb] = x36[:18] + overlap[sb]
-                overlap[sb] = x36[18:]
-            for sb in range(1, 32, 2):
-                slot[sb, 1::2] *= -1.0
-            for t in range(18):
-                v_fifo = np.concatenate([N @ slot[:, t], v_fifo[:960]])
-                u = np.zeros(512)
-                for i in range(8):
-                    u[64 * i: 64 * i + 32] = v_fifo[128 * i: 128 * i + 32]
-                    u[64 * i + 32: 64 * i + 64] = v_fifo[128 * i + 96: 128 * i + 128]
-                pcm.extend((u * D).reshape(16, 32).sum(axis=0))
-        ints = np.clip(np.rint(np.asarray(pcm) * 32768.0), -32768, 32767).astype(np.int32)
-        want = ((ints >> 8) + 128).astype(np.uint8)
-        got_arr = np.frombuffer(got, np.uint8)
-        diff = np.abs(got_arr.astype(int) - want.astype(int))
-        assert int(diff.max()) <= 1, int(diff.max())
-        assert np.count_nonzero(got_arr != 128) > 100
-    finally:
-        register_mp3_tables(None)
-
-
-def test_mp3_lsf_intensity_stereo_matches_independent_spec_math():
-    """r10 LSF intensity stereo (13818-3 §2.4.3.2 / the libmad
-    is_lsf_table closed form): MPEG-2 joint stereo with MS + intensity,
-    right channel coded in lines 0-7 only → zero_bound 8; the right
-    channel's scalefactors are is_pos positions under the
-    scalefac_compress>>1 scheme (bit 0 = intensity_scale); bands above
-    the bound pan with t = 2^(−(scale+1)·⌈is_pos/2⌉/2) — odd is_pos
-    scales LEFT, even scales RIGHT, 0 copies, the band's all-ones value
-    is the illegal marker (MS fallback) — MS below the bound. All vs
-    independent numpy math; also requants the right channel's coded
-    region with the SAME decoded values as scalefactors."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _MP3_CI,
-        _MP3_LSF_NSFB,
-        _decode_mp3,
-        _mp3_lsf_slen,
-        _mp3_lsf_slen_intensity,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    for t in ("sfb_long", "sfb_short"):
-        base = tables[t][48000]
-        for fs in (22050, 24000, 16000, 11025, 12000, 8000):
-            tables[t][fs] = base
-    register_mp3_tables(tables)
-    try:
-        sfb = tables["sfb_long"][24000]
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        im18 = np.array([[math.cos(math.pi / 72 * (2 * n_ + 1 + 18) * (2 * k + 1))
-                          for k in range(18)] for n_ in range(36)])
-        w_norm = np.array([math.sin(math.pi / 36 * (n_ + 0.5)) for n_ in range(36)])
-
-        def spectra(f, gr, ch):
-            vals = [0] * 576
-            rng = np.random.RandomState(333 + f * 2 + ch)
-            if ch == 1:  # right: ±1 lines 0..7 only → zero_bound 8
-                for i in range(8):
-                    vals[i] = int(rng.randint(-1, 2))
-                vals[0] = vals[0] or 1
-            else:
-                for i in rng.choice(60, size=14, replace=False):
-                    vals[int(i)] = int(rng.randint(-17, 18))
-            return vals
-
-        # seed chosen so every (frame, channel) global_gain lands in
-        # the audible-but-unclipped band (gg = (7*seed+29c+13f) % 256)
-        seed, n_frames = 96, 2
-        payload = encode_mp3(n_frames, fs_index=1, bitrate_index=14,
-                             seed=seed, spectra=spectra, table_id=1,
-                             mode=1, mode_ext=3, version=2)
-        n, ch, got = _decode_mp3(payload)
-        assert (n, ch) == (576 * n_frames, 2)
-
-        def lsf_sf(f, c):
-            """Mirror the encoder's per-channel LSF scalefactor values."""
-            vkey = c  # gr = 0 always (one granule), stereo vkey = gr*2+ch
-            if c == 1:
-                sc_i = (seed * 3 + f * 7 + vkey * 11) % 255
-                iscale = (seed + f) % 2
-                slen, bn = _mp3_lsf_slen_intensity(sc_i)
-                preflag = 0
-            else:
-                sc = (seed * 3 + f * 7 + vkey * 11) % 512
-                slen, preflag, bn = _mp3_lsf_slen(sc)
-                iscale = None
-            nsfb = _MP3_LSF_NSFB[bn][0]
-            sf, ill, j = [], [], 0
-            for g_ in range(4):
-                for _ in range(nsfb[g_]):
-                    sf.append((j * 5 + seed + vkey) % (1 << slen[g_])
-                              if slen[g_] else 0)
-                    ill.append((1 << slen[g_]) - 1 if slen[g_] else 0)
-                    j += 1
-            return sf, ill, iscale, preflag
-
-        def requant(f, c, sf, preflag):
-            from jasminegraph_spark.pipeline.multimodal import _MP3_PRETAB
-
-            vkey = c
-            gg = (seed * 7 + f * 13 + vkey * 29) % 256
-            mult = 0.5 * (((seed + vkey) % 2) + 1)
-            g = 0.25 * (gg - 210)
-            xr = np.array(spectra(f, 0, c), dtype=float)
-            xr = np.sign(xr) * np.abs(xr) ** (4.0 / 3.0)
-            xr *= 2.0 ** g
-            for band in range(21):
-                pre = _MP3_PRETAB[band] if preflag else 0
-                xr[sfb[band]:sfb[band + 1]] *= 2.0 ** (-mult * (sf[band] + pre))
-            return xr
-
-        v_fifo = [np.zeros(1024), np.zeros(1024)]
-        overlap = [np.zeros((32, 18)), np.zeros((32, 18))]
-        pcm = [[], []]
-        bound = 8
-        for f in range(n_frames):
-            sf_l, _, _, pre_l = lsf_sf(f, 0)
-            sf_r, ill_r, iscale, _ = lsf_sf(f, 1)
-            xl = requant(f, 0, sf_l, pre_l)
-            xr_ = requant(f, 1, sf_r, 0)
-            L, R = xl.copy(), xr_.copy()
-            L[:bound] = (xl[:bound] + xr_[:bound]) / math.sqrt(2.0)
-            R[:bound] = (xl[:bound] - xr_[:bound]) / math.sqrt(2.0)
-            for band in range(len(sfb) - 1):
-                lo, hi = sfb[band], sfb[band + 1]
-                if lo < bound:
-                    continue
-                j = band if band < 21 else 20
-                is_pos, illegal = sf_r[j], ill_r[j]
-                if is_pos == illegal:
-                    m, s = xl[lo:hi].copy(), xr_[lo:hi].copy()
-                    L[lo:hi] = (m + s) / math.sqrt(2.0)
-                    R[lo:hi] = (m - s) / math.sqrt(2.0)
-                    continue
-                v = xl[lo:hi].copy()
-                if is_pos == 0:
-                    kl = kr = 1.0
-                else:
-                    t = 2.0 ** (-(iscale + 1) * ((is_pos + 1) >> 1) / 2.0)
-                    kl, kr = (t, 1.0) if is_pos & 1 else (1.0, t)
-                L[lo:hi] = v * kl
-                R[lo:hi] = v * kr
-            for c, xr in enumerate((L, R)):
-                for b in range(1, 32):
-                    for i, ci in enumerate(_MP3_CI):
-                        cs = 1 / math.sqrt(1 + ci * ci)
-                        ca = ci / math.sqrt(1 + ci * ci)
-                        lo_, hi_ = 18 * b - 1 - i, 18 * b + i
-                        a_, u_ = xr[lo_], xr[hi_]
-                        xr[lo_] = a_ * cs - u_ * ca
-                        xr[hi_] = u_ * cs + a_ * ca
-                slot = np.zeros((32, 18))
-                for sb in range(32):
-                    x36 = w_norm * (im18 @ xr[18 * sb: 18 * sb + 18])
-                    slot[sb] = x36[:18] + overlap[c][sb]
-                    overlap[c][sb] = x36[18:]
-                for sb in range(1, 32, 2):
-                    slot[sb, 1::2] *= -1.0
-                for t in range(18):
-                    v_fifo[c] = np.concatenate([N @ slot[:, t], v_fifo[c][:960]])
-                    u = np.zeros(512)
-                    for i in range(8):
-                        u[64 * i: 64 * i + 32] = v_fifo[c][128 * i: 128 * i + 32]
-                        u[64 * i + 32: 64 * i + 64] = \
-                            v_fifo[c][128 * i + 96: 128 * i + 128]
-                    pcm[c].extend((u * D).reshape(16, 32).sum(axis=0))
-        inter = np.empty(2 * len(pcm[0]))
-        inter[0::2], inter[1::2] = pcm[0], pcm[1]
-        ints = np.clip(np.rint(inter * 32768.0), -32768, 32767).astype(np.int32)
-        want = ((ints >> 8) + 128).astype(np.uint8)
-        got_arr = np.frombuffer(got, np.uint8)
-        diff = np.abs(got_arr.astype(int) - want.astype(int))
-        assert int(diff.max()) <= 1, int(diff.max())
-        assert np.count_nonzero(got_arr != 128) > 100
-    finally:
-        register_mp3_tables(None)
-
-
-def test_synthesize_mp3_lsf_decodes_distributed(spark):
-    """r10 LSF end-to-end through the Spark plumbing: executor-side
-    MPEG-2/2.5 encode → Arrow mapInPandas decode; silence closed form
-    n = 576·frames per channel, channel count by doc_id % 4."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        synthesize_mp3_lsf,
-    )
-
-    docs = spark.range(0, 24).withColumnRenamed("id", "doc_id")
-    rows = {r["media_id"]: r
-            for r in decode_media(synthesize_mp3_lsf(docs)).collect()}
-    assert len(rows) == 24
-    for d in range(24):
-        n = 576 * (1 + d % 3)
-        nch = 1 if d % 4 == 0 else 2
-        assert rows[d]["width"] == n and rows[d]["height"] == nch
-        assert rows[d]["n_bytes"] == nch * n
-        assert rows[d]["body_sum"] == 128 * nch * n
-
-
-def test_mp3_free_format_frame_size_recovery():
-    """r10 free format (§2.4.2.3 bitrate_index 0): the decoder recovers
-    the constant frame size by scanning for the next matching syncword
-    — across MPEG-1 / MPEG-2 / 2.5 Layer III and Layer I, mono and
-    stereo, with and without padding/CRC/reservoir, including the
-    single-frame stream that extends to the payload end."""
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        encode_layer1,
-        encode_mp3,
-    )
-
-    for i in range(36):
-        ver = (1, 2, 25)[i % 3]
-        mode = 3 if i % 2 == 0 else 0
-        nch = 1 if mode == 3 else 2
-        p = encode_mp3(1 + i % 3, fs_index=i % 3, bitrate_index=0,
-                       free_format_kbps=72 + 8 * (i % 4), seed=i % 251,
-                       padding=i % 2, protection=i % 5 == 0,
-                       reservoir_slack=4 if i % 7 == 0 else 0,
-                       mode=mode, version=ver)
-        n, ch, body = _decode_mp3(p)
-        spg = 1152 if ver == 1 else 576
-        assert (n, ch) == (spg * (1 + i % 3), nch)
-        assert set(body) == {128}
-    # Layer I free format (4-byte padding slot)
-    for frames in (1, 3):
-        p = encode_layer1(frames, fs_index=0, bitrate_index=0,
-                          free_format_kbps=96, padding=1)
-        n, ch, body = _decode_mp3(p)
-        assert (n, ch) == (384 * frames, 1) and set(body) == {128}
-    # the encoder validates the pairing
-    with _pt.raises(ValueError, match="free format needs"):
-        encode_mp3(1, bitrate_index=0)
-    with _pt.raises(ValueError, match="free format needs"):
-        encode_mp3(1, bitrate_index=9, free_format_kbps=64)
-
-
-def test_layer1_silence_and_gates():
-    """r10 MPEG-1 Layer I: silence streams (all allocations 0) across
-    modes/bitrates/rates/CRC/padding decode to exactly 384·frames zero
-    samples per channel with NO table data. The named guards raise:
-    forbidden allocation 15, scalefactor index 63, Layer I intensity
-    mode, reserved layer bits, MPEG-2 Layer I, mid-stream layer change."""
-    import pytest as _pt
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        encode_layer1,
-        encode_mp3,
-    )
-
-    for i in range(30):
-        mode = (3, 0, 2)[i % 3]
-        nch = 1 if mode == 3 else 2
-        p = encode_layer1(1 + i % 3, fs_index=i % 3,
-                          bitrate_index=(1 + i % 14) if nch == 1 else (2 + i % 13),
-                          protection=i % 5 == 0, padding=i % 2, mode=mode)
-        n, ch, body = _decode_mp3(p)
-        assert (n, ch) == (384 * (1 + i % 3), nch)
-        assert set(body) == {128}
-
-    base = bytearray(encode_layer1(1, bitrate_index=9))
-    b = bytearray(base); b[4] |= 0xF0  # first allocation -> 15
-    with _pt.raises(ValueError, match="forbidden Layer I allocation"):
-        _decode_mp3(bytes(b))
-    b = bytearray(base); b[4] |= 0x20  # alloc 2 on subband 0, sf bits all 1
-    b[20] = 0xFF  # alloc area is 16 bytes (mono); sf index -> 63
-    with _pt.raises(ValueError, match="scalefactor index 63"):
-        _decode_mp3(bytes(b))
-    b = bytearray(base); b[3] = (1 << 6) | (1 << 2)  # joint stereo mode
-    with _pt.raises(NotImplementedError, match="Layer I intensity"):
-        _decode_mp3(bytes(b))
-    b = bytearray(base); b[1] &= ~0x06  # layer bits 00
-    with _pt.raises(ValueError, match="reserved MPEG layer"):
-        _decode_mp3(bytes(b))
-    b = bytearray(base); b[1] &= ~0x08  # version -> MPEG-2, layer I
-    with _pt.raises(NotImplementedError, match="MPEG-2/2.5 Layer I"):
-        _decode_mp3(bytes(b))
-    with _pt.raises(ValueError, match="layer changed mid-stream"):
-        _decode_mp3(encode_mp3(1, bitrate_index=9) + bytes(base))
-    with _pt.raises(NotImplementedError, match="Layer II"):
-        b = bytearray(base); b[1] = (b[1] & ~0x06) | 0x04
-        _decode_mp3(bytes(b))
-
-
-def test_layer1_nonzero_requant_matches_independent_spec_math():
-    """r10 Layer I nonzero path: real allocations/scalefactors/sample
-    codes through §2.4.3.1 requantization (s'' =
-    (2^nb/(2^nb−1))·(c·2^(1−nb)−1+2^(1−nb)), scalefactor 2·2^(−idx/3))
-    and the polyphase synthesis, vs independent numpy math — mono and
-    stereo with different per-channel subband plans."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        encode_layer1,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    register_mp3_tables(tables)
-    try:
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-
-        def plan(f, ch):
-            rows = [(0, 2, 3 + f, [(j * 3 + f + ch) % 8 for j in range(12)]),
-                    (5, 4, 10 + 2 * ch, [(j * 7 + f) % 32 for j in range(12)])]
-            if ch == 1:
-                rows.append((17, 1, 0, [j % 4 for j in range(12)]))
-            return rows
-
-        for mode, nch in ((3, 1), (0, 2)):
-            n_frames = 2
-            payload = encode_layer1(n_frames, fs_index=1, bitrate_index=9,
-                                    mode=mode, samples=plan)
-            n, ch, got = _decode_mp3(payload)
-            assert (n, ch) == (384 * n_frames, nch)
-
-            v_fifo = [np.zeros(1024) for _ in range(nch)]
-            pcm = [[] for _ in range(nch)]
-            for f in range(n_frames):
-                for s in range(12):
-                    for c in range(nch):
-                        vec = np.zeros(32)
-                        for sb, a, sf_idx, codes in plan(f, c):
-                            nb = a + 1
-                            sf = 2.0 * 2.0 ** (-sf_idx / 3.0)
-                            s3 = codes[s] * 2.0 ** (1 - nb) - 1.0
-                            s2 = (2.0 ** nb / (2.0 ** nb - 1.0)) * (
-                                s3 + 2.0 ** (1 - nb))
-                            vec[sb] = sf * s2
-                        v_fifo[c] = np.concatenate([N @ vec, v_fifo[c][:960]])
-                        u = np.zeros(512)
-                        for i in range(8):
-                            u[64 * i: 64 * i + 32] = v_fifo[c][128 * i: 128 * i + 32]
-                            u[64 * i + 32: 64 * i + 64] = \
-                                v_fifo[c][128 * i + 96: 128 * i + 128]
-                        pcm[c].extend((u * D).reshape(16, 32).sum(axis=0))
-            inter = np.empty(nch * len(pcm[0]))
-            for c in range(nch):
-                inter[c::nch] = pcm[c]
-            ints = np.clip(np.rint(inter * 32768.0), -32768, 32767).astype(np.int32)
-            want = ((ints >> 8) + 128).astype(np.uint8)
-            got_arr = np.frombuffer(got, np.uint8)
-            diff = np.abs(got_arr.astype(int) - want.astype(int))
-            assert int(diff.max()) <= 1, (mode, int(diff.max()))
-            assert np.count_nonzero(got_arr != 128) > 100, mode
-    finally:
-        register_mp3_tables(None)
-
-
-def test_free_format_false_sync_rejected_by_stride_check():
-    """r11 (ADVICE): a spurious 0xFF+matching-header byte pattern inside
-    the FIRST free-format frame's main data must not mis-size the
-    stream. _mp3_free_format_len now accepts a candidate only when up
-    to three subsequent frame boundaries land on matching syncwords at
-    the derived stride (what real decoders do); the injected fake sync
-    fails that walk and the scan resumes to the true boundary."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        _mp3_free_format_len,
-        encode_layer1,
-    )
-
-    p = bytearray(encode_layer1(4, fs_index=0, bitrate_index=0,
-                                free_format_kbps=64))
-    flen = 4 * ((12 * 64 * 1000) // 44100)
-    assert len(p) == 4 * flen
-    # Inject a fake sync (copy of the real 3 header bytes) into the
-    # zero-padded main data of frame 1, well before the true boundary.
-    p[20:23] = p[0:3]
-    assert _mp3_free_format_len(bytes(p), 0, 0, 4) == flen
-    n, nch, pcm = _decode_mp3(bytes(p))
-    assert (n, nch) == (384 * 4, 1)
-    assert not np.any(np.frombuffer(pcm, np.uint8) != 128)
-
-
-def test_layer1_spec_bit_order_subband_major():
-    """r11 (ADVICE): ISO 11172-3 audio_data() reads Layer I allocation
-    and scalefactors SUBBAND-major CHANNEL-minor. Hand-build a stereo
-    frame bit-for-bit in the spec's field order and assert it decodes
-    identically to encode_layer1's output for the same plan. A decoder
-    (or a consistent encoder+decoder pair) using channel-major ordering
-    scrambles the hand-built stream's per-channel allocations and fails
-    this test — round-trip tests alone cannot catch that."""
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _decode_mp3,
-        _FlacBitWriter,
-        encode_layer1,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    register_mp3_tables(tables)
-    try:
-        # ch0: sb0 alloc=2 (3-bit codes); ch1: sb3 alloc=4 (5-bit codes)
-        plan_rows = {(0, 0): (2, 5, [(3 * j) % 8 for j in range(12)]),
-                     (1, 3): (4, 12, [(7 * j + 1) % 32 for j in range(12)])}
-
-        def plan(f, ch):
-            return [(sb, a, sfi, codes)
-                    for (c, sb), (a, sfi, codes) in plan_rows.items()
-                    if c == ch]
-
-        enc = encode_layer1(1, fs_index=1, bitrate_index=9, mode=0,
-                            samples=plan)
-
-        # Hand-built twin, field order straight from the spec text.
-        flen = 4 * ((12 * 288 * 1000) // 48000)  # bitrate_index 9 @ 48k
-        hand = bytearray([0xFF, 0xFF, 0x94, 0x04])  # stereo, no CRC
-        w = _FlacBitWriter()
-        for sb in range(32):                      # allocation: sb-major
-            for ch in range(2):
-                w.write(plan_rows.get((ch, sb), (0,))[0], 4)
-        for sb in range(32):                      # scalefactors: sb-major
-            for ch in range(2):
-                if (ch, sb) in plan_rows:
-                    w.write(plan_rows[(ch, sb)][1], 6)
-        for s in range(12):                       # samples: grain, sb, ch
-            for sb in range(32):
-                for ch in range(2):
-                    if (ch, sb) in plan_rows:
-                        a, _, codes = plan_rows[(ch, sb)]
-                        w.write(codes[s], a + 1)
-        w.align()
-        hand += bytes(w.out).ljust(flen - 4, b"\x00")
-        assert len(hand) == flen
-        assert bytes(hand) == enc  # encoder writes the spec order
-
-        n_h, nch_h, pcm_h = _decode_mp3(bytes(hand))
-        n_e, nch_e, pcm_e = _decode_mp3(enc)
-        assert (n_h, nch_h) == (n_e, nch_e) == (384, 2)
-        assert pcm_h == pcm_e
-        assert np.count_nonzero(
-            np.frombuffer(pcm_h, np.uint8) != 128) > 50
-    finally:
-        register_mp3_tables(None)
-
-
-def test_synthesize_layer1_decodes_distributed(spark):
-    """r10 Layer I end-to-end through the Spark plumbing: executor-side
-    encode → Arrow mapInPandas decode; silence closed form
-    n = 384·frames per channel, channel count by doc_id % 3."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        synthesize_layer1,
-    )
-
-    docs = spark.range(0, 24).withColumnRenamed("id", "doc_id")
-    rows = {r["media_id"]: r
-            for r in decode_media(synthesize_layer1(docs)).collect()}
-    assert len(rows) == 24
-    for d in range(24):
-        n = 384 * (1 + d % 3)
-        nch = 1 if d % 3 == 0 else 2
-        assert rows[d]["width"] == n and rows[d]["height"] == nch
-        assert rows[d]["n_bytes"] == nch * n
-        assert rows[d]["body_sum"] == 128 * nch * n
-
-
-def test_mp3_window_switching_dsp_matches_independent_spec_math():
-    """r8 window-switching coverage: a start → short → stop → long
-    granule sequence AND a mixed-block stream, with NONZERO spectra and
-    per-window subblock gains, decoded through the full pipeline and
-    compared against an independent numpy implementation of the spec's
-    short/mixed formulas (requant with subblock_gain, reorder, the
-    single mixed alias boundary, 12-point IMDCT with +6-offset window
-    overlap, start/stop long windows)."""
-    import math
-
-    import numpy as np
-
-    from jasminegraph_spark.pipeline.multimodal import (
-        _MP3_CI,
-        _MP3_SLEN,
-        _decode_mp3,
-        encode_mp3,
-        register_mp3_tables,
-    )
-
-    tables = _mp3_test_tables()
-    register_mp3_tables(tables)
-    try:
-        sfb_l = tables["sfb_long"][48000]
-        sfb_s = tables["sfb_short"][48000]
-        D = np.asarray(tables["synth_window"])
-        N = np.array([[math.cos((16 + i) * (2 * j + 1) * math.pi / 64)
-                       for j in range(32)] for i in range(64)])
-        im18 = np.array([[math.cos(math.pi / 72 * (2 * n + 1 + 18) * (2 * k + 1))
-                          for k in range(18)] for n in range(36)])
-        im12 = np.array([[math.cos(math.pi / 24 * (2 * n + 1 + 6) * (2 * k + 1))
-                          for k in range(6)] for n in range(12)])
-        w_norm = np.array([math.sin(math.pi / 36 * (n + 0.5)) for n in range(36)])
-        w_start = np.array([math.sin(math.pi / 36 * (n + 0.5)) for n in range(18)]
-                           + [1.0] * 6
-                           + [math.sin(math.pi / 12 * (n - 24 + 0.5)) for n in range(24, 30)]
-                           + [0.0] * 6)
-        w_stop = np.array([0.0] * 6
-                          + [math.sin(math.pi / 12 * (n - 6 + 0.5)) for n in range(6, 12)]
-                          + [1.0] * 6
-                          + [math.sin(math.pi / 36 * (n + 0.5)) for n in range(18, 36)])
-        w_short12 = np.array([math.sin(math.pi / 12 * (n + 0.5)) for n in range(12)])
-
-        def ref_decode(n_frames, seed, plan, spectra):
-            overlap = np.zeros((32, 18))
-            v_fifo = np.zeros(1024)
-            pcm = []
-            for f in range(n_frames):
-                for gr in range(2):
-                    bt, mixed, sbg = plan(f, gr)
-                    vals = np.array(spectra(f, gr), dtype=float)
-                    compress = (seed + f * 2 + gr) % 16
-                    s1, s2 = _MP3_SLEN[compress]
-                    gg = (seed * 7 + f * 13 + gr * 29) % 256
-                    mult = 0.5 * (((seed + gr) % 2) + 1)
-                    g = 0.25 * (gg - 210)
-                    xr = np.sign(vals) * np.abs(vals) ** (4.0 / 3.0)
-                    if bt == 2 and not mixed:
-                        for sfb in range(12):
-                            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-                            slen = s1 if sfb < 6 else s2
-                            for w in range(3):
-                                sf = ((sfb * 5 + w * 3 + seed + gr) % (1 << slen)
-                                      if slen else 0)
-                                s = 3 * lo + (hi - lo) * w
-                                xr[s:s + hi - lo] *= 2.0 ** (g - 2.0 * sbg[w] - mult * sf)
-                        nat = xr.copy()
-                        for sfb in range(12):
-                            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-                            width = hi - lo
-                            blk = xr[3 * lo: 3 * hi]
-                            for w in range(3):
-                                for i in range(width):
-                                    nat[3 * lo + 3 * i + w] = blk[w * width + i]
-                        xr = nat  # no alias reduction for pure short
-                    elif bt == 2 and mixed:
-                        for sfb in range(8):
-                            slen = s1
-                            sf = ((sfb * 5 + seed + gr) % (1 << slen)) if slen else 0
-                            lo, hi = sfb_l[sfb], sfb_l[sfb + 1]
-                            xr[lo:hi] *= 2.0 ** (g - mult * sf)
-                        for sfb in range(3, 12):
-                            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-                            slen = s1 if sfb < 6 else s2
-                            for w in range(3):
-                                sf = ((sfb * 5 + w * 3 + seed + gr) % (1 << slen)
-                                      if slen else 0)
-                                s = 3 * lo + (hi - lo) * w
-                                xr[s:s + hi - lo] *= 2.0 ** (g - 2.0 * sbg[w] - mult * sf)
-                        nat = xr.copy()
-                        for sfb in range(3, 12):
-                            lo, hi = sfb_s[sfb], sfb_s[sfb + 1]
-                            width = hi - lo
-                            blk = xr[3 * lo: 3 * hi]
-                            for w in range(3):
-                                for i in range(width):
-                                    nat[3 * lo + 3 * i + w] = blk[w * width + i]
-                        xr = nat
-                        for i, ci in enumerate(_MP3_CI):  # one boundary
-                            cs = 1 / math.sqrt(1 + ci * ci)
-                            ca = ci / math.sqrt(1 + ci * ci)
-                            lo_, hi_ = 17 - i, 18 + i
-                            xl, xu = xr[lo_], xr[hi_]
-                            xr[lo_] = xl * cs - xu * ca
-                            xr[hi_] = xu * cs + xl * ca
-                    else:
-                        sf_vals = [(j * 5 + seed + gr) % (1 << (s1 if j < 11 else s2))
-                                   if (s1 if j < 11 else s2) else 0 for j in range(21)]
-                        xr *= 2.0 ** g
-                        for band in range(21):
-                            xr[sfb_l[band]:sfb_l[band + 1]] *= 2.0 ** (-mult * sf_vals[band])
-                        for b in range(1, 32):
-                            for i, ci in enumerate(_MP3_CI):
-                                cs = 1 / math.sqrt(1 + ci * ci)
-                                ca = ci / math.sqrt(1 + ci * ci)
-                                lo_, hi_ = 18 * b - 1 - i, 18 * b + i
-                                xl, xu = xr[lo_], xr[hi_]
-                                xr[lo_] = xl * cs - xu * ca
-                                xr[hi_] = xu * cs + xl * ca
-                    slot = np.zeros((32, 18))
-                    for sb in range(32):
-                        lines = xr[18 * sb: 18 * sb + 18]
-                        if bt == 2 and not (mixed and sb < 2):
-                            x36 = np.zeros(36)
-                            for w in range(3):
-                                z = im12 @ np.array([lines[3 * k + w] for k in range(6)])
-                                x36[6 + 6 * w: 18 + 6 * w] += z * w_short12
-                        else:
-                            wsel = (w_norm if (mixed and sb < 2) or bt == 0
-                                    else w_start if bt == 1 else w_stop)
-                            x36 = wsel * (im18 @ lines)
-                        slot[sb] = x36[:18] + overlap[sb]
-                        overlap[sb] = x36[18:]
-                    for sb in range(1, 32, 2):
-                        slot[sb, 1::2] *= -1.0
-                    for t in range(18):
-                        v_fifo = np.concatenate([N @ slot[:, t], v_fifo[:960]])
-                        u = np.zeros(512)
-                        for i in range(8):
-                            u[64 * i: 64 * i + 32] = v_fifo[128 * i: 128 * i + 32]
-                            u[64 * i + 32: 64 * i + 64] = v_fifo[128 * i + 96: 128 * i + 128]
-                        pcm.extend((u * D).reshape(16, 32).sum(axis=0))
-            ints = np.clip(np.rint(np.asarray(pcm) * 32768.0), -32768, 32767).astype(np.int32)
-            return ((ints >> 8) + 128).astype(np.uint8).tobytes()
-
-        def spectra(f, gr):
-            vals = [0] * 576
-            rng = np.random.RandomState(31 + f * 2 + gr)
-            for i in rng.choice(36, size=10, replace=False):
-                vals[int(i)] = int(rng.randint(-17, 18))
-            for i in range(36, 44):
-                vals[i] = int(rng.randint(-1, 2))
-            return vals
-
-        seq = [(1, 0, [0, 0, 0]), (2, 0, [0, 1, 2]), (3, 0, [0, 0, 0]), (0, 0, [0, 0, 0])]
-        for name, plan in [
-            ("start-short-stop-long", lambda f, gr: seq[(f * 2 + gr) % 4]),
-            ("mixed", lambda f, gr: (2, 1, [1, 0, 2])),
-        ]:
-            payload = encode_mp3(2, fs_index=1, bitrate_index=14, seed=210,
-                                 spectra=spectra, table_id=1, block_plan=plan)
-            n, ch, got = _decode_mp3(payload)
-            assert (n, ch) == (2304, 1), name
-            want = ref_decode(2, 210, plan, spectra)
-            diff = np.abs(np.frombuffer(got, np.uint8).astype(int)
-                          - np.frombuffer(want, np.uint8).astype(int))
-            assert int(diff.max()) <= 1, (name, int(diff.max()))
-            assert np.count_nonzero(np.frombuffer(got, np.uint8) != 128) > 200, name
-    finally:
-        register_mp3_tables(None)
-
-
 def test_native_dispatch_order_and_fallback(monkeypatch):
     """r12 (VERDICT r11 ask #2): the native-codec seam is CODE, not
     prose. With a (fake) PIL present, _decode_one must dispatch a PNG
@@ -3126,10 +602,8 @@ def test_native_dispatch_order_and_fallback(monkeypatch):
 def test_native_decode_parity_images():
     """Skipped-if-absent parity row (VERDICT r11 ask #2): with a REAL
     PIL installed, the native path must produce byte-identical pixels to
-    the pure-Python PNG and baseline-JPEG decoders on the driver
-    fixtures (lossless PNG exactly; the JPEG fixtures carry DC-only
-    blocks on unit quant tables, so every conforming IDCT lands on the
-    same integers)."""
+    the pure-Python PNG decoder on the driver fixtures (lossless, so
+    exactly)."""
     pytest.importorskip("PIL")
 
     from jasminegraph_spark.pipeline import multimodal as mm
@@ -3139,20 +613,6 @@ def test_native_decode_parity_images():
         body = bytes(((j * 31 + seed) % 251) for j in range(w * h))
         png = mm.encode_png(w, h, body, channels=1)
         assert mm._decode_native(png) == mm._decode_png(png)
-
-        wb, hb = 1 + seed % 3, 1 + seed % 2
-        blocks = []
-        import numpy as np
-
-        for by in range(hb):
-            for bx in range(wb):
-                blk = np.zeros(64, np.int64)
-                blk[0] = 8 * (int((seed + 17 * bx + 37 * by) % 251) - 128)
-                blocks.append(blk)
-        # fixture-faithful stream: the same constant-block encoder the
-        # driver rows use
-        jpg = mm.encode_jpeg_progressive(wb * 8, hb * 8, blocks)
-        assert mm._decode_native(jpg) == mm._decode_jpeg_progressive(jpg)
 
 
 def test_native_decode_parity_flac():
@@ -3242,93 +702,3 @@ def test_native_png_dispatch_guards_ihdr(monkeypatch):
         assert mm._decode_native(bytes(b)) is None, f"IHDR[{offset}]={value}"
     # truncated / IHDR-less streams also stay off the native path
     assert mm._decode_native(good[:20]) is None
-
-
-def test_native_jpeg_dispatch_guards_sof(monkeypatch):
-    """ADVICE r12 (JPEG analog of the PNG IHDR guard): with PIL present,
-    only frames the pure decoders accept — SOF0/SOF2, precision 8, 1 or 3
-    components, 8-bit DQT — take the native path. Extended/lossless/
-    arithmetic SOFn, 4-component, 12-bit, and Pq=1 streams return None so
-    the authoritative NotImplementedError fires from the pure path."""
-    from jasminegraph_spark.pipeline import multimodal as mm
-
-    sentinel = (1, 1, b"\x2a")
-
-    class _FakeImage:
-        @staticmethod
-        def open(fp):
-            raise AssertionError("guard must decide before any decode")
-
-    monkeypatch.setattr(mm, "_NATIVE_LIBS", {"Image": _FakeImage})
-    monkeypatch.setattr(mm, "_pil_luma", lambda payload: sentinel)
-
-    good = mm.encode_jpeg_gray(8, 8, bytes([100]) * 64)
-    assert mm._decode_native(good) == sentinel
-
-    def _seg_off(payload, marker):
-        pos = 2
-        while pos + 4 <= len(payload):
-            m = payload[pos + 1]
-            if m == marker:
-                return pos
-            pos += 2 + int.from_bytes(payload[pos + 2 : pos + 4], "big")
-        raise AssertionError(f"marker {marker:#x} not found")
-
-    sof = _seg_off(good, 0xC0)
-    for mutate, label in (
-        (lambda b: b.__setitem__(sof + 1, 0xC1), "SOF1 extended"),
-        (lambda b: b.__setitem__(sof + 1, 0xC3), "SOF3 lossless"),
-        (lambda b: b.__setitem__(sof + 1, 0xCA), "SOF10 arithmetic"),
-        (lambda b: b.__setitem__(sof + 4, 12), "12-bit precision"),
-        (lambda b: b.__setitem__(sof + 9, 4), "4 components"),
-        (lambda b: b.__setitem__(_seg_off(b, 0xDB) + 4, 0x10), "Pq=1 DQT"),
-    ):
-        b = bytearray(good)
-        mutate(b)
-        assert mm._decode_native(bytes(b)) is None, label
-
-
-def test_mp3_stays_on_pure_path(monkeypatch):
-    """VERDICT r12 ask #4 (decision: no MPEG-audio native dispatch).
-    ISO/IEC 11172-4 conformance is an RMS error bound, not bit-exactness,
-    so a native MP3 decode would produce environment-dependent bytes under
-    the value-hash contract — _decode_native must never claim an MP3
-    stream, even with a (fake) soundfile present. SCALE.md §Codec descope
-    records the decision."""
-    from jasminegraph_spark.pipeline import multimodal as mm
-
-    class _FakeSf:
-        @staticmethod
-        def read(fp, dtype=None, always_2d=None):
-            raise AssertionError("MP3 must not reach a native decoder")
-
-    monkeypatch.setattr(mm, "_NATIVE_LIBS", {"soundfile": _FakeSf})
-    payload = mm.encode_mp3(3)
-    assert payload[0] == 0xFF and (payload[1] & 0xE0) == 0xE0
-    assert mm._decode_native(payload) is None
-    # the pure decoder remains the authoritative path end-to-end
-    n, ch, data = mm._decode_one(payload, kind="audio")
-    assert set(data) == {128}  # digital silence folds to exactly 128
-
-
-def test_mp3_silence_native_agreement():
-    """Skipped-if-absent evidence row for the no-dispatch decision: on the
-    driver's silence fixtures every conformant decoder emits exact-zero
-    samples (all DSP stages are linear, so zero spectra stay zero), hence
-    the upper-byte+128 fold is all-128 on the pure AND native paths. Frame
-    COUNTS may legitimately differ (gapless/decoder-delay handling varies
-    by library) — exactly why the dispatch stays off for nonzero audio —
-    so only the sample VALUES are compared."""
-    sf = pytest.importorskip("soundfile")
-
-    from jasminegraph_spark.pipeline import multimodal as mm
-
-    payload = mm.encode_mp3(4, fs_index=0, bitrate_index=9)
-    n, ch, pure = mm._decode_mp3(payload)
-    assert set(pure) == {128}
-    native = mm._sf_samples(payload)
-    if native is None:
-        pytest.skip("libsndfile build lacks MP3 support")
-    n2, ch2, data2 = native
-    assert ch2 == ch
-    assert set(data2) <= {128}

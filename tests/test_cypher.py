@@ -318,6 +318,12 @@ def test_write_clauses_set_delete_merge(spark, tmp_path):
         " (c:Person {id: 'p3', name: 'Cam'})",
     )
     assert stats == {"nodes_created": 3, "edges_created": 1}
+    # the counts come from the rows CREATE built; one without edges
+    # appends no edge rows
+    stats = cypher_write(spark, gp, "CREATE (d:Person {id: 'p4', name: 'Dot'})")
+    assert stats == {"nodes_created": 1, "edges_created": 0}
+    g = GraphCatalog(spark).load("wg", str(tmp_path), is_directed=True)
+    assert g.vertex_count() == 4 and g.edge_count() == 1
 
     # SET updates only matched nodes, overwriting existing keys
     stats = cypher_write(spark, gp, "MATCH (n:Person) WHERE n.name = 'Ann' SET n.age = 31")
@@ -807,12 +813,13 @@ def test_match_create_relationship(spark, tmp_path):
     from jasminegraph_spark.graph import GraphCatalog
 
     gp = str(tmp_path / "rg")
-    cypher_write(
+    created = cypher_write(
         spark,
         gp,
         "CREATE (a:City {id: 'c1', name: 'Ank'}), (b:City {id: 'c2', name: 'Bos'}),"
         " (c:Person {id: 'p1', home: 'c1'})",
     )
+    assert created == {"nodes_created": 3, "edges_created": 0}
     stats = cypher_write(
         spark, gp, "MATCH (p:Person), (c:City {name: 'Ank'}) CREATE (p)-[:LIVES_IN]->(c)"
     )

@@ -188,36 +188,6 @@ def test_bucketed_graph_expand_avoids_shuffle(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
 
 
-def test_salted_agg_exact_and_two_stage(spark):
-    """Salted aggregation must be exact vs plain groupBy, and the plan
-    must show the two aggregation phases around two exchanges."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from jasminegraph_spark.operators.skew import salted_agg
-
-    rnd = random.Random(3)
-    # heavy skew: 90% of rows share one key
-    rows = [("hot" if rnd.random() < 0.9 else f"k{rnd.randrange(20)}", rnd.randrange(1000))
-            for _ in range(5000)]
-    df = spark.createDataFrame(rows, ["k", "v"])
-    got = {
-        r["k"]: (r["n"], r["total"], r["mx"])
-        for r in salted_agg(
-            df, ["k"],
-            {"n": (F.count("*"), "sum"), "total": (F.sum("v"), "sum"), "mx": (F.max("v"), "max")},
-        ).collect()
-    }
-    want = {
-        r["k"]: (r["n"], r["total"], r["mx"])
-        for r in df.groupBy("k")
-        .agg(F.count("*").alias("n"), F.sum("v").alias("total"), F.max("v").alias("mx"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_link_prediction_stays_equi_join(q):
     """Wedge enumeration + scoring must be hash/sort-merge equi-joins —
     a cartesian over the adjacency would be |E|² at scale."""

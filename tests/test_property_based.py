@@ -403,51 +403,6 @@ def test_mis_independent_maximal_deterministic(spark, edges):
 @settings(max_examples=8, deadline=None)
 @given(
     st.lists(
-        st.text(alphabet="abc", min_size=1, max_size=6), min_size=2, max_size=12
-    )
-)
-def test_bpe_train_matches_sennrich_on_random_corpora(spark, words):
-    """The double-space boundary-invariant replace scheme ≡ a literal
-    Sennrich merge loop on arbitrary corpora — including runs (aaa…)
-    where a single-space encoding provably diverges."""
-    from collections import Counter
-
-    from jasminegraph_spark.pipeline.bpe import bpe_train
-
-    docs = spark.createDataFrame([(0, " ".join(words))], ["doc_id", "text"])
-    wc = Counter(tuple(w) for w in words)
-    expected = []
-    for _ in range(4):
-        pairs = Counter()
-        for syms, c in wc.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] += c
-        if not pairs:
-            break
-        (l, r), freq = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        expected.append((l, r, freq))
-        nw = Counter()
-        for syms, c in wc.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            nw[tuple(out)] += c
-        wc = nw
-    got = [
-        (r["left"], r["right"], r["freq"])
-        for r in bpe_train(docs, n_merges=4).orderBy("rank").collect()
-    ]
-    assert got == expected
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
         st.lists(st.sampled_from("xyz"), min_size=4, max_size=14),
         min_size=2,
         max_size=5,
@@ -541,62 +496,6 @@ def test_node2vec_walks_match_reference(spark, edges):
         for r in node2vec_walks(df, sources, length=LEN, p=P, q=Q).collect()
     )
     assert got == sorted(expected)
-
-
-@settings(max_examples=6, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=9), min_size=2, max_size=4),
-)
-@pytest.mark.sweep  # r14: multi-minute quality/property row -> sweep tier (see pyproject)
-def test_bpe_batched_equals_sequential_on_disjoint_alphabets(spark, freqs):
-    """batch_k>1 ≡ the sequential Sennrich loop whenever the round's top
-    merges have disjoint symbol support (r5 verdict #4): words drawn from
-    per-slot disjoint alphabets guarantee non-interaction, so ranks,
-    pairs, and freqs must match the one-merge-per-job loop exactly."""
-    from jasminegraph_spark.pipeline.bpe import bpe_train
-
-    alphabet = [("a", "b"), ("c", "d"), ("e", "f"), ("g", "h")]
-    # distinct frequencies → unambiguous rank order under (freq, l, r)
-    uniq = {}
-    for i, f in enumerate(freqs):
-        uniq[alphabet[i]] = f + sum(1 for j, g in enumerate(freqs[:i]) if g == f)
-    words = []
-    for (l, r), f in uniq.items():
-        words += [l + r] * f
-    docs = spark.createDataFrame([(0, " ".join(words))], ["doc_id", "text"])
-    n = len(uniq)
-    seq = [
-        (r["rank"], r["left"], r["right"], r["freq"])
-        for r in bpe_train(docs, n_merges=n, batch_k=1).orderBy("rank").collect()
-    ]
-    bat = [
-        (r["rank"], r["left"], r["right"], r["freq"])
-        for r in bpe_train(docs, n_merges=n, batch_k=n).orderBy("rank").collect()
-    ]
-    assert bat == seq
-
-
-def test_bpe_batched_deterministic_and_disjoint_per_round(spark):
-    """Batched rounds are deterministic and never take interacting pairs
-    in one round: on a corpus engineered so the top-2 pairs share a
-    symbol ('ab' then 'bc' sharing b), batch_k=2 must defer the
-    conflicting pair, and re-runs are identical."""
-    from jasminegraph_spark.pipeline.bpe import bpe_train
-
-    text = " ".join(["ab"] * 9 + ["bc"] * 7 + ["abc"] * 2)
-    docs = spark.createDataFrame([(0, text)], ["doc_id", "text"])
-    m1 = [
-        (r["rank"], r["left"], r["right"])
-        for r in bpe_train(docs, n_merges=3, batch_k=2).orderBy("rank").collect()
-    ]
-    m2 = [
-        (r["rank"], r["left"], r["right"])
-        for r in bpe_train(docs, n_merges=3, batch_k=2).orderBy("rank").collect()
-    ]
-    assert m1 == m2
-    # round 1: (a,b) freq 11 taken; (b,c) shares b → deferred
-    assert m1[0] == (1, "a", "b")
-    assert m1[1][0] == 2  # second merge exists, from a later round
 
 
 @settings(max_examples=8, deadline=None)

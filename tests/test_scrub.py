@@ -199,82 +199,6 @@ def test_gopher_rules(spark):
     assert out[7]["n_stop_hits"] == 0
 
 
-def test_bpe_train_matches_reference(spark):
-    """bpe_train ≡ a literal Sennrich-style Python BPE (pair counts
-    weighted by word frequency, greedy left-to-right merge application,
-    lexicographic tie-break) on a mixed corpus; encode applies the
-    learned merges with training semantics."""
-    from jasminegraph_spark.pipeline.bpe import bpe_encode, bpe_train
-
-    texts = [
-        "low lower lowest low low",
-        "new newer newest new",
-        "aaa aaaa aa banana bandana",
-    ]
-    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
-
-    # reference implementation
-    import re
-    from collections import Counter
-
-    words = Counter()
-    for t in texts:
-        for w in re.findall(r"[a-z0-9]+", t.lower()):
-            words[tuple(w)] += 1
-    expected = []
-    for _ in range(8):
-        pairs = Counter()
-        for syms, c in words.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] += c
-        if not pairs:
-            break
-        (l, r), freq = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        expected.append((l, r, freq))
-        new_words = Counter()
-        for syms, c in words.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_words[tuple(out)] += c
-        words = new_words
-
-    got = [
-        (r["left"], r["right"], r["freq"])
-        for r in bpe_train(docs, n_merges=8).orderBy("rank").collect()
-    ]
-    assert got == expected
-
-    enc = {
-        r["doc_id"]: r["n_bpe_tokens"]
-        for r in bpe_encode(docs, [(l, r) for l, r, _ in expected]).collect()
-    }
-    # doc 0 under the learned merges: recompute with the reference
-    def ref_encode(text):
-        n = 0
-        for w in re.findall(r"[a-z0-9]+", text.lower()):
-            syms = list(w)
-            for l, r, _ in expected:
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                        out.append(l + r)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            n += len(syms)
-        return n
-
-    assert enc == {i: ref_encode(t) for i, t in enumerate(texts)}
-
-
 def test_c4_rules(spark):
     """C4 line/page heuristics (Raffel et al. 2020 §2.2): terminal-punct
     + >=5-word + no-javascript line filter; lorem-ipsum / curly-brace /
