@@ -11,10 +11,12 @@ read-transform-replace snapshots of the nodes/edges tables:
             remain, matching Cypher semantics; DETACH removes them)
  * MERGE  — match-or-create on (labels, literal properties)
 
-Snapshot replace is write-to-temp + swap. On a real deployment this is a
-table-format transaction (Delta/Iceberg MERGE/DELETE); plain parquet
-directories keep the engine dependency-free here — the transform plans
-are identical either way.
+Snapshot replace writes beside the table and swaps it in by two renames
+(``_replace``); a store read heals a swap a crash cut short. On a real
+deployment this is a table-format transaction (Delta/Iceberg
+MERGE/DELETE); plain parquet directories keep the engine dependency-free
+here — the transform plans are identical either way. CREATE and
+MATCH … CREATE only append.
 """
 
 from __future__ import annotations
@@ -22,45 +24,64 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jasminegraph_spark import operators as ops
+from jasminegraph_spark.cache import checkpoint
 from jasminegraph_spark.cypher import ast
 from jasminegraph_spark.cypher.compiler import CypherCompileError, _Compiler, create_rows
 from jasminegraph_spark.cypher.parser import parse
-from jasminegraph_spark.graph import PropertyGraph
+from jasminegraph_spark.graph import PropertyGraph, read_store
 
 
 def _replace(df: DataFrame, path: str) -> None:
-    """Materialize ``df`` as the new content of ``path`` (temp + swap —
-    Spark cannot overwrite an input path it is lazily reading)."""
-    tmp = path.rstrip("/") + "__tmp"
+    """Materialize ``df`` as the new content of the table at ``path``.
+    Spark cannot overwrite an input path it is lazily reading, so the
+    content is written beside the table and swapped in by two renames:
+    ``path`` → ``path__old``, ``path__tmp`` → ``path``, then ``__old`` is
+    deleted. A crash at any step leaves the old or the new table, and
+    the next store read (``graph.heal_table``) tidies up."""
+    path = path.rstrip("/")
+    tmp, old = f"{path}__tmp", f"{path}__old"
     df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
+    os.rename(path, old)
     os.rename(tmp, path)
+    shutil.rmtree(old)
 
 
-def _load(spark: SparkSession, graph_path: str, is_directed: bool) -> PropertyGraph:
-    from jasminegraph_spark.graph import EDGE_SCHEMA
+def _part_files(path: str) -> set:
+    if not os.path.isdir(path):
+        return set()
+    return {f for f in os.listdir(path) if f.endswith(".parquet")}
 
-    if os.path.isdir(f"{graph_path}/edges"):
-        edges = spark.read.parquet(f"{graph_path}/edges")
-    else:  # a CREATE of nodes only never writes the edges dir
-        edges = spark.createDataFrame([], EDGE_SCHEMA)
-    return PropertyGraph(
-        nodes=spark.read.parquet(f"{graph_path}/nodes"),
-        edges=edges,
-        is_directed=is_directed,
-    )
+
+def _append(df: DataFrame, path: str) -> int:
+    """Append ``df`` to the table at ``path`` in one job and return the
+    number of rows it added, read from the footers of the part files the
+    append wrote (no counting pass). An empty part file, which Spark
+    writes when there is nothing to append, is removed."""
+    before = _part_files(path)
+    df.write.mode("append").parquet(path)
+    added = 0
+    for name in _part_files(path) - before:
+        rows = pq.read_metadata(os.path.join(path, name)).num_rows
+        if rows == 0:
+            for junk in (name, f".{name}.crc"):
+                if os.path.exists(os.path.join(path, junk)):
+                    os.remove(os.path.join(path, junk))
+        added += rows
+    return added
 
 
 def cypher_write(
-    spark: SparkSession, graph_path: str, text: str, is_directed: bool = True
+    spark: SparkSession, graph_path: str, text: str, is_directed: bool | None = None
 ) -> dict:
     """Execute a write query against the graph stored at ``graph_path``.
     Returns mutation stats (nodes_set / nodes_deleted / edges_deleted /
-    nodes_created / edges_created)."""
+    nodes_created / edges_created). Directedness comes from the store's
+    ``_meta.json`` unless given."""
     q = parse(text)
     if q.is_create:
         # the rows are Python lists, so counting them needs no Spark job
@@ -75,7 +96,7 @@ def cypher_write(
         return {"nodes_created": len(node_rows), "edges_created": len(edge_rows)}
     if q.write_clause is None:
         raise CypherCompileError("not a write query (no SET/DELETE/MERGE/CREATE)")
-    g = _load(spark, graph_path, is_directed)
+    g = read_store(spark, graph_path, is_directed)
 
     if isinstance(q.write_clause, ast.MergeClause):
         return _merge(spark, graph_path, g, q.write_clause)
@@ -93,54 +114,19 @@ def cypher_write(
             raise CypherCompileError("write queries support plain MATCH clauses only")
     if df is None:
         raise CypherCompileError("write clause requires a MATCH part")
-    # materialize the match BEFORE any mutation: _replace rewrites the
-    # parquet files the lazy match plan still references, so a second
-    # SET/REMOVE item (or the node phase of a DELETE after its edge
-    # phase) would otherwise re-scan deleted files
-    from jasminegraph_spark.cache import checkpoint
-
-    df = checkpoint(df)
 
     wc = q.write_clause
+    # CREATE only appends, so its lazy match never reads a file the write
+    # removes; SET materializes just the matched ids before it rewrites
     if isinstance(wc, ast.CreateRelClause):
-        return _create_rel(spark, graph_path, g, df, comp, wc)
+        return _create_rel(graph_path, g, df, comp, wc)
     if isinstance(wc, ast.SetClause):
-        stats = {"nodes_set": 0}
-        for item in wc.items:
-            if item.var not in comp.node_vars:
-                raise CypherCompileError(f"SET target {item.var} is not a node variable")
-            ids = df.select(F.col(f"{item.var}.id").alias("__id")).distinct()
-            stats["nodes_set"] = ids.count()
-            if isinstance(item, ast.SetLabelItem):
-                # single-label model: SET n:Label RELABELS the matched
-                # nodes (openCypher would add to a label set — divergence
-                # documented on the AST node)
-                updated = g.nodes.join(ids, g.nodes.id == F.col("__id"), "left").select(
-                    "id",
-                    F.when(F.col("__id").isNotNull(), F.lit(item.label))
-                    .otherwise(F.col("label"))
-                    .alias("label"),
-                    "properties",
-                )
-            else:
-                updated = g.nodes.join(ids, g.nodes.id == F.col("__id"), "left").select(
-                    "id",
-                    "label",
-                    F.when(
-                        F.col("__id").isNotNull(),
-                        F.map_concat(
-                            F.map_filter(
-                                "properties", lambda k, v: k != F.lit(item.key)
-                            ),
-                            F.create_map(F.lit(item.key), F.lit(str(item.value))),
-                        ),
-                    )
-                    .otherwise(F.col("properties"))
-                    .alias("properties"),
-                )
-            _replace(updated, f"{graph_path}/nodes")
-            g = _load(spark, graph_path, is_directed)
-        return stats
+        return _set(graph_path, g, df, comp, wc)
+    # materialize the match BEFORE any mutation: _replace rewrites the
+    # parquet files the lazy match plan still references, so a second
+    # REMOVE item (or the node phase of a DELETE after its edge phase)
+    # would otherwise re-scan deleted files
+    df = checkpoint(df)
 
     if isinstance(wc, ast.RemoveClause):
         stats = {"nodes_updated": 0}
@@ -177,7 +163,7 @@ def cypher_write(
                     "properties",
                 )
             _replace(updated, f"{graph_path}/nodes")
-            g = _load(spark, graph_path, is_directed)
+            g = read_store(spark, graph_path, g.is_directed)
         return stats
 
     if isinstance(wc, ast.DeleteClause):
@@ -193,7 +179,7 @@ def cypher_write(
                 ).count()
                 kept = g.edges.join(rel_ids, g.edges.id == F.col("__id"), "left_anti")
                 _replace(kept, f"{graph_path}/edges")
-                g = _load(spark, graph_path, is_directed)
+                g = read_store(spark, graph_path, g.is_directed)
             elif var in comp.node_vars:
                 ids = df.select(F.col(f"{var}.id").alias("__id")).distinct()
                 node_ids = ids if node_ids is None else node_ids.union(ids).distinct()
@@ -229,7 +215,51 @@ def cypher_write(
     raise CypherCompileError(f"unsupported write clause {wc!r}")
 
 
-def _create_rel(spark, graph_path: str, g, df, comp, wc) -> dict:
+def _set(graph_path: str, g: PropertyGraph, df, comp, wc: ast.SetClause) -> dict:
+    """SET n.key = v / SET n:Label on the matched nodes. The distinct
+    matched ids of each target variable are materialized once, so the
+    count and the rewrite do not each run the match, and are joined into
+    ONE rewrite of ``nodes/`` that applies the items in order."""
+    targets = []
+    for item in wc.items:
+        if item.var not in comp.node_vars:
+            raise CypherCompileError(f"SET target {item.var} is not a node variable")
+        if item.var not in targets:
+            targets.append(item.var)
+    nodes, hit, counts = g.nodes, {}, {}
+    for i, var in enumerate(targets):
+        key = f"__id{i}"
+        # a lazy checkpoint: the count materializes it, in one job fewer
+        ids = checkpoint(df.select(F.col(f"{var}.id").alias(key)).distinct(), eager=False)
+        counts[var] = ids.count()
+        nodes = nodes.join(ids, nodes.id == F.col(key), "left")
+        hit[var] = F.col(key).isNotNull()
+    label, props = F.col("label"), F.col("properties")
+    for item in wc.items:
+        if isinstance(item, ast.SetLabelItem):
+            # single-label model: SET n:Label RELABELS the matched nodes
+            # (openCypher would add to a label set — divergence
+            # documented on the AST node)
+            label = F.when(hit[item.var], F.lit(item.label)).otherwise(label)
+        else:
+            # NODE_SCHEMA allows NULL properties, and map_filter(NULL) is
+            # NULL: without the coalesce the update would be dropped
+            kept = F.coalesce(props, F.create_map().cast("map<string,string>"))
+            props = F.when(
+                hit[item.var],
+                F.map_concat(
+                    F.map_filter(kept, lambda k, v: k != F.lit(item.key)),
+                    F.create_map(F.lit(item.key), F.lit(str(item.value))),
+                ),
+            ).otherwise(props)
+    _replace(
+        nodes.select("id", label.alias("label"), props.alias("properties")),
+        f"{graph_path}/nodes",
+    )
+    return {"nodes_set": counts[wc.items[-1].var]}
+
+
+def _create_rel(graph_path: str, g: PropertyGraph, df, comp, wc) -> dict:
     """MATCH ... CREATE (a)-[:T {..}]->(b): one new relationship per
     DISTINCT matched (a, b) endpoint pair (the distinct is a determinism
     guard — re-running the same statement is idempotent because edge ids
@@ -267,10 +297,7 @@ def _create_rel(spark, graph_path: str, g, df, comp, wc) -> dict:
         prop_col.alias("properties"),
     )
     fresh = new_edges.join(g.edges.select("id"), "id", "left_anti")
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(f"{graph_path}/edges")
-    return {"edges_created": n}
+    return {"edges_created": _append(fresh, f"{graph_path}/edges")}
 
 
 def _node_cond(node: ast.NodePattern):
@@ -317,7 +344,7 @@ def _merge_endpoint(spark, graph_path: str, g: PropertyGraph, node: ast.NodePatt
     if row and row["id"] is not None:
         return row["id"], 0, g
     nid = _create_merge_node(spark, graph_path, node)
-    return nid, 1, _load(spark, graph_path, g.is_directed)
+    return nid, 1, read_store(spark, graph_path, g.is_directed)
 
 
 def _merge(spark, graph_path: str, g: PropertyGraph, mc: ast.MergeClause) -> dict:

@@ -209,15 +209,17 @@ class JasmineEngine:
 
         if not self.storage_path:
             raise ValueError("write queries require storage_path")
+        # an unregistered graph takes its directedness from the store
         directed = (
             self.catalog.get(graph_name).is_directed
             if graph_name in self.catalog.names()
-            else True
+            else None
         )
         stats = cypher_write(
             self.spark, f"{self.storage_path}/{graph_name}", query, directed
         )
-        # refresh the registered snapshot (this releases its topology)
+        # refresh the registered snapshot (this releases its topology);
+        # the store is read with its known schema, so this runs no job
         self.catalog.load(graph_name, self.storage_path, directed)
         return stats
 

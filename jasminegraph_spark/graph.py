@@ -11,9 +11,12 @@ replaced by an optional derived ``pid`` column used only when an explicit
 k-way partitioning is requested (mirrors the HASH partitioner,
 src/partitioner/stream/Partitioner.cpp:110-121).
 
-Canonical schemas (SURVEY §1.5):
+Canonical schemas (SURVEY §1.5), declared as NODE_SCHEMA / EDGE_SCHEMA:
   nodes: id string, label string, properties map<string,string>
-  edges: src string, dst string, type string, properties map<string,string>
+  edges: id string, src string, dst string, type string,
+         properties map<string,string>
+A stored graph is read with them (``read_store``), never by inferring a
+schema from its files.
 
 Properties are map<string,string> because the reference's storage is
 schemaless all-string (SURVEY §1.3); typed values are coerced at predicate
@@ -111,6 +114,54 @@ class PropertyGraph:
         return self.edges.count()
 
 
+def heal_table(path: str) -> None:
+    """Finish a table swap (``cypher.write._replace``) that a crash cut
+    short: the swap renames ``path`` to ``path__old``, renames the new
+    ``path__tmp`` to ``path``, then deletes ``path__old``. A missing
+    ``path`` with an ``__old`` beside it is restored (the old content);
+    a leftover ``__tmp`` or ``__old`` is dropped."""
+    tmp, old = f"{path}__tmp", f"{path}__old"
+    if not os.path.isdir(path) and os.path.isdir(old):
+        os.rename(old, path)
+    for leftover in (tmp, old):
+        if os.path.isdir(leftover):
+            shutil.rmtree(leftover)
+
+
+def read_store(
+    spark: SparkSession, graph_path: str, is_directed: bool | None = None
+) -> PropertyGraph:
+    """The graph stored at ``graph_path``, read with its known schema —
+    NODE_SCHEMA / EDGE_SCHEMA, which every ingest verb and CREATE write,
+    unless ``_meta.json`` records another — so the read runs no
+    schema-inference job. Directedness comes from ``_meta.json`` unless
+    given (True when there is none). A store whose CREATEs made only
+    nodes has no ``edges/`` yet and reads as an empty edge table."""
+    meta_path = f"{graph_path}/_meta.json"
+    meta = {}
+    if os.path.exists(meta_path):
+        with open(meta_path) as fh:
+            meta = json.load(fh)
+    if is_directed is None:
+        is_directed = bool(meta.get("is_directed", True))
+    recorded = meta.get("schema", {})
+    tables = {}
+    for table, declared in (("nodes", NODE_SCHEMA), ("edges", EDGE_SCHEMA)):
+        path = f"{graph_path}/{table}"
+        heal_table(path)
+        schema = T.StructType.fromJson(recorded[table]) if table in recorded else declared
+        if table == "edges" and not os.path.isdir(path):
+            tables[table] = spark.createDataFrame([], schema)
+        else:
+            tables[table] = spark.read.schema(schema).parquet(path)
+    return PropertyGraph(
+        nodes=tables["nodes"],
+        edges=tables["edges"],
+        is_directed=is_directed,
+        name=os.path.basename(graph_path.rstrip("/")),
+    )
+
+
 @dataclass
 class GraphCatalog:
     """Engine-level catalog replacing the reference's metadb SQLite
@@ -173,11 +224,17 @@ class GraphCatalog:
     def save(self, graph: PropertyGraph, base_path: str) -> None:
         """Persist as parquet (replaces FlatBuffers partition files) plus a
         per-graph metadata file (the reference's metadb graph row —
-        ddl/metadb.sql:17 stores is_directed there too)."""
-        graph.nodes.write.mode("overwrite").parquet(f"{base_path}/{graph.name}/nodes")
-        graph.edges.write.mode("overwrite").parquet(f"{base_path}/{graph.name}/edges")
+        ddl/metadb.sql:17 stores is_directed there too). A frame whose
+        schema differs from the declared one (``construct_kg``'s weighted
+        edges) has its schema recorded there, so reads keep every column."""
+        meta = {"name": graph.name, "is_directed": graph.is_directed}
+        for table, declared in (("nodes", NODE_SCHEMA), ("edges", EDGE_SCHEMA)):
+            df = getattr(graph, table)
+            df.write.mode("overwrite").parquet(f"{base_path}/{graph.name}/{table}")
+            if df.schema.simpleString() != declared.simpleString():
+                meta.setdefault("schema", {})[table] = df.schema.jsonValue()
         with open(f"{base_path}/{graph.name}/_meta.json", "w") as fh:
-            json.dump({"name": graph.name, "is_directed": graph.is_directed}, fh)
+            json.dump(meta, fh)
 
     def load(
         self, name: str, base_path: str, is_directed: bool | None = None
@@ -186,20 +243,7 @@ class GraphCatalog:
         metadata unless explicitly overridden — hardcoding a default would
         silently flip pgrnk symmetrization and Cypher expansion direction
         for directed graphs across CLI invocations."""
-        if is_directed is None:
-            meta_path = f"{base_path}/{name}/_meta.json"
-            if os.path.exists(meta_path):
-                with open(meta_path) as fh:
-                    is_directed = bool(json.load(fh).get("is_directed", True))
-            else:
-                is_directed = True
-        g = PropertyGraph(
-            nodes=self.spark.read.parquet(f"{base_path}/{name}/nodes"),
-            edges=self.spark.read.parquet(f"{base_path}/{name}/edges"),
-            is_directed=is_directed,
-            name=name,
-        )
-        return self.register(g)
+        return self.register(read_store(self.spark, f"{base_path}/{name}", is_directed))
 
     def save_bucketed(self, graph: PropertyGraph, buckets: int = 32) -> None:
         """Materialize as bucketed+sorted tables: nodes bucketed by id,
