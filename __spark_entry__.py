@@ -6569,191 +6569,6 @@ _ORACLES["pl_ivf_ann_nprobe"] = """
 
 
 @_q(
-    "pl_multimodal_decode",
-    """
-    SELECT CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                ELSE 'video' END AS kind,
-           COUNT(*) AS n_media,
-           CAST(SUM(8 + doc_id % 16) AS BIGINT) AS sum_width,
-           CAST(SUM(8 + doc_id % 8) AS BIGINT) AS sum_height,
-           CAST(SUM((8 + doc_id % 16) * (8 + doc_id % 8)) AS BIGINT) AS sum_bytes
-    FROM documents GROUP BY 1 ORDER BY kind
-    """,
-)
-def pl_multimodal_decode(spark, sf_dir):
-    """Multimodal plumbing end-to-end under the driver's hash check:
-    synthesize binary media payloads ON EXECUTORS from doc ids (JGMM fake
-    container — real codecs are the documented stub), decode them through
-    the Arrow mapInPandas decode stage, and aggregate dimensions. The
-    oracle recomputes the same aggregates arithmetically, so a broken
-    header pack/unpack, batch shape, or binary round-trip fails the hash."""
-    from jasminegraph_spark.pipeline.multimodal import decode_media, synthesize_media
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_media(docs))
-    return (
-        decoded.groupBy("kind")
-        .agg(
-            F.count("*").alias("n_media"),
-            F.sum("width").cast("long").alias("sum_width"),
-            F.sum("height").cast("long").alias("sum_height"),
-            F.sum("n_bytes").cast("long").alias("sum_bytes"),
-        )
-        .orderBy("kind")
-    )
-
-
-@_q(
-    "pl_multimodal_compose",
-    """
-    WITH m AS (
-        SELECT doc_id AS i,
-               CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                    ELSE 'video' END AS kind,
-               8 + doc_id % 16 AS w, 8 + doc_id % 8 AS h, doc_id % 251 AS seed
-        FROM documents
-    ),
-    px AS (
-        SELECT m.i, m.kind,
-               ((((ky.k * m.h) // 4) * m.w + ((kx.k * m.w) // 4)) * 31 + m.seed)
-               % 251 AS pix
-        FROM m, generate_series(0, 3) AS ky(k), generate_series(0, 3) AS kx(k)
-    )
-    SELECT kind, COUNT(DISTINCT i) AS n_media,
-           CAST(SUM(pix) AS BIGINT) AS sum_pixels,
-           CAST(2 * COUNT(DISTINCT i) AS BIGINT) AS n_frames
-    FROM px GROUP BY kind ORDER BY kind
-    """,
-)
-def pl_multimodal_compose(spark, sf_dir):
-    """Full multimodal stage COMPOSITION under the driver's hash check
-    (the r4 verdict ask): synthesize binary payloads on executors →
-    nearest-neighbor resize to 4×4 (payload-in/payload-out mapInPandas,
-    output is a valid JGMM container) → decode the RESIZED payloads →
-    frame-sample them (1:N row expander, every 2nd row). The oracle
-    recomputes each resized pixel arithmetically (body[p] = (p·31+seed)
-    mod 251 sampled at (k·h/4, k·w/4)), so a wrong stride, header, or
-    sampling index anywhere in the three chained Arrow stages fails the
-    pixel-sum hash."""
-    from jasminegraph_spark.pipeline.multimodal import (
-        decode_media,
-        frame_sample,
-        resize_media,
-        synthesize_media,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    media = synthesize_media(docs).withColumn(
-        "meta", F.create_map().cast("map<string,string>")
-    )
-    small = resize_media(media, 4, 4)
-    decoded = decode_media(small)
-    frames = frame_sample(small, every_n=2)
-    kinds = media.select("media_id", "kind")
-    f_agg = frames.join(kinds, "media_id").groupBy("kind").agg(
-        F.count("*").alias("n_frames")
-    )
-    d_agg = decoded.groupBy("kind").agg(
-        F.count("*").alias("n_media"),
-        F.sum("body_sum").cast("long").alias("sum_pixels"),
-    )
-    return d_agg.join(f_agg, "kind").select(
-        "kind", "n_media", "sum_pixels", F.col("n_frames").cast("long").alias("n_frames")
-    ).orderBy("kind")
-
-
-@_q(
-    "pl_png_decode",
-    """
-    WITH m AS (
-        SELECT doc_id AS media_id, 8 + doc_id % 16 AS w, 8 + doc_id % 8 AS h,
-               doc_id % 251 AS seed
-        FROM documents
-    )
-    SELECT m.media_id, CAST(m.w AS INT) AS width, CAST(m.h AS INT) AS height,
-           CAST(m.w * m.h AS INT) AS n_bytes,
-           CAST(SUM((g.j * 31 + m.seed) % 251) AS BIGINT) AS body_sum
-    FROM m JOIN generate_series(0, 344) AS g(j) ON g.j < m.w * m.h
-    GROUP BY 1, 2, 3, 4 ORDER BY media_id
-    """,
-)
-def pl_png_decode(spark, sf_dir):
-    """REAL PNG decode under the driver's hash check (closes the r5
-    verdict's compressed-codec ask, #6): executors build genuine PNG byte
-    streams from each doc id (pipeline/multimodal.encode_png — zlib
-    deflate, CRC'd chunks, scanline filters cycling 0-4 so every filter
-    reconstruction path runs), then the Arrow mapInPandas decode stage
-    inflates and unfilters them library-free (_decode_png). Pixels follow
-    the closed form (j·31 + doc%251) % 251, so DuckDB recomputes each
-    image's byte checksum arithmetically — a wrong inflate, stride,
-    filter predictor, or CRC layout fails the per-image hash. JPEG/FLAC/
-    MP3 remain the documented NotImplementedError seam (they need codec
-    libs this environment lacks)."""
-    # r13 pin (see _pin) of the decoded rows before the
-    # sort — orderBy's range-partitioner sampling otherwise
-    # re-executes the whole synth+decode pipeline a second time just
-    # to pick bounds (the sort's child is map-only above the id
-    # spread, so sampling can reuse no shuffle output); measured ~2x
-    # on every media-decode row
-    return _png_decode_prepin(spark, sf_dir).transform(_pin).orderBy("media_id")
-
-
-def _png_decode_prepin(spark, sf_dir):
-    """pl_png_decode's pipeline BEFORE the pin+sort — shared with
-    tests/test_plans.py (ADVICE r13 #4) so the single-scan / no-shuffle
-    chain property is asserted on the very frame the declared query pins,
-    not on a hand-rebuilt twin that could drift."""
-    from jasminegraph_spark.pipeline.multimodal import decode_media, synthesize_png
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_png(docs))
-    return decoded.select("media_id", "width", "height", "n_bytes", "body_sum")
-
-
-@_q(
-    "pl_flac_decode",
-    """
-    WITH m AS (
-        SELECT doc_id AS media_id, 64 + doc_id % 64 AS n FROM documents
-    )
-    SELECT media_id, CAST(n AS INT) AS width, CAST(1 AS INT) AS height,
-           CAST(n AS INT) AS n_bytes,
-           CAST(list_sum(list_transform(generate_series(0, n - 1), j ->
-               CAST(FLOOR((((j * 37 + media_id) % 501) - 250) / 256.0) AS BIGINT)
-               + 128)) AS BIGINT) AS body_sum
-    FROM m ORDER BY media_id
-    """,
-)
-def pl_flac_decode(spark, sf_dir):
-    """REAL FLAC decode under the driver's hash check (r7 — narrows the
-    codec seam to MP3 + color/progressive JPEG): executors build genuine
-    mono 16-bit FLAC streams from each doc id
-    (pipeline/multimodal.encode_flac — FIXED predictors cycling order
-    0/1/2 per block, Rice-coded residuals, real CRC-8/CRC-16), then the
-    Arrow mapInPandas decode stage runs the full bit-level parse
-    library-free (_decode_flac: STREAMINFO, frame sync, every
-    block-size code, UTF-8 frame numbers, fixed-predictor
-    reconstruction, CRC verify on every frame). FLAC is lossless, so
-    the decoded samples equal the closed form ((i·37 + d) mod 501) −
-    250 exactly and DuckDB recomputes each stream's folded-uint8
-    checksum — a wrong Rice parameter, predictor coefficient, zigzag,
-    or CRC layout fails the per-stream hash."""
-    from jasminegraph_spark.pipeline.multimodal import decode_media, synthesize_flac
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    decoded = decode_media(synthesize_flac(docs))
-    return decoded.select(
-        "media_id", "width", "height", "n_bytes", "body_sum"
-        # r13 pin (see _pin) of the decoded rows before the
-        # sort — orderBy's range-partitioner sampling otherwise
-        # re-executes the whole synth+decode pipeline a second time just
-        # to pick bounds (the sort's child is map-only above the id
-        # spread, so sampling can reuse no shuffle output); measured ~2x
-        # on every media-decode row
-    ).transform(_pin).orderBy("media_id")
-
-
-@_q(
     "pl_pack_sequences",
     """
     WITH base AS (

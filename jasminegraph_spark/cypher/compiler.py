@@ -20,6 +20,7 @@ Semantics preserved from the reference:
 
 from __future__ import annotations
 
+import hashlib
 import itertools
 
 from pyspark.sql import Column, DataFrame
@@ -854,7 +855,7 @@ class _Compiler:
 
 def cypher_create(spark, text: str):
     """Compile a CREATE clause to (nodes_df, edges_df) ready for
-    ops.create_elements (reference Create operator, Operators.h:286-295 +
+    ``graph.append`` (reference Create operator, Operators.h:286-295 +
     Helpers.cpp:347-784 — partition routing via streaming partitioner there,
     writer hash-partitioning here).
     """
@@ -866,13 +867,20 @@ def cypher_create(spark, text: str):
     return nodes_df, edges_df
 
 
+def node_id(labels: list, props: dict) -> str:
+    """A created node's identity, shared by CREATE and a MERGE miss: the
+    ``id`` property when given, else a deterministic hash of (labels,
+    properties) — CREATE without ids stays reproducible. ``props`` holds
+    string values."""
+    if "id" in props:
+        return props["id"]
+    basis = f"{sorted(labels)}|{sorted(props.items())}"
+    return hashlib.md5(basis.encode()).hexdigest()[:16]
+
+
 def create_rows(q: "ast.Query") -> tuple[list, list]:
     """The node and edge rows of a parsed CREATE query, as plain tuples in
-    NODE_SCHEMA / EDGE_SCHEMA order.
-
-    Node identity: the ``id`` property when given, else a deterministic
-    hash of (labels, properties) — CREATE without ids stays reproducible.
-    """
+    NODE_SCHEMA / EDGE_SCHEMA order, each node id from ``node_id``."""
     if not q.is_create:
         raise CypherCompileError("cypher_create expects a CREATE clause")
     node_rows, edge_rows = [], []
@@ -880,12 +888,7 @@ def create_rows(q: "ast.Query") -> tuple[list, list]:
     for p in q.patterns:
         for n in p.nodes:
             props = {k: str(v) for k, v in n.props.items()}
-            nid = props.get("id")
-            if nid is None:
-                import hashlib
-
-                basis = f"{sorted(n.labels)}|{sorted(props.items())}"
-                nid = hashlib.md5(basis.encode()).hexdigest()[:16]
+            nid = node_id(n.labels, props)
             if n.var:
                 ids[n.var] = nid
             node_rows.append((nid, n.labels[0] if n.labels else None, props))

@@ -11,68 +11,33 @@ read-transform-replace snapshots of the nodes/edges tables:
             remain, matching Cypher semantics; DETACH removes them)
  * MERGE  — match-or-create on (labels, literal properties)
 
-Snapshot replace writes beside the table and swaps it in by two renames
-(``_replace``); a store read heals a swap a crash cut short. On a real
-deployment this is a table-format transaction (Delta/Iceberg
+This module builds those frames and never touches the files itself: SET,
+REMOVE, DELETE and MERGE … ON MATCH hand the new table to
+``graph.replace``, which writes it beside the table and swaps it in by
+two renames (a store read heals a swap a crash cut short); CREATE,
+MATCH … CREATE and MERGE's creations hand their rows to ``graph.append``.
+On a real deployment this is a table-format transaction (Delta/Iceberg
 MERGE/DELETE); plain parquet directories keep the engine dependency-free
-here — the transform plans are identical either way. CREATE and
-MATCH … CREATE only append.
+here — the transform plans are identical either way.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
-import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from jasminegraph_spark import operators as ops
 from jasminegraph_spark.cache import checkpoint
 from jasminegraph_spark.cypher import ast
-from jasminegraph_spark.cypher.compiler import CypherCompileError, _Compiler, create_rows
+from jasminegraph_spark.cypher.compiler import CypherCompileError, _Compiler, create_rows, node_id
 from jasminegraph_spark.cypher.parser import parse
-from jasminegraph_spark.graph import PropertyGraph, read_store
-
-
-def _replace(df: DataFrame, path: str) -> None:
-    """Materialize ``df`` as the new content of the table at ``path``.
-    Spark cannot overwrite an input path it is lazily reading, so the
-    content is written beside the table and swapped in by two renames:
-    ``path`` → ``path__old``, ``path__tmp`` → ``path``, then ``__old`` is
-    deleted. A crash at any step leaves the old or the new table, and
-    the next store read (``graph.heal_table``) tidies up."""
-    path = path.rstrip("/")
-    tmp, old = f"{path}__tmp", f"{path}__old"
-    df.write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-
-
-def _part_files(path: str) -> set:
-    if not os.path.isdir(path):
-        return set()
-    return {f for f in os.listdir(path) if f.endswith(".parquet")}
-
-
-def _append(df: DataFrame, path: str) -> int:
-    """Append ``df`` to the table at ``path`` in one job and return the
-    number of rows it added, read from the footers of the part files the
-    append wrote (no counting pass). An empty part file, which Spark
-    writes when there is nothing to append, is removed."""
-    before = _part_files(path)
-    df.write.mode("append").parquet(path)
-    added = 0
-    for name in _part_files(path) - before:
-        rows = pq.read_metadata(os.path.join(path, name)).num_rows
-        if rows == 0:
-            for junk in (name, f".{name}.crc"):
-                if os.path.exists(os.path.join(path, junk)):
-                    os.remove(os.path.join(path, junk))
-        added += rows
-    return added
+from jasminegraph_spark.graph import (
+    EDGE_SCHEMA,
+    NODE_SCHEMA,
+    PropertyGraph,
+    append,
+    read_store,
+    replace,
+)
 
 
 def cypher_write(
@@ -85,14 +50,10 @@ def cypher_write(
     q = parse(text)
     if q.is_create:
         # the rows are Python lists, so counting them needs no Spark job
-        from jasminegraph_spark.graph import EDGE_SCHEMA, NODE_SCHEMA
-
         node_rows, edge_rows = create_rows(q)
-        ops.create_elements(
-            graph_path,
-            nodes=spark.createDataFrame(node_rows, NODE_SCHEMA),
-            edges=spark.createDataFrame(edge_rows, EDGE_SCHEMA) if edge_rows else None,
-        )
+        append(spark.createDataFrame(node_rows, NODE_SCHEMA), f"{graph_path}/nodes")
+        if edge_rows:
+            append(spark.createDataFrame(edge_rows, EDGE_SCHEMA), f"{graph_path}/edges")
         return {"nodes_created": len(node_rows), "edges_created": len(edge_rows)}
     if q.write_clause is None:
         raise CypherCompileError("not a write query (no SET/DELETE/MERGE/CREATE)")
@@ -122,7 +83,7 @@ def cypher_write(
         return _create_rel(graph_path, g, df, comp, wc)
     if isinstance(wc, ast.SetClause):
         return _set(graph_path, g, df, comp, wc)
-    # materialize the match BEFORE any mutation: _replace rewrites the
+    # materialize the match BEFORE any mutation: replace rewrites the
     # parquet files the lazy match plan still references, so a second
     # REMOVE item (or the node phase of a DELETE after its edge phase)
     # would otherwise re-scan deleted files
@@ -162,7 +123,7 @@ def cypher_write(
                     .alias("label"),
                     "properties",
                 )
-            _replace(updated, f"{graph_path}/nodes")
+            replace(updated, f"{graph_path}/nodes")
             g = read_store(spark, graph_path, g.is_directed)
         return stats
 
@@ -178,7 +139,7 @@ def cypher_write(
                     rel_ids, g.edges.id == F.col("__id"), "left_semi"
                 ).count()
                 kept = g.edges.join(rel_ids, g.edges.id == F.col("__id"), "left_anti")
-                _replace(kept, f"{graph_path}/edges")
+                replace(kept, f"{graph_path}/edges")
                 g = read_store(spark, graph_path, g.is_directed)
             elif var in comp.node_vars:
                 ids = df.select(F.col(f"{var}.id").alias("__id")).distinct()
@@ -204,12 +165,12 @@ def cypher_write(
                     "left_anti",
                 )
                 stats["edges_deleted"] += n_incident
-                _replace(kept_edges, f"{graph_path}/edges")
+                replace(kept_edges, f"{graph_path}/edges")
             stats["nodes_deleted"] = g.nodes.join(
                 node_ids, g.nodes.id == F.col("__id"), "left_semi"
             ).count()
             kept_nodes = g.nodes.join(node_ids, g.nodes.id == F.col("__id"), "left_anti")
-            _replace(kept_nodes, f"{graph_path}/nodes")
+            replace(kept_nodes, f"{graph_path}/nodes")
         return stats
 
     raise CypherCompileError(f"unsupported write clause {wc!r}")
@@ -252,7 +213,7 @@ def _set(graph_path: str, g: PropertyGraph, df, comp, wc: ast.SetClause) -> dict
                     F.create_map(F.lit(item.key), F.lit(str(item.value))),
                 ),
             ).otherwise(props)
-    _replace(
+    replace(
         nodes.select("id", label.alias("label"), props.alias("properties")),
         f"{graph_path}/nodes",
     )
@@ -297,7 +258,7 @@ def _create_rel(graph_path: str, g: PropertyGraph, df, comp, wc) -> dict:
         prop_col.alias("properties"),
     )
     fresh = new_edges.join(g.edges.select("id"), "id", "left_anti")
-    return {"edges_created": _append(fresh, f"{graph_path}/edges")}
+    return {"edges_created": append(fresh, f"{graph_path}/edges")}
 
 
 def _node_cond(node: ast.NodePattern):
@@ -312,27 +273,19 @@ def _node_cond(node: ast.NodePattern):
 def _create_merge_node(
     spark, graph_path: str, node: ast.NodePattern, extra_props: dict | None = None
 ) -> str:
-    """Create a node for a MERGE miss by constructing the row DIRECTLY
-    with the same content-hash id scheme cypher_create uses
-    (compiler.py:874-882) — no generated-CREATE-text round-trip, so
-    property values containing quotes/braces cannot inject into or break
-    the statement. The id derives from the MATCH pattern's label+props
-    only — ``extra_props`` (ON CREATE SET items) are applied after, so
-    the same MERGE pattern resolves to the same node regardless of its
-    ON CREATE payload. Returns the new node id."""
-    import hashlib
-
-    from jasminegraph_spark.graph import NODE_SCHEMA
-
+    """Create a node for a MERGE miss by constructing the row DIRECTLY,
+    with the id CREATE gives the same pattern (``compiler.node_id``) —
+    no generated-CREATE-text round-trip, so property values containing
+    quotes/braces cannot inject into or break the statement. The id
+    derives from the MATCH pattern's label+props only — ``extra_props``
+    (ON CREATE SET items) are applied after, so the same MERGE pattern
+    resolves to the same node regardless of its ON CREATE payload.
+    Returns the new node id."""
     props = {k: str(v) for k, v in node.props.items()}
-    nid = props.get("id")
-    if nid is None:
-        basis = f"{sorted(node.labels)}|{sorted(props.items())}"
-        nid = hashlib.md5(basis.encode()).hexdigest()[:16]
+    nid = node_id(node.labels, props)
     props.update({k: str(v) for k, v in (extra_props or {}).items()})
-    spark.createDataFrame(
-        [(nid, node.labels[0] if node.labels else None, props)], NODE_SCHEMA
-    ).write.mode("append").parquet(f"{graph_path}/nodes")
+    row = (nid, node.labels[0] if node.labels else None, props)
+    append(spark.createDataFrame([row], NODE_SCHEMA), f"{graph_path}/nodes")
     return nid
 
 
@@ -370,22 +323,15 @@ def _merge(spark, graph_path: str, g: PropertyGraph, mc: ast.MergeClause) -> dic
             return {"nodes_created": ca + cb, "edges_created": 0, "matched": True}
         props = {k: str(v) for k, v in rel.props.items()}
         rid = f"{sa}->{sb}:{rtype if rtype else 0}"
-        from jasminegraph_spark.graph import EDGE_SCHEMA
-
-        spark.createDataFrame([(rid, sa, sb, rtype, props)], EDGE_SCHEMA).write.mode(
-            "append"
-        ).parquet(f"{graph_path}/edges")
+        row = (rid, sa, sb, rtype, props)
+        append(spark.createDataFrame([row], EDGE_SCHEMA), f"{graph_path}/edges")
         return {"nodes_created": ca + cb, "edges_created": 1, "matched": False}
     if len(pattern.nodes) != 1:
         raise CypherCompileError(
             "MERGE supports single-node and (a)-[:T]->(b) relationship patterns"
         )
     node = pattern.nodes[0]
-    cond = F.lit(True)
-    if node.labels:
-        cond = cond & (F.col("label") == node.labels[0])
-    for k, v in node.props.items():
-        cond = cond & (F.col("properties")[k] == str(v))
+    cond = _node_cond(node)
     if g.nodes.filter(cond).take(1):
         stats = {"nodes_created": 0, "matched": True}
         if mc.on_match:
@@ -417,7 +363,7 @@ def _merge(spark, graph_path: str, g: PropertyGraph, mc: ast.MergeClause) -> dic
                 .alias("properties"),
             )
             stats["nodes_set"] = g.nodes.filter(cond).count()
-            _replace(updated, f"{graph_path}/nodes")
+            replace(updated, f"{graph_path}/nodes")
         return stats
     _create_merge_node(
         spark, graph_path, node, {i.key: i.value for i in mc.on_create}

@@ -33,7 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from jasminegraph_spark import analytics as an
-from jasminegraph_spark.graph import GraphCatalog, PropertyGraph
+from jasminegraph_spark.graph import GraphCatalog, PropertyGraph, heal_table
 from jasminegraph_spark.perf import PerfCatalog
 from jasminegraph_spark.sources import (
     read_edge_list,
@@ -470,23 +470,29 @@ class JasmineEngine:
         marker (GraphCatalog.save writes it next to nodes/ + edges/) —
         NOT by merely containing a nodes/ subdir, so a storage_path
         pointed at a directory with unrelated data is never rmtree'd.
-        Engine internals like the `_perfdb.sqlite` ledger are kept. Returns the
-        sorted names removed."""
+        The `__tmp`/`__old` leftovers of a save a crash cut short are
+        healed first (``heal_table``), so they are neither kept nor
+        reported as graphs. Engine internals like the `_perfdb.sqlite`
+        ledger are kept. Returns the sorted names removed."""
         import os
         import shutil
+
+        def is_graph(p):
+            return os.path.isdir(p) and os.path.isfile(os.path.join(p, "_meta.json"))
 
         removed = set(self.catalog.names())
         for n in list(removed):
             self.catalog.remove(n)
         if self.storage_path and os.path.isdir(self.storage_path):
             for entry in os.listdir(self.storage_path):
+                p = os.path.join(self.storage_path, entry)
+                if entry.endswith(("__tmp", "__old")) and is_graph(p):
+                    heal_table(p[: -len("__tmp")])
+            for entry in os.listdir(self.storage_path):
                 if entry.startswith("_"):
                     continue  # perf ledger / engine-internal state
                 p = os.path.join(self.storage_path, entry)
-                if os.path.isdir(p) and (
-                    entry in removed
-                    or os.path.isfile(os.path.join(p, "_meta.json"))
-                ):
+                if os.path.isdir(p) and (entry in removed or is_graph(p)):
                     shutil.rmtree(p)
                     removed.add(entry)
         return sorted(removed)

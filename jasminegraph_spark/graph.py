@@ -16,7 +16,9 @@ Canonical schemas (SURVEY §1.5), declared as NODE_SCHEMA / EDGE_SCHEMA:
   edges: id string, src string, dst string, type string,
          properties map<string,string>
 A stored graph is read with them (``read_store``), never by inferring a
-schema from its files.
+schema from its files. The store is written only here, in two ways: a
+crash-safe swap of a table or a whole graph directory (``replace``,
+healed by ``heal_table``) and an append of rows (``append``).
 
 Properties are map<string,string> because the reference's storage is
 schemaless all-string (SURVEY §1.3); typed values are coerced at predicate
@@ -30,6 +32,7 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -115,17 +118,75 @@ class PropertyGraph:
 
 
 def heal_table(path: str) -> None:
-    """Finish a table swap (``cypher.write._replace``) that a crash cut
-    short: the swap renames ``path`` to ``path__old``, renames the new
-    ``path__tmp`` to ``path``, then deletes ``path__old``. A missing
-    ``path`` with an ``__old`` beside it is restored (the old content);
-    a leftover ``__tmp`` or ``__old`` is dropped."""
+    """Finish a swap (``replace``) that a crash cut short, at a table or
+    at a whole graph directory. The swap renames ``path`` to
+    ``path__old``, renames the new ``path__tmp`` to ``path``, then
+    deletes ``path__old``. A missing ``path`` with an ``__old`` beside it
+    is restored (the old content); a leftover ``__tmp`` or ``__old`` is
+    dropped."""
+    path = path.rstrip("/")
     tmp, old = f"{path}__tmp", f"{path}__old"
     if not os.path.isdir(path) and os.path.isdir(old):
         os.rename(old, path)
     for leftover in (tmp, old):
         if os.path.isdir(leftover):
             shutil.rmtree(leftover)
+
+
+def replace(content: DataFrame | dict, path: str, meta: dict | None = None) -> None:
+    """Swap new content in at ``path``, the one way the store is
+    rewritten. The content is written beside ``path`` at ``path__tmp``,
+    then ``path`` (when there is one) is renamed to ``path__old``,
+    ``path__tmp`` to ``path``, and ``__old`` is deleted. A crash at any
+    step leaves the old or the new content, and the next store read
+    (``heal_table``) tidies up; writing beside also lets a rewrite read
+    the table it replaces, which Spark cannot overwrite in place.
+
+    ``content`` is a DataFrame, written as the parquet table at
+    ``path``, or ``{name: DataFrame}``, one table per name under the
+    graph directory ``path``, with ``meta`` as its ``_meta.json``."""
+    path = path.rstrip("/")
+    tmp, old = f"{path}__tmp", f"{path}__old"
+    heal_table(path)
+    if isinstance(content, DataFrame):
+        content.write.mode("overwrite").parquet(tmp)
+    else:
+        os.makedirs(tmp)
+        # first, so a graph's __tmp is recognisable as one (engine.truncate)
+        with open(f"{tmp}/_meta.json", "w") as fh:
+            json.dump(meta, fh)
+        for name, df in content.items():
+            df.write.mode("overwrite").parquet(f"{tmp}/{name}")
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+
+
+def _part_files(path: str) -> set:
+    if not os.path.isdir(path):
+        return set()
+    return {f for f in os.listdir(path) if f.endswith(".parquet")}
+
+
+def append(df: DataFrame, path: str) -> int:
+    """Append ``df`` to the table at ``path`` in one job, the one way
+    rows are added to the store, and return the number of rows it
+    added, read from the footers of the part files the append wrote (no
+    counting pass). An empty part file, which Spark writes when there is
+    nothing to append, is removed."""
+    before = _part_files(path)
+    df.write.mode("append").parquet(path)
+    added = 0
+    for name in _part_files(path) - before:
+        rows = pq.read_metadata(os.path.join(path, name)).num_rows
+        if rows == 0:
+            for junk in (name, f".{name}.crc"):
+                if os.path.exists(os.path.join(path, junk)):
+                    os.remove(os.path.join(path, junk))
+        added += rows
+    return added
 
 
 def read_store(
@@ -136,7 +197,10 @@ def read_store(
     unless ``_meta.json`` records another — so the read runs no
     schema-inference job. Directedness comes from ``_meta.json`` unless
     given (True when there is none). A store whose CREATEs made only
-    nodes has no ``edges/`` yet and reads as an empty edge table."""
+    nodes has no ``edges/`` yet and reads as an empty edge table. A swap
+    a crash cut short is healed first at the graph directory
+    (``GraphCatalog.save``), then at each table (Cypher rewrites)."""
+    heal_table(graph_path)
     meta_path = f"{graph_path}/_meta.json"
     meta = {}
     if os.path.exists(meta_path):
@@ -226,15 +290,17 @@ class GraphCatalog:
         per-graph metadata file (the reference's metadb graph row —
         ddl/metadb.sql:17 stores is_directed there too). A frame whose
         schema differs from the declared one (``construct_kg``'s weighted
-        edges) has its schema recorded there, so reads keep every column."""
+        edges) has its schema recorded there, so reads keep every column.
+        The whole graph directory is written beside the stored one and
+        swapped in (``replace``), so a save that fails or crashes at any
+        point leaves the old graph or the new one, never a mix."""
         meta = {"name": graph.name, "is_directed": graph.is_directed}
+        tables = {"nodes": graph.nodes, "edges": graph.edges}
         for table, declared in (("nodes", NODE_SCHEMA), ("edges", EDGE_SCHEMA)):
-            df = getattr(graph, table)
-            df.write.mode("overwrite").parquet(f"{base_path}/{graph.name}/{table}")
-            if df.schema.simpleString() != declared.simpleString():
-                meta.setdefault("schema", {})[table] = df.schema.jsonValue()
-        with open(f"{base_path}/{graph.name}/_meta.json", "w") as fh:
-            json.dump(meta, fh)
+            schema = tables[table].schema
+            if schema.simpleString() != declared.simpleString():
+                meta.setdefault("schema", {})[table] = schema.jsonValue()
+        replace(tables, f"{base_path}/{graph.name}", meta)
 
     def load(
         self, name: str, base_path: str, is_directed: bool | None = None

@@ -17,7 +17,6 @@ from jasminegraph_spark.operators.cypher_ops import (  # noqa: F401
     cartesian_product,
     union_rows,
     intersect_rows,
-    create_elements,
 )
 from jasminegraph_spark.operators.predicates import prop, coerced_compare  # noqa: F401
 from jasminegraph_spark.operators.temporal import (  # noqa: F401

@@ -308,19 +308,3 @@ def union_rows(a: DataFrame, b: DataFrame, distinct_rows: bool = True) -> DataFr
 def intersect_rows(a: DataFrame, b: DataFrame) -> DataFrame:
     """Intersection — stub in the reference (Operators.cpp:414-432)."""
     return a.intersect(b)
-
-
-def create_elements(
-    graph_path: str,
-    nodes: DataFrame | None = None,
-    edges: DataFrame | None = None,
-) -> None:
-    """Create (Operators.h:286-295; OperatorExecutor.cpp:1257-1281,
-    Helpers.cpp:347-784). The reference routes each element through the
-    streaming partitioner to the owning worker's block store; here CREATE
-    is an append to the graph's parquet tables — partition routing is the
-    writer's hash partitioning."""
-    if nodes is not None:
-        nodes.write.mode("append").parquet(f"{graph_path}/nodes")
-    if edges is not None:
-        edges.write.mode("append").parquet(f"{graph_path}/edges")

@@ -184,8 +184,7 @@ def test_parser_errors():
 
 def test_create_and_roundtrip(spark, tmp_path):
     from jasminegraph_spark.cypher import cypher_create
-    from jasminegraph_spark.operators import create_elements
-    from jasminegraph_spark.graph import GraphCatalog, PropertyGraph
+    from jasminegraph_spark.graph import GraphCatalog, PropertyGraph, append
 
     nodes, edges = cypher_create(
         spark,
@@ -193,11 +192,12 @@ def test_create_and_roundtrip(spark, tmp_path):
         "(b:Person {id: 'p2', name: 'Ben'}), (c:City {name: 'Oslo'})",
     )
     assert nodes.count() == 3 and edges.count() == 1
-    create_elements(str(tmp_path / "g"), nodes=nodes, edges=edges)
+    append(nodes, str(tmp_path / "g" / "nodes"))
+    append(edges, str(tmp_path / "g" / "edges"))
     # append a second CREATE — Create is an append, like the reference's
     # block-store append path
     n2, e2 = cypher_create(spark, "CREATE (d:Person {id: 'p3', name: 'Cy'})")
-    create_elements(str(tmp_path / "g"), nodes=n2)
+    append(n2, str(tmp_path / "g" / "nodes"))
     g = GraphCatalog(spark).load("g", str(tmp_path), is_directed=True)
     assert g.vertex_count() == 4 and g.edge_count() == 1
     out = cypher_query(g, "MATCH (a)-[r:KNOWS]->(b) RETURN a.name AS an, b.name AS bn")
@@ -307,6 +307,7 @@ def test_labels_function(social):
 
 
 def test_write_clauses_set_delete_merge(spark, tmp_path):
+    from jasminegraph_spark.cypher.compiler import create_rows
     from jasminegraph_spark.cypher.write import cypher_write
     from jasminegraph_spark.graph import GraphCatalog
 
@@ -338,6 +339,10 @@ def test_write_clauses_set_delete_merge(spark, tmp_path):
     # MERGE: match → no-op; miss → create
     assert cypher_write(spark, gp, "MERGE (n:Person {name: 'Ann'})")["nodes_created"] == 0
     assert cypher_write(spark, gp, "MERGE (n:Person {name: 'Dee'})")["nodes_created"] == 1
+    # a MERGE miss gives its node the id a CREATE of the same pattern does
+    g = GraphCatalog(spark).load("wg", str(tmp_path))
+    (merged,) = cypher_query(g, "MATCH (n:Person {name: 'Dee'}) RETURN id(n) AS id").collect()
+    assert merged["id"] == create_rows(parse("CREATE (n:Person {name: 'Dee'})"))[0][0][0]
 
     # plain DELETE refuses on incident edges; DETACH removes them
     import pytest as _pytest

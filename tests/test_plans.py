@@ -495,26 +495,6 @@ def test_node2vec_corpus_no_cartesian(q):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_png_decode_is_single_scan_arrow_stage(q, spark, sf_dir):
-    """synthesize → decode is two chained mapInPandas stages over ONE
-    documents scan — payloads never shuffle. r13: the declared row pins
-    the decoded rows (lazy pin, entry _pin) before its orderBy so the
-    range sampler doesn't run the decode chain twice; the chain property
-    is asserted on the declared query's OWN pre-pin frame (entry
-    _png_decode_prepin — shared construction, ADVICE r13 #4), the pin on
-    the declared plan."""
-    import __spark_entry__ as entry_mod
-
-    plan = _plan(entry_mod._png_decode_prepin(spark, sf_dir))
-    assert plan.count("Scan parquet") == 1
-    body = plan.split("ReadSchema:")[0]
-    assert body.count("Exchange hashpartitioning") == 0
-    assert "MapInPandas" in plan
-    declared = _plan(q("pl_png_decode"))
-    assert "Scan ExistingRDD" in declared
-    assert declared.count("Scan parquet") == 0 and "MapInPandas" not in declared
-
-
 def test_bigram_logprob_preaggregates_per_doc(q):
     """r7 (r6 verdict perf ask #4): the bigram score joins must carry the
     (doc_id, w1, w2)-deduped stream, not one row per occurrence — the

@@ -14,7 +14,6 @@ ROOTS = ("jasminegraph_spark.engine", "jasminegraph_spark.__main__")
 # unreached on purpose, each with its reason
 UNREACHED_OK = {
     "jasminegraph_spark.projection": "the TPC-H graph fixture of __spark_entry__ and the tests",
-    "jasminegraph_spark.pipeline.multimodal": "lossless media decoders, kept for their tests until ROADMAP item 5 retires them",
 }
 
 

@@ -1,13 +1,17 @@
-"""The graph store under Cypher writes: the declared-schema read, the
-Spark jobs a write runs, the crash-safe table swap, and the engine state
-a write leaves behind."""
+"""The graph store under Cypher writes and saves: the declared-schema
+read, the Spark jobs a write runs, the crash-safe swap of a table and of
+a whole saved graph, and the engine state a write leaves behind."""
 
 import json
 import os
+import shutil
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
+from jasminegraph_spark import engine, graph
 from jasminegraph_spark.cypher import write
 from jasminegraph_spark.engine import JasmineEngine
 from jasminegraph_spark.graph import EDGE_SCHEMA, NODE_SCHEMA, GraphCatalog
@@ -59,9 +63,10 @@ def _count_jobs(spark, fn):
 
 
 def test_write_job_counts(spark, tmp_path):
-    """A MATCH … CREATE runs at most 4 Spark jobs and a SET at most 6;
-    the engine's reload after either runs none. A replayed CREATE adds
-    no edge and no file."""
+    """A plain CREATE runs at most 2 Spark jobs, a MERGE that creates its
+    node at most 3, a MATCH … CREATE at most 4 and a SET at most 6; the
+    engine's reload after each runs none. A replayed CREATE adds no edge
+    and no file."""
     eng = JasmineEngine(spark, storage_path=str(tmp_path / "store"))
     eng.add_json_graph("g", _wire_graph(tmp_path / "g.jsonl", _ring()), is_directed=True)
     create = ("MATCH (a:Person), (b:Person) WHERE id(a) = 'p1' AND id(b) = 'p5' "
@@ -84,6 +89,16 @@ def test_write_job_counts(spark, tmp_path):
     assert eng.edge_count("g") == 13
     (row,) = eng.cypher("g", "MATCH (n:Person) WHERE id(n) = 'p2' RETURN n.age AS age").collect()
     assert row["age"] == "40"
+
+    plain = "CREATE (c:City {id: 'c1'})-[:IN]->(n:Land {id: 'n1'})"
+    stats, jobs = _count_jobs(spark, lambda: eng.cypher_write("g", plain))
+    assert stats == {"nodes_created": 2, "edges_created": 1}
+    assert jobs["write"] <= 2 and jobs["reload"] == 0, jobs
+
+    merge = "MERGE (n:Person {name: 'Eve'})"
+    stats, jobs = _count_jobs(spark, lambda: eng.cypher_write("g", merge))
+    assert stats == {"nodes_created": 1, "matched": False}
+    assert jobs["write"] <= 3 and jobs["reload"] == 0, jobs
 
 
 def test_set_items_apply_in_order_in_one_rewrite(spark, tmp_path):
@@ -158,8 +173,8 @@ def test_table_swap_survives_a_crash_at_each_step(spark, tmp_path, target, n, su
     write.cypher_write(spark, gp, "CREATE (a:P {id: 'a', v: 'old'}), (b:P {id: 'b', v: 'old'})")
     module, attr = target.split(".")
     with pytest.MonkeyPatch.context() as mp:
-        real = getattr(getattr(write, module), attr)
-        mp.setattr(getattr(write, module), attr, _fail_on_call(real, n))
+        real = getattr(getattr(graph, module), attr)
+        mp.setattr(getattr(graph, module), attr, _fail_on_call(real, n))
         with pytest.raises(_Crash):
             write.cypher_write(spark, gp, "MATCH (n:P) WHERE id(n) = 'a' SET n.v = 'new'")
     g = GraphCatalog(spark).load("cg", str(tmp_path))
@@ -170,6 +185,110 @@ def test_table_swap_survives_a_crash_at_each_step(spark, tmp_path, target, n, su
     write.cypher_write(spark, gp, "MATCH (n:P) WHERE id(n) = 'b' SET n.v = 'new'")
     g = GraphCatalog(spark).load("cg", str(tmp_path))
     assert {r["id"]: r["properties"]["v"] for r in g.nodes.collect()}["b"] == "new"
+
+
+# a stored graph and the graph a re-ingest saves over it, as
+# (node ids, edge endpoints, is_directed)
+OLD = ({"1", "2", "3"}, {("1", "2"), ("2", "3")}, False)
+NEW = ({"1", "2", "3", "4", "5"}, {("1", "2"), ("2", "3"), ("3", "4"), ("4", "5")}, True)
+
+
+def _stored_graph(spark, store):
+    g = GraphCatalog(spark).load("g", store)
+    return (
+        {r["id"] for r in g.nodes.collect()},
+        {(r["src"], r["dst"]) for r in g.edges.collect()},
+        g.is_directed,
+    )
+
+
+def _swap_leftovers(store):
+    return sorted(
+        os.path.relpath(os.path.join(root, d), store)
+        for root, dirs, _ in os.walk(store)
+        for d in dirs
+        if d.endswith(("__tmp", "__old"))
+    )
+
+
+def _reingest(spark, tmp_path):
+    """Store OLD as graph ``g`` and return the engine, the store and a
+    re-ingest of NEW over it."""
+    store = str(tmp_path / "store")
+    (tmp_path / "old.dl").write_text("1 2\n2 3\n")
+    (tmp_path / "new.dl").write_text("1 2\n2 3\n3 4\n4 5\n")
+    eng = JasmineEngine(spark, storage_path=store)
+    eng.add_graph("g", str(tmp_path / "old.dl"), is_directed=False)
+    assert _stored_graph(spark, store) == OLD
+    return eng, store, lambda: eng.add_graph("g", str(tmp_path / "new.dl"), is_directed=True)
+
+
+def test_save_keeps_the_old_graph_when_its_write_job_fails(spark, tmp_path):
+    """A re-ingest whose nodes write fails in a task leaves the stored
+    graph as it was, not with an emptied nodes table."""
+    eng, store, reingest = _reingest(spark, tmp_path)
+    real = engine.read_edge_list
+
+    def failing(*args, **kwargs):
+        g = real(*args, **kwargs)
+        boom = F.raise_error(F.lit("task failure"))
+        g.nodes = g.nodes.withColumn(
+            "id", F.when(F.col("id") == "5", boom).otherwise(F.col("id"))
+        )
+        return g
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "read_edge_list", failing)
+        with pytest.raises(Exception, match="task failure"):
+            reingest()
+    assert _stored_graph(spark, store) == OLD
+    assert _swap_leftovers(store) == []
+
+
+def test_save_keeps_the_old_graph_on_a_crash_between_its_tables(spark, tmp_path):
+    """A re-ingest that crashes after writing the nodes and before the
+    edges leaves the old graph whole, not new nodes with old edges."""
+    eng, store, reingest = _reingest(spark, tmp_path)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", _fail_on_call(DataFrameWriter.parquet, 2))
+        with pytest.raises(_Crash):
+            reingest()
+    assert _stored_graph(spark, store) == OLD
+    assert _swap_leftovers(store) == []
+
+
+@pytest.mark.parametrize(
+    "target, n, survivor",
+    [
+        ("os.rename", 1, "old"),  # new graph written beside, nothing swapped
+        ("os.rename", 2, "old"),  # old graph moved aside, new not yet in place
+        ("shutil.rmtree", 1, "new"),  # new graph in place, old one not deleted
+    ],
+)
+def test_save_survives_a_crash_at_each_swap_step(spark, tmp_path, target, n, survivor):
+    """A re-ingest that crashes at any step of the graph directory swap
+    leaves a graph that reloads wholly old or wholly new. On copies of
+    the crashed store, a ``truncate`` removes and reports only ``g``, and
+    the next re-ingest, with no read before it, succeeds."""
+    eng, store, reingest = _reingest(spark, tmp_path)
+    module, attr = target.split(".")
+    with pytest.MonkeyPatch.context() as mp:
+        real = getattr(getattr(graph, module), attr)
+        mp.setattr(getattr(graph, module), attr, _fail_on_call(real, n))
+        with pytest.raises(_Crash):
+            reingest()
+    truncated, reingested = str(tmp_path / "truncated"), str(tmp_path / "reingested")
+    shutil.copytree(store, truncated)
+    shutil.copytree(store, reingested)
+    assert _stored_graph(spark, store) == {"old": OLD, "new": NEW}[survivor]
+    assert _swap_leftovers(store) == []
+    assert JasmineEngine(spark, storage_path=truncated).truncate() == ["g"]
+    assert [e for e in os.listdir(truncated) if not e.startswith("_")] == []
+    JasmineEngine(spark, storage_path=reingested).add_graph(
+        "g", str(tmp_path / "new.dl"), is_directed=True
+    )
+    assert _stored_graph(spark, reingested) == NEW
+    assert _swap_leftovers(reingested) == []
 
 
 def test_write_on_unregistered_graph_keeps_saved_directedness(spark, tmp_path):
