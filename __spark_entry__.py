@@ -4900,21 +4900,6 @@ def an_connected_components(spark, sf_dir):
     )
 
 
-@_q("an_wcc_alternating", _cc_oracle(20))
-def an_wcc_alternating(spark, sf_dir):
-    """Weakly connected components via alternating large-star/small-star
-    (Kiveris et al. SoCC'14) — the O(log n)-round scale path for
-    high-diameter graphs where hash-min propagation would need
-    diameter-many shuffle rounds. Same (node, component=min id) contract,
-    so the hash-min oracle is exact once both converge (the co-order
-    graph's diameter is far under both round budgets)."""
-    from jasminegraph_spark.analytics import connected_components_alternating
-
-    return connected_components_alternating(
-        co_order_edges(spark, sf_dir), assume_canonical=True
-    )
-
-
 def _msf_oracle(iterations: int = 20) -> str:
     """Structural MSF oracle: Borůvka's forest must connect EXACTLY the
     weakly-connected components of the co-order graph (hash-min unrolled,
@@ -4954,16 +4939,13 @@ def an_msf(spark, sf_dir):
     n_tree_edges) — hash-matching the WCC oracle proves the forest
     spans every component exactly, acyclically, with no
     cross-component edge."""
-    from jasminegraph_spark.analytics import (
-        connected_components_alternating,
-        minimum_spanning_forest,
-    )
+    from jasminegraph_spark.analytics import connected_components, minimum_spanning_forest
     from jasminegraph_spark.projection import co_order_weighted_edges
 
     forest = minimum_spanning_forest(co_order_weighted_edges(spark, sf_dir))
     # the forest is a TREE per component — diameter far beyond a hash-min
-    # round budget; large-star/small-star converges in O(log n) regardless
-    comp = connected_components_alternating(
+    # round budget; wcc's driver path labels it in O(log n) passes regardless
+    comp = connected_components(
         forest.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     )
     sizes = comp.groupBy("component").agg(F.count("*").alias("n_nodes"))

@@ -6,22 +6,35 @@ but both are standard property-graph analytics a JasmineGraph user would
 expect next to triangles/PageRank, and both fit Spark's iterate-join model.
 
 Scale notes:
- * connected_components is hash-min label propagation: each round is one
-   partial-aggregated groupBy over the edge list; rounds ≈ graph diameter
-   (small for real-world graphs). Lineage is truncated per round.
+ * connected_components collects the canonical half of the resident
+   adjacency (u < v) in one Spark job and labels it on the driver with a
+   vectorised union-find in O(log n) passes, whatever the diameter. Past
+   DRIVER_PAIRS pairs it runs hash-min label propagation instead: each
+   round is one partial-aggregated groupBy over the adjacency; rounds ≈
+   graph diameter (small for real-world graphs). Lineage is truncated per
+   round.
  * k_core peels minimum-degree vertices iteratively; each round is a
-   degree groupBy + semi-join filter. Both avoid any driver-side
-   materialization beyond the convergence counters.
+   degree groupBy + semi-join filter. Like the hash-min rounds, it
+   materializes nothing on the driver beyond the convergence counters.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from jasminegraph_spark.analytics.graph_algs import canonical_undirected
 from jasminegraph_spark.cache import checkpoint, checkpoint_fresh_stats, finalize
 from jasminegraph_spark.topology import topology_of
+
+#: The most undirected pairs wcc collects to the driver; past it, wcc runs
+#: hash-min rounds on the cluster. 2M pairs of long ids are 32 MB of Arrow,
+#: far under ``spark.driver.maxResultSize`` (1 GiB by default).
+DRIVER_PAIRS = 2_000_000
 
 
 def connected_components(
@@ -30,9 +43,11 @@ def connected_components(
     broadcast_threshold: int = 10_000_000,
     assume_canonical: bool = False,
 ) -> DataFrame:
-    """Weakly connected components via hash-min propagation.
-    Returns (node, component) with component = min node id reachable.
-    Self-loops are ignored: a vertex with no other edge has no row.
+    """Weakly connected components. Returns (node, component) with
+    component = the smallest node id reachable, under the id column's own
+    Spark ordering (numeric for longs, UTF-8 bytes for strings), and node
+    of the input's id type. Self-loops are ignored: a vertex with no other
+    edge has no row.
 
     Runs on a :class:`~jasminegraph_spark.topology.Topology`: ``edges`` is
     the catalog's resident one, or an edge DataFrame that gets a
@@ -42,8 +57,22 @@ def connected_components(
     canonical_undirected output), so the temporary topology skips its
     dedup — the labels are invariant under edge direction and
     duplication anyway.
+
+    While the topology holds at most :data:`DRIVER_PAIRS` undirected
+    pairs, the labels are exact in one Spark job whatever the diameter:
+    the ``u < v`` half of the adjacency is collected once as Arrow and
+    labelled on the driver (:func:`_min_labels`). Past that bound the
+    labels come from hash-min rounds on the cluster, one job per round
+    over the adjacency; ``max_iterations`` and ``broadcast_threshold``
+    bind only those rounds.
     """
     topo, owned = topology_of(edges, distinct=not assume_canonical)
+    if topo.n_rows <= 2 * DRIVER_PAIRS:
+        try:
+            return _components_on_driver(topo.adj)
+        finally:
+            for df in owned:
+                df.unpersist()
     caches = list(owned)
     adj = topo.adj.select("u", "v").filter(F.col("u") != F.col("v"))
     # the label table is |V| rows vs |E| adjacency rows: broadcast it while
@@ -100,98 +129,40 @@ def connected_components(
     return finalize(labels, *caches)
 
 
-def connected_components_alternating(
-    edges: DataFrame,
-    max_iterations: int = 25,
-    assume_canonical: bool = False,
-) -> DataFrame:
-    """Weakly connected components via the alternating large-star /
-    small-star algorithm (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC 2014). Returns (node, component) with
-    component = min node id in the component — same contract as
-    :func:`connected_components`.
+def _components_on_driver(adj: DataFrame) -> DataFrame:
+    """(node, component) from one Arrow collect of the canonical half of
+    ``adj``. Arrow sorts the ids as Spark orders them (numbers by value,
+    strings bytewise), so a component's smallest index is its smallest id."""
+    pairs = adj.filter(F.col("u") < F.col("v")).select("u", "v").toArrow()
+    ids = pc.unique(pa.chunked_array(pairs["u"].chunks + pairs["v"].chunks, pairs["u"].type))
+    ids = ids.take(pc.sort_indices(ids))
+    u = pc.index_in(pairs["u"], value_set=ids).to_numpy()
+    v = pc.index_in(pairs["v"], value_set=ids).to_numpy()
+    labels = pa.table({"node": ids, "component": ids.take(_min_labels(len(ids), u, v))})
+    id_type = adj.schema["u"].dataType
+    schema = StructType([StructField("node", id_type), StructField("component", id_type)])
+    return adj.sparkSession.createDataFrame(labels, schema)
 
-    Why a second implementation: hash-min propagation needs rounds ≈ graph
-    DIAMETER, which is fine on social graphs but a scale hazard on
-    path/mesh-shaped data (a 100k-hop chain at 100 TB would run 100k
-    shuffle rounds). Large-star/small-star contracts toward star forests
-    in O(log n) rounds REGARDLESS of diameter — this is the 100 TB default.
 
-    Each round is two groupBy-min + join passes over the current edge set
-    (partial aggregation map-side; lineage truncated per round).
-    Convergence check is one cheap aggregate (count + order-insensitive
-    hash-sum signature) on the frame the round already materialized — no
-    set-difference job. The fixpoint is a star forest: every edge points
-    directly at its component minimum.
-
-    ``assume_canonical`` as in :func:`connected_components` — the first
-    round's checkpoint of the already-canonical set is also skipped (the
-    round reads it once per star pass off the caller's cache).
-    """
-    if assume_canonical:
-        cur = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    else:
-        cur = (
-            canonical_undirected(edges)
-            .select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .transform(checkpoint)
-        )
-    prev_sig = None
-    for _ in range(max_iterations):
-        # -- large-star: every neighbor bigger than u links to u's min
-        sym = cur.unionAll(
-            cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # -- small-star on the large-star output: neighbors ≤ u (and u
-        # itself) all link to the min neighbor
-        down = large.unionAll(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).filter(F.col("v") < F.col("u"))
-        dmins = down.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            down.join(dmins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionAll(dmins.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            # lazy: the signature aggregate below scans every partition
-            # and doubles as the materializing action (one job per round)
-            .transform(lambda df: checkpoint(df, eager=False))
-        )
-        row = small.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("sig"),
-        ).first()
-        sig = (row["n"], row["sig"])
-        cur = small
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # fixpoint: cur is a star forest (u → component min). Roots only ever
-    # appear on the right; they are their own component. The groupBy-min
-    # is an identity at the fixpoint (one row per u) but guarantees the
-    # one-label-per-node contract even if max_iterations exhausted before
-    # convergence, where cur need not be a star forest yet.
-    labels = cur.groupBy(F.col("u").alias("node")).agg(
-        F.min("v").alias("component")
-    )
-    roots = (
-        cur.select(F.col("v").alias("node"))
-        .distinct()
-        .join(labels.select("node"), "node", "left_anti")
-        .withColumn("component", F.col("node"))
-    )
-    return finalize(labels.unionAll(roots), cur)
+def _min_labels(n: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """The smallest vertex index connected to each of ``n`` vertices by
+    the edges ``(u[i], v[i])``. Each pass hooks every root onto the
+    smallest root across its edges, then flattens every tree by pointer
+    jumping. A root with an edge to another root merges with at least one
+    of them in each pass, so a component's roots at least halve per pass:
+    O(log n) passes, each O(log n) jumps, whatever the diameter."""
+    parent = np.arange(n)
+    while len(u):
+        np.minimum.at(parent, np.maximum(u, v), np.minimum(u, v))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+        u, v = parent[u], parent[v]
+        cross = u != v
+        u, v = u[cross], v[cross]
+    return parent
 
 
 def shortest_paths(

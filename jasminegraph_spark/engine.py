@@ -90,11 +90,13 @@ class JasmineEngine:
         return self._register(read_property_graph_jsonl(self.spark, path, name, is_directed))
 
     def _register(self, g: PropertyGraph) -> PropertyGraph:
-        self.catalog.register(g)
-        if self.storage_path:
-            self.catalog.save(g, self.storage_path)
-            g = self.catalog.load(g.name, self.storage_path, g.is_directed)
-        return g
+        """Serve ``g`` under its name. With a store, serve what the store
+        holds: a save that fails leaves the old graph both stored and
+        served."""
+        if not self.storage_path:
+            return self.catalog.register(g)
+        self.catalog.save(g, self.storage_path)
+        return self.catalog.load(g.name, self.storage_path, g.is_directed)
 
     # ---- streaming (adstrmk / stopstrm / KTOP) ----------------------------
     def add_stream(self, name: str, source_dir: str, checkpoint_dir: str):

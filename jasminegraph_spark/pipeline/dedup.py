@@ -309,14 +309,15 @@ def dedup_corpus(
       1. exact-dup edges: md5(text) groups → (keep_id, member) pairs;
       2. near-dup edges: MinHash-LSH candidates verified by exact Jaccard
          ≥ ``threshold`` (jaccard_verified_dedup);
-      3. hash-min label propagation over the union dup-graph (duplicate
+      3. connected components over the union dup-graph (duplicate
          similarity is not transitive pairwise, so near-dup CHAINS —
          A≈B≈C with A̸≈C — must collapse to one representative: the
          cluster minimum);
       4. survivors = corpus minus non-representative cluster members.
 
     Returns the surviving rows of ``docs`` (all original columns).
-    ``cc_rounds`` bounds label propagation; dup clusters have tiny
+    ``cc_rounds`` bounds wcc's hash-min rounds, which run only past its
+    driver bound (``components.DRIVER_PAIRS``); dup clusters have tiny
     diameter so the default converges with a wide margin.
     """
     hashed = docs.select(F.col(id_col).alias("m"), F.md5(F.col(text_col)).alias("h"))

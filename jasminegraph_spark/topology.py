@@ -5,11 +5,11 @@ partition, and triangles, PageRank, degree and egonet all walk that same
 map (the HashMap local store, src/localstore/JasmineGraphHashMapLocalStore.h).
 :class:`Topology` is that map on Spark: the symmetrized, distinct
 adjacency ``(u, v, deg_u, deg_v)``, hash-partitioned by ``u``, persisted
-and materialised once, plus the vertex count. Every undirected algorithm
-that reads it (``trian``, ``wcc``, ``egonet``, undirected ``pgrnk``)
-starts from rows already deduplicated, degree-annotated and partitioned
-by the key its per-round aggregation groups on, so none of them pays a
-distinct, degree or repartition job of its own.
+and materialised once, plus its vertex and row counts. Every undirected
+algorithm that reads it (``trian``, ``wcc``, ``egonet``, undirected
+``pgrnk``) starts from rows already deduplicated, degree-annotated and
+partitioned by the key its per-round aggregation groups on, so none of
+them pays a distinct, degree or repartition job of its own.
 
 ``GraphCatalog`` keeps one per registered graph snapshot, built on the
 first analytics call and released when the snapshot leaves the catalog.
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 class Topology:
     adj: DataFrame  # (u, v, deg_u, deg_v): persisted, hash-partitioned by u
     n_vertices: int
+    n_rows: int  # adjacency rows: twice the simple edges, plus one per self-loop
 
     @classmethod
     def build(cls, edges: DataFrame, distinct: bool = True) -> "Topology":
@@ -56,8 +57,10 @@ class Topology:
             .persist()
         )
         # the one action: builds every cached partition (a cache always
-        # stores all of its columns) and counts the vertices
-        return cls(adj, adj.select("u").distinct().count())
+        # stores all of its columns) and counts the vertices and the rows;
+        # the per-u counts need no exchange on the u-partitioned rows
+        row = adj.groupBy("u").count().agg(F.count("*"), F.sum("count")).first()
+        return cls(adj, row[0], row[1] or 0)
 
     @property
     def live(self) -> bool:

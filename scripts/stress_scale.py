@@ -33,7 +33,7 @@ from jasminegraph_spark.analytics.graph_algs import (  # noqa: E402
     triangle_count_df,
 )
 from jasminegraph_spark.analytics.components import (  # noqa: E402
-    connected_components_alternating,
+    connected_components,
     k_core,
 )
 
@@ -65,11 +65,11 @@ def main() -> None:
     step(f"generate rmat scale={scale} ef={edge_factor}", gen)
     edges = spark.read.parquet(path)
 
-    if want("wcc_alternating"):
+    if want("wcc"):
         step(
-            "wcc_alternating",
+            "wcc",
             lambda: {
-                "components": connected_components_alternating(edges)
+                "components": connected_components(edges)
                 .agg(F.countDistinct("component"))
                 .collect()[0][0]
             },

@@ -46,45 +46,6 @@ def test_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-@pytest.mark.sweep  # r14: multi-minute quality/property row -> sweep tier (see pyproject)
-def test_alternating_cc_matches_hashmin(spark):
-    """Alternating large-star/small-star must produce the identical
-    (node, component=min id) labeling as hash-min propagation on a mixed
-    multi-component graph."""
-    from jasminegraph_spark.analytics import connected_components_alternating
-
-    edges = [
-        (1, 2), (2, 3), (3, 1),          # triangle
-        (10, 11), (11, 12), (12, 13),    # path
-        (20, 21),                        # pair
-        (7, 7),                          # self-loop (dropped)
-        (30, 31), (31, 30),              # duplicate both directions
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    base = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    alt = {
-        r["node"]: r["component"]
-        for r in connected_components_alternating(df).collect()
-    }
-    assert alt == base
-
-
-@pytest.mark.sweep  # r14: multi-minute quality/property row -> sweep tier (see pyproject)
-def test_alternating_cc_high_diameter(spark):
-    """The reason this variant exists: a 120-hop chain converges in
-    O(log n) alternating rounds (12 here) where hash-min needs
-    diameter≈120 rounds. Every node must label to the chain head."""
-    from jasminegraph_spark.analytics import connected_components_alternating
-
-    chain = [(i, i + 1) for i in range(120)]
-    df = spark.createDataFrame(chain, ["src", "dst"])
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components_alternating(df, max_iterations=12).collect()
-    }
-    assert got == {i: 0 for i in range(121)}
-
-
 def test_label_propagation_two_cliques(spark):
     from jasminegraph_spark.analytics import label_propagation
 
@@ -700,24 +661,20 @@ def test_triangle_count_conf_independent_of_legacy_size_of_null(spark):
 def test_assume_canonical_matches_default_on_canonical_input(spark):
     """r13: the assume_canonical fast path must produce identical labels
     to the default path whenever its contract holds (a<b distinct
-    self-loop-free edges) — for both CC variants. The skip only elides
-    the re-derivation shuffle, never the semantics."""
-    from jasminegraph_spark.analytics import (
-        connected_components,
-        connected_components_alternating,
-    )
+    self-loop-free edges). The skip only elides the re-derivation
+    shuffle, never the semantics."""
+    from jasminegraph_spark.analytics import connected_components
 
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (6, 7), (7, 8), (10, 11)],
         "src long, dst long",
     )
-    for fn in (connected_components, connected_components_alternating):
-        base = {(r["node"], r["component"]) for r in fn(e).collect()}
-        lean = {
-            (r["node"], r["component"])
-            for r in fn(e, assume_canonical=True).collect()
-        }
-        assert lean == base, fn.__name__
+    base = {(r["node"], r["component"]) for r in connected_components(e).collect()}
+    lean = {
+        (r["node"], r["component"])
+        for r in connected_components(e, assume_canonical=True).collect()
+    }
+    assert lean == base
 
 
 def test_assume_canonical_triangles_and_sage_match_default(spark):

@@ -29,7 +29,6 @@ _SLOW_SWEEP = {
     "an_coloring",
     "an_betweenness_sampled",
     "an_clustering_coefficient",
-    "an_wcc_alternating",
     "an_link_prediction_federated",
     "cy_write_roundtrip",
 }

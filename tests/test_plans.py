@@ -396,14 +396,6 @@ def test_graphrag_seed_expansion_broadcasts(q):
     assert "CartesianProduct" not in plan
 
 
-def test_alternating_cc_rounds_are_aggregates_not_nested_loops(q):
-    """Every large-star/small-star round is groupBy-min + equi-join; a
-    nested-loop anywhere would break the O(log n)-round scale story."""
-    plan = _plan(q("an_wcc_alternating"))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_substring_spans_no_nested_loop(q):
     """Exact-substring span candidates come from the capped shingle
     hash join; an all-pairs nested loop anywhere kills the scale story."""

@@ -7,7 +7,7 @@ import pytest
 
 from itertools import combinations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 edge_lists = st.lists(
     st.tuples(st.integers(0, 12), st.integers(0, 12)),
@@ -38,11 +38,17 @@ def test_triangle_count_matches_bruteforce(spark, edges):
 
 
 @settings(max_examples=10, deadline=None)
-@given(edge_lists)
-def test_connected_components_match_union_find(spark, edges):
-    from jasminegraph_spark.analytics import connected_components
+@given(edge_lists, st.booleans())
+# string ids whose order is not their numbers' ("10" < "2" < "9")
+@example([(9, 10), (10, 2), (11, 12), (3, 12)], True)
+@example([(2, 10), (10, 11), (9, 11)], True)
+def test_connected_components_match_union_find(spark, edges, as_text):
+    """Both wcc paths, the driver's union-find and the hash-min rounds
+    past the driver bound, label every vertex with the smallest id of its
+    component under the id column's own order."""
+    from jasminegraph_spark.analytics import components, connected_components
 
-    und = _canon(edges)
+    und = {(str(a), str(b)) if as_text else (a, b) for a, b in _canon(edges)}
     if not und:
         return
     # union-find ground truth
@@ -61,41 +67,13 @@ def test_connected_components_match_union_find(spark, edges):
             parent[max(ra, rb)] = min(ra, rb)
     expected = {v: find(v) for e in und for v in e}
 
-    df = spark.createDataFrame(list(und), ["src", "dst"])
+    id_type = "string" if as_text else "long"
+    df = spark.createDataFrame(list(und), f"src {id_type}, dst {id_type}")
     got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert got == expected
-
-
-@settings(max_examples=6, deadline=None)
-@given(edge_lists)
-def test_alternating_cc_matches_union_find(spark, edges):
-    """Large-star/small-star must agree with union-find ground truth on
-    arbitrary small graphs (same min-id contract as hash-min)."""
-    from jasminegraph_spark.analytics import connected_components_alternating
-
-    und = _canon(edges)
-    if not und:
-        return
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in und:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expected = {v: find(v) for e in und for v in e}
-
-    df = spark.createDataFrame(list(und), ["src", "dst"])
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components_alternating(df).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(components, "DRIVER_PAIRS", 0)
+        got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert got == expected
 
 

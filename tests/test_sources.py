@@ -330,21 +330,6 @@ def test_zorder_non_numeric_and_null_columns(spark, tmp_path):
         zorder_by(arr, ["a"])
 
 
-def test_alternating_wcc_one_label_per_node_even_unconverged(spark):
-    """r5 contract fix (ADVICE): exhausting max_iterations before the
-    star-forest fixpoint must still yield exactly one (node, component)
-    row per node (groupBy-min finalization), matching hash-min's shape."""
-    from jasminegraph_spark.analytics import connected_components_alternating
-
-    # a long chain needs several alternating rounds; 1 round is not enough
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], ["src", "dst"]
-    )
-    out = connected_components_alternating(chain, max_iterations=1).collect()
-    nodes = [r["node"] for r in out]
-    assert len(nodes) == len(set(nodes)) == 41  # one row per node, all nodes
-
-
 def test_synthetic_documents_planted_near_dups(spark):
     """The stress corpus generator: deterministic, and every doc with
     id % 10 == 9 is a one-marker-word near-duplicate of its decade base."""

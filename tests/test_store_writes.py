@@ -245,6 +245,18 @@ def test_save_keeps_the_old_graph_when_its_write_job_fails(spark, tmp_path):
     assert _swap_leftovers(store) == []
 
 
+def test_failed_reingest_keeps_serving_the_stored_graph(spark, tmp_path):
+    """After a re-ingest whose save fails, the engine answers from the
+    graph the store still holds, not from the unsaved new one."""
+    eng, store, reingest = _reingest(spark, tmp_path)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", _fail_on_call(DataFrameWriter.parquet, 2))
+        with pytest.raises(_Crash):
+            reingest()
+    assert eng.edge_count("g") == GraphCatalog(spark).load("g", store).edge_count() == 2
+    assert eng.catalog.get("g").is_directed is False
+
+
 def test_save_keeps_the_old_graph_on_a_crash_between_its_tables(spark, tmp_path):
     """A re-ingest that crashes after writing the nodes and before the
     edges leaves the old graph whole, not new nodes with old edges."""

@@ -5,13 +5,19 @@ Checks its contents, that engine verbs over it answer exactly what the
 plain ``an.*`` calls answer on the raw edge frame (and what an
 independent pure-Python reference answers), that it follows the
 catalog's snapshots (writes, replacement, removal, truncate,
-clearCache), and that its rounds need no adjacency exchange."""
+clearCache), that its rounds need no adjacency exchange, and how many
+Spark jobs building it and labelling its components take."""
 
+import time
+import uuid
 from collections import defaultdict
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from jasminegraph_spark import analytics as an
+from jasminegraph_spark import cache
 from jasminegraph_spark.analytics import components, graph_algs
 from jasminegraph_spark.engine import JasmineEngine
 from jasminegraph_spark.topology import Topology
@@ -256,6 +262,7 @@ def test_iterations_over_resident_topology_need_no_adjacency_exchange(
     monkeypatch.setattr(graph_algs, "finalize", spy(graph_algs.finalize))
     an.pagerank(topo, iterations=1, undirected=True)
     monkeypatch.setattr(components, "checkpoint", spy(components.checkpoint))
+    monkeypatch.setattr(components, "DRIVER_PAIRS", 0)  # wcc's rounds, not its driver path
     an.connected_components(topo, max_iterations=1)
     assert len(plans) == 2
     for plan in plans:
@@ -265,3 +272,66 @@ def test_iterations_over_resident_topology_need_no_adjacency_exchange(
     # on u over the adjacency partitioned by v
     by_v = topo.adj.repartition("v")
     assert _hash_exchanges(by_v.groupBy("u").count()._jdf.queryExecution().executedPlan())
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` under a job group of its own and count that group's jobs."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex[:8]}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001 - final job events
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_topology_build_and_wcc_job_counts(spark, monkeypatch):
+    """Building a topology runs 5 Spark jobs and counts its adjacency
+    rows in them. wcc over a resident topology runs 1 job, its label
+    frame's collect none, and it checkpoints nothing."""
+    edges = spark.createDataFrame(AWKWARD, ["src", "dst"])
+    topo, jobs = _count_jobs(spark, lambda: Topology.build(edges))
+    try:
+        assert jobs == 5
+        assert (topo.n_vertices, topo.n_rows) == (8, len(_sym(AWKWARD)))
+        checkpoints, real = [], cache.checkpoint
+
+        def counted(df, *args, **kw):
+            checkpoints.append(df)
+            return real(df, *args, **kw)
+
+        monkeypatch.setattr(cache, "checkpoint", counted)
+        monkeypatch.setattr(components, "checkpoint", counted)
+        cc, jobs = _count_jobs(spark, lambda: an.connected_components(topo))
+        assert jobs == 1
+        rows, jobs = _count_jobs(spark, cc.collect)
+        assert jobs == 0 and checkpoints == []
+        assert {r["node"]: r["component"] for r in rows} == ref_components(AWKWARD)
+    finally:
+        topo.release()
+
+
+def test_wcc_labels_a_long_shuffled_path_on_the_driver(spark):
+    """A 100,000-vertex path with shuffled ids gets exact labels on the
+    driver path, warm in under 2 s: its passes do not grow with the
+    diameter, as hash-min rounds would."""
+    n = 100_000
+    order = np.random.default_rng(7).permutation(n)
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": order[:-1] + 1, "dst": order[1:] + 1}).astype("int64")
+    )
+    topo = Topology.build(edges)
+    try:
+        assert topo.n_rows <= 2 * components.DRIVER_PAIRS
+        an.connected_components(topo).toArrow()  # warm
+        t0 = time.perf_counter()
+        labels = an.connected_components(topo).toArrow()
+        took = time.perf_counter() - t0
+        assert labels.num_rows == n
+        assert sorted(labels["node"].to_pylist()) == list(range(1, n + 1))
+        assert set(labels["component"].to_pylist()) == {1}
+        assert took < 2.0, took
+    finally:
+        topo.release()
