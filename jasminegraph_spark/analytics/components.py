@@ -7,12 +7,12 @@ expect next to triangles/PageRank, and both fit Spark's iterate-join model.
 
 Scale notes:
  * connected_components collects the canonical half of the resident
-   adjacency (u < v) in one Spark job and labels it on the driver with a
+   adjacency (u <= v) in one Spark job and labels it on the driver with a
    vectorised union-find in O(log n) passes, whatever the diameter. Past
-   DRIVER_PAIRS pairs it runs hash-min label propagation instead: each
-   round is one partial-aggregated groupBy over the adjacency; rounds ≈
-   graph diameter (small for real-world graphs). Lineage is truncated per
-   round.
+   topology.DRIVER_PAIRS pairs it runs hash-min label propagation
+   instead: each round is one partial-aggregated groupBy over the
+   adjacency; rounds ≈ graph diameter (small for real-world graphs).
+   Lineage is truncated per round.
  * k_core peels minimum-degree vertices iteratively; each round is a
    degree groupBy + semi-join filter. Like the hash-min rounds, it
    materializes nothing on the driver beyond the convergence counters.
@@ -22,19 +22,13 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from jasminegraph_spark.analytics.graph_algs import canonical_undirected
 from jasminegraph_spark.cache import checkpoint, checkpoint_fresh_stats, finalize
-from jasminegraph_spark.topology import topology_of
-
-#: The most undirected pairs wcc collects to the driver; past it, wcc runs
-#: hash-min rounds on the cluster. 2M pairs of long ids are 32 MB of Arrow,
-#: far under ``spark.driver.maxResultSize`` (1 GiB by default).
-DRIVER_PAIRS = 2_000_000
+from jasminegraph_spark.topology import Topology, topology_of
 
 
 def connected_components(
@@ -58,18 +52,19 @@ def connected_components(
     dedup — the labels are invariant under edge direction and
     duplication anyway.
 
-    While the topology holds at most :data:`DRIVER_PAIRS` undirected
-    pairs, the labels are exact in one Spark job whatever the diameter:
-    the ``u < v`` half of the adjacency is collected once as Arrow and
+    While the topology holds at most
+    :data:`~jasminegraph_spark.topology.DRIVER_PAIRS` undirected pairs,
+    the labels are exact in one Spark job whatever the diameter: the
+    canonical half of the adjacency is collected once as Arrow and
     labelled on the driver (:func:`_min_labels`). Past that bound the
     labels come from hash-min rounds on the cluster, one job per round
     over the adjacency; ``max_iterations`` and ``broadcast_threshold``
     bind only those rounds.
     """
     topo, owned = topology_of(edges, distinct=not assume_canonical)
-    if topo.n_rows <= 2 * DRIVER_PAIRS:
+    if topo.on_driver:
         try:
-            return _components_on_driver(topo.adj)
+            return _components_on_driver(topo)
         finally:
             for df in owned:
                 df.unpersist()
@@ -129,19 +124,20 @@ def connected_components(
     return finalize(labels, *caches)
 
 
-def _components_on_driver(adj: DataFrame) -> DataFrame:
+def _components_on_driver(topo: Topology) -> DataFrame:
     """(node, component) from one Arrow collect of the canonical half of
-    ``adj``. Arrow sorts the ids as Spark orders them (numbers by value,
-    strings bytewise), so a component's smallest index is its smallest id."""
-    pairs = adj.filter(F.col("u") < F.col("v")).select("u", "v").toArrow()
-    ids = pc.unique(pa.chunked_array(pairs["u"].chunks + pairs["v"].chunks, pairs["u"].type))
-    ids = ids.take(pc.sort_indices(ids))
-    u = pc.index_in(pairs["u"], value_set=ids).to_numpy()
-    v = pc.index_in(pairs["v"], value_set=ids).to_numpy()
+    the topology. Index order is id order, so a component's smallest index
+    is its smallest id. Self-loops are dropped, and with them every vertex
+    that has no other edge."""
+    ids, u, v = topo.collect_pairs()
+    cross = u != v
+    u, v = u[cross], v[cross]
+    keep = np.zeros(len(ids), dtype=bool)
+    keep[u] = keep[v] = True
     labels = pa.table({"node": ids, "component": ids.take(_min_labels(len(ids), u, v))})
-    id_type = adj.schema["u"].dataType
+    id_type = topo.adj.schema["u"].dataType
     schema = StructType([StructField("node", id_type), StructField("component", id_type)])
-    return adj.sparkSession.createDataFrame(labels, schema)
+    return topo.adj.sparkSession.createDataFrame(labels.filter(pa.array(keep)), schema)
 
 
 def _min_labels(n: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:

@@ -17,15 +17,24 @@ Scale notes:
    — the standard compact-forward technique: every wedge is enumerated at
    its lowest-degree vertex, which bounds join fan-out on skewed (power-law)
    graphs. This matters far more at 100 TB than at test scale.
- * pagerank keeps ranks and out-degrees co-partitioned on the join key
-   across iterations and truncates lineage with localCheckpoint to stop
-   plan growth.
+ * undirected, unweighted pagerank collects the canonical half of the
+   resident adjacency in one Spark job and runs the power iteration on
+   the driver in numpy, while the topology holds at most
+   topology.DRIVER_PAIRS undirected pairs: no checkpoint, no Python
+   worker. Past that bound, and for directed or weighted pagerank, the
+   iterations are Spark rounds that keep ranks and out-degrees
+   co-partitioned on the join key and truncate lineage with
+   localCheckpoint to stop plan growth.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from jasminegraph_spark.cache import checkpoint, finalize
 from jasminegraph_spark.topology import Topology, topology_of
@@ -281,13 +290,21 @@ def pagerank(
     :class:`~jasminegraph_spark.topology.Topology` — ``edges`` is the
     catalog's resident one, or an edge DataFrame that gets a temporary
     one released with the result. Each symmetric row (u, v, deg_u, deg_v)
-    is the contribution edge v → u with out-degree deg_v, already
-    partitioned by u, the key every iteration aggregates on, so there is
-    no setup job at all. Symmetrization gives every node an out-edge and
-    an in-edge, so the contribution aggregate covers the whole vertex
-    set and the per-iteration dangling-mass left join folds into the
-    aggregate itself (r12). Directed and weighted pgrnk build their
-    contribution edges from the edge DataFrame (:func:`_raw_contributions`).
+    is the contribution edge v → u with out-degree deg_v. While the
+    topology holds at most
+    :data:`~jasminegraph_spark.topology.DRIVER_PAIRS` undirected pairs,
+    the ranks come from one Spark job: the canonical half is collected
+    once as Arrow and iterated on the driver
+    (:func:`_pagerank_on_driver`), and the result is a local frame that
+    needs no checkpoint. Past the bound the iterations are Spark rounds
+    over the rows, already partitioned by u, the key every iteration
+    aggregates on, so there is no setup job at all. Symmetrization gives
+    every node an out-edge and an in-edge, so the contribution aggregate
+    covers the whole vertex set and the per-iteration dangling-mass left
+    join folds into the aggregate itself (r12). Directed and weighted
+    pgrnk build their contribution edges from the edge DataFrame
+    (:func:`_raw_contributions`) and always run as rounds.
+    ``broadcast_threshold`` binds only the rounds.
 
     ``dedup_edges=False`` (r12) asserts the caller's edge set already
     carries no duplicate (src, dst) rows — true for every canonical
@@ -300,6 +317,12 @@ def pagerank(
             raise ValueError("a Topology carries no edge weights")
         undirected = True
         topo, owned = topology_of(edges, distinct=dedup_edges)
+        if topo.on_driver:
+            try:
+                return _pagerank_on_driver(topo, alpha, iterations, sources)
+            finally:
+                for df in owned:
+                    df.unpersist()
         caches = list(owned)
         n_total = topo.n_vertices
         nodes = topo.adj.select(F.col("u").alias("node")).distinct()
@@ -374,6 +397,42 @@ def pagerank(
     # final ranks are checkpointed; the edge/degree caches are released so
     # repeated engine calls don't pin storage
     return finalize(ranks, *caches)
+
+
+def _pagerank_on_driver(
+    topo: Topology, alpha: float, iterations: int, sources: list | None
+) -> DataFrame:
+    """(node, rank) from one Arrow collect of the canonical half of the
+    topology, iterated in numpy as the rounds iterate: each adjacency row
+    (u, v) is the contribution edge v → u with out-degree deg_v. The half
+    is mirrored back to the full adjacency, a self-loop once."""
+    ids, u, v = topo.collect_pairs()
+    cross = u != v
+    dst = np.concatenate([u, v[cross]])
+    src = np.concatenate([v, u[cross]])
+    n = len(ids)
+    deg = np.bincount(dst, minlength=n)
+    spark, id_type = topo.adj.sparkSession, topo.adj.schema["u"].dataType
+    if sources is None:
+        restart = np.full(n, 1.0 / max(n, 1))
+    else:
+        restart = np.where(_isin(spark, ids, id_type, sources), 1.0 / len(sources), 0.0)
+    rank = restart
+    for _ in range(iterations):
+        mass = np.bincount(dst, weights=(rank / deg)[src], minlength=n)
+        rank = (1.0 - alpha) * restart + alpha * mass
+    schema = StructType([StructField("node", id_type), StructField("rank", DoubleType())])
+    return spark.createDataFrame(pa.table({"node": ids, "rank": rank}), schema)
+
+
+def _isin(spark, ids: pa.Array, id_type, values: list) -> np.ndarray:
+    """Which ``ids`` Spark's ``isin(values)`` matches, so seeds of another
+    type coerce as they do in the rounds (under ANSI, ``"01"`` matches the
+    long id 1 and the long 1 matches the string id ``"01"``). Spark folds
+    the filter over the local frame while planning: no job."""
+    nodes = spark.createDataFrame(pa.table({"node": ids}), StructType([StructField("node", id_type)]))
+    hits = [r[0] for r in nodes.filter(F.col("node").isin(values)).collect()]
+    return pc.is_in(ids, value_set=pa.array(hits, ids.type)).to_numpy(zero_copy_only=False)
 
 
 def personalized_pagerank(edges, sources: list, **kw) -> DataFrame:

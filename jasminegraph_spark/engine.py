@@ -251,8 +251,9 @@ class JasmineEngine:
     ) -> DataFrame:
         self._sla_check(graph_name, "pgrnk", sla_seconds)
         g = self.catalog.get(graph_name)
-        # pagerank's iterations checkpoint eagerly, so the timed span
-        # covers the dominant cost even though the return is lazy
+        # pagerank returns its ranks computed (a local frame from the
+        # driver path, a checkpoint from the rounds), so the timed span,
+        # and with it the SLA estimate, covers the whole computation
         with self._timed(graph_name, "pgrnk"):
             return an.pagerank(
                 self._pagerank_input(graph_name), alpha, iterations, undirected=not g.is_directed

@@ -317,7 +317,7 @@ def dedup_corpus(
 
     Returns the surviving rows of ``docs`` (all original columns).
     ``cc_rounds`` bounds wcc's hash-min rounds, which run only past its
-    driver bound (``components.DRIVER_PAIRS``); dup clusters have tiny
+    driver bound (``topology.DRIVER_PAIRS``); dup clusters have tiny
     diameter so the default converges with a wide margin.
     """
     hashed = docs.select(F.col(id_col).alias("m"), F.md5(F.col(text_col)).alias("h"))

@@ -90,15 +90,18 @@ def test_shortest_paths_bfs(spark):
     assert got_dir == {1: 0, 2: 1}
 
 
-def test_pagerank_copartitioned_path_matches_broadcast(spark, sf_dir):
+def test_pagerank_copartitioned_path_matches_broadcast(spark, sf_dir, monkeypatch):
     """The at-scale co-partitioned join (vertex count above the broadcast
     threshold) must produce identical ranks to the broadcast path — it
-    otherwise first runs in production at 10M+ vertices."""
+    otherwise first runs in production at 10M+ vertices. Both sides run
+    the Spark rounds, past a driver bound of 0 pairs."""
     from pyspark.sql import functions as F
 
+    from jasminegraph_spark import topology
     from jasminegraph_spark.analytics import pagerank
     from jasminegraph_spark.projection import co_order_edges
 
+    monkeypatch.setattr(topology, "DRIVER_PAIRS", 0)
     e = co_order_edges(spark, sf_dir)
     a = {
         r["node"]: r["rank"]

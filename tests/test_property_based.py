@@ -46,7 +46,8 @@ def test_connected_components_match_union_find(spark, edges, as_text):
     """Both wcc paths, the driver's union-find and the hash-min rounds
     past the driver bound, label every vertex with the smallest id of its
     component under the id column's own order."""
-    from jasminegraph_spark.analytics import components, connected_components
+    from jasminegraph_spark import topology
+    from jasminegraph_spark.analytics import connected_components
 
     und = {(str(a), str(b)) if as_text else (a, b) for a, b in _canon(edges)}
     if not und:
@@ -72,9 +73,51 @@ def test_connected_components_match_union_find(spark, edges, as_text):
     got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert got == expected
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(components, "DRIVER_PAIRS", 0)
+        mp.setattr(topology, "DRIVER_PAIRS", 0)
         got = {r["node"]: r["component"] for r in connected_components(df).collect()}
     assert got == expected
+
+
+@settings(max_examples=8, deadline=None)
+@given(edge_lists, st.booleans(), st.lists(st.integers(0, 13), min_size=1, max_size=3))
+# self-loop-only vertices (5, 4, 11) and a seed absent from the graph (13)
+@example([(1, 2), (2, 3), (5, 5), (3, 3)], False, [13, 5])
+@example([(9, 10), (10, 2), (4, 4), (11, 11)], True, [10, 13])
+def test_pagerank_matches_power_iteration(spark, edges, as_text, seeds):
+    """Both undirected pgrnk paths, the driver's numpy iteration and the
+    Spark rounds past the driver bound, match a pure-Python power
+    iteration over the symmetric pairs, a self-loop counted once, for the
+    uniform restart and for a seed list, whose ids match by equality as
+    Spark's ``isin`` matches them on ids of their own type."""
+    from test_topology import _close, ref_pagerank
+
+    from jasminegraph_spark import topology
+    from jasminegraph_spark.analytics import pagerank, personalized_pagerank
+
+    if not edges:
+        return
+    conv = str if as_text else int
+    edges = [(conv(a), conv(b)) for a, b in edges]
+    seeds = [conv(s) for s in seeds]
+    pairs = set(edges) | {(b, a) for a, b in edges}
+    want = ref_pagerank(pairs, iterations=6)
+    want_ppr = ref_pagerank(pairs, iterations=6, sources=seeds)
+
+    id_type = "string" if as_text else "long"
+    topo = topology.Topology.build(spark.createDataFrame(edges, f"src {id_type}, dst {id_type}"))
+
+    def ranks(df):
+        return {r["node"]: r["rank"] for r in df.collect()}
+
+    try:
+        for bound in (topology.DRIVER_PAIRS, 0):
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(topology, "DRIVER_PAIRS", bound)
+                assert _close(ranks(pagerank(topo, iterations=6)), want), bound
+                got = ranks(personalized_pagerank(topo, seeds, iterations=6))
+                assert _close(got, want_ppr), bound
+    finally:
+        topo.release()
 
 
 @settings(max_examples=10, deadline=None)

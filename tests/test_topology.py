@@ -5,8 +5,9 @@ Checks its contents, that engine verbs over it answer exactly what the
 plain ``an.*`` calls answer on the raw edge frame (and what an
 independent pure-Python reference answers), that it follows the
 catalog's snapshots (writes, replacement, removal, truncate,
-clearCache), that its rounds need no adjacency exchange, and how many
-Spark jobs building it and labelling its components take."""
+clearCache), that its rounds need no adjacency exchange, how many
+Spark jobs building it, labelling its components and ranking its
+vertices take, and that a ``CALL algo.*`` procedure leaves it resident."""
 
 import time
 import uuid
@@ -17,7 +18,7 @@ import pandas as pd
 import pytest
 
 from jasminegraph_spark import analytics as an
-from jasminegraph_spark import cache
+from jasminegraph_spark import cache, topology
 from jasminegraph_spark.analytics import components, graph_algs
 from jasminegraph_spark.engine import JasmineEngine
 from jasminegraph_spark.topology import Topology
@@ -148,9 +149,11 @@ def test_engine_verbs_on_resident_topology_match_raw_edge_calls(awkward_engine):
     assert _close(_ranks(an.personalized_pagerank(raw, ["1"], iterations=5, undirected=True)),
                   want_ppr)
     # the shuffled-rank regime reads the same topology
-    assert _close(_ranks(an.pagerank(eng.catalog.topology("awk"), iterations=3,
-                                     broadcast_threshold=0)),
-                  ref_pagerank(sym, iterations=3))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(topology, "DRIVER_PAIRS", 0)  # pgrnk's rounds, not its driver path
+        assert _close(_ranks(an.pagerank(eng.catalog.topology("awk"), iterations=3,
+                                         broadcast_threshold=0)),
+                      ref_pagerank(sym, iterations=3))
 
 
 def test_directed_pagerank_keeps_directed_semantics(awkward_engine):
@@ -246,8 +249,8 @@ def _hash_exchanges(plan) -> list:
 def test_iterations_over_resident_topology_need_no_adjacency_exchange(
     awkward_engine, monkeypatch
 ):
-    """Broadcast regime: one pgrnk iteration and one wcc round read the
-    topology in place — its u-partitioning serves their aggregation, so
+    """Broadcast regime, past a driver bound of 0 pairs: one pgrnk
+    iteration and one wcc round read the topology in place — its u-partitioning serves their aggregation, so
     neither plans a hash exchange."""
     topo = awkward_engine.catalog.topology("awk")
     plans = []
@@ -259,10 +262,10 @@ def test_iterations_over_resident_topology_need_no_adjacency_exchange(
 
         return wrapped
 
+    monkeypatch.setattr(topology, "DRIVER_PAIRS", 0)  # the rounds, not the driver paths
     monkeypatch.setattr(graph_algs, "finalize", spy(graph_algs.finalize))
     an.pagerank(topo, iterations=1, undirected=True)
     monkeypatch.setattr(components, "checkpoint", spy(components.checkpoint))
-    monkeypatch.setattr(components, "DRIVER_PAIRS", 0)  # wcc's rounds, not its driver path
     an.connected_components(topo, max_iterations=1)
     assert len(plans) == 2
     for plan in plans:
@@ -313,6 +316,81 @@ def test_topology_build_and_wcc_job_counts(spark, monkeypatch):
         topo.release()
 
 
+def test_pgrnk_job_counts(spark, monkeypatch):
+    """pgrnk over a resident topology runs 1 Spark job, its one collect,
+    and checkpoints nothing; its rank frame's collect runs none.
+    Personalized pgrnk matches its seeds without a job of its own."""
+    topo = Topology.build(spark.createDataFrame(AWKWARD, ["src", "dst"]))
+    try:
+        checkpoints, real = [], cache.checkpoint
+
+        def counted(df, *args, **kw):
+            checkpoints.append(df)
+            return real(df, *args, **kw)
+
+        monkeypatch.setattr(cache, "checkpoint", counted)
+        monkeypatch.setattr(graph_algs, "checkpoint", counted)
+        sym = _sym(AWKWARD)
+        for sources in (None, ["1", "9"]):
+            pr, jobs = _count_jobs(spark, lambda: an.pagerank(topo, sources=sources))
+            assert jobs == 1, sources
+            rows, jobs = _count_jobs(spark, pr.collect)
+            assert jobs == 0 and checkpoints == []
+            assert _close({r["node"]: r["rank"] for r in rows}, ref_pagerank(sym, sources=sources))
+    finally:
+        topo.release()
+
+
+@pytest.mark.parametrize(
+    "id_type, rows, seeds, seeded",
+    [
+        ("long", [(1, 2), (3, 4), (2, 3)], [["01"], [2, "3"], [5]], [{1}, {2, 3}, set()]),
+        ("string", [("1", "2"), ("01", "3"), ("2", "3")], [[1], ["01"], [2, "3"]],
+         [{"1", "01"}, {"01"}, {"2", "3"}]),
+    ],
+)
+def test_personalized_seeds_match_as_spark_isin_does(spark, monkeypatch, id_type, rows,
+                                                     seeds, seeded):
+    """Seeds of another type than the ids match on the driver path as
+    Spark's ``isin`` matches them in the rounds: under ANSI the string
+    ``"01"`` is the long 1, and the long 1 matches both ``"1"`` and
+    ``"01"``. Zero iterations return the restart vector itself."""
+    topo = Topology.build(spark.createDataFrame(rows, f"src {id_type}, dst {id_type}"))
+    try:
+        for s, want in zip(seeds, seeded):
+            restart = _ranks(an.personalized_pagerank(topo, s, iterations=0))
+            assert {k for k, r in restart.items() if r > 0} == want, s
+            driver = _ranks(an.personalized_pagerank(topo, s, iterations=2))
+            with monkeypatch.context() as mp:
+                mp.setattr(topology, "DRIVER_PAIRS", 0)
+                assert _close(driver, _ranks(an.personalized_pagerank(topo, s, iterations=2))), s
+    finally:
+        topo.release()
+
+
+def test_call_procedures_keep_the_resident_topology(spark, tmp_path):
+    """A ``CALL algo.*`` procedure hands the graph's edge frame to its
+    analytic, whose temporary topology has the same plan as the resident
+    one and so shares its cache entry. Finishing the call leaves that
+    entry alone: the next engine verb reads the resident topology in one
+    job instead of rebuilding it."""
+    (tmp_path / "g.dl").write_text("".join(f"{a} {b}\n" for a, b in AWKWARD))
+    eng = JasmineEngine(spark)
+    eng.add_graph("g", str(tmp_path / "g.dl"))
+    eng.pagerank("g")
+    resident = eng.catalog.topology("g")
+    for query in (
+        "CALL algo.pagerank(0.85, 2) YIELD node, rank RETURN node, rank",
+        "CALL algo.components() YIELD node, component RETURN node, component",
+        "CALL algo.egonet('3') YIELD a, b RETURN a, b",
+    ):
+        eng.cypher("g", query).collect()
+        assert resident.live, query
+        _, jobs = _count_jobs(spark, lambda: eng.pagerank("g"))
+        assert jobs == 1, query
+    assert eng.catalog.topology("g") is resident
+
+
 def test_wcc_labels_a_long_shuffled_path_on_the_driver(spark):
     """A 100,000-vertex path with shuffled ids gets exact labels on the
     driver path, warm in under 2 s: its passes do not grow with the
@@ -324,7 +402,7 @@ def test_wcc_labels_a_long_shuffled_path_on_the_driver(spark):
     )
     topo = Topology.build(edges)
     try:
-        assert topo.n_rows <= 2 * components.DRIVER_PAIRS
+        assert topo.on_driver
         an.connected_components(topo).toArrow()  # warm
         t0 = time.perf_counter()
         labels = an.connected_components(topo).toArrow()
